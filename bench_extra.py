@@ -11,7 +11,7 @@ Usage:
   python bench_extra.py viewshed|viewshed_cva|horizon|tovect|contour [--reps 3]
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf1.0 — the driver's
-escalated scale), SPARK_GRAFT_CPUS (default 32).
+escalated scale), SPARK_GRAFT_CPUS (default: this host's os.cpu_count()).
 """
 
 from __future__ import annotations
@@ -19,6 +19,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import sys
 import time
 from pathlib import Path
@@ -26,7 +27,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 RASTER_SCENES = int(os.environ.get("SPARK_GRAFT_BENCH_SCENES", "8"))
 
 
@@ -226,7 +227,8 @@ def main() -> None:
         _materialize(mk())
         walls.append(round(time.perf_counter() - t0, 3))
     print(json.dumps({"target": args.target, "sf_dir": SF_DIR,
-                      "walls": walls, "best": min(walls)}))
+                      "walls": walls, "best": min(walls),
+                      "median": statistics.median(walls)}))
     spark.stop()
 
 

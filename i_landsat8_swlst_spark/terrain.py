@@ -1,65 +1,85 @@
-"""Terrain visibility — the r.viewshed analog.
+"""Terrain operators: r.viewshed (one observer per scene, and the
+cumulative multi-observer coverage of r.viewshed.cva), r.sun
+(instantaneous clear-sky irradiance with cast shadows) and r.horizon.
 
-Reference: no file can be cited (the /root/reference mount is empty every
-round — SURVEY.md §0); the behavioral spec is the published GRASS
-r.viewshed module applied to this engine's tiled raster model.
+The behavioural specs are the published GRASS modules applied to this
+engine's tiled raster model; the serial references below (`_ray_visible`,
+`shadow_plane`, `_horizon_strip_scan`) state them as code.
 
-**Semantics (exact, R3-style):** target cell T (pixel center) is visible
-from the observer O (pixel center, eye at terrain + ``obs_height``) iff at
-every integer gridline crossing STRICTLY between O and T along the segment
-O->T, the sight line's height is >= the terrain height at the crossing,
-where terrain at a crossing is linearly interpolated between the two
-adjacent pixel centers perpendicular to the crossed axis — the classic
+**One sweep shape.** A terrain answer at a cell depends on the cells along
+a ray that ignores the tile grid, so tiles are the wrong work unit. All
+four operators run the same four steps; only the sweep key and the
+per-group kernel differ.
+
+1. ONE decode pass (mapInArrow, `_emit_segments`) cuts every tile into
+   run-length ROW SEGMENTS: one (scene_id, key, gy, gx0, f32 bytes) row per
+   maximal gx-consecutive run of one raster row that shares a sweep key —
+   the pixel-range form of raster work (Raptor, VLDB 2019). Runs without a
+   finite cell are dropped; NaN terrain never blocks, shades or gets a
+   value. No row per pixel exists and pixel planes never cross an
+   exchange.
+2. One exchange (`_sweep`) with an explicit partition count and
+   round-robin placement: group g of consecutive keys goes to partition
+   g mod defaultParallelism, and the groupBy on (scene, g) reuses that
+   placement. One applyInPandas per group rebuilds the per-cell
+   (gx, gy, z) arrays (`_cells`) and runs the family kernel.
+3. Results leave as packed per-tile rows (`_by_tile`): np.packbits bitmaps
+   over the nominal tile grid (bit = ly * nom_w + lx), or (index, f32
+   value) arrays — a few KB per (tile, group), never a row per cell.
+4. `_assemble`: one collect_list per tile, a left join onto the tile
+   layout (tiles with no result still get their row) and one mapInArrow
+   that builds the output planes.
+
+Sweep keys:
+
+- SECTOR sweeps (`viewshed_tiles`, `viewshed_count_tiles`): key =
+  observer index * padded sector count + angular sector around that
+  observer. A cell goes to every sector its INFLATED angular extent meets
+  (a halfwidth-1.5 square, covering any ray that passes within one cell of
+  its center — the interpolation support bound): far cells reach 1-2
+  sectors, cells within ~2.5 cells of the observer reach all of them. A
+  group holds `_SECTOR_BKT` sectors of one observer. Targets are the cells
+  whose CENTER angle falls in the sector (recomputed from (gx, gy) with the
+  emit pass's own fp formulas), marched by `_march_targets` over the
+  sector-local sparse map, which the inflation guarantees holds every
+  support cell of every crossing. ``viewshed_tiles`` is the one-observer
+  case.
+- STRIP sweeps (`sun_tiles`, `horizon_tiles`): key = strip bucket * number
+  of azimuths + azimuth index, where strip = floor(u cosA + v sinA) is the
+  unit-width strip parallel to azimuth A and a bucket holds `_STRIP_BKT`
+  strips. Strip is monotone in gx along a row, so a 128-px row spans a few
+  buckets. Kernels: the running-max shadow scan (spec `shadow_plane`) and
+  the convex-hull horizon scan (`_horizon_strip_scan`).
+
+**Viewshed semantics (exact, R3-style):** target cell T (pixel center) is
+visible from the observer O (pixel center, eye at terrain + ``obs_height``)
+iff at every integer gridline crossing STRICTLY between O and T along the
+segment O->T, the sight line's height is >= the terrain height at the
+crossing, where terrain at a crossing is linearly interpolated between the
+two adjacent pixel centers perpendicular to the crossed axis — the classic
 exact per-ray algorithm ("R3" in the viewshed literature; GRASS r.viewshed
 implements the Van Kreveld sweep with the same visibility definition).
 Comparisons use slope = dz / planar distance (monotone in elevation angle,
 no trig). Deviations from GRASS, stated: planar distances in cell units
 (no lat/lon metric or earth-curvature drop), NaN terrain never blocks a
-ray, and a NaN target is class 255 in the output plane.
-
-**Distributed shape** (the same decompose-shuffle-assemble pattern as
-warp): visibility of T depends on O(ray length) cells NOT aligned with the
-tile grid, so tiles are the wrong work unit. Instead the scene decomposes
-into ANGULAR SECTORS around the observer:
-
-1. ONE decode pass (mapInArrow): each in-radius cell computes the sector
-   range its INFLATED angular extent (a halfwidth-1.5 square, covering any
-   ray that passes within one cell of its center — the interpolation
-   support bound) intersects. Far cells subtend tiny angles (1-2 sectors);
-   only the few near-observer cells replicate widely (cells within ~2.5
-   cells of O go to every sector). Per sector, maximal gx-consecutive runs
-   of a raster row collapse to ONE (sector, gy, gx0, f32 bytes) row — the
-   run-length form that replaced the per-(cell, sector) row emission
-   (VERDICT r6's named pixel-row-explosion anti-pattern).
-2. groupBy(scene, sector) -> applyInPandas: every cell whose CENTER angle
-   falls in the sector is a target (membership recomputed from (gx, gy) +
-   the broadcast observer with the emit pass's own fp formulas); the
-   vectorized exact-R3 kernel (`_march_targets`) performs `_ray_visible`'s
-   comparisons elementwise over the sector-local sparse map, which is
-   guaranteed to contain every support cell of every crossing (the
-   inflation above).
-3. Evaluated/visible sets return as <= 2 KB per-(tile, sector) bitmaps;
-   one regroup by destination tile OR-merges them into u8 planes.
-
-Shuffle volume: ~(1 + near-field) x plane bytes in run rows, once. Pixel
-planes never cross an exchange. Per-sector work is O(targets x ray), the
-inherent exact-R3 bound — ``max_dist`` is the production knob that keeps
-rays bounded at 100 TB (GRASS's own max_distance). With ``max_dist`` set,
-map cells are kept to ``max_dist + 1.5`` so that interpolation-support
-cells just past the radius still block rays — blocking is full-plane,
-only TARGETS are radius-limited (matching GRASS).
+ray, and a NaN target is class 255 in the output plane. Per-sector work is
+O(targets x ray), the inherent exact-R3 bound — ``max_dist`` is the
+production knob that keeps rays bounded (GRASS's own max_distance). With
+``max_dist`` set, map cells are kept to ``max_dist + 1.5`` so that
+interpolation-support cells just past the radius still block rays —
+blocking is full-plane, only TARGETS are radius-limited (matching GRASS).
 """
 
 from __future__ import annotations
 
 import math
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import (
     BinaryType, DoubleType, IntegerType, LongType, StringType, StructField,
     StructType,
@@ -68,34 +88,52 @@ from pyspark.sql.types import (
 from . import codecs
 from .pipeline import _batch_from_cols, _batch_rows
 
-_CELL_SCHEMA = StructType([
+# sectors per scan group: one applyInPandas group costs ~3.5 ms of
+# arrow/pandas setup, so per-sector groups drown small-radius viewsheds in
+# per-group overhead; a group hosts 8 sectors (256 sectors -> 32 groups)
+_SECTOR_BKT = 8
+# strips per scan group: a scene-width raster has O(w + h) strips, far
+# fewer groups
+_STRIP_BKT = 64
+
+_TILE_KEY = ["scene_id", "tile_x", "tile_y"]
+
+_SEG_SCHEMA = StructType([
     StructField("scene_id", StringType()),
-    StructField("sector", IntegerType()),
+    StructField("key", LongType()),            # sweep key (module docstring)
     StructField("gy", IntegerType()),
     StructField("gx0", IntegerType()),
     StructField("z_bytes", BinaryType()),      # f32 LE elevation row run
 ])
 
-# sectors per scan-task bucket: one applyInPandas group costs ~3.5 ms of
-# arrow/pandas setup, so per-sector groups drown small-radius viewsheds in
-# per-group overhead; a bucket hosts 8 sectors (256 sectors -> 32 groups)
-_VS_BKT = 8
-
-_VMASK_SCHEMA = StructType([
-    StructField("scene_id", StringType()),
-    StructField("tile_x", IntegerType()),
-    StructField("tile_y", IntegerType()),
-    # np.packbits bitmaps over the nominal tile grid (ly * nom_w + lx):
-    # targets this sector evaluated / found visible — one <= 2 KB row per
-    # (tile, sector) instead of one row per evaluated CELL
-    StructField("eval_bytes", BinaryType()),
-    StructField("vis_bytes", BinaryType()),
-])
-
 _EYE_SCHEMA = StructType([
-    StructField("scene_id", StringType()),
+    StructField("i", LongType()),              # observer row
     StructField("z", DoubleType()),
 ])
+
+
+def _packed_schema(*payload: str, azimuth: bool = False) -> StructType:
+    """Per-(tile, group) result rows: the tile key plus binary payloads."""
+    return StructType(
+        [StructField("scene_id", StringType())]
+        + ([StructField("azimuth", DoubleType())] if azimuth else [])
+        + [StructField("tile_x", IntegerType()),
+           StructField("tile_y", IntegerType())]
+        + [StructField(p, BinaryType()) for p in payload])
+
+
+# np.packbits bitmaps over the nominal tile grid: targets a sector group
+# evaluated / found visible (a cell is a target of exactly one sector, so
+# per-tile bitmaps are disjoint and merge exactly)
+_VMASK_SCHEMA = _packed_schema("eval_bytes", "vis_bytes")
+# cells ONE observer's sector group sees; per-cell counts are the sum of
+# set bits across masks at assembly
+_CMASK_SCHEMA = _packed_schema("vis_bytes")
+# shaded cells of a strip bucket: with a low sun half the raster can be
+# shaded, so per-shaded-cell rows would be the next row explosion
+_SHADOW_SCHEMA = _packed_schema("mask_bytes")
+# horizon: bit positions (int32 LE) and f32 horizon degrees
+_HVAL_SCHEMA = _packed_schema("idx_bytes", "val_bytes", azimuth=True)
 
 VIEWSHED_SCHEMA = StructType([
     StructField("scene_id", StringType()),
@@ -107,6 +145,42 @@ VIEWSHED_SCHEMA = StructType([
     StructField("n_visible", LongType()),
     StructField("n_evaluated", LongType()),
 ])
+
+VIEWSHED_COUNT_SCHEMA = StructType([
+    StructField("scene_id", StringType()),
+    StructField("tile_x", IntegerType()),
+    StructField("tile_y", IntegerType()),
+    StructField("w", IntegerType()),
+    StructField("h", IntegerType()),
+    StructField("count_bytes", BinaryType()),  # f32: observers seeing the
+    StructField("n_covered", LongType()),      # cell; NaN = NaN terrain
+    StructField("n_evaluated", LongType()),
+])
+
+SUN_SCHEMA = StructType([
+    StructField("scene_id", StringType()),
+    StructField("tile_x", IntegerType()),
+    StructField("tile_y", IntegerType()),
+    StructField("w", IntegerType()),
+    StructField("h", IntegerType()),
+    StructField("glob_bytes", BinaryType()),   # f32 W/m^2, NaN where NULL
+    StructField("n_shaded", LongType()),
+    StructField("n_valid", LongType()),
+])
+
+HORIZON_SCHEMA = StructType([
+    StructField("scene_id", StringType()),
+    StructField("azimuth", DoubleType()),
+    StructField("tile_x", IntegerType()),
+    StructField("tile_y", IntegerType()),
+    StructField("w", IntegerType()),
+    StructField("h", IntegerType()),
+    StructField("horizon_bytes", BinaryType()),  # f32 deg; NaN = NaN cell
+    StructField("n_valid", LongType()),          #        or no sunward cell
+])
+
+SOLAR_CONSTANT = 1367.0      # W/m^2
+_DIFFUSE_FRAC = 0.10         # clear-sky isotropic diffuse fraction
 
 
 def _ray_visible(ox: float, oy: float, eye: float, tx: int, ty: int,
@@ -267,101 +341,188 @@ def _march_targets(ox: float, oy: float, eye: float,
     return vis & ~blocked
 
 
-def _sector_pass(tiles: DataFrame, obs: DataFrame, n_sectors: int,
-                 max_dist: float | None, nom_w: int, nom_h: int,
-                 src_col: str) -> DataFrame:
-    two_pi = 2.0 * math.pi
+# --------------------------------------------------------------------------
+# The shared sweep (module docstring, steps 1-4)
+# --------------------------------------------------------------------------
+
+# cut(scene_id, gx, gy, z) -> (key, gx, gy, z) cell arrays in run order
+_Cut = Callable[[str, np.ndarray, np.ndarray, np.ndarray],
+                Iterator[tuple[np.ndarray, ...]]]
+
+
+def _runs_arange(lens: np.ndarray) -> np.ndarray:
+    """Concatenated [0..len) ranges: [2, 3] -> [0, 1, 0, 1, 2]."""
+    total = int(lens.sum())
+    idx = np.arange(total, dtype=np.int64)
+    off = np.repeat(np.cumsum(lens) - lens, lens)
+    return idx - off
+
+
+def _pandas(frame) -> pd.DataFrame:
+    return frame if isinstance(frame, pd.DataFrame) else frame.toPandas()
+
+
+def _nominal_grid(tiles: DataFrame) -> tuple[int, int]:
+    """(nom_w, nom_h): the tile pitch — every tile but the ragged edge ones
+    has this size, so (tile_x * nom_w + lx, tile_y * nom_h + ly) is a
+    cell's scene coordinate."""
+    nom = tiles.agg(F.max("w").alias("w"), F.max("h").alias("h")).first()
+    return int(nom["w"]), int(nom["h"])
+
+
+def _emit_segments(tiles: DataFrame, nom_w: int, nom_h: int, src_col: str,
+                   cut: _Cut) -> DataFrame:
+    """Step 1: ``cut`` gets each tile's cells (row-major, scene coordinates,
+    f32 z) and yields (key, gx, gy, z) arrays ordered so that runs are
+    contiguous; every maximal run of equal key and gy with consecutive gx
+    becomes one `_SEG_SCHEMA` row."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in _CELL_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
+            cols: dict[str, list] = {f.name: [] for f in _SEG_SCHEMA}
             for row in _batch_rows(batch):
-                if row.ox is None:
-                    continue                  # scene without an observer
                 w, h = int(row.w), int(row.h)
-                tx0, ty0 = int(row.tile_x) * nom_w, int(row.tile_y) * nom_h
-                oxx, oyy = float(row.ox), float(row.oy)
-                plane = codecs.decode_f32bt(
-                    getattr(row, src_col), w, h).astype(np.float64)
                 yy, xx = np.mgrid[0:h, 0:w]
-                gx = (tx0 + xx).ravel()
-                gy = (ty0 + yy).ravel()
-                z = plane.ravel()
-                # NaN cells leave the MAP here: the serial spec's lookup
-                # returns NaN for them and NaN never blocks — a missing
-                # key returns the same NaN (and they are never targets)
-                keep = np.isfinite(z)
-                rx = gx - oxx
-                ry = gy - oyy
-                r = np.hypot(rx, ry)
-                # map cells keep a +1.5 margin so interpolation-support
-                # cells just past the radius still block; targets are
-                # strictly radius-limited (recomputed in the sector scan)
-                if max_dist is not None:
-                    keep &= r <= max_dist + 1.5
-                if not keep.any():
-                    continue
-                gx, gy, z, rx, ry, r = (a[keep]
-                                        for a in (gx, gy, z, rx, ry, r))
-                ang = np.arctan2(ry, rx)      # [-pi, pi]
-                # inflated angular halfwidth: a square of halfwidth 1.5
-                # around the center subtends <= 2*asin(min(1, 1.5*sqrt2/r));
-                # asin saturates to pi/2 near O, near cells go everywhere
-                near = r <= 2.5
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    half = np.arcsin(np.clip(1.5 * math.sqrt(2.0)
-                                             / np.maximum(r, 1e-9), 0, 1.0))
-                s_lo = np.floor((ang - half + math.pi) / two_pi
-                                * n_sectors).astype(np.int64)
-                s_hi = np.floor((ang + half + math.pi) / two_pi
-                                * n_sectors).astype(np.int64)
-                # vectorized replication: each cell i reaches `span[i]`
-                # consecutive sectors starting at base[i] (mod n_sectors)
-                span = np.minimum(s_hi - s_lo + 1, n_sectors)
-                span = np.where(near, n_sectors, span)
-                base = np.where(near, 0, s_lo)
-                n_out = int(span.sum())
-                if n_out == 0:
-                    continue
-                idx = np.repeat(np.arange(len(gx)), span)
-                starts = np.concatenate(([0], np.cumsum(span)[:-1]))
-                off = np.arange(n_out) - np.repeat(starts, span)
-                sec = (np.repeat(base, span) + off) % n_sectors
-                # run-length rows instead of one row per (cell, sector):
-                # sort by (sector, gy, gx); maximal gx-consecutive runs
-                # collapse to one (sector, gy, gx0, f32 bytes) row —
-                # is_target is recomputed in the scan from (gx, gy) and
-                # the broadcast observer, so runs carry only elevation
-                egx, egy, ez = gx[idx], gy[idx], z[idx].astype("<f4")
-                rord = np.lexsort((egx, egy, sec))
-                s2, y2, x2, z2 = sec[rord], egy[rord], egx[rord], ez[rord]
-                newrun = np.r_[True, (s2[1:] != s2[:-1])
-                               | (y2[1:] != y2[:-1])
-                               | (x2[1:] != x2[:-1] + 1)]
-                rstarts = np.flatnonzero(newrun)
-                rends = np.r_[rstarts[1:], len(s2)]
-                sid = row.scene_id
-                for i in range(len(rstarts)):
-                    ap["scene_id"](sid)
-                    ap["sector"](int(s2[rstarts[i]]))
-                    ap["gy"](int(y2[rstarts[i]]))
-                    ap["gx0"](int(x2[rstarts[i]]))
-                    ap["z_bytes"](z2[rstarts[i]:rends[i]].tobytes())
+                gx = (int(row.tile_x) * nom_w + xx).ravel()
+                gy = (int(row.tile_y) * nom_h + yy).ravel()
+                z = np.frombuffer(getattr(row, src_col), dtype="<f4")
+                for key, kx, ky, kz in cut(row.scene_id, gx, gy, z):
+                    if not len(key):
+                        continue
+                    starts = np.flatnonzero(np.r_[
+                        True, (key[1:] != key[:-1]) | (ky[1:] != ky[:-1])
+                        | (kx[1:] != kx[:-1] + 1)])
+                    ends = np.r_[starts[1:], len(key)]
+                    live = np.logical_or.reduceat(np.isfinite(kz), starts)
+                    starts, ends = starts[live], ends[live]
+                    cols["scene_id"].extend([row.scene_id] * len(starts))
+                    cols["key"].extend(key[starts].tolist())
+                    cols["gy"].extend(ky[starts].tolist())
+                    cols["gx0"].extend(kx[starts].tolist())
+                    cols["z_bytes"].extend(
+                        kz[a:b].tobytes()
+                        for a, b in zip(starts.tolist(), ends.tolist()))
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, _CELL_SCHEMA)
+                yield _batch_from_cols(cols, _SEG_SCHEMA)
 
-    src = tiles.select("scene_id", "tile_x", "tile_y", "w", "h", src_col) \
-        .join(F.broadcast(obs), on="scene_id", how="left")
-    return src.mapInArrow(fn, _CELL_SCHEMA)
+    return tiles.select("scene_id", "tile_x", "tile_y", "w", "h", src_col) \
+        .mapInArrow(fn, _SEG_SCHEMA)
 
 
-def _observer_terrain(tiles: DataFrame, obs_df: DataFrame, nom_w: int,
-                      nom_h: int, src_col: str) -> DataFrame:
-    """(scene_id, z) at each scene's observer cell, decoding only the tile
-    that contains it (an observer outside the raster yields no row)."""
+def _sweep(tiles: DataFrame, nom_w: int, nom_h: int, src_col: str,
+           cut: _Cut, group: Column, scan, schema: StructType) -> DataFrame:
+    """Steps 1-3: segment rows, one exchange on (scene, ``group``), and
+    ``scan(pdf) -> list of schema tuples`` per group."""
+    names = [f.name for f in schema]
+    # ONE explicit-count exchange with round-robin placement: group g goes
+    # to partition g mod par, so adjacent sectors or strip buckets, which
+    # carry similar work, run on different tasks (hashing a few dozen
+    # groups onto par partitions left one task with 1.6x the mean load).
+    # REPARTITION_BY_NUM is not coalescible by AQE, which would otherwise
+    # put the small sector exchange on one task; the groupBy reuses the
+    # placement because grp is one of its keys (repartitionById: Spark 4.1+)
+    par = max(tiles.sparkSession.sparkContext.defaultParallelism, 1)
+    group = group.cast("int")
+    return (_emit_segments(tiles, nom_w, nom_h, src_col, cut)
+            .repartitionById(par, group)
+            .groupBy("scene_id", group.alias("grp"))
+            .applyInPandas(lambda _k, pdf: pd.DataFrame(scan(pdf),
+                                                        columns=names),
+                           schema))
+
+
+def _cells(pdf: pd.DataFrame) -> tuple[np.ndarray, ...]:
+    """Per-cell (gx, gy, z) of a frame of segment rows, finite cells only:
+    a NaN cell and a missing cell read the same (NaN never blocks, shades
+    or gets a value)."""
+    zs = [np.frombuffer(b, dtype="<f4") for b in pdf.z_bytes]
+    lens = np.fromiter((len(a) for a in zs), dtype=np.int64, count=len(zs))
+    z = np.concatenate(zs).astype(np.float64)
+    gx = np.repeat(pdf.gx0.to_numpy(np.int64), lens) + _runs_arange(lens)
+    gy = np.repeat(pdf.gy.to_numpy(np.int64), lens)
+    keep = np.isfinite(z)
+    return gx[keep], gy[keep], z[keep]
+
+
+def _by_tile(gx: np.ndarray, gy: np.ndarray, nom_w: int, nom_h: int,
+             *vals: np.ndarray) -> Iterator[tuple]:
+    """Cells grouped by destination tile: (tile_x, tile_y, bit, *vals) per
+    tile, bit = ly * nom_w + lx ascending."""
+    if not len(gx):
+        return
+    tx, ty = gx // nom_w, gy // nom_h
+    bit = (gy - ty * nom_h) * nom_w + (gx - tx * nom_w)
+    order = np.lexsort((bit, ty, tx))
+    tx, ty, bit = tx[order], ty[order], bit[order]
+    vals = tuple(v[order] for v in vals)
+    starts = np.flatnonzero(
+        np.r_[True, (tx[1:] != tx[:-1]) | (ty[1:] != ty[:-1])])
+    for a, b in zip(starts, np.r_[starts[1:], len(tx)]):
+        yield (int(tx[a]), int(ty[a]), bit[a:b], *(v[a:b] for v in vals))
+
+
+def _bitmap(bits: np.ndarray, nbits: int) -> bytes:
+    m = np.zeros(nbits, dtype=np.uint8)
+    m[bits] = 1
+    return np.packbits(m).tobytes()
+
+
+def _bit_sums(masks, nom_w: int, nom_h: int, h: int, w: int):
+    """Per-cell number of set bits across a tile's packed bitmaps, cropped
+    to (h, w); None when the tile received no bitmap."""
+    if not masks:
+        return None
+    nbits = nom_w * nom_h
+    acc = np.zeros(nbits, dtype=np.int64)
+    for mb in masks:
+        acc += np.unpackbits(np.frombuffer(mb, dtype=np.uint8), count=nbits)
+    return acc.reshape(nom_h, nom_w)[:h, :w]
+
+
+def _assemble(layout: DataFrame, vals: DataFrame, keys: list[str], build,
+              schema: StructType) -> DataFrame:
+    """Step 4: each payload column of ``vals`` collects to one list per
+    ``keys`` row of ``layout`` (None when none arrived); the output row is
+    the keys, w, h and ``build(row, w, h)``."""
+    payload = [c for c in vals.columns if c not in keys]
+    agg = vals.groupBy(*keys).agg(
+        *(F.collect_list(c).alias(c) for c in payload))
+    joined = layout.join(agg, on=keys, how="left")
+    names = [f.name for f in schema]
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            cols: dict[str, list] = {n: [] for n in names}
+            for row in _batch_rows(batch):
+                w, h = int(row.w), int(row.h)
+                out = (*(getattr(row, k) for k in keys), w, h,
+                       *build(row, w, h))
+                for n, v in zip(names, out):
+                    cols[n].append(v)
+            if cols[names[0]]:
+                yield _batch_from_cols(cols, schema)
+
+    return joined.mapInArrow(fn, schema)
+
+
+# --------------------------------------------------------------------------
+# Sector sweeps: viewshed (one observer) and cumulative viewshed (many)
+# --------------------------------------------------------------------------
+
+def _observer_eyes(tiles: DataFrame, obs_pdf: pd.DataFrame,
+                   obs_height: float, nom_w: int, nom_h: int,
+                   src_col: str) -> dict[str, list]:
+    """Per scene, its observers' (ox, oy, eye) in row order: eye = terrain
+    at the observer cell + ``obs_height``. Decodes ONLY the tiles holding
+    an observer — O(observers) tiles, never a scan of the raster. Raises
+    when an observer cell is NaN or outside the raster."""
+    o = pd.DataFrame({"scene_id": obs_pdf.scene_id.to_numpy(),
+                      "ox": obs_pdf.ox.to_numpy(np.float64),
+                      "oy": obs_pdf.oy.to_numpy(np.float64),
+                      "i": np.arange(len(obs_pdf))})
     hit = (tiles.select("scene_id", "tile_x", "tile_y", "w", "h", src_col)
-           .join(F.broadcast(obs_df), on="scene_id")
+           .join(F.broadcast(tiles.sparkSession.createDataFrame(o)),
+                 on="scene_id")
            .filter((F.col("tile_x")
                     == F.floor(F.col("ox") / nom_w).cast("int"))
                    & (F.col("tile_y")
@@ -369,20 +530,112 @@ def _observer_terrain(tiles: DataFrame, obs_df: DataFrame, nom_w: int,
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            cols: dict[str, list] = {"scene_id": [], "z": []}
+            cols: dict[str, list] = {"i": [], "z": []}
             for row in _batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 lx = int(row.ox) - int(row.tile_x) * nom_w
                 ly = int(row.oy) - int(row.tile_y) * nom_h
-                if not (0 <= lx < w and 0 <= ly < h):
-                    continue
-                plane = codecs.decode_f32bt(getattr(row, src_col), w, h)
-                cols["scene_id"].append(row.scene_id)
-                cols["z"].append(float(plane[ly, lx]))
-            if cols["scene_id"]:
+                if 0 <= lx < w and 0 <= ly < h:
+                    plane = codecs.decode_f32bt(getattr(row, src_col), w, h)
+                    cols["i"].append(row.i)
+                    cols["z"].append(float(plane[ly, lx]))
+            if cols["i"]:
                 yield _batch_from_cols(cols, _EYE_SCHEMA)
 
-    return hit.mapInArrow(fn, _EYE_SCHEMA)
+    zs = dict(hit.mapInArrow(fn, _EYE_SCHEMA).collect())
+    eyes: dict[str, list] = {}
+    for r in o.itertuples():
+        z = zs.get(r.i, math.nan)
+        if not math.isfinite(z):
+            raise ValueError(f"observer ({r.ox:g}, {r.oy:g}) of scene "
+                             f"{r.scene_id!r} is NaN or outside the raster")
+        eyes.setdefault(r.scene_id, []).append(
+            (float(r.ox), float(r.oy), z + float(obs_height)))
+    return eyes
+
+
+def _sector_sweep(tiles: DataFrame, obs_pdf: pd.DataFrame,
+                  obs_height: float, max_dist: float | None,
+                  n_sectors: int, src_col: str,
+                  counts: bool) -> tuple[DataFrame, int, int]:
+    """Per-(tile, sector group) bitmaps of every observer's exact-R3
+    targets: (eval_bytes, vis_bytes), or only vis_bytes when ``counts``."""
+    nom_w, nom_h = _nominal_grid(tiles)
+    eyes_b = tiles.sparkSession.sparkContext.broadcast(_observer_eyes(
+        tiles, obs_pdf, obs_height, nom_w, nom_h, src_col))
+    # padding keeps every group of _SECTOR_BKT keys inside one observer
+    n_pad = -(-n_sectors // _SECTOR_BKT) * _SECTOR_BKT
+    two_pi = 2.0 * math.pi
+    nbits = nom_w * nom_h
+
+    def cut(sid, gx, gy, z):
+        fin = np.isfinite(z)
+        gx, gy, z = gx[fin], gy[fin], z[fin]
+        for i, (ox, oy, _eye) in enumerate(eyes_b.value.get(sid, ())):
+            cx, cy, cz = gx, gy, z
+            rx, ry = cx - ox, cy - oy
+            r = np.hypot(rx, ry)
+            # map cells keep a +1.5 margin so interpolation-support cells
+            # just past the radius still block; targets are strictly
+            # radius-limited (recomputed in the scan)
+            if max_dist is not None:
+                keep = r <= max_dist + 1.5
+                cx, cy, cz, rx, ry, r = (a[keep]
+                                         for a in (cx, cy, cz, rx, ry, r))
+            ang = np.arctan2(ry, rx)      # [-pi, pi]
+            # inflated angular halfwidth: a square of halfwidth 1.5 around
+            # the center subtends <= 2*asin(min(1, 1.5*sqrt2/r)); asin
+            # saturates to pi/2 near O, near cells go everywhere
+            with np.errstate(invalid="ignore", divide="ignore"):
+                half = np.arcsin(np.clip(1.5 * math.sqrt(2.0)
+                                         / np.maximum(r, 1e-9), 0, 1.0))
+            s_lo = np.floor((ang - half + math.pi) / two_pi
+                            * n_sectors).astype(np.int64)
+            s_hi = np.floor((ang + half + math.pi) / two_pi
+                            * n_sectors).astype(np.int64)
+            # each cell reaches `span` consecutive sectors from `base`
+            near = r <= 2.5
+            span = np.where(near, n_sectors,
+                            np.minimum(s_hi - s_lo + 1, n_sectors))
+            base = np.where(near, 0, s_lo)
+            idx = np.repeat(np.arange(len(cx)), span)
+            key = i * n_pad + (np.repeat(base, span)
+                               + _runs_arange(span)) % n_sectors
+            order = np.lexsort((cx[idx], cy[idx], key))
+            idx = idx[order]
+            yield key[order], cx[idx], cy[idx], cz[idx]
+
+    # each sector marches over exactly its own membership: a cell's center
+    # sector is unique, so targets are disjoint across sectors
+    def scan(pdf: pd.DataFrame) -> list:
+        sid = pdf.scene_id.iloc[0]
+        found = []
+        for key, g in pdf.groupby("key", sort=False):
+            ox, oy, eye = eyes_b.value[sid][key // n_pad]
+            gx, gy, z = _cells(g)
+            rx, ry = gx - ox, gy - oy
+            ctr = (np.floor((np.arctan2(ry, rx) + math.pi) / two_pi
+                            * n_sectors).astype(np.int64) % n_sectors)
+            tgt = ctr == key % n_pad
+            if max_dist is not None:
+                tgt &= np.hypot(rx, ry) <= max_dist
+            if tgt.any():
+                found.append((gx[tgt], gy[tgt], _march_targets(
+                    ox, oy, eye, gx[tgt], gy[tgt], z[tgt], gx, gy, z)))
+        if not found:
+            return []
+        tgx, tgy, vis = (np.concatenate(a) for a in zip(*found))
+        if counts:
+            return [(sid, tx, ty, _bitmap(b, nbits))
+                    for tx, ty, b in _by_tile(tgx[vis], tgy[vis],
+                                              nom_w, nom_h)]
+        return [(sid, tx, ty, _bitmap(b, nbits), _bitmap(b[v], nbits))
+                for tx, ty, b, v in _by_tile(tgx, tgy, nom_w, nom_h, vis)]
+
+    masks = _sweep(tiles, nom_w, nom_h, src_col, cut,
+                   F.floor(F.col("key") / _SECTOR_BKT), scan,
+                   _CMASK_SCHEMA if counts else _VMASK_SCHEMA)
+    return masks, nom_w, nom_h
 
 
 def viewshed_tiles(tiles: DataFrame, observers, obs_height: float = 1.75,
@@ -395,215 +648,97 @@ def viewshed_tiles(tiles: DataFrame, observers, obs_height: float = 1.75,
     is added to the observer cell's terrain (GRASS observer_elevation);
     a NaN observer cell raises. ``max_dist`` bounds rays in cell units
     (GRASS max_distance); cells beyond it — and NaN cells — are 255 in the
-    output plane. Returns one row per input tile with a u8 plane.
+    output plane. Returns one row per input tile with a u8 plane. The
+    one-observer case of the sector sweep (module docstring).
     """
-    spark = tiles.sparkSession
-    if isinstance(observers, pd.DataFrame):
-        obs_df = spark.createDataFrame(observers)
-    else:
-        obs_df = observers
-    obs_df = obs_df.select("scene_id", F.col("ox").cast("double"),
-                           F.col("oy").cast("double"))
-
-    nom = tiles.agg(F.max("w").alias("w"), F.max("h").alias("h")).first()
-    nom_w, nom_h = int(nom["w"]), int(nom["h"])
-
-    cells = _sector_pass(tiles, obs_df, n_sectors, max_dist,
-                         nom_w, nom_h, src_col)
-    two_pi = 2.0 * math.pi
-
-    # per-sector exact R3 over the sector-local sparse map — targets are
-    # recomputed from (gx, gy) + the broadcast observer with the emit
-    # pass's own formulas (deterministic elementwise fp), the march is
-    # the vectorized spec kernel, and results leave as per-tile bitmaps.
-    # One task hosts a BUCKET of sectors; each sector still marches over
-    # exactly its own membership (a cell's center sector is unique, so
-    # targets are disjoint across sectors and bitmaps merge exactly)
-    def run_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(columns=[f.name for f in _VMASK_SCHEMA])
-        scene = pdf.scene_id.iloc[0]
-        o = obs_b.value.get(scene)
-        if o is None:
-            return empty
-        ox, oy, eye = o
-        tgx_l, tgy_l, vis_l = [], [], []
-        for sector, g in pdf.groupby("sector", sort=False):
-            zs = [np.frombuffer(b, dtype="<f4") for b in g.z_bytes]
-            lens = np.fromiter((len(a) for a in zs), dtype=np.int64,
-                               count=len(zs))
-            z = np.concatenate(zs).astype(np.float64)
-            gx = (np.repeat(g.gx0.to_numpy(np.int64), lens)
-                  + _runs_arange(lens))
-            gy = np.repeat(g.gy.to_numpy(np.int64), lens)
-            rx = gx - ox
-            ry = gy - oy
-            r = np.hypot(rx, ry)
-            ang = np.arctan2(ry, rx)
-            ctr = (np.floor((ang + math.pi) / two_pi * n_sectors)
-                   .astype(np.int64) % n_sectors)
-            tgt = ctr == sector
-            if max_dist is not None:
-                tgt &= r <= max_dist
-            if not tgt.any():
-                continue
-            tgx_l.append(gx[tgt])
-            tgy_l.append(gy[tgt])
-            vis_l.append(_march_targets(ox, oy, eye, gx[tgt], gy[tgt],
-                                        z[tgt], gx, gy, z))
-        if not tgx_l:
-            return empty
-        tgx = np.concatenate(tgx_l)
-        tgy = np.concatenate(tgy_l)
-        vis = np.concatenate(vis_l)
-        # pack evaluated/visible sets as one bitmap row pair per tile
-        tx = tgx // nom_w
-        ty = tgy // nom_h
-        bit = (tgy - ty * nom_h) * nom_w + (tgx - tx * nom_w)
-        torder = np.lexsort((bit, ty, tx))
-        tx, ty, bit, vis = tx[torder], ty[torder], bit[torder], vis[torder]
-        tstarts = np.flatnonzero(
-            np.r_[True, (tx[1:] != tx[:-1]) | (ty[1:] != ty[:-1])])
-        tends = np.r_[tstarts[1:], len(tx)]
-        nbits = nom_w * nom_h
-        out_tx, out_ty, out_ev, out_vi = [], [], [], []
-        for a, b in zip(tstarts, tends):
-            ev = np.zeros(nbits, dtype=np.uint8)
-            ev[bit[a:b]] = 1
-            vi = np.zeros(nbits, dtype=np.uint8)
-            vi[bit[a:b][vis[a:b]]] = 1
-            out_tx.append(int(tx[a]))
-            out_ty.append(int(ty[a]))
-            out_ev.append(np.packbits(ev).tobytes())
-            out_vi.append(np.packbits(vi).tobytes())
-        return pd.DataFrame({
-            "scene_id": np.full(len(out_tx), scene, dtype=object),
-            "tile_x": np.array(out_tx, dtype=np.int32),
-            "tile_y": np.array(out_ty, dtype=np.int32),
-            "eval_bytes": out_ev, "vis_bytes": out_vi})
-
-    # observer eye heights: terrain at the observer cell + obs_height.
-    # Decode ONLY the one tile per scene that contains the observer —
-    # O(scenes) tiles touched, never a scan of the raster.
-    opdf = obs_df.toPandas()
-    if opdf.scene_id.duplicated().any():
+    obs_pdf = _pandas(observers)
+    if obs_pdf.scene_id.duplicated().any():
         raise ValueError("one observer per scene")
-    oz = _observer_terrain(tiles, obs_df, nom_w, nom_h, src_col).toPandas()
-    eyes = {}
-    for r in opdf.itertuples():
-        zrow = oz[oz.scene_id == r.scene_id]
-        if len(zrow) == 0 or not np.isfinite(zrow.z.iloc[0]):
-            raise ValueError(
-                f"observer cell for scene {r.scene_id!r} is NaN or outside "
-                "the raster")
-        eyes[r.scene_id] = (float(r.ox), float(r.oy),
-                            float(zrow.z.iloc[0]) + float(obs_height))
-    obs_b = spark.sparkContext.broadcast(eyes)
+    masks, nom_w, nom_h = _sector_sweep(tiles, obs_pdf, obs_height,
+                                        max_dist, n_sectors, src_col,
+                                        counts=False)
 
-    # explicit-count repartition on the group key: the RLE rows are so
-    # much smaller than the old per-cell rows that AQE coalesces the
-    # scan exchange to 1-2 partitions and serializes the march; an
-    # explicit count (REPARTITION_BY_NUM) is not coalescible and the
-    # groupBy below reuses the clustering — still ONE exchange
-    par = max(spark.sparkContext.defaultParallelism, 1)
-    skey = F.floor(F.col("sector") / _VS_BKT)
-    masks = cells.repartition(par, F.col("scene_id"), skey).groupBy(
-        "scene_id", skey.alias("sector_bkt")
-    ).applyInPandas(lambda _k, pdf: run_bucket(pdf), _VMASK_SCHEMA)
+    def build(row, w, h):
+        plane = np.full((h, w), 255, dtype=np.uint8)
+        ev = _bit_sums(row.eval_bytes, nom_w, nom_h, h, w)
+        if ev is not None:
+            plane[ev > 0] = 0
+            plane[_bit_sums(row.vis_bytes, nom_w, nom_h, h, w) > 0] = 1
+        return (plane.tobytes(), int((plane == 1).sum()),
+                int((plane != 255).sum()))
 
-    # regroup to tile planes: the per-tile bitmaps collapse to one short
-    # list per tile (a cell is evaluated by exactly ONE sector, so eval
-    # masks are disjoint and vis is a subset — OR-merge is exact)
     layout = tiles.select("scene_id", "tile_x", "tile_y", "w", "h")
-    agg = masks.groupBy("scene_id", "tile_x", "tile_y").agg(
-        F.collect_list("eval_bytes").alias("ev_masks"),
-        F.collect_list("vis_bytes").alias("vi_masks"))
-    joined = layout.join(agg, on=["scene_id", "tile_x", "tile_y"],
-                         how="left")
+    return _assemble(layout, masks, _TILE_KEY, build, VIEWSHED_SCHEMA)
 
-    def build(batches: Iterator[pa.RecordBatch]) \
-            -> Iterator[pa.RecordBatch]:
-        nbits = nom_w * nom_h
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in VIEWSHED_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                plane = np.full((h, w), 255, dtype=np.uint8)
-                if row.ev_masks is not None and len(row.ev_masks):
-                    acc_ev = np.frombuffer(row.ev_masks[0], dtype=np.uint8)
-                    for mb in row.ev_masks[1:]:
-                        acc_ev = acc_ev | np.frombuffer(mb, dtype=np.uint8)
-                    acc_vi = np.frombuffer(row.vi_masks[0], dtype=np.uint8)
-                    for mb in row.vi_masks[1:]:
-                        acc_vi = acc_vi | np.frombuffer(mb, dtype=np.uint8)
-                    ev = np.unpackbits(acc_ev, count=nbits) \
-                        .reshape(nom_h, nom_w)[:h, :w]
-                    vi = np.unpackbits(acc_vi, count=nbits) \
-                        .reshape(nom_h, nom_w)[:h, :w]
-                    plane[ev == 1] = 0
-                    plane[vi == 1] = 1
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](int(row.tile_x))
-                ap["tile_y"](int(row.tile_y))
-                ap["w"](w); ap["h"](h)
-                ap["vis_bytes"](plane.tobytes())
-                ap["n_visible"](int((plane == 1).sum()))
-                ap["n_evaluated"](int((plane != 255).sum()))
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, VIEWSHED_SCHEMA)
 
-    return joined.mapInArrow(build, VIEWSHED_SCHEMA)
+def viewshed_count_tiles(tiles: DataFrame, observers,
+                         obs_height: float = 1.75,
+                         max_dist: float | None = None,
+                         n_sectors: int = 256,
+                         src_col: str = "lst_bytes") -> DataFrame:
+    """Cumulative viewshed over MANY observers per scene (the r.viewshed
+    coverage-analysis composite, GRASS addon r.viewshed.cva): per cell, how
+    many observers see it, under exactly `viewshed_tiles`' R3 semantics per
+    observer. ``observers``: (scene_id, obs_id, ox, oy).
+
+    Work is inherently O(sum over observers of their in-radius cells) —
+    every observer needs its own rays — so ``max_dist`` is the scale knob
+    exactly as in GRASS CVA studies. Each observer's visible sets leave as
+    per-(tile, sector group) bitmaps whose set bits SUM to the per-cell
+    counts at assembly (an observer sees a cell through one sector only).
+
+    Output planes are f32 counts (0 = evaluated, never seen; NaN = NaN
+    terrain). A cell outside every observer's radius counts 0 — it is
+    still evaluated terrain (n_evaluated counts finite cells, matching
+    the sum over observers' n_evaluated only when radii cover the scene).
+    """
+    obs_pdf = _pandas(observers)
+    if obs_pdf[["scene_id", "obs_id"]].duplicated().any():
+        raise ValueError("duplicate (scene_id, obs_id)")
+    masks, nom_w, nom_h = _sector_sweep(tiles, obs_pdf, obs_height,
+                                        max_dist, n_sectors, src_col,
+                                        counts=True)
+
+    def build(row, w, h):
+        plane = codecs.decode_f32bt(getattr(row, src_col), w, h)
+        cnt = np.where(np.isfinite(plane), 0.0, np.nan).astype(np.float32)
+        seen = _bit_sums(row.vis_bytes, nom_w, nom_h, h, w)
+        if seen is not None:
+            cnt[seen > 0] = seen[seen > 0].astype(np.float32)
+        return (cnt.tobytes(), int((cnt > 0).sum()),
+                int(np.isfinite(cnt).sum()))
+
+    layout = tiles.select("scene_id", "tile_x", "tile_y", "w", "h", src_col)
+    return _assemble(layout, masks, _TILE_KEY, build, VIEWSHED_COUNT_SCHEMA)
 
 
 # --------------------------------------------------------------------------
-# Solar irradiance with cast shadows (r.sun analog, instantaneous mode)
+# Strip sweeps: solar irradiance with cast shadows (r.sun analog,
+# instantaneous mode) and horizon angles (r.horizon analog)
 # --------------------------------------------------------------------------
 
-_SUN_SEG_SCHEMA = StructType([
-    StructField("scene_id", StringType()),
-    StructField("bkt", LongType()),            # floor(strip / _SUN_BKT)
-    StructField("gy", IntegerType()),
-    StructField("gx0", IntegerType()),
-    StructField("z_bytes", BinaryType()),      # f32 LE elevation row segment
-])
-
-# strips per scan bucket: one task hosts a contiguous band of strips (a
-# scene-width raster has O(w + h) strips, far fewer buckets)
-_SUN_BKT = 64
-
-_SHADOW_SCHEMA = StructType([
-    StructField("scene_id", StringType()),
-    StructField("tile_x", IntegerType()),
-    StructField("tile_y", IntegerType()),
-    # np.packbits bitmap over the nominal tile grid (ly * nom_w + lx),
-    # set = shaded: with a low sun half the raster can be shaded, so
-    # per-shaded-CELL rows out of the strip scan were the next row
-    # explosion (4.8M rows measured at the 8.4 Mpx bench block) — a tile's
-    # shaded set is <= 2 KB as a bitmap, one row per (tile, bucket)
-    StructField("mask_bytes", BinaryType()),
-])
-
-SUN_SCHEMA = StructType([
-    StructField("scene_id", StringType()),
-    StructField("tile_x", IntegerType()),
-    StructField("tile_y", IntegerType()),
-    StructField("w", IntegerType()),
-    StructField("h", IntegerType()),
-    StructField("glob_bytes", BinaryType()),   # f32 W/m^2, NaN where NULL
-    StructField("n_shaded", LongType()),
-    StructField("n_valid", LongType()),
-])
-
-SOLAR_CONSTANT = 1367.0      # W/m^2
-_DIFFUSE_FRAC = 0.10         # clear-sky isotropic diffuse fraction
+def _strip_coords(gx: np.ndarray, gy: np.ndarray, azimuth_deg: float):
+    """(s, strip) of cells for parallel rays toward a compass azimuth
+    (0=N, CW; pixel axes u east, v south): s = u sinA - v cosA grows toward
+    the azimuth, strip = floor(u cosA + v sinA) — `shadow_plane`'s
+    formulas, int64 coordinates into float64 products."""
+    a = math.radians(azimuth_deg % 360.0)
+    s = gx * math.sin(a) + gy * -math.cos(a)
+    return s, np.floor(gx * math.cos(a) + gy * math.sin(a)).astype(np.int64)
 
 
-def _runs_arange(lens: np.ndarray) -> np.ndarray:
-    """Concatenated [0..len) ranges: [2, 3] -> [0, 1, 0, 1, 2]."""
-    total = int(lens.sum())
-    idx = np.arange(total, dtype=np.int64)
-    off = np.repeat(np.cumsum(lens) - lens, lens)
-    return idx - off
+def _strip_cut(azimuths_of: Callable[[str], list]) -> _Cut:
+    """Row-major runs keyed by strip bucket * n + azimuth index, one pass
+    per azimuth of the scene. Strip is monotone in gx along a row, so the
+    runs of one bucket are contiguous."""
+
+    def cut(sid, gx, gy, z):
+        azs = azimuths_of(sid)
+        for i, az in enumerate(azs):
+            bkt = _strip_coords(gx, gy, az)[1] // _STRIP_BKT
+            yield bkt * len(azs) + i, gx, gy, z
+
+    return cut
 
 
 def _sun_vectors(azimuth_deg: float, altitude_deg: float):
@@ -662,7 +797,6 @@ def shadow_plane(plane: np.ndarray, azimuth_deg: float,
 
 
 def sun_tiles(tiles: DataFrame, sun: DataFrame | pd.DataFrame,
-              obs_height: float = 0.0,
               src_col: str = "lst_bytes") -> DataFrame:
     """r.sun analog, instantaneous clear-sky global irradiance with cast
     shadows, per scene. ``sun``: (scene_id, azimuth_deg, altitude_deg),
@@ -678,119 +812,28 @@ def sun_tiles(tiles: DataFrame, sun: DataFrame | pd.DataFrame,
     gradient is NULL-poisoned (scene edges / NaN neighbors), matching
     gradient_tiles semantics.
 
-    Distributed shape: ONE decode pass emits run-length ROW SEGMENTS —
-    one (bkt, gy, gx0, f32 bytes) row per maximal run of raster-row cells
-    whose strip falls in the same bucket of ``_SUN_BKT`` strips (strip is
-    monotone in gx along a row, so runs are contiguous; a 128-px row spans
-    <= 3 buckets). groupBy(scene, bkt) rebuilds the per-cell (gx, gy, z)
-    arrays executor-side and runs the running-max scan of `shadow_plane`'s
-    spec per strip, fully vectorized (tie groups of equal s via reduceat +
-    accumulate — the same group-atomic comparisons as the serial walk),
-    emitting ONLY shaded cells; the 1-px halo exchange carries the
-    elevation planes; a final equi join + grouped kernel computes
-    irradiance per tile. The segment exchange moves ~1x plane bytes in
-    O(rows x buckets-per-row) rows — never one row per pixel (that emit
-    was measured at ~5x plane bytes of small rows and dominated the whole
-    operator: 0.49 Mpx/s).
+    Distributed shape: the strip sweep (module docstring) along the sun
+    azimuth runs `shadow_plane`'s running-max scan per strip, fully
+    vectorized, and returns shaded-cell bitmaps; the 1-px halo exchange
+    carries the elevation planes to the assembly, which computes the
+    irradiance per tile.
     """
-    spark = tiles.sparkSession
-    if isinstance(sun, pd.DataFrame):
-        sun_df = spark.createDataFrame(sun)
-    else:
-        sun_df = sun
-    sun_pdf = sun_df.select("scene_id", "azimuth_deg", "altitude_deg") \
-                    .toPandas()
+    sun_pdf = _pandas(sun)
     if sun_pdf.scene_id.duplicated().any():
         raise ValueError("one sun position per scene")
     if ((sun_pdf.altitude_deg <= 0) | (sun_pdf.altitude_deg > 90)).any():
         raise ValueError("altitude_deg must be in (0, 90]")
-    sun_b = spark.sparkContext.broadcast(
+    sun_b = tiles.sparkSession.sparkContext.broadcast(
         {r.scene_id: (float(r.azimuth_deg), float(r.altitude_deg))
          for r in sun_pdf.itertuples()})
+    nom_w, nom_h = _nominal_grid(tiles)
 
-    nom = tiles.agg(F.max("w").alias("w"), F.max("h").alias("h")).first()
-    nom_w, nom_h = int(nom["w"]), int(nom["h"])
-
-    def emit_segments(batches: Iterator[pa.RecordBatch]) \
-            -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in _SUN_SEG_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                pos = sun_b.value.get(row.scene_id)
-                if pos is None:
-                    continue
-                ca = math.cos(math.radians(pos[0] % 360.0))
-                sa = math.sin(math.radians(pos[0] % 360.0))
-                w, h = int(row.w), int(row.h)
-                tx0 = int(row.tile_x) * nom_w
-                ty0 = int(row.tile_y) * nom_h
-                plane = codecs.decode_f32bt(getattr(row, src_col), w, h)
-                sid = row.scene_id
-                # per-cell bucket exactly as the scan recomputes it:
-                # strip = floor(gx*ca + gy*sa), bkt = strip // _SUN_BKT
-                # (floor-div of the int strip == floor(strip/_SUN_BKT));
-                # the outer-sum form below produces the same per-cell
-                # gx*ca + gy*sa values elementwise. Strip is monotone in
-                # gx along a row, so equal-bkt runs are contiguous; one
-                # row-major cut pass finds every (row, bkt) segment.
-                gx = tx0 + np.arange(w, dtype=np.int64)
-                gy = ty0 + np.arange(h, dtype=np.int64)
-                p = gy[:, None] * sa + gx[None, :] * ca
-                bkt = np.floor(p).astype(np.int64) // _SUN_BKT
-                flat = bkt.ravel()
-                rowid = np.repeat(np.arange(h), w)
-                row_ok = np.isfinite(plane).any(axis=1)
-                newseg = np.r_[True, (flat[1:] != flat[:-1])
-                               | (rowid[1:] != rowid[:-1])]
-                starts = np.flatnonzero(newseg)
-                keepseg = row_ok[rowid[starts]]
-                starts = starts[keepseg]
-                if not len(starts):
-                    continue
-                ends_all = np.r_[np.flatnonzero(newseg)[1:], h * w]
-                ends = ends_all[keepseg]
-                seg_bkt = flat[starts]
-                seg_gy = gy[rowid[starts]]
-                seg_gx0 = gx[starts % w]
-                zflat = plane.ravel()
-                for i in range(len(starts)):
-                    ap["scene_id"](sid)
-                    ap["bkt"](int(seg_bkt[i]))
-                    ap["gy"](int(seg_gy[i]))
-                    ap["gx0"](int(seg_gx0[i]))
-                    ap["z_bytes"](
-                        zflat[starts[i]:ends[i]].astype("<f4").tobytes())
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, _SUN_SEG_SCHEMA)
-
-    segs = tiles.select("scene_id", "tile_x", "tile_y", "w", "h", src_col) \
-        .mapInArrow(emit_segments, _SUN_SEG_SCHEMA)
-
-    def scan_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(pdf):
-            return pd.DataFrame(columns=[f.name for f in _SHADOW_SCHEMA])
+    def scan(pdf: pd.DataFrame) -> list:
         sid = pdf.scene_id.iloc[0]
-        pos = sun_b.value.get(sid)
-        du, dv, tanalt = _sun_vectors(*pos)
-        ca = math.cos(math.radians(pos[0] % 360.0))
-        sa = math.sin(math.radians(pos[0] % 360.0))
-        # rebuild the per-cell arrays from the row segments
-        zs = [np.frombuffer(b, dtype="<f4") for b in pdf.z_bytes]
-        lens = np.array([len(a) for a in zs])
-        z = np.concatenate(zs).astype(np.float64)
-        gx = (np.repeat(pdf.gx0.to_numpy(np.int64), lens)
-              + _runs_arange(lens))
-        gy = np.repeat(pdf.gy.to_numpy(np.int64), lens)
-        keep = np.isfinite(z)
-        gx, gy, z = gx[keep], gy[keep], z[keep]
-        if not len(z):
-            return pd.DataFrame(columns=[f.name for f in _SHADOW_SCHEMA])
-        # same formulas/dtypes as the whole-plane spec: int64 coords into
-        # float64 products
-        s = gx * du + gy * dv
-        q = z - s * tanalt
-        strip = np.floor(gx * ca + gy * sa).astype(np.int64)
+        az, altd = sun_b.value[sid]
+        gx, gy, z = _cells(pdf)
+        s, strip = _strip_coords(gx, gy, az)
+        q = z - s * math.tan(math.radians(altd))
         # ONE stable lexsort for the whole bucket: strip ascending, s
         # descending within a strip — each strip then scans as its own
         # contiguous slice, exactly the per-strip argsort(-s, mergesort)
@@ -814,452 +857,53 @@ def sun_tiles(tiles: DataFrame, sun: DataFrame | pd.DataFrame,
             if b - a > 1:
                 runbefore[a + 1:b] = np.maximum.accumulate(gmax[a:b - 1])
         sizes = np.diff(np.r_[starts, len(q_o)])
-        shaded = q_o < np.repeat(runbefore, sizes)
-        sel = np.flatnonzero(shaded)
-        if not len(sel):
-            return pd.DataFrame(columns=[f.name for f in _SHADOW_SCHEMA])
-        sgx, sgy = gx[order][sel], gy[order][sel]
-        # pack the shaded set as one bitmap row per tile (nom grid, row-
-        # major ly * nom_w + lx, np.packbits bit order) — the per-cell
-        # row form was O(shaded) small rows through collect_list and a
-        # Python list per cell in the assembly kernel
-        tx = sgx // nom_w
-        ty = sgy // nom_h
-        bit = (sgy - ty * nom_h) * nom_w + (sgx - tx * nom_w)
-        torder = np.lexsort((bit, ty, tx))
-        tx, ty, bit = tx[torder], ty[torder], bit[torder]
-        tstarts = np.flatnonzero(
-            np.r_[True, (tx[1:] != tx[:-1]) | (ty[1:] != ty[:-1])])
-        tends = np.r_[tstarts[1:], len(tx)]
-        out_tx, out_ty, out_mask = [], [], []
-        nbits = nom_w * nom_h
-        for a, b in zip(tstarts, tends):
-            m = np.zeros(nbits, dtype=np.uint8)
-            m[bit[a:b]] = 1
-            out_tx.append(int(tx[a]))
-            out_ty.append(int(ty[a]))
-            out_mask.append(np.packbits(m).tobytes())
-        return pd.DataFrame({
-            "scene_id": np.full(len(out_tx), sid, dtype=object),
-            "tile_x": np.array(out_tx, dtype=np.int32),
-            "tile_y": np.array(out_ty, dtype=np.int32),
-            "mask_bytes": out_mask})
+        sel = order[q_o < np.repeat(runbefore, sizes)]
+        return [(sid, tx, ty, _bitmap(b, nom_w * nom_h))
+                for tx, ty, b in _by_tile(gx[sel], gy[sel], nom_w, nom_h)]
 
-    shadows = segs.groupBy("scene_id", "bkt").applyInPandas(
-        lambda key, pdf: scan_bucket(pdf), _SHADOW_SCHEMA)
+    shadows = _sweep(tiles, nom_w, nom_h, src_col,
+                     _strip_cut(lambda sid: [sun_b.value[sid][0]]
+                                if sid in sun_b.value else []),
+                     F.col("key"), scan, _SHADOW_SCHEMA)
 
+    from .kernels import slope_aspect
     from .pipeline import halo_plane_tiles
+
     src = tiles
     if "image_id" not in tiles.columns:
         src = tiles.withColumn("image_id", F.lit(""))
     pad = halo_plane_tiles(src, r=1, src_col=src_col) \
         .select("scene_id", "tile_x", "tile_y", "w", "h", "pad_bytes")
-    # shaded bitmaps collapse to ONE short list per tile (<= one 2 KB mask
-    # per strip bucket the tile intersects) BEFORE meeting the plane bytes
-    sh_tile = shadows.groupBy("scene_id", "tile_x", "tile_y").agg(
-        F.collect_list("mask_bytes").alias("sh_masks"))
-    # the join output is already exactly one row per tile, so the assembly
-    # kernel is a mapInArrow — the old groupBy+applyInPandas re-shuffled
-    # the pad planes a second time for nothing
-    joined = pad.join(sh_tile, on=["scene_id", "tile_x", "tile_y"],
-                      how="left")
 
-    def build(batches: Iterator[pa.RecordBatch]) \
-            -> Iterator[pa.RecordBatch]:
-        from .kernels import slope_aspect
+    def build(row, w, h):
+        pos = sun_b.value.get(row.scene_id)
+        if pos is None:
+            return np.full((h, w), np.nan, dtype=np.float32).tobytes(), 0, 0
+        az, altd = pos
+        alt = math.radians(altd)
+        pad_p = np.frombuffer(row.pad_bytes, dtype="<f4") \
+            .reshape(h + 2, w + 2).astype(np.float64)
+        g = slope_aspect(pad_p)
+        sl = np.radians(g["slope_deg"][1:-1, 1:-1])
+        asp = np.radians(np.nan_to_num(g["aspect_deg"][1:-1, 1:-1]))
+        shaded = _bit_sums(row.mask_bytes, nom_w, nom_h, h, w)
+        lit = np.ones((h, w), dtype=bool) if shaded is None else shaded == 0
+        m = 1.0 / math.sin(alt)                      # air mass
+        beam = SOLAR_CONSTANT * 0.75 ** (m ** 0.678)  # Meinel
+        azr = math.radians(az % 360.0)
+        with np.errstate(invalid="ignore"):
+            cosi = (math.sin(alt) * np.cos(sl)
+                    + math.cos(alt) * np.sin(sl) * np.cos(azr - asp))
+            direct = beam * np.clip(cosi, 0.0, None) * lit
+            diffuse = (SOLAR_CONSTANT * _DIFFUSE_FRAC
+                       * math.sin(alt) * (1.0 + np.cos(sl)) / 2.0)
+            glob = (direct + diffuse).astype(np.float32)
+        glob[np.isnan(sl)] = np.nan
+        valid = np.isfinite(glob)
+        return (glob.tobytes(), int((~lit & valid).sum()),
+                int(valid.sum()))
 
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in SUN_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                pos = sun_b.value.get(row.scene_id)
-                w, h = int(row.w), int(row.h)
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](int(row.tile_x)); ap["tile_y"](int(row.tile_y))
-                ap["w"](w); ap["h"](h)
-                if pos is None:
-                    glob = np.full((h, w), np.nan, dtype=np.float32)
-                    ap["glob_bytes"](glob.tobytes())
-                    ap["n_shaded"](0); ap["n_valid"](0)
-                    continue
-                az, altd = pos
-                alt = math.radians(altd)
-                pad_p = np.frombuffer(row.pad_bytes, dtype="<f4") \
-                    .reshape(h + 2, w + 2).astype(np.float64)
-                g = slope_aspect(pad_p)
-                sl = np.radians(g["slope_deg"][1:-1, 1:-1])
-                asp = np.radians(np.nan_to_num(g["aspect_deg"][1:-1, 1:-1]))
-                lit = np.ones((h, w), dtype=bool)
-                masks = row.sh_masks
-                if masks is not None and len(masks):
-                    acc = np.frombuffer(masks[0], dtype=np.uint8)
-                    for mb in masks[1:]:
-                        acc = acc | np.frombuffer(mb, dtype=np.uint8)
-                    shaded = np.unpackbits(acc, count=nom_w * nom_h) \
-                        .reshape(nom_h, nom_w)[:h, :w]
-                    lit &= shaded == 0
-                m = 1.0 / math.sin(alt)                      # air mass
-                beam = SOLAR_CONSTANT * 0.75 ** (m ** 0.678)  # Meinel
-                azr = math.radians(az % 360.0)
-                with np.errstate(invalid="ignore"):
-                    cosi = (math.sin(alt) * np.cos(sl)
-                            + math.cos(alt) * np.sin(sl) * np.cos(azr - asp))
-                    direct = beam * np.clip(cosi, 0.0, None) * lit
-                    diffuse = (SOLAR_CONSTANT * _DIFFUSE_FRAC
-                               * math.sin(alt) * (1.0 + np.cos(sl)) / 2.0)
-                    glob = (direct + diffuse).astype(np.float32)
-                glob[np.isnan(sl)] = np.nan
-                valid = np.isfinite(glob)
-                ap["glob_bytes"](glob.tobytes())
-                ap["n_shaded"](int((~lit & valid).sum()))
-                ap["n_valid"](int(valid.sum()))
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, SUN_SCHEMA)
-
-    return joined.mapInArrow(build, SUN_SCHEMA)
-
-
-# --------------------------------------------------------------------------
-# Cumulative multi-observer viewshed (visibility coverage counts)
-# --------------------------------------------------------------------------
-
-_MCELL_SCHEMA = StructType([
-    StructField("scene_id", StringType()),
-    StructField("obs_id", StringType()),
-    StructField("sector", IntegerType()),
-    StructField("gy", IntegerType()),
-    StructField("gx0", IntegerType()),
-    StructField("z_bytes", BinaryType()),      # f32 LE elevation row run
-])
-
-_CMASK_SCHEMA = StructType([
-    StructField("scene_id", StringType()),
-    StructField("tile_x", IntegerType()),
-    StructField("tile_y", IntegerType()),
-    # packbits bitmap of cells THIS (observer, sector) sees; per-cell
-    # counts are the sum of set bits across masks at assembly
-    StructField("vis_bytes", BinaryType()),
-])
-
-VIEWSHED_COUNT_SCHEMA = StructType([
-    StructField("scene_id", StringType()),
-    StructField("tile_x", IntegerType()),
-    StructField("tile_y", IntegerType()),
-    StructField("w", IntegerType()),
-    StructField("h", IntegerType()),
-    StructField("count_bytes", BinaryType()),  # f32: observers seeing the
-    StructField("n_covered", LongType()),      # cell; NaN = NaN terrain
-    StructField("n_evaluated", LongType()),
-])
-
-
-def viewshed_count_tiles(tiles: DataFrame, observers,
-                         obs_height: float = 1.75,
-                         max_dist: float | None = None,
-                         n_sectors: int = 256,
-                         src_col: str = "lst_bytes") -> DataFrame:
-    """Cumulative viewshed over MANY observers per scene (the r.viewshed
-    coverage-analysis composite, GRASS addon r.viewshed.cva): per cell, how
-    many observers see it, under exactly `viewshed_tiles`' R3 semantics per
-    observer. ``observers``: (scene_id, obs_id, ox, oy).
-
-    Work is inherently O(sum over observers of their in-radius cells) —
-    every observer needs its own rays — so ``max_dist`` is the scale knob
-    exactly as in GRASS CVA studies; the sector decomposition bounds the
-    per-task state the same way as the single-observer path. Cells travel
-    as run-length row segments (one (obs, sector, gy, gx0, f32 bytes) row
-    per maximal gx run — never one row per cell), and visible sets return
-    as <= 2 KB per-(tile, observer, sector) bitmaps whose set bits SUM to
-    the per-cell counts at assembly.
-
-    Output planes are f32 counts (0 = evaluated, never seen; NaN = NaN
-    terrain). A cell outside every observer's radius counts 0 — it is
-    still evaluated terrain (n_evaluated counts finite cells, matching
-    the sum over observers' n_evaluated only when radii cover the scene).
-    """
-    spark = tiles.sparkSession
-    if isinstance(observers, pd.DataFrame):
-        obs_pdf = observers
-    else:
-        obs_pdf = observers.toPandas()
-    if obs_pdf[["scene_id", "obs_id"]].duplicated().any():
-        raise ValueError("duplicate (scene_id, obs_id)")
-    two_pi = 2.0 * math.pi
-
-    nom = tiles.agg(F.max("w").alias("w"), F.max("h").alias("h")).first()
-    nom_w, nom_h = int(nom["w"]), int(nom["h"])
-
-    by_scene: dict[str, list] = {}
-    for r in obs_pdf.itertuples():
-        by_scene.setdefault(r.scene_id, []).append(
-            (str(r.obs_id), float(r.ox), float(r.oy)))
-    obs_b = spark.sparkContext.broadcast(by_scene)
-
-    def emit(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in _MCELL_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                olist = obs_b.value.get(row.scene_id)
-                if not olist:
-                    continue
-                w, h = int(row.w), int(row.h)
-                tx0, ty0 = int(row.tile_x) * nom_w, int(row.tile_y) * nom_h
-                plane = codecs.decode_f32bt(
-                    getattr(row, src_col), w, h).astype(np.float64)
-                yy, xx = np.mgrid[0:h, 0:w]
-                gxa = (tx0 + xx).ravel()
-                gya = (ty0 + yy).ravel()
-                za = plane.ravel()
-                fin = np.isfinite(za)      # NaN cells: see _sector_pass
-                gx0_, gy0_, z0 = gxa[fin], gya[fin], za[fin]
-                for obs_id, oxx, oyy in olist:
-                    rx = gx0_ - oxx
-                    ry = gy0_ - oyy
-                    r = np.hypot(rx, ry)
-                    if max_dist is not None:
-                        keep = r <= max_dist + 1.5
-                        if not keep.any():
-                            continue
-                        gx, gy, z, rxx, ryy, rr = (a[keep] for a in
-                                                   (gx0_, gy0_, z0,
-                                                    rx, ry, r))
-                    else:
-                        gx, gy, z, rxx, ryy, rr = gx0_, gy0_, z0, rx, ry, r
-                    ang = np.arctan2(ryy, rxx)
-                    near = rr <= 2.5
-                    with np.errstate(invalid="ignore", divide="ignore"):
-                        half = np.arcsin(np.clip(
-                            1.5 * math.sqrt(2.0) / np.maximum(rr, 1e-9),
-                            0, 1.0))
-                    s_lo = np.floor((ang - half + math.pi) / two_pi
-                                    * n_sectors).astype(np.int64)
-                    s_hi = np.floor((ang + half + math.pi) / two_pi
-                                    * n_sectors).astype(np.int64)
-                    span = np.minimum(s_hi - s_lo + 1, n_sectors)
-                    span = np.where(near, n_sectors, span)
-                    base = np.where(near, 0, s_lo)
-                    n_out = int(span.sum())
-                    if n_out == 0:
-                        continue
-                    idx = np.repeat(np.arange(len(gx)), span)
-                    starts = np.concatenate(([0], np.cumsum(span)[:-1]))
-                    off = np.arange(n_out) - np.repeat(starts, span)
-                    sec = (np.repeat(base, span) + off) % n_sectors
-                    egx, egy, ez = gx[idx], gy[idx], z[idx].astype("<f4")
-                    rord = np.lexsort((egx, egy, sec))
-                    s2, y2, x2, z2 = sec[rord], egy[rord], egx[rord], \
-                        ez[rord]
-                    newrun = np.r_[True, (s2[1:] != s2[:-1])
-                                   | (y2[1:] != y2[:-1])
-                                   | (x2[1:] != x2[:-1] + 1)]
-                    rstarts = np.flatnonzero(newrun)
-                    rends = np.r_[rstarts[1:], len(s2)]
-                    sid = row.scene_id
-                    for i in range(len(rstarts)):
-                        ap["scene_id"](sid)
-                        ap["obs_id"](obs_id)
-                        ap["sector"](int(s2[rstarts[i]]))
-                        ap["gy"](int(y2[rstarts[i]]))
-                        ap["gx0"](int(x2[rstarts[i]]))
-                        ap["z_bytes"](z2[rstarts[i]:rends[i]].tobytes())
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, _MCELL_SCHEMA)
-
-    cells = tiles.select("scene_id", "tile_x", "tile_y", "w", "h", src_col) \
-        .mapInArrow(emit, _MCELL_SCHEMA)
-
-    # eye heights per (scene, observer): decode only the containing tiles
-    obs_df = spark.createDataFrame(obs_pdf[["scene_id", "obs_id",
-                                            "ox", "oy"]])
-    eye_schema = StructType([
-        StructField("scene_id", StringType()),
-        StructField("obs_id", StringType()),
-        StructField("z", DoubleType()),
-    ])
-    hit = (tiles.select("scene_id", "tile_x", "tile_y", "w", "h", src_col)
-           .join(F.broadcast(obs_df), on="scene_id")
-           .filter((F.col("tile_x")
-                    == F.floor(F.col("ox") / nom_w).cast("int"))
-                   & (F.col("tile_y")
-                      == F.floor(F.col("oy") / nom_h).cast("int"))))
-
-    def eye_fn(batches: Iterator[pa.RecordBatch]) \
-            -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {"scene_id": [], "obs_id": [], "z": []}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                lx = int(row.ox) - int(row.tile_x) * nom_w
-                ly = int(row.oy) - int(row.tile_y) * nom_h
-                if not (0 <= lx < w and 0 <= ly < h):
-                    continue
-                plane = codecs.decode_f32bt(getattr(row, src_col), w, h)
-                cols["scene_id"].append(row.scene_id)
-                cols["obs_id"].append(row.obs_id)
-                cols["z"].append(float(plane[ly, lx]))
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, eye_schema)
-
-    oz = hit.mapInArrow(eye_fn, eye_schema).toPandas()
-    eyes = {}
-    for r in obs_pdf.itertuples():
-        zr = oz[(oz.scene_id == r.scene_id) & (oz.obs_id == str(r.obs_id))]
-        if len(zr) == 0 or not np.isfinite(zr.z.iloc[0]):
-            raise ValueError(
-                f"observer {r.obs_id!r} of scene {r.scene_id!r} is NaN or "
-                "outside the raster")
-        eyes[(r.scene_id, str(r.obs_id))] = (
-            float(r.ox), float(r.oy), float(zr.z.iloc[0]) + float(obs_height))
-    eyes_b = spark.sparkContext.broadcast(eyes)
-
-    def run_bucket(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(columns=[f.name for f in _CMASK_SCHEMA])
-        scene, obs_id = key[0], key[1]
-        o = eyes_b.value.get((scene, obs_id))
-        if o is None:
-            return empty
-        ox, oy, eye = o
-        vgx_l, vgy_l = [], []
-        for sector, g in pdf.groupby("sector", sort=False):
-            zs = [np.frombuffer(b, dtype="<f4") for b in g.z_bytes]
-            lens = np.fromiter((len(a) for a in zs), dtype=np.int64,
-                               count=len(zs))
-            z = np.concatenate(zs).astype(np.float64)
-            gx = (np.repeat(g.gx0.to_numpy(np.int64), lens)
-                  + _runs_arange(lens))
-            gy = np.repeat(g.gy.to_numpy(np.int64), lens)
-            rx = gx - ox
-            ry = gy - oy
-            r = np.hypot(rx, ry)
-            ang = np.arctan2(ry, rx)
-            ctr = (np.floor((ang + math.pi) / two_pi * n_sectors)
-                   .astype(np.int64) % n_sectors)
-            tgt = ctr == sector
-            if max_dist is not None:
-                tgt &= r <= max_dist
-            if not tgt.any():
-                continue
-            tgx, tgy = gx[tgt], gy[tgt]
-            vis = _march_targets(ox, oy, eye, tgx, tgy, z[tgt], gx, gy, z)
-            if vis.any():
-                vgx_l.append(tgx[vis])
-                vgy_l.append(tgy[vis])
-        if not vgx_l:
-            return empty
-        vgx = np.concatenate(vgx_l)
-        vgy = np.concatenate(vgy_l)
-        tx = vgx // nom_w
-        ty = vgy // nom_h
-        bit = (vgy - ty * nom_h) * nom_w + (vgx - tx * nom_w)
-        torder = np.lexsort((bit, ty, tx))
-        tx, ty, bit = tx[torder], ty[torder], bit[torder]
-        tstarts = np.flatnonzero(
-            np.r_[True, (tx[1:] != tx[:-1]) | (ty[1:] != ty[:-1])])
-        tends = np.r_[tstarts[1:], len(tx)]
-        nbits = nom_w * nom_h
-        out_tx, out_ty, out_vi = [], [], []
-        for a, b in zip(tstarts, tends):
-            vi = np.zeros(nbits, dtype=np.uint8)
-            vi[bit[a:b]] = 1
-            out_tx.append(int(tx[a]))
-            out_ty.append(int(ty[a]))
-            out_vi.append(np.packbits(vi).tobytes())
-        return pd.DataFrame({
-            "scene_id": np.full(len(out_tx), scene, dtype=object),
-            "tile_x": np.array(out_tx, dtype=np.int32),
-            "tile_y": np.array(out_ty, dtype=np.int32),
-            "vis_bytes": out_vi})
-
-    # per-(observer, sector) visible sets leave as per-tile bitmaps; the
-    # per-cell count is the SUM of set bits across masks (each observer
-    # contributes a cell through exactly one sector), so the regroup is
-    # one collect_list of <= 2 KB rows per tile — never per-cell rows
-    # explicit-count repartition: see viewshed_tiles — keeps AQE from
-    # coalescing the small RLE exchange into a serial scan task
-    par = max(spark.sparkContext.defaultParallelism, 1)
-    skey = F.floor(F.col("sector") / _VS_BKT)
-    masks = (cells.repartition(par, F.col("scene_id"), F.col("obs_id"),
-                               skey)
-             .groupBy("scene_id", "obs_id", skey.alias("sector_bkt"))
-             .applyInPandas(run_bucket, _CMASK_SCHEMA))
-    keyed = masks.groupBy("scene_id", "tile_x", "tile_y").agg(
-        F.collect_list("vis_bytes").alias("vi_masks"))
-    layout = tiles.select("scene_id", "tile_x", "tile_y", "w", "h", src_col)
-    joined = layout.join(keyed, on=["scene_id", "tile_x", "tile_y"],
-                         how="left")
-
-    def build(batches: Iterator[pa.RecordBatch]) \
-            -> Iterator[pa.RecordBatch]:
-        nbits = nom_w * nom_h
-        for batch in batches:
-            cols: dict[str, list] = {f.name: []
-                                     for f in VIEWSHED_COUNT_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                plane = codecs.decode_f32bt(getattr(row, src_col), w, h)
-                cnt = np.where(np.isfinite(plane), 0.0, np.nan) \
-                    .astype(np.float32)
-                masks_ = row.vi_masks
-                if masks_ is not None and len(masks_):
-                    acc = np.zeros(nbits, dtype=np.int64)
-                    for mb in masks_:
-                        acc += np.unpackbits(
-                            np.frombuffer(mb, dtype=np.uint8), count=nbits)
-                    add = acc.reshape(nom_h, nom_w)[:h, :w]
-                    sel = add > 0
-                    cnt[sel] = add[sel].astype(np.float32)
-                valid = np.isfinite(cnt)
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](int(row.tile_x))
-                ap["tile_y"](int(row.tile_y))
-                ap["w"](w); ap["h"](h)
-                ap["count_bytes"](cnt.tobytes())
-                ap["n_covered"](int((cnt > 0).sum()))
-                ap["n_evaluated"](int(valid.sum()))
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, VIEWSHED_COUNT_SCHEMA)
-
-    return joined.mapInArrow(build, VIEWSHED_COUNT_SCHEMA)
-
-
-# --------------------------------------------------------------------------
-# Horizon angle maps (r.horizon analog): per-cell elevation angle of the
-# horizon toward each requested azimuth
-# --------------------------------------------------------------------------
-
-_HCELL_SCHEMA = StructType([
-    StructField("scene_id", StringType()),
-    StructField("azimuth", DoubleType()),
-    StructField("bkt", LongType()),            # floor(strip / 64)
-    StructField("gy", IntegerType()),
-    StructField("gx0", IntegerType()),
-    StructField("z_bytes", BinaryType()),      # f32 LE elevation row run
-])
-
-_HVAL_SCHEMA = StructType([
-    StructField("scene_id", StringType()),
-    StructField("azimuth", DoubleType()),
-    StructField("tile_x", IntegerType()),
-    StructField("tile_y", IntegerType()),
-    # packed per-tile results: bit positions (ly * nom_w + lx, int32 LE)
-    # and f32 horizon degrees — one row per (tile, scan bucket) instead
-    # of one row per cell
-    StructField("idx_bytes", BinaryType()),
-    StructField("val_bytes", BinaryType()),
-])
-
-HORIZON_SCHEMA = StructType([
-    StructField("scene_id", StringType()),
-    StructField("azimuth", DoubleType()),
-    StructField("tile_x", IntegerType()),
-    StructField("tile_y", IntegerType()),
-    StructField("w", IntegerType()),
-    StructField("h", IntegerType()),
-    StructField("horizon_bytes", BinaryType()),  # f32 deg; NaN = NaN cell
-    StructField("n_valid", LongType()),          #        or no sunward cell
-])
+    return _assemble(pad, shadows, _TILE_KEY, build, SUN_SCHEMA)
 
 
 def _horizon_strip_scan(s: np.ndarray, z: np.ndarray) -> np.ndarray:
@@ -1328,82 +972,25 @@ def horizon_tiles(tiles: DataFrame, azimuths, src_col: str = "lst_bytes"
     requested compass azimuth. One output plane row per (scene, azimuth,
     tile).
 
-    Same distributed shape as `sun_tiles`' shadow pass, once per azimuth:
-    one decode pass emits (azimuth, strip, cell) small rows, each strip
-    runs the exact convex-hull scan, one equi regroup rebuilds planes —
-    pixel planes never hash-shuffle. Work is O(azimuths x cells) rows, the
-    honest cost of independent directions (GRASS iterates the whole raster
-    per direction too)."""
+    The strip sweep (module docstring) with every azimuth in one decode
+    pass; each strip runs the exact convex-hull scan. Work is O(azimuths x
+    cells), the honest cost of independent directions (GRASS iterates the
+    whole raster per direction too)."""
     azs = [float(a) % 360.0 for a in azimuths]
     if len(azs) == 0:
         raise ValueError("horizon_tiles needs at least one azimuth")
     if len(set(azs)) != len(azs):
         raise ValueError("duplicate azimuths")
-    nom = tiles.agg(F.max("w").alias("w"), F.max("h").alias("h")).first()
-    nom_w, nom_h = int(nom["w"]), int(nom["h"])
+    nom_w, nom_h = _nominal_grid(tiles)
 
-    def emit(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in _HCELL_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                tx0, ty0 = int(row.tile_x) * nom_w, int(row.tile_y) * nom_h
-                plane = codecs.decode_f32bt(
-                    getattr(row, src_col), w, h).astype(np.float64)
-                vv, uu = np.mgrid[0:h, 0:w]
-                gx = (tx0 + uu).ravel()
-                gy = (ty0 + vv).ravel()
-                z = plane.ravel().astype("<f4")   # exact f32 round-trip
-                keep = np.isfinite(z)
-                if not keep.any():
-                    continue
-                gx, gy, z = gx[keep], gy[keep], z[keep]
-                rowid = gy                         # runs never span rows
-                sid = row.scene_id
-                for az in azs:
-                    a = math.radians(az)
-                    ca, sa = math.cos(a), math.sin(a)
-                    # strip = floor(gx cosA + gy sinA) is monotone in gx
-                    # along a raster row -> equal-BUCKET runs of a row
-                    # are gx-contiguous; one cut pass per azimuth
-                    bkt = np.floor(gx * ca + gy * sa).astype(np.int64) // 64
-                    newrun = np.r_[True, (bkt[1:] != bkt[:-1])
-                                   | (rowid[1:] != rowid[:-1])
-                                   | (gx[1:] != gx[:-1] + 1)]
-                    rstarts = np.flatnonzero(newrun)
-                    rends = np.r_[rstarts[1:], len(gx)]
-                    for i in range(len(rstarts)):
-                        ap["scene_id"](sid)
-                        ap["azimuth"](az)
-                        ap["bkt"](int(bkt[rstarts[i]]))
-                        ap["gy"](int(gy[rstarts[i]]))
-                        ap["gx0"](int(gx[rstarts[i]]))
-                        ap["z_bytes"](z[rstarts[i]:rends[i]].tobytes())
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, _HCELL_SCHEMA)
-
-    cells = tiles.select("scene_id", "tile_x", "tile_y", "w", "h", src_col) \
-        .mapInArrow(emit, _HCELL_SCHEMA)
-
-    def scan(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        # strip-BUCKET task hosting many strips (see sun_tiles: one group
-        # per strip drowned in per-group overhead); per-strip results are
-        # unchanged — `_horizon_strip_scan` sorts internally and tie
-        # groups are order-independent
-        az = float(key[1])
-        a = math.radians(az)
-        du, dv = math.sin(a), -math.cos(a)
-        ca, sa = math.cos(a), math.sin(a)
-        zs = [np.frombuffer(b, dtype="<f4") for b in pdf.z_bytes]
-        lens = np.fromiter((len(x) for x in zs), dtype=np.int64,
-                           count=len(zs))
-        z = np.concatenate(zs).astype(np.float64)
-        gx = (np.repeat(pdf.gx0.to_numpy(np.int64), lens)
-              + _runs_arange(lens))
-        gy = np.repeat(pdf.gy.to_numpy(np.int64), lens)
-        s = gx * du + gy * dv
-        strip = np.floor(gx * ca + gy * sa).astype(np.int64)
+    # a strip BUCKET per group (one group per strip drowned in per-group
+    # overhead); per-strip results are unchanged — `_horizon_strip_scan`
+    # sorts internally and tie groups are order-independent
+    def scan(pdf: pd.DataFrame) -> list:
+        sid = pdf.scene_id.iloc[0]
+        az = azs[int(pdf.key.iloc[0]) % len(azs)]
+        gx, gy, z = _cells(pdf)
+        s, strip = _strip_coords(gx, gy, az)
         order = np.argsort(strip, kind="stable")
         st_o = strip[order]
         bounds = np.r_[np.flatnonzero(np.r_[True, st_o[1:] != st_o[:-1]]),
@@ -1412,68 +999,24 @@ def horizon_tiles(tiles: DataFrame, azimuths, src_col: str = "lst_bytes"
         for lo, hi in zip(bounds[:-1], bounds[1:]):
             sel = order[lo:hi]
             ang[sel] = _horizon_strip_scan(s[sel], z[sel])
-        # pack per-tile (idx, f32 value) arrays — the f64->f32 cast is
-        # the same one the plane assembly applied per cell before
-        scene = pdf.scene_id.iloc[0]
-        tx = gx // nom_w
-        ty = gy // nom_h
-        bit = ((gy - ty * nom_h) * nom_w + (gx - tx * nom_w)) \
-            .astype(np.int32)
-        val = ang.astype(np.float32)
-        torder = np.lexsort((bit, ty, tx))
-        tx, ty, bit, val = tx[torder], ty[torder], bit[torder], val[torder]
-        tstarts = np.flatnonzero(
-            np.r_[True, (tx[1:] != tx[:-1]) | (ty[1:] != ty[:-1])])
-        tends = np.r_[tstarts[1:], len(tx)]
-        out_tx, out_ty, out_idx, out_val = [], [], [], []
-        for a_, b_ in zip(tstarts, tends):
-            out_tx.append(int(tx[a_]))
-            out_ty.append(int(ty[a_]))
-            out_idx.append(bit[a_:b_].astype("<i4").tobytes())
-            out_val.append(val[a_:b_].astype("<f4").tobytes())
-        return pd.DataFrame({
-            "scene_id": np.full(len(out_tx), scene, dtype=object),
-            "azimuth": np.full(len(out_tx), az),
-            "tile_x": np.array(out_tx, dtype=np.int32),
-            "tile_y": np.array(out_ty, dtype=np.int32),
-            "idx_bytes": out_idx, "val_bytes": out_val})
+        return [(sid, az, tx, ty, b.astype("<i4").tobytes(),
+                 v.astype("<f4").tobytes())
+                for tx, ty, b, v in _by_tile(gx, gy, nom_w, nom_h,
+                                             ang.astype(np.float32))]
 
-    par = max(tiles.sparkSession.sparkContext.defaultParallelism, 1)
-    vals = (cells.repartition(par, "scene_id", "azimuth", "bkt")
-            .groupBy("scene_id", "azimuth", "bkt")
-            .applyInPandas(scan, _HVAL_SCHEMA))
+    vals = _sweep(tiles, nom_w, nom_h, src_col, _strip_cut(lambda _s: azs),
+                  F.col("key"), scan, _HVAL_SCHEMA)
 
-    layout = tiles.select("scene_id", "tile_x", "tile_y", "w", "h")
-    keyed = vals.groupBy("scene_id", "azimuth", "tile_x", "tile_y").agg(
-        F.collect_list("idx_bytes").alias("idx_l"),
-        F.collect_list("val_bytes").alias("val_l"))
-    az_df = tiles.sparkSession.createDataFrame(
-        pd.DataFrame({"azimuth": azs}))
-    grid = layout.crossJoin(F.broadcast(az_df))
-    joined = grid.join(keyed, on=["scene_id", "azimuth", "tile_x", "tile_y"],
-                       how="left")
+    def build(row, w, h):
+        plane = np.full((nom_h, nom_w), np.nan, dtype=np.float32)
+        for ib, vb in zip(row.idx_bytes or (), row.val_bytes or ()):
+            plane.ravel()[np.frombuffer(ib, dtype="<i4")] = \
+                np.frombuffer(vb, dtype="<f4")
+        plane = np.ascontiguousarray(plane[:h, :w])
+        return plane.tobytes(), int(np.isfinite(plane).sum())
 
-    def build(batches: Iterator[pa.RecordBatch]) \
-            -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in HORIZON_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                plane = np.full((nom_h, nom_w), np.nan, dtype=np.float32)
-                if row.idx_l is not None and len(row.idx_l):
-                    for ib, vb in zip(row.idx_l, row.val_l):
-                        plane.ravel()[np.frombuffer(ib, dtype="<i4")] = \
-                            np.frombuffer(vb, dtype="<f4")
-                plane = plane[:h, :w]
-                ap["scene_id"](row.scene_id)
-                ap["azimuth"](float(row.azimuth))
-                ap["tile_x"](int(row.tile_x))
-                ap["tile_y"](int(row.tile_y))
-                ap["w"](w); ap["h"](h)
-                ap["horizon_bytes"](np.ascontiguousarray(plane).tobytes())
-                ap["n_valid"](int(np.isfinite(plane).sum()))
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, HORIZON_SCHEMA)
-
-    return joined.mapInArrow(build, HORIZON_SCHEMA)
+    az_df = tiles.sparkSession.createDataFrame(pd.DataFrame({"azimuth": azs}))
+    layout = tiles.select("scene_id", "tile_x", "tile_y", "w", "h") \
+        .crossJoin(F.broadcast(az_df))
+    return _assemble(layout, vals, ["scene_id", "azimuth", "tile_x",
+                                    "tile_y"], build, HORIZON_SCHEMA)

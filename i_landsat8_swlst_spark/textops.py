@@ -18,6 +18,7 @@ import re
 
 import pandas as pd  # module-level: pandas_udf type-hint strings (PEP 563)
 from pyspark.sql import Window, functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 
 from .relational import _REGISTRY, load, register
 
@@ -385,6 +386,7 @@ def _shingle_sets(docs, k: int):
     from pyspark.sql.types import StringType, StructField, StructType
 
     id_field = docs.schema["doc_id"]
+    id_type = to_arrow_type(id_field.dataType)
     sh_schema = StructType([id_field, StructField("sh", StringType())])
 
     def shingles(batches):
@@ -406,10 +408,7 @@ def _shingle_sets(docs, k: int):
                 sh_out.extend(seen)
             if ids_out:
                 yield pa.RecordBatch.from_arrays(
-                    [pa.array(ids_out,
-                              pa.int64()
-                              if id_field.dataType.simpleString() == "bigint"
-                              else None),
+                    [pa.array(ids_out, id_type),
                      pa.array(sh_out, pa.string())],
                     names=["doc_id", "sh"])
 
@@ -592,10 +591,11 @@ def q_char_entropy(spark, sf_dir):
     # substr(text, i, 1), counts are exact integers, and the partial sum
     # folds SEQUENTIALLY over the ch-sorted count list — python sorted()
     # orders strings by code point == the engines' binary UTF-8 ORDER BY,
-    # and python's libm ln/multiply/add are the identical IEEE doubles of
-    # the documented cross-engine fold. Empty docs emit no row (the old
-    # length > 0 guard); the entropy expression and its HALF_UP round
-    # stay in the JVM, unchanged.
+    # and the ln/multiply/add fold runs in the documented cross-engine
+    # order, so the entropy agrees with the engines after round(6) (libm
+    # ln is not promised bit-identical across engines). Empty docs emit no
+    # row (the old length > 0 guard); the entropy expression and its
+    # HALF_UP round stay in the JVM, unchanged.
     from collections import Counter
     from math import log as _ln
 
@@ -604,6 +604,7 @@ def q_char_entropy(spark, sf_dir):
 
     d = load(spark, sf_dir, "documents").filter(F.length("text") > 0)
     id_field = d.schema["doc_id"]
+    id_type = to_arrow_type(id_field.dataType)
     out_schema = StructType([
         id_field,
         StructField("n_chars", LongType(), False),
@@ -633,10 +634,7 @@ def q_char_entropy(spark, sf_dir):
                 out["s"].append(s)
             if out["doc_id"]:
                 yield pa.RecordBatch.from_arrays(
-                    [pa.array(out["doc_id"],
-                              pa.int64()
-                              if id_field.dataType.simpleString() == "bigint"
-                              else None),
+                    [pa.array(out["doc_id"], id_type),
                      pa.array(out["n_chars"], pa.int64()),
                      pa.array(out["alphabet"], pa.int64()),
                      pa.array(out["s"], pa.float64())],
@@ -934,6 +932,7 @@ def q_winnow_fingerprint(spark, sf_dir):
     d = load(spark, sf_dir, "documents").filter(_WINNOW_SUBSET).filter(
         F.length("text") >= _WINNOW_K)
     id_field = d.schema["doc_id"]
+    id_type = to_arrow_type(id_field.dataType)
     out_schema = StructType([
         id_field,
         StructField("n_kgrams", LongType(), False),
@@ -982,10 +981,7 @@ def q_winnow_fingerprint(spark, sf_dir):
                 out["max_fp"].append(int(mins.max()))
             if out["doc_id"]:
                 yield pa.RecordBatch.from_arrays(
-                    [pa.array(out["doc_id"],
-                              pa.int64()
-                              if id_field.dataType.simpleString() == "bigint"
-                              else None),
+                    [pa.array(out["doc_id"], id_type),
                      pa.array(out["n_kgrams"], pa.int64()),
                      pa.array(out["n_fingerprints"], pa.int64()),
                      pa.array(out["min_fp"], pa.int64()),
