@@ -9,6 +9,7 @@ Usage:
   python bench_extra.py q_ann_ivf [--reps 3] [--plan plans/r07/q_ann_ivf_before.txt]
   python bench_extra.py sun|texture|classify|idw|warp|raster|enrich [--reps 3]
   python bench_extra.py viewshed|viewshed_cva|horizon|tovect|contour [--reps 3]
+  python bench_extra.py regions|segment|landscape [--reps 3]
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf1.0 — the driver's
 escalated scale), SPARK_GRAFT_CPUS (default: this host's os.cpu_count()).
@@ -127,8 +128,12 @@ def _operator_df(spark, name: str, tmp: str):
                           float(ws.lat1), ntx=wntx, nty=wnty,
                           tile_w=160, tile_h=160)
         return Wp.warp_tiles(wtiles, idw_geom, dst, method="bilinear")
-    if name in ("viewshed", "viewshed_cva", "horizon", "tovect", "contour"):
-        from i_landsat8_swlst_spark import terrain as Tr, vectorize as Vz
+    if name in ("viewshed", "viewshed_cva", "horizon", "tovect", "contour",
+                "regions", "segment", "landscape"):
+        from i_landsat8_swlst_spark import (
+            landscape as Ls, regions as Rg, segment as Sg, terrain as Tr,
+            vectorize as Vz,
+        )
         terr_path = f"{tmp}/terrain_tiles"
         if not os.path.isdir(terr_path):
             # deterministic 1024x1024 terrain (64 tiles of 128x128):
@@ -170,6 +175,13 @@ def _operator_df(spark, name: str, tmp: str):
             return Tr.horizon_tiles(small, [90.0, 225.0, 315.0])
         if name == "tovect":
             return Vz.to_vect(terr, threshold=45.0)
+        # the other connected-component operators on the same fixture
+        if name == "regions":
+            return Rg.extract_regions(terr, threshold=45.0)
+        if name == "segment":
+            return Sg.segment_tiles(terr, lam=12.0)
+        if name == "landscape":
+            return Ls.class_metrics(terr, levels=8)
         return Vz.contour_lines(terr, [20.0, 40.0, 60.0])
     if name == "enrich":
         from i_landsat8_swlst_spark import spatial

@@ -53,7 +53,9 @@ from pyspark.sql.types import (
 )
 
 from . import codecs
-from .pipeline import _batch_from_cols, _batch_rows, halo_plane_tiles
+from .pipeline import (
+    _batch_from_cols, _batch_rows, _nominal_grid, halo_plane_tiles,
+)
 
 W_ORTH = 3.0   # chamfer 3-4 metric: exact ints for uniform cost
 W_DIAG = 4.0
@@ -548,8 +550,7 @@ def cost_allocation_tiles(tiles: DataFrame, threshold: float,
     distance-only) joined back on the tile key, re-relaxes tile-locally,
     and stops when no tile changes.
     """
-    nom = tiles.agg(F.max("w").alias("w"), F.max("h").alias("h")).first()
-    nom_w, nom_h = int(nom["w"]), int(nom["h"])
+    nom_w, nom_h = _nominal_grid(tiles)
 
     def init_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:

@@ -53,7 +53,9 @@ from pyspark.sql.types import (
     StructField, StructType,
 )
 
-from .pipeline import _batch_from_cols, _batch_rows, halo_plane_tiles
+from .pipeline import (
+    _batch_from_cols, _batch_rows, _nominal_grid, halo_plane_tiles,
+)
 
 # D8 neighbor order (dy, dx) — fixed, ties broken by FIRST index with the
 # max drop, so direction assignment is deterministic everywhere.
@@ -471,10 +473,7 @@ def basin_tiles(tiles: DataFrame, src_col: str = "lst_bytes",
     iterated, with log2(max tile-hops) rounds of hash self-joins. The
     final label substitution joins a per-tile list of (foreign gid ->
     basin) pairs — never a per-pixel row explosion."""
-    # nominal (non-ragged) tile dims: the max over the grid. One tiny
-    # metadata-only job; every interior tile has exactly these dims.
-    nom = tiles.agg(F.max("w").alias("w"), F.max("h").alias("h")).first()
-    nom_w, nom_h = int(nom["w"]), int(nom["h"])
+    nom_w, nom_h = _nominal_grid(tiles)
     dirs = flow_dir_tiles(tiles, src_col=src_col)
     dir_pads = halo_plane_tiles(dirs, r=1, src_col="dir_bytes")
 
@@ -641,8 +640,7 @@ def drain_paths(tiles: DataFrame, points: DataFrame,
     from pyspark import StorageLevel
     import pandas as pd
 
-    nom = tiles.agg(F.max("w").alias("w"), F.max("h").alias("h")).first()
-    nom_w, nom_h = int(nom["w"]), int(nom["h"])
+    nom_w, nom_h = _nominal_grid(tiles)
     dirs = flow_dir_tiles(tiles, src_col=src_col) \
         .persist(StorageLevel.MEMORY_AND_DISK)
     spark = tiles.sparkSession

@@ -13,7 +13,7 @@ Per-(scene, class) structure metrics of a globally-quantized plane
 - ``mean_patch_px`` / ``largest_patch_px`` — patch-size stats.
 
 Everything comes out of ONE pixel scan (mapInArrow): each tile
-quantizes once, labels each present class with the run-union
+quantizes once, labels each present class with the shared
 `regions.label_tile` kernel (labels offset to a per-tile dense space so
 packed nodes stay unique across classes), counts its WITHIN-tile edge
 credits and class areas, and emits only O(perimeter + classes) rows:
@@ -25,9 +25,9 @@ credits and class areas, and emits only O(perimeter + classes) rows:
   kind 4  edge probe         (class, gx, gy)   right/bottom, directed
   kind 5  tile partials      (class, area, within-tile edge credits)
 
-Cross-tile patch stitching is the regions.py decomposition verbatim
-(probe->cell equi join on (scene, gx, gy, class) + bounded-round
-min-label propagation over the patch graph — `regions._cc_min_label`);
+Cross-tile patch stitching is the shared regions.py stitch
+(`regions._stitched`: probe->cell equi join on (scene, class, gx, gy) +
+ONE grouped min-label pass over the patch graph);
 cross-tile edges are one directed probe->cell equi join (right/down
 only, so each boundary crossing is counted exactly once). The pixel
 planes never travel: the exchanges carry border pixels and per-class
@@ -36,20 +36,17 @@ partials.
 
 from __future__ import annotations
 
-from typing import Iterator
+from functools import partial
 
 import numpy as np
-import pyarrow as pa
 
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import (
     IntegerType, LongType, StringType, StructField, StructType,
 )
 
-from . import codecs
 from .multiband import scene_ranges_df
-from .pipeline import _batch_from_cols, _batch_rows
-from .regions import _cc_min_label, _pack_node, label_tile
+from .regions import _Rows, _stitched, _tile_pass, label_tile
 from .texture import _quantize
 
 _LS_SCHEMA = StructType([
@@ -66,96 +63,56 @@ _LS_SCHEMA = StructType([
 
 def _extract(tiles: DataFrame, src_col: str, levels: int,
              ranges_df: DataFrame, nom_w: int, nom_h: int) -> DataFrame:
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in _LS_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
+    def tile(rows: _Rows, plane: np.ndarray) -> None:
+        # all-NaN scene -> no range row (NULL after the left join); any
+        # range quantizes it identically (every pixel level -1)
+        vmin = 0.0 if rows.row.vmin is None else float(rows.row.vmin)
+        vmax = 1.0 if rows.row.vmin is None else float(rows.row.vmax)
+        q = _quantize(plane, vmin, vmax, levels)
+        h, w = q.shape
 
-            def emit(scene, kind, cls, node=0, area=0, edge=0, gx=0, gy=0):
-                ap["scene_id"](scene); ap["kind"](int(kind))
-                ap["cls"](int(cls)); ap["node"](int(node))
-                ap["area_px"](int(area)); ap["edge_px"](int(edge))
-                ap["gx"](int(gx)); ap["gy"](int(gy))
+        # within-tile edge credits: right + down valid-valid pairs
+        for a, b in ((q[:, :-1], q[:, 1:]), (q[:-1, :], q[1:, :])):
+            m = (a >= 0) & (b >= 0) & (a != b)
+            credits = np.bincount(np.concatenate([a[m], b[m]]), minlength=levels)
+            c = np.flatnonzero(credits)
+            rows.add(5, cls=c, edge_px=credits[c])
 
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                tx, ty = int(row.tile_x), int(row.tile_y)
-                plane = codecs.decode_f32bt(getattr(row, src_col), w, h)
-                # all-NaN scene -> no range row (NULL after the left join);
-                # any range quantizes it identically (every pixel level -1)
-                vmin = 0.0 if row.vmin is None else float(row.vmin)
-                vmax = 1.0 if row.vmin is None else float(row.vmax)
-                q = _quantize(plane, vmin, vmax, levels)
-                # nominal dims, not this tile's — ragged edge tiles would
-                # otherwise mis-place scene coords (see extract_regions)
-                ox, oy = tx * nom_w, ty * nom_h
+        # per-class areas + per-class patch labeling, labels offset into
+        # one dense per-tile space so packed nodes are unique
+        base = 0
+        for c in np.unique(q[q >= 0]):
+            mask = q == c
+            labels, n = label_tile(mask)
+            rows.add(0, cls=c, node=rows.node(base + np.arange(n)),
+                     area_px=np.bincount(labels[mask], minlength=n))
+            rows.add(5, cls=c, area_px=int(mask.sum()))
+            rows.border(labels, base, cls=c)
+            base += n
 
-                # within-tile edge credits: right + down valid-valid pairs
-                for a, b in ((q[:, :-1], q[:, 1:]), (q[:-1, :], q[1:, :])):
-                    m = (a >= 0) & (b >= 0) & (a != b)
-                    if m.any():
-                        credits = np.bincount(
-                            np.concatenate([a[m], b[m]]), minlength=levels)
-                        for c in np.flatnonzero(credits):
-                            emit(row.scene_id, 5, c, edge=credits[c])
-
-                # per-class areas + per-class patch labeling, labels offset
-                # into one dense per-tile space so packed nodes are unique
-                base = 0
-                for c in np.unique(q[q >= 0]):
-                    mask = q == c
-                    labels, n = label_tile(mask)
-                    area = np.bincount(labels[labels >= 0], minlength=n)
-                    node = _pack_node(tx, ty, base + np.arange(n))
-                    for k in range(n):
-                        emit(row.scene_id, 0, c, node[k], area=area[k])
-                    emit(row.scene_id, 5, c, area=int(mask.sum()))
-                    # class-masked border cells + across-border probes
-                    sides = (
-                        (labels[0, :], np.arange(w), np.zeros(w, np.int64), 0, -1),
-                        (labels[h - 1, :], np.arange(w),
-                         np.full(w, h - 1, np.int64), 0, 1),
-                        (labels[:, 0], np.zeros(h, np.int64), np.arange(h), -1, 0),
-                        (labels[:, w - 1], np.full(h, w - 1, np.int64),
-                         np.arange(h), 1, 0),
-                    )
-                    for slab, xs, ys, dx, dy in sides:
-                        sm = slab >= 0
-                        if not sm.any():
-                            continue
-                        snode = _pack_node(tx, ty, base + slab[sm])
-                        for gx, gy, nd in zip(ox + xs[sm], oy + ys[sm], snode):
-                            emit(row.scene_id, 1, c, nd, gx=gx, gy=gy)
-                            emit(row.scene_id, 2, c, nd, gx=gx + dx, gy=gy + dy)
-                    base += n
-
-                # directed cross-tile edge rows: cells on left/top borders,
-                # probes shot right/down from right/bottom borders. A
-                # horizontal probe lands on a left-column cell, a vertical
-                # probe on a top-row cell — both land AT the partner's
-                # coordinate, so the (0,0) corner must emit its cell ONCE
-                # (the top-row loop skips x=0) or crossings into it would
-                # join twice.
-                edges_sides = (
-                    (q[:, 0], np.zeros(h, np.int64), np.arange(h), 3, 0, 0),
-                    (q[0, 1:], np.arange(1, w), np.zeros(w - 1, np.int64), 3, 0, 0),
-                    (q[:, w - 1], np.full(h, w - 1, np.int64), np.arange(h), 4, 1, 0),
-                    (q[h - 1, :], np.arange(w), np.full(w, h - 1, np.int64), 4, 0, 1),
-                )
-                for sq, xs, ys, kind, dx, dy in edges_sides:
-                    sm = sq >= 0
-                    for gx, gy, c in zip(ox + xs[sm] + dx, oy + ys[sm] + dy,
-                                         sq[sm]):
-                        emit(row.scene_id, kind, c, gx=gx, gy=gy)
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, _LS_SCHEMA)
+        # directed cross-tile edge rows: cells on left/top borders, probes
+        # shot right/down from right/bottom borders. A horizontal probe
+        # lands on a left-column cell, a vertical probe on a top-row cell —
+        # both land AT the partner's coordinate, so the (0,0) corner must
+        # emit its cell ONCE (the top-row side skips x=0) or crossings into
+        # it would join twice.
+        edges_sides = (
+            (q[:, 0], np.zeros(h, np.int64), np.arange(h), 3, 0, 0),
+            (q[0, 1:], np.arange(1, w), np.zeros(w - 1, np.int64), 3, 0, 0),
+            (q[:, w - 1], np.full(h, w - 1, np.int64), np.arange(h), 4, 1, 0),
+            (q[h - 1, :], np.arange(w), np.full(w, h - 1, np.int64), 4, 0, 1),
+        )
+        for sq, xs, ys, kind, dx, dy in edges_sides:
+            sm = sq >= 0
+            rows.add(kind, cls=sq[sm], gx=rows.ox + xs[sm] + dx,
+                     gy=rows.oy + ys[sm] + dy)
 
     # mapInArrow cannot column-prune: select only what the kernel reads.
     # The per-scene range rides as a tiny broadcast-joined DataFrame (a
     # closure dict would grow O(scenes) and ship per task).
     src = (tiles.select("scene_id", "tile_x", "tile_y", "w", "h", src_col)
            .join(F.broadcast(ranges_df), on="scene_id", how="left"))
-    return src.mapInArrow(fn, _LS_SCHEMA)
+    return _tile_pass(src, _LS_SCHEMA, src_col, nom_w, nom_h, tile)
 
 
 def class_metrics(tiles: DataFrame, src_col: str = "lst_bytes",
@@ -169,35 +126,11 @@ def class_metrics(tiles: DataFrame, src_col: str = "lst_bytes",
     """
     if not 2 <= levels <= 64:
         raise ValueError(f"levels must be in [2, 64], got {levels}")
-    from pyspark import StorageLevel
-
     ranges_df = scene_ranges_df(tiles, src_col)
-    nom = tiles.agg(F.max("w").alias("w"), F.max("h").alias("h")).first()
-    nom_w, nom_h = int(nom["w"]), int(nom["h"])
-    ex = _extract(tiles, src_col, levels, ranges_df, nom_w, nom_h) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        patches = ex.filter("kind = 0")
-        cells = (ex.filter("kind = 1")
-                 .select("scene_id", "cls", "gx", "gy", "node"))
-        probes = (ex.filter("kind = 2")
-                  .select("scene_id", "cls", "gx", "gy",
-                          F.col("node").alias("pnode")))
-        stitched = (
-            probes.join(cells, on=["scene_id", "cls", "gx", "gy"])
-            .filter(F.col("pnode") != F.col("node"))
-            .select("scene_id", F.col("pnode").alias("v"),
-                    F.col("node").alias("u"))
-            .localCheckpoint()
-        )
-        edges = stitched.unionAll(
-            stitched.select("scene_id", F.col("u").alias("v"),
-                            F.col("v").alias("u")))
-        nodes = patches.select("scene_id", F.col("node").alias("v"))
-        lab = _cc_min_label(nodes, edges)
-
+    with _stitched(tiles, partial(_extract, tiles, src_col, levels, ranges_df),
+                   keys=("cls",)) as (ex, lab, _nom):
         patch_px = (
-            patches.withColumnRenamed("node", "v")
+            ex.filter("kind = 0").withColumnRenamed("node", "v")
             .join(lab, on=["scene_id", "v"])
             .groupBy("scene_id", "cls", "label")
             .agg(F.sum("area_px").alias("patch_px"))
@@ -227,7 +160,7 @@ def class_metrics(tiles: DataFrame, src_col: str = "lst_bytes",
                     .agg(F.sum("area_px").alias("area_px"),
                          F.sum("edge_px").alias("edge_in")))
 
-        out = (
+        return (
             partials
             .join(cross_credit, on=["scene_id", "cls"], how="left")
             .join(patch_stats, on=["scene_id", "cls"], how="left")
@@ -238,9 +171,6 @@ def class_metrics(tiles: DataFrame, src_col: str = "lst_bytes",
                 "n_patches", "mean_patch_px", "largest_patch_px")
             .localCheckpoint()  # materialize before unpersisting the base
         )
-        return out
-    finally:
-        ex.unpersist()
 
 
 def scene_diversity(metrics: DataFrame) -> DataFrame:

@@ -283,6 +283,14 @@ def _batch_rows(batch: pa.RecordBatch):
                                 for i in range(batch.num_columns))))
 
 
+def _nominal_grid(tiles: DataFrame) -> tuple[int, int]:
+    """(nom_w, nom_h): the tile pitch — every tile but the ragged edge ones
+    has this size, so (tile_x * nom_w + lx, tile_y * nom_h + ly) is a
+    cell's scene coordinate. One tiny metadata-only job."""
+    nom = tiles.agg(F.max("w").alias("w"), F.max("h").alias("h")).first()
+    return int(nom["w"]), int(nom["h"])
+
+
 def _finite_stats(a: np.ndarray) -> tuple[int, float | None, float | None, float | None]:
     """(n_finite, min, max, mean) in one compaction pass — np.nanmin/nanmean
     each copy the full array internally; for 128^2 tiles the four of them

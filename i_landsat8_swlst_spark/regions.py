@@ -1,34 +1,45 @@
 """Distributed raster connected-component labeling — threshold-region
-("urban heat island" / hot-spot) extraction over a tiled LST product.
+("urban heat island" / hot-spot) extraction over a tiled LST product,
+and the shared labeling pipeline of every connected-component operator.
 
 The classic raster->object step the reference workflow runs after the LST
 map (r.reclass + r.clump + r.report in GRASS terms): binarize the plane at
 a threshold, label 4-connected regions, report per-region area / value
 stats / bounding box. A region routinely spans many tiles, so a
-single-machine labeling pass does not scale; this module runs the textbook
-distributed decomposition:
+single-machine labeling pass does not scale. Five operators —
+`extract_regions`, `lake_tiles`, `segment.segment_tiles`,
+`landscape.class_metrics` and `vectorize.to_vect` — run one textbook
+distributed decomposition, whose every step lives here once:
 
-1. **Tile-local labeling** (mapInArrow, embarrassingly parallel): each
-   tile labels its own mask with a two-pass run-union algorithm and emits
-   (a) one row per LOCAL region with its partial stats and (b) its masked
-   border pixels in SCENE pixel coordinates.
-2. **Border stitch** (one equi join): a border pixel at (gx, gy) probes
-   its across-border 4-neighbors; matching (scene, gx, gy) keys yield
-   edges between local-region nodes. Only border pixels — O(perimeter),
-   not O(area) — cross this shuffle.
-3. **Label reduction**: min label per connected component of the region
-   graph (one node per LOCAL region, vastly smaller than the pixel
-   count), computed by ONE grouped union-find pass per scene — see
-   `_cc_min_label`.
-4. **Final fold**: one aggregation keyed by (scene, root label) merges
-   the partial stats; every statistic emitted is partial-aggregable.
+1. **Label** (`_tile_pass`, one mapInArrow, zero shuffle): each tile is
+   decoded once and `_label` labels its pixel graph — horizontal runs of
+   kept right-edges, kept down-edges as unique run pairs, one numpy
+   min-root Shiloach–Vishkin step (`_min_root`) over the run graph,
+   roots ranked densely, so labels are dense by first pixel in raster
+   order. `label_tile` keeps every mask edge; `segment.lambda_label`
+   keeps the edges with |Δ| <= lam. Each local component is one node row
+   (kind 0), packed (tile_x, tile_y, label) by `_pack_node`.
+2. **Border rows** (`_Rows.border`): every labelled border pixel in SCENE
+   pixel coordinates (kind 1) and its across-border 4-neighbour probe
+   (kind 2) — O(perimeter) rows, not O(area).
+3. **Stitch** (`_stitched`): one equi join of probes onto cells on
+   (scene, [class,] gx, gy) yields symmetric edges between local nodes.
+4. **Min label** (`_cc_min_label`): each node's label is the minimum
+   node id of its component, from the same `_min_root` step run in ONE
+   grouped pass per scene over the node graph (one node per LOCAL
+   component, vastly fewer than pixels).
+5. **Fold**: regions and segments merge their partial stats per
+   (scene, label) in one aggregation (`_fold`); lakes, patches and rings
+   consume the labels their own way.
 
-Scale shape: pass 1 is pixel-parallel with zero shuffle; passes 2-4 touch
-only region/border rows. The pixel planes never travel.
+Scale shape: step 1 is pixel-parallel with zero shuffle; steps 2-5 touch
+only node/border rows. The pixel planes never travel.
 """
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from functools import partial
 from typing import Iterator
 
 import numpy as np
@@ -42,7 +53,9 @@ from pyspark.sql.types import (
 )
 
 from . import codecs
-from .pipeline import _batch_from_cols, _batch_rows
+from .pipeline import (
+    _arrow_schema, _batch_from_cols, _batch_rows, _nominal_grid,
+)
 
 # ONE extraction pass emits both row kinds (kind 0 = local region with
 # partial stats; kind 1 = masked border cell; kind 2 = across-border probe)
@@ -70,135 +83,198 @@ def _pack_node(tile_x: int, tile_y: int, label: np.ndarray) -> np.ndarray:
     return (np.int64(tile_x) << 42) | (np.int64(tile_y) << 21) | label.astype(np.int64)
 
 
+def _min_root(n: int, a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Component minimum of every vertex 0..n-1 of the undirected graph
+    with edges (a, b). Vectorized Shiloach–Vishkin: each round hooks the
+    larger root of every edge onto the smaller (np.minimum.at) and then
+    pointer-jumps twice. parent[v] <= v always holds and only decreases,
+    so an unchanged round is a star forest whose roots are the component
+    minima — O(log n) rounds, no per-edge Python."""
+    parent = np.arange(n, dtype=np.int64)
+    while True:
+        before = parent.copy()
+        ra, rb = parent[a], parent[b]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        parent = parent[parent]
+        parent = parent[parent]
+        if np.array_equal(parent, before):
+            return parent
+
+
+def _label(valid: np.ndarray, right: np.ndarray,
+           down: np.ndarray) -> tuple[np.ndarray, int]:
+    """Connected components of one tile's pixel graph: ``valid`` (h, w)
+    marks the vertices, ``right`` (h, w-1) and ``down`` (h-1, w) the kept
+    4-adjacency edges (both ends valid). Returns (labels, n): int64, -1
+    off ``valid``, else a dense id in [0, n) ordered by each component's
+    first pixel in raster order.
+
+    Horizontal runs of kept right-edges get run ids; kept down-edges
+    become unique run pairs (O(runs) edges, not O(pixels)) and
+    `_min_root` reduces the run graph."""
+    h, w = valid.shape
+    start = valid.copy()
+    start[:, 1:] &= ~right
+    run = np.cumsum(start).reshape(h, w) - 1     # run id per valid cell
+    n_runs = int(run[-1, -1]) + 1
+    if not n_runs:
+        return np.full((h, w), -1, dtype=np.int64), 0
+    pair = np.unique(run[:-1][down] * n_runs + run[1:][down])
+    roots, dense = np.unique(_min_root(n_runs, pair // n_runs, pair % n_runs),
+                             return_inverse=True)
+    return np.where(valid, dense[run], -1), len(roots)
+
+
 def label_tile(mask: np.ndarray) -> tuple[np.ndarray, int]:
-    """Two-pass 4-connectivity labeling of one boolean plane.
+    """4-connectivity labeling of one boolean plane (see `_label`)."""
+    return _label(mask, mask[:, :-1] & mask[:, 1:], mask[:-1] & mask[1:])
 
-    Returns (labels, n): labels is int64, -1 outside the mask, else a
-    dense id in [0, n). Horizontal runs get provisional ids; vertical
-    overlaps union them (tiny union-find over run ids — runs per tile are
-    O(h * w / run_len), far fewer than pixels).
-    """
-    h, w = mask.shape
-    padded = np.zeros((h, w + 1), dtype=bool)
-    padded[:, :w] = mask
-    flat = padded.ravel()
-    starts = flat & ~np.concatenate(([False], flat[:-1]))
-    run_of = np.cumsum(starts) - 1          # run id per flat cell
-    n_runs = int(starts.sum())
-    labels = np.full(padded.shape, -1, dtype=np.int64)
-    labels.ravel()[flat] = run_of[flat]
-    labels = labels[:, :w]
 
-    parent = np.arange(n_runs, dtype=np.int64)
+def _sides(h: int, w: int) -> tuple[np.ndarray, ...]:
+    """(ys, xs, dy, dx): the tile border walked top, bottom, left, right —
+    a corner pixel once per side it touches — with each side's outward
+    step."""
+    xw, yh = np.arange(w), np.arange(h)
+    return (np.concatenate([np.zeros(w, np.int64), np.full(w, h - 1), yh, yh]),
+            np.concatenate([xw, xw, np.zeros(h, np.int64), np.full(h, w - 1)]),
+            np.repeat([-1, 1, 0, 0], [w, w, h, h]),
+            np.repeat([0, 0, -1, 1], [w, w, h, h]))
 
-    def find(a: int) -> int:
-        while parent[a] != a:
-            parent[a] = parent[parent[a]]
-            a = parent[a]
-        return a
 
-    both = mask[1:, :] & mask[:-1, :]
-    ra = labels[1:, :][both]
-    rb = labels[:-1, :][both]
-    # unique run pairs only — the union count is O(runs), not O(pixels)
-    for a, b in zip(*np.unique(np.stack([ra, rb]), axis=1)) if ra.size else ():
-        fa, fb = find(int(a)), find(int(b))
-        if fa != fb:
-            parent[max(fa, fb)] = min(fa, fb)
-    if n_runs:
-        roots = np.array([find(int(i)) for i in range(n_runs)], dtype=np.int64)
-        _, dense = np.unique(roots, return_inverse=True)
-        out = np.full((h, w), -1, dtype=np.int64)
+class _Rows:
+    """Column blocks of one output batch of a pass schema, filled tile by
+    tile: `at` enters a tile, `add` appends rows (arrays broadcast against
+    scalars; a column left out is 0, or NULL for strings and binaries)."""
+
+    def __init__(self, schema: StructType, nom_w: int, nom_h: int):
+        self.schema = _arrow_schema(schema)
+        self.nom = (nom_w, nom_h)
+        self.blocks: list[tuple[int, dict]] = []
+
+    def at(self, row) -> None:
+        self.row = row
+        self.scene, self.tx, self.ty = row.scene_id, int(row.tile_x), int(row.tile_y)
+        # NOMINAL dims, not this tile's: ragged right/bottom-edge tiles are
+        # shorter, and using their own w/h would shift their scene coords
+        # so border cell/probe joins miss
+        self.ox, self.oy = self.tx * self.nom[0], self.ty * self.nom[1]
+
+    def node(self, labels: np.ndarray) -> np.ndarray:
+        return _pack_node(self.tx, self.ty, labels)
+
+    def add(self, kind, **cols) -> None:
+        n = max((len(v) for v in cols.values() if isinstance(v, np.ndarray)),
+                default=1)
+        if n:
+            self.blocks.append((n, {"scene_id": self.scene, "kind": kind, **cols}))
+
+    def border(self, labels: np.ndarray, base: int = 0, **extra) -> None:
+        """Kinds 1 and 2, the one border emit: each labelled border pixel
+        (node ``base`` + label) in scene coordinates and the probe across
+        its side. An ``extra`` plane is read at the border pixels (kind 2
+        carries the cell's value too); a scalar is copied."""
+        ys, xs, dy, dx = _sides(*labels.shape)
+        lab = labels[ys, xs]
+        m = lab >= 0
+        node, gx, gy = self.node(base + lab[m]), self.ox + xs[m], self.oy + ys[m]
+        ext = {k: v[ys, xs][m] if isinstance(v, np.ndarray) else v
+               for k, v in extra.items()}
+        self.add(1, node=node, gx=gx, gy=gy, **ext)
+        self.add(2, node=node, gx=gx + dx[m], gy=gy + dy[m], **ext)
+
+    def batch(self) -> pa.RecordBatch:
+        cols = []
+        for f in self.schema:
+            # np.full would route bytes through a NUL-stripping "S" array
+            obj = f.type in (pa.string(), pa.binary())
+            parts = [v if isinstance(v, np.ndarray)
+                     else np.array([v] * n, dtype=object) if obj
+                     else np.full(n, v)
+                     for n, blk in self.blocks
+                     for v in [blk.get(f.name, None if obj else 0)]]
+            arr = np.concatenate(parts)
+            cols.append(pa.array(arr if obj else arr.astype(f.type.to_pandas_dtype()),
+                                 type=f.type))
+        return pa.RecordBatch.from_arrays(cols, schema=self.schema)
+
+
+def _tile_pass(src: DataFrame, schema: StructType, src_col: str,
+               nom_w: int, nom_h: int, tile) -> DataFrame:
+    """Step 1 skeleton: decode each tile's f32 plane once and let
+    ``tile(rows, plane)`` add its rows; one Arrow batch per input batch."""
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            rows = _Rows(schema, nom_w, nom_h)
+            for row in _batch_rows(batch):
+                rows.at(row)
+                tile(rows, codecs.decode_f32bt(getattr(row, src_col),
+                                               int(row.w), int(row.h)))
+            if rows.blocks:
+                yield rows.batch()
+
+    return src.mapInArrow(fn, schema)
+
+
+def _stats_pass(tiles: DataFrame, src_col: str, nom_w: int, nom_h: int,
+                label, schema: StructType = EXTRACT_SCHEMA) -> DataFrame:
+    """Step 1 of extract_regions and segment_tiles: ``label(plane)`` ->
+    (labels, n); each local component is a kind-0 row with its partial
+    stats (area, sum, min, max, scene-coordinate bbox — all
+    partial-aggregable), then the border rows (carrying the pixel value
+    when ``schema`` has a ``val`` column)."""
+    val = "val" in schema.fieldNames()
+
+    def tile(rows: _Rows, plane: np.ndarray) -> None:
+        labels, n = label(plane)
+        if not n:
+            return
         m = labels >= 0
-        out[m] = dense[labels[m]]
-        return out, int(dense.max()) + 1
-    return labels, 0
+        lab, vals = labels[m], plane[m]
+        yy, xx = np.nonzero(m)
+        h, w = plane.shape
+
+        def fold(ufunc, init, v):
+            out = np.full(n, init)
+            ufunc.at(out, lab, v)
+            return out
+
+        rows.add(0, node=rows.node(np.arange(n)),
+                 area_px=np.bincount(lab, minlength=n),
+                 sum_val=np.bincount(lab, weights=vals, minlength=n),
+                 min_val=fold(np.minimum, np.inf, vals),
+                 max_val=fold(np.maximum, -np.inf, vals),
+                 gx0=rows.ox + fold(np.minimum, w, xx),
+                 gy0=rows.oy + fold(np.minimum, h, yy),
+                 gx1=rows.ox + fold(np.maximum, 0, xx),
+                 gy1=rows.oy + fold(np.maximum, 0, yy))
+        rows.border(labels, **({"val": plane} if val else {}))
+
+    # mapInArrow cannot column-prune: select only what the kernel reads
+    src = tiles.select("scene_id", "tile_x", "tile_y", "w", "h", src_col)
+    return _tile_pass(src, schema, src_col, nom_w, nom_h, tile)
 
 
 def _extract_pass(tiles: DataFrame, threshold: float, src_col: str,
                   nom_w: int, nom_h: int) -> DataFrame:
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in EXTRACT_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-
-            def emit(scene, kind, node, area=0, ssum=0.0, vmin=0.0, vmax=0.0,
-                     gx0=0, gy0=0, gx1=0, gy1=0, gx=0, gy=0):
-                ap["scene_id"](scene); ap["kind"](kind); ap["node"](int(node))
-                ap["area_px"](int(area)); ap["sum_val"](float(ssum))
-                ap["min_val"](float(vmin)); ap["max_val"](float(vmax))
-                ap["gx0"](int(gx0)); ap["gy0"](int(gy0))
-                ap["gx1"](int(gx1)); ap["gy1"](int(gy1))
-                ap["gx"](int(gx)); ap["gy"](int(gy))
-
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                tx, ty = int(row.tile_x), int(row.tile_y)
-                plane = codecs.decode_f32bt(getattr(row, src_col), w, h).astype(np.float64)
-                mask = np.isfinite(plane) & (plane > threshold)
-                if not mask.any():
-                    continue
-                labels, n = label_tile(mask)
-                # NOMINAL dims, not this tile's: ragged right/bottom-edge
-                # tiles are shorter, and using the local w/h there would
-                # shift their scene coords so border cell/probe joins miss
-                ox, oy = tx * nom_w, ty * nom_h
-
-                m = labels >= 0
-                lab = labels[m]
-                vals = plane[m]
-                yy, xx = np.nonzero(m)
-                area = np.bincount(lab, minlength=n)
-                ssum = np.bincount(lab, weights=vals, minlength=n)
-                node = _pack_node(tx, ty, np.arange(n))
-                vmin = np.full(n, np.inf)
-                vmax = np.full(n, -np.inf)
-                np.minimum.at(vmin, lab, vals)
-                np.maximum.at(vmax, lab, vals)
-                x0 = np.full(n, w + 1.0); y0 = np.full(n, h + 1.0)
-                x1 = np.full(n, -1.0); y1 = np.full(n, -1.0)
-                np.minimum.at(x0, lab, xx); np.minimum.at(y0, lab, yy)
-                np.maximum.at(x1, lab, xx); np.maximum.at(y1, lab, yy)
-                for k in range(n):
-                    emit(row.scene_id, 0, node[k], area[k], ssum[k],
-                         vmin[k], vmax[k], ox + x0[k], oy + y0[k],
-                         ox + x1[k], oy + y1[k])
-
-                # masked border pixels + their across-border probes;
-                # only O(perimeter) rows per tile
-                sides = (
-                    (labels[0, :], np.arange(w), np.zeros(w, np.int64), 0, -1),
-                    (labels[h - 1, :], np.arange(w), np.full(w, h - 1, np.int64), 0, 1),
-                    (labels[:, 0], np.zeros(h, np.int64), np.arange(h), -1, 0),
-                    (labels[:, w - 1], np.full(h, w - 1, np.int64), np.arange(h), 1, 0),
-                )
-                for slab, xs, ys, dx, dy in sides:
-                    sm = slab >= 0
-                    if not sm.any():
-                        continue
-                    snode = _pack_node(tx, ty, slab[sm])
-                    for gx, gy, nd in zip(ox + xs[sm], oy + ys[sm], snode):
-                        emit(row.scene_id, 1, nd, gx=gx, gy=gy)
-                        emit(row.scene_id, 2, nd, gx=gx + dx, gy=gy + dy)
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, EXTRACT_SCHEMA)
-
-    return tiles.mapInArrow(fn, EXTRACT_SCHEMA)
+    return _stats_pass(tiles, src_col, nom_w, nom_h, lambda p: label_tile(
+        np.isfinite(p) & (p.astype(np.float64) > threshold)))
 
 
 def _cc_min_label(nodes: DataFrame, edges: DataFrame, key: str = "scene_id") -> DataFrame:
     """Per-(key) minimum label over connected components: each node row
     (key, v) gets label = min node id reachable from it through (key, v, u)
     edges — exactly the fixpoint of min-label propagation, computed in ONE
-    grouped union-find pass instead of O(graph diameter) join rounds.
+    grouped pass instead of O(graph diameter) join rounds.
 
-    The old shape paid ~4 Spark jobs (two equi joins + checkpoint + change
-    count) PER ROUND; a chain of regions across k tiles took k rounds, so
-    wall time was diameter-bound with tiny data per round (measured 15 s of
-    a 21 s to_vect on a 1 Mpx scene). A key's stitch graph is O(local
+    Join rounds pay ~4 Spark jobs (two equi joins + checkpoint + change
+    count) PER ROUND and a chain of regions across k tiles takes k rounds,
+    so wall time is diameter-bound with tiny data per round (measured 15 s
+    of a 21 s to_vect on a 1 Mpx scene). A key's stitch graph is O(local
     regions + cross-tile adjacencies) small rows — the same per-task bound
     the ring/sector assemblies already accept — so the whole reduction fits
-    one applyInPandas task per key: one exchange, zero iteration, labels
+    one applyInPandas task per key: one exchange, zero iteration. Node ids
+    are factorized with np.unique (sorted, so the minimum index of a
+    component is its minimum id) and reduced by `_min_root`; labels are
     IDENTICAL (min over component is order-free)."""
     sch = StructType([
         StructField(key, StringType()),
@@ -212,33 +288,73 @@ def _cc_min_label(nodes: DataFrame, edges: DataFrame, key: str = "scene_id") -> 
             .unionAll(edges.select(key, F.col("v").cast("long"),
                                    F.col("u").cast("long"))))
 
-    def uf(pdf: pd.DataFrame) -> pd.DataFrame:
-        parent: dict[int, int] = {}
+    def min_label(pdf: pd.DataFrame) -> pd.DataFrame:
+        v, u = pdf.v.to_numpy(np.int64), pdf.u.to_numpy(np.int64)
+        em = u != -1
+        ids, idx = np.unique(np.concatenate([v, u[em]]), return_inverse=True)
+        iv = idx[:len(v)]
+        root = _min_root(len(ids), iv[em], idx[len(v):])
+        return pd.DataFrame({key: pdf[key].to_numpy()[~em], "v": v[~em],
+                             "label": ids[root[iv[~em]]]})
 
-        def find(a: int) -> int:
-            root = a
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(a, a) != a:          # path compression
-                parent[a], a = root, parent[a]
-            return root
+    return both.groupBy(key).applyInPandas(lambda _k, pdf: min_label(pdf), sch)
 
-        uv = pdf.u.to_numpy(np.int64)
-        em = uv != -1
-        for a, b in zip(pdf.v.to_numpy(np.int64)[em].tolist(),
-                        uv[em].tolist()):
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)  # root = component min
-        node_v = pdf.v.to_numpy(np.int64)[~em]
-        return pd.DataFrame({
-            key: pdf[key].to_numpy()[~em],
-            "v": node_v,
-            "label": np.fromiter((find(int(a)) for a in node_v),
-                                 dtype=np.int64, count=len(node_v)),
-        })
 
-    return both.groupBy(key).applyInPandas(lambda _k, pdf: uf(pdf), sch)
+@contextmanager
+def _stitched(tiles: DataFrame, make_pass, keys: tuple[str, ...] = (),
+              lam: float | None = None):
+    """Steps 3-4, the one stitch: ``make_pass(nom_w, nom_h)`` builds the
+    operator's step-1 rows; they are persisted (the extraction is
+    O(nodes + perimeter), tiny vs the pixel planes, and feeds several
+    consumers), border cells and probes meet on (scene_id, *keys, gx, gy)
+    — with ``lam``, a pair also needs |Δval| <= lam — and the symmetric
+    edges reduce by `_cc_min_label`. Yields (rows, labels, (nom_w,
+    nom_h)) with labels = (scene_id, v, label) per kind-0 node; the rows
+    are unpersisted on exit, so the caller materializes (localCheckpoint)
+    what it returns."""
+    from pyspark import StorageLevel
+
+    nom = _nominal_grid(tiles)
+    ex = make_pass(*nom).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        on = ["scene_id", *keys, "gx", "gy"]
+        val = [] if lam is None else ["val"]
+        cells = ex.filter("kind = 1").select(*on, "node", *val)
+        probes = ex.filter("kind = 2").select(
+            *on, F.col("node").alias("pnode"),
+            *[F.col(c).alias("p" + c) for c in val])
+        keep = F.col("pnode") != F.col("node")
+        if lam is not None:
+            keep &= F.abs(F.col("pval") - F.col("val")) <= F.lit(lam)
+        stitched = (
+            probes.join(cells, on=on).filter(keep)
+            .select("scene_id", F.col("pnode").alias("v"), F.col("node").alias("u"))
+            .localCheckpoint()
+        )
+        edges = stitched.unionAll(
+            stitched.select("scene_id", F.col("u").alias("v"), F.col("v").alias("u")))
+        nodes = ex.filter("kind = 0").select("scene_id", F.col("node").alias("v"))
+        yield ex, _cc_min_label(nodes, edges), nom
+    finally:
+        ex.unpersist()
+
+
+def _fold(ex: DataFrame, lab: DataFrame, id_col: str) -> DataFrame:
+    """Step 5 of extract_regions and segment_tiles: one aggregation keyed
+    by (scene, root label) merges the kind-0 partial stats."""
+    return (
+        ex.filter("kind = 0").withColumnRenamed("node", "v")
+        .join(lab, on=["scene_id", "v"])
+        .groupBy("scene_id", F.col("label").alias(id_col))
+        .agg(F.sum("area_px").alias("area_px"),
+             (F.sum("sum_val") / F.sum("area_px")).alias("mean_val"),
+             F.min("min_val").alias("min_val"),
+             F.max("max_val").alias("max_val"),
+             F.min("gx0").alias("gx0"), F.min("gy0").alias("gy0"),
+             F.max("gx1").alias("gx1"), F.max("gy1").alias("gy1"),
+             F.count(F.lit(1)).alias("n_parts"))
+        .localCheckpoint()  # materialize before unpersisting the base
+    )
 
 
 def extract_regions(tiles: DataFrame, threshold: float,
@@ -253,49 +369,9 @@ def extract_regions(tiles: DataFrame, threshold: float,
     area_px, mean_val, min_val, max_val, gx0/gy0/gx1/gy1, n_parts
     (tile-local parts merged into the region).
     """
-    # one decode+label pass; the extraction (regions + border cells) is
-    # O(regions + perimeter) — tiny vs the pixel planes — so persisting it
-    # for the multi-consumer graph below is the scale-correct move
-    from pyspark import StorageLevel
-
-    # nominal (non-ragged) tile dims: one tiny metadata-only job (same
-    # convention as hydro.basin_tiles); every interior tile has these dims
-    nom = tiles.agg(F.max("w").alias("w"), F.max("h").alias("h")).first()
-    nom_w, nom_h = int(nom["w"]), int(nom["h"])
-    ex = _extract_pass(tiles, threshold, src_col, nom_w, nom_h) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        regions = ex.filter("kind = 0")
-        cells = ex.filter("kind = 1").select("scene_id", "gx", "gy", "node")
-        probes = (ex.filter("kind = 2")
-                  .select("scene_id", "gx", "gy", F.col("node").alias("pnode")))
-        stitched = (
-            probes.join(cells, on=["scene_id", "gx", "gy"])
-            .filter(F.col("pnode") != F.col("node"))
-            .select("scene_id", F.col("pnode").alias("v"), F.col("node").alias("u"))
-            .localCheckpoint()
-        )
-        edges = stitched.unionAll(
-            stitched.select("scene_id", F.col("u").alias("v"), F.col("v").alias("u")))
-
-        nodes = regions.select("scene_id", F.col("node").alias("v"))
-        lab = _cc_min_label(nodes, edges)
-
-        return (
-            regions.withColumnRenamed("node", "v")
-            .join(lab, on=["scene_id", "v"])
-            .groupBy("scene_id", F.col("label").alias("region_id"))
-            .agg(F.sum("area_px").alias("area_px"),
-                 (F.sum("sum_val") / F.sum("area_px")).alias("mean_val"),
-                 F.min("min_val").alias("min_val"),
-                 F.max("max_val").alias("max_val"),
-                 F.min("gx0").alias("gx0"), F.min("gy0").alias("gy0"),
-                 F.max("gx1").alias("gx1"), F.max("gy1").alias("gy1"),
-                 F.count(F.lit(1)).alias("n_parts"))
-            .localCheckpoint()  # materialize before unpersisting the base
-        )
-    finally:
-        ex.unpersist()
+    with _stitched(tiles, partial(_extract_pass, tiles, threshold,
+                                  src_col)) as (ex, lab, _nom):
+        return _fold(ex, lab, "region_id")
 
 
 # --------------------------------------------------------------------------
@@ -337,58 +413,23 @@ _SEED_NODE_SCHEMA = StructType([
 def _lake_pass(tiles: DataFrame, level: float, src_col: str,
                nom_w: int, nom_h: int) -> DataFrame:
     """One decode+label pass for the lake mask ``elev < level`` (finite):
-    kinds 0-2 mirror _extract_pass's stitching convention; kind 3 carries
-    the tile's dense label plane (<i4, -1 dry) and depth plane
-    (<f4 level - elev, NaN dry) so the filter pass never re-decodes."""
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in _LAKE_PASS_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
+    kinds 0-2 are the shared node and border rows; kind 3 carries the
+    tile's dense label plane (<i4, -1 dry) and depth plane (<f4 level -
+    elev, NaN dry) so the filter pass never re-decodes."""
+    def tile(rows: _Rows, plane: np.ndarray) -> None:
+        plane = plane.astype(np.float64)
+        mask = np.isfinite(plane) & (plane < level)
+        if not mask.any():
+            return
+        labels, n = label_tile(mask)
+        depth = np.where(mask, level - plane, np.nan)
+        rows.add(3, tile_x=rows.tx, tile_y=rows.ty, w=plane.shape[1],
+                 h=plane.shape[0], label_bytes=labels.astype("<i4").tobytes(),
+                 depth_bytes=depth.astype("<f4").tobytes())
+        rows.add(0, node=rows.node(np.arange(n)))
+        rows.border(labels)
 
-            def emit(scene, kind, node=0, gx=0, gy=0, tx=0, ty=0, w=0, h=0,
-                     lb=None, db=None):
-                ap["scene_id"](scene); ap["kind"](kind); ap["node"](int(node))
-                ap["gx"](int(gx)); ap["gy"](int(gy))
-                ap["tile_x"](int(tx)); ap["tile_y"](int(ty))
-                ap["w"](int(w)); ap["h"](int(h))
-                ap["label_bytes"](lb); ap["depth_bytes"](db)
-
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                tx, ty = int(row.tile_x), int(row.tile_y)
-                plane = codecs.decode_f32bt(getattr(row, src_col), w, h) \
-                    .astype(np.float64)
-                mask = np.isfinite(plane) & (plane < level)
-                if not mask.any():
-                    continue
-                labels, n = label_tile(mask)
-                depth = np.where(mask, level - plane, np.nan)
-                emit(row.scene_id, 3, tx=tx, ty=ty, w=w, h=h,
-                     lb=labels.astype("<i4").tobytes(),
-                     db=depth.astype("<f4").tobytes())
-                for node in _pack_node(tx, ty, np.arange(n)):
-                    emit(row.scene_id, 0, node, tx=tx, ty=ty)
-                ox, oy = tx * nom_w, ty * nom_h
-                sides = (
-                    (labels[0, :], np.arange(w), np.zeros(w, np.int64), 0, -1),
-                    (labels[h - 1, :], np.arange(w),
-                     np.full(w, h - 1, np.int64), 0, 1),
-                    (labels[:, 0], np.zeros(h, np.int64), np.arange(h), -1, 0),
-                    (labels[:, w - 1], np.full(h, w - 1, np.int64),
-                     np.arange(h), 1, 0),
-                )
-                for slab, xs, ys, dx, dy in sides:
-                    sm = slab >= 0
-                    if not sm.any():
-                        continue
-                    snode = _pack_node(tx, ty, slab[sm])
-                    for gx, gy, nd in zip(ox + xs[sm], oy + ys[sm], snode):
-                        emit(row.scene_id, 1, nd, gx=gx, gy=gy)
-                        emit(row.scene_id, 2, nd, gx=gx + dx, gy=gy + dy)
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, _LAKE_PASS_SCHEMA)
-
-    return tiles.mapInArrow(fn, _LAKE_PASS_SCHEMA)
+    return _tile_pass(tiles, _LAKE_PASS_SCHEMA, src_col, nom_w, nom_h, tile)
 
 
 def lake_tiles(tiles: DataFrame, seeds: DataFrame, level: float,
@@ -405,35 +446,14 @@ def lake_tiles(tiles: DataFrame, seeds: DataFrame, level: float,
     refuses seeds above the water level too.
 
     Plan: ONE decode+label pass (planes + O(perimeter) stitch rows), the
-    extract_regions min-label fixpoint on the border graph (bounded
-    equi-joins, diameter rounds), a broadcast seed lookup, then ONE hash
-    join of the kept node labels back to the label planes on the tile key.
-    Pixel bytes cross the wire once as label+depth planes; everything else
-    is O(regions + perimeter).
+    shared stitch and ONE grouped min-label pass on the border graph
+    (`_stitched`), a broadcast seed lookup, then ONE cogroup of the kept
+    node labels with the label planes on the tile key. Pixel bytes cross
+    the wire once as label+depth planes; everything else is O(regions +
+    perimeter).
     """
-    from pyspark import StorageLevel
-
-    nom = tiles.agg(F.max("w").alias("w"), F.max("h").alias("h")).first()
-    nom_w, nom_h = int(nom["w"]), int(nom["h"])
-    ex = _lake_pass(tiles, level, src_col, nom_w, nom_h) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        nodes = ex.filter("kind = 0").select("scene_id", F.col("node").alias("v"))
-        cells = ex.filter("kind = 1").select("scene_id", "gx", "gy", "node")
-        probes = (ex.filter("kind = 2")
-                  .select("scene_id", "gx", "gy", F.col("node").alias("pnode")))
-        stitched = (
-            probes.join(cells, on=["scene_id", "gx", "gy"])
-            .filter(F.col("pnode") != F.col("node"))
-            .select("scene_id", F.col("pnode").alias("v"),
-                    F.col("node").alias("u"))
-            .localCheckpoint()
-        )
-        edges = stitched.unionAll(
-            stitched.select("scene_id", F.col("u").alias("v"),
-                            F.col("v").alias("u")))
-        lab = _cc_min_label(nodes, edges)
-
+    with _stitched(tiles, partial(_lake_pass, tiles, level, src_col)) \
+            as (ex, lab, (nom_w, nom_h)):
         planes = ex.filter("kind = 3").select(
             "scene_id", "tile_x", "tile_y", "w", "h",
             "label_bytes", "depth_bytes")
@@ -510,5 +530,3 @@ def lake_tiles(tiles: DataFrame, seeds: DataFrame, level: float,
                .applyInPandas(fill_fn, LAKE_SCHEMA)
                .localCheckpoint())  # materialize before unpersisting base
         return out
-    finally:
-        ex.unpersist()

@@ -12,15 +12,14 @@ boundary, not an approximation of it.)
 
 Decomposition (the regions.py pattern with a value predicate):
 
-1. **Tile-local labeling** (mapInArrow, zero shuffle): vectorized
-   Shiloach–Vishkin / FastSV connected components over the tile's
-   λ-edges — min-root hooking + pointer jumping, O(log n) rounds of
-   pure numpy, no Python-per-pixel work.
+1. **Tile-local labeling** (mapInArrow, zero shuffle): the shared
+   `regions._label` run-graph kernel over the tile's λ-edges — pure
+   numpy, no Python-per-pixel work.
 2. **Border stitch** (one equi join on (scene, gx, gy)): border pixels
    carry their VALUE; a probe->cell match becomes an edge iff the
    cross-border pair satisfies the same |Δ| <= lam predicate. Only
    O(perimeter) rows shuffle.
-3. **Label reduction**: bounded-round min-label propagation over the
+3. **Label reduction**: ONE grouped min-label pass per scene over the
    segment graph (`regions._cc_min_label` — nodes are LOCAL segments,
    vastly fewer than pixels).
 4. **Final fold**: ONE aggregation merges the partial stats (area, sum,
@@ -32,169 +31,34 @@ segment partials, and the segment graph.
 
 from __future__ import annotations
 
-from typing import Iterator
+from functools import partial
 
 import numpy as np
-import pyarrow as pa
 
-from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (
-    DoubleType, IntegerType, LongType, StringType, StructField, StructType,
-)
+from pyspark.sql import DataFrame
+from pyspark.sql.types import DoubleType, StructField, StructType
 
-from . import codecs
-from .pipeline import _batch_from_cols, _batch_rows
-from .regions import _cc_min_label, _pack_node
+from .regions import EXTRACT_SCHEMA, _fold, _label, _stats_pass, _stitched
 
 
 def lambda_label(plane: np.ndarray, lam: float) -> tuple[np.ndarray, int]:
     """Connected components of |Δ| <= lam 4-adjacency on one plane.
 
     Returns (labels, n): int64 labels, -1 on non-finite cells, dense ids
-    in [0, n). Vectorized Shiloach–Vishkin: every vertex starts as its
-    own root; each round hooks the larger root of every λ-edge onto the
-    smaller (min-reduction with np.minimum.at) and then pointer-jumps
-    (parent = parent[parent]) until a fixpoint — O(log n) rounds, no
-    per-pixel Python.
-    """
-    h, w = plane.shape
-    n = h * w
-    valid = np.isfinite(plane)
-    flat = plane.ravel()
-    idx = np.arange(n, dtype=np.int64)
-
-    ea_list, eb_list = [], []
-    # right edges
-    m = valid[:, :-1] & valid[:, 1:] & (
-        np.abs(plane[:, :-1] - plane[:, 1:]) <= lam)
-    a = (idx.reshape(h, w)[:, :-1])[m]
-    ea_list.append(a); eb_list.append(a + 1)
-    # down edges
-    m = valid[:-1, :] & valid[1:, :] & (
-        np.abs(plane[:-1, :] - plane[1:, :]) <= lam)
-    a = (idx.reshape(h, w)[:-1, :])[m]
-    ea_list.append(a); eb_list.append(a + w)
-    ea = np.concatenate(ea_list)
-    eb = np.concatenate(eb_list)
-
-    parent = idx.copy()
-    while True:
-        ra, rb = parent[ea], parent[eb]
-        lo = np.minimum(ra, rb)
-        hi = np.maximum(ra, rb)
-        before = parent.copy()
-        np.minimum.at(parent, hi, lo)
-        parent = parent[parent]          # pointer jumping
-        parent = parent[parent]
-        if np.array_equal(parent, before):
-            break
-    # full path compression to true roots
-    while True:
-        nxt = parent[parent]
-        if np.array_equal(nxt, parent):
-            break
-        parent = nxt
-
-    labels = np.full(n, -1, dtype=np.int64)
-    vm = valid.ravel()
-    roots = parent[vm]
-    _, dense = np.unique(roots, return_inverse=True)
-    labels[vm] = dense
-    k = int(dense.max()) + 1 if dense.size else 0
-    return labels.reshape(h, w), k
+    in [0, n) ordered by first pixel (see `regions._label`)."""
+    v = np.isfinite(plane)
+    return _label(v, v[:, :-1] & v[:, 1:] & (np.abs(np.diff(plane, axis=1)) <= lam),
+                  v[:-1] & v[1:] & (np.abs(np.diff(plane, axis=0)) <= lam))
 
 
-_SEG_SCHEMA = StructType([
-    StructField("scene_id", StringType()),
-    StructField("kind", IntegerType()),
-    StructField("node", LongType()),
-    StructField("area_px", LongType()),
-    StructField("sum_val", DoubleType()),
-    StructField("min_val", DoubleType()),
-    StructField("max_val", DoubleType()),
-    StructField("gx0", IntegerType()),
-    StructField("gy0", IntegerType()),
-    StructField("gx1", IntegerType()),
-    StructField("gy1", IntegerType()),
-    StructField("gx", IntegerType()),
-    StructField("gy", IntegerType()),
-    StructField("val", DoubleType()),
-])
+# the regions pass schema plus each border cell's / probe's pixel value
+_SEG_SCHEMA = StructType(EXTRACT_SCHEMA.fields + [StructField("val", DoubleType())])
 
 
 def _seg_extract(tiles: DataFrame, lam: float, src_col: str,
                  nom_w: int, nom_h: int) -> DataFrame:
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in _SEG_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-
-            def emit(scene, kind, node, area=0, ssum=0.0, vmin=0.0,
-                     vmax=0.0, gx0=0, gy0=0, gx1=0, gy1=0, gx=0, gy=0,
-                     val=0.0):
-                ap["scene_id"](scene); ap["kind"](int(kind))
-                ap["node"](int(node)); ap["area_px"](int(area))
-                ap["sum_val"](float(ssum)); ap["min_val"](float(vmin))
-                ap["max_val"](float(vmax))
-                ap["gx0"](int(gx0)); ap["gy0"](int(gy0))
-                ap["gx1"](int(gx1)); ap["gy1"](int(gy1))
-                ap["gx"](int(gx)); ap["gy"](int(gy)); ap["val"](float(val))
-
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                tx, ty = int(row.tile_x), int(row.tile_y)
-                plane = codecs.decode_f32bt(getattr(row, src_col), w, h)
-                labels, n = lambda_label(plane, lam)
-                if n == 0:
-                    continue
-                # nominal dims, not this tile's — ragged edge tiles would
-                # otherwise mis-place their scene coords (see extract_regions)
-                ox, oy = tx * nom_w, ty * nom_h
-                m = labels >= 0
-                lab = labels[m]
-                vals = plane[m]
-                yy, xx = np.nonzero(m)
-                area = np.bincount(lab, minlength=n)
-                ssum = np.bincount(lab, weights=vals, minlength=n)
-                node = _pack_node(tx, ty, np.arange(n))
-                vmin = np.full(n, np.inf); vmax = np.full(n, -np.inf)
-                np.minimum.at(vmin, lab, vals)
-                np.maximum.at(vmax, lab, vals)
-                x0 = np.full(n, w + 1.0); y0 = np.full(n, h + 1.0)
-                x1 = np.full(n, -1.0); y1 = np.full(n, -1.0)
-                np.minimum.at(x0, lab, xx); np.minimum.at(y0, lab, yy)
-                np.maximum.at(x1, lab, xx); np.maximum.at(y1, lab, yy)
-                for k in range(n):
-                    emit(row.scene_id, 0, node[k], area[k], ssum[k],
-                         vmin[k], vmax[k], ox + x0[k], oy + y0[k],
-                         ox + x1[k], oy + y1[k])
-                # valid border pixels (value-carrying) + across-border probes
-                sides = (
-                    (labels[0, :], plane[0, :], np.arange(w),
-                     np.zeros(w, np.int64), 0, -1),
-                    (labels[h - 1, :], plane[h - 1, :], np.arange(w),
-                     np.full(w, h - 1, np.int64), 0, 1),
-                    (labels[:, 0], plane[:, 0], np.zeros(h, np.int64),
-                     np.arange(h), -1, 0),
-                    (labels[:, w - 1], plane[:, w - 1],
-                     np.full(h, w - 1, np.int64), np.arange(h), 1, 0),
-                )
-                for slab, svals, xs, ys, dx, dy in sides:
-                    sm = slab >= 0
-                    if not sm.any():
-                        continue
-                    snode = _pack_node(tx, ty, slab[sm])
-                    for gx, gy, nd, v in zip(ox + xs[sm], oy + ys[sm],
-                                             snode, svals[sm]):
-                        emit(row.scene_id, 1, nd, gx=gx, gy=gy, val=v)
-                        emit(row.scene_id, 2, nd, gx=gx + dx, gy=gy + dy,
-                             val=v)
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, _SEG_SCHEMA)
-
-    # mapInArrow cannot column-prune: select only what the kernel reads
-    src = tiles.select("scene_id", "tile_x", "tile_y", "w", "h", src_col)
-    return src.mapInArrow(fn, _SEG_SCHEMA)
+    return _stats_pass(tiles, src_col, nom_w, nom_h,
+                       lambda p: lambda_label(p, lam), _SEG_SCHEMA)
 
 
 def segment_tiles(tiles: DataFrame, lam: float,
@@ -209,45 +73,6 @@ def segment_tiles(tiles: DataFrame, lam: float,
     """
     if not np.isfinite(lam) or lam < 0:
         raise ValueError(f"lam must be finite and >= 0, got {lam}")
-    from pyspark import StorageLevel
-
-    nom = tiles.agg(F.max("w").alias("w"), F.max("h").alias("h")).first()
-    nom_w, nom_h = int(nom["w"]), int(nom["h"])
-    ex = _seg_extract(tiles, lam, src_col, nom_w, nom_h) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        segs = ex.filter("kind = 0")
-        cells = ex.filter("kind = 1").select("scene_id", "gx", "gy",
-                                             "node", "val")
-        probes = (ex.filter("kind = 2")
-                  .select("scene_id", "gx", "gy",
-                          F.col("node").alias("pnode"),
-                          F.col("val").alias("pval")))
-        stitched = (
-            probes.join(cells, on=["scene_id", "gx", "gy"])
-            .filter((F.col("pnode") != F.col("node"))
-                    & (F.abs(F.col("pval") - F.col("val")) <= F.lit(lam)))
-            .select("scene_id", F.col("pnode").alias("v"),
-                    F.col("node").alias("u"))
-            .localCheckpoint()
-        )
-        edges = stitched.unionAll(
-            stitched.select("scene_id", F.col("u").alias("v"),
-                            F.col("v").alias("u")))
-        nodes = segs.select("scene_id", F.col("node").alias("v"))
-        lab = _cc_min_label(nodes, edges)
-        return (
-            segs.withColumnRenamed("node", "v")
-            .join(lab, on=["scene_id", "v"])
-            .groupBy("scene_id", F.col("label").alias("segment_id"))
-            .agg(F.sum("area_px").alias("area_px"),
-                 (F.sum("sum_val") / F.sum("area_px")).alias("mean_val"),
-                 F.min("min_val").alias("min_val"),
-                 F.max("max_val").alias("max_val"),
-                 F.min("gx0").alias("gx0"), F.min("gy0").alias("gy0"),
-                 F.max("gx1").alias("gx1"), F.max("gy1").alias("gy1"),
-                 F.count(F.lit(1)).alias("n_parts"))
-            .localCheckpoint()
-        )
-    finally:
-        ex.unpersist()
+    with _stitched(tiles, partial(_seg_extract, tiles, lam, src_col),
+                   lam=lam) as (ex, lab, _nom):
+        return _fold(ex, lab, "segment_id")

@@ -40,7 +40,9 @@ from pyspark.sql.types import (
 )
 
 from . import geo
-from .pipeline import _batch_from_cols, _batch_rows, _coalesce_batches
+from .pipeline import (
+    _batch_from_cols, _batch_rows, _coalesce_batches, _nominal_grid,
+)
 
 # --------------------------------------------------------------------------
 # batched cell-encode (vectorized pandas UDFs)
@@ -1902,8 +1904,7 @@ def sample_random_cells(tiles: DataFrame, n: int, seed: int = 0,
         raise ValueError(f"n must be >= 1, got {n}")
     from pyspark.sql import Window
 
-    nom = tiles.agg(F.max("w").alias("w"), F.max("h").alias("h")).first()
-    nom_w, nom_h = int(nom["w"]), int(nom["h"])
+    nom_w, nom_h = _nominal_grid(tiles)
     src = tiles.select("scene_id", "tile_x", "tile_y", "w", "h", src_col)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

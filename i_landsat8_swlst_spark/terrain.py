@@ -86,7 +86,7 @@ from pyspark.sql.types import (
 )
 
 from . import codecs
-from .pipeline import _batch_from_cols, _batch_rows
+from .pipeline import _batch_from_cols, _batch_rows, _nominal_grid
 
 # sectors per scan group: one applyInPandas group costs ~3.5 ms of
 # arrow/pandas setup, so per-sector groups drown small-radius viewsheds in
@@ -360,14 +360,6 @@ def _runs_arange(lens: np.ndarray) -> np.ndarray:
 
 def _pandas(frame) -> pd.DataFrame:
     return frame if isinstance(frame, pd.DataFrame) else frame.toPandas()
-
-
-def _nominal_grid(tiles: DataFrame) -> tuple[int, int]:
-    """(nom_w, nom_h): the tile pitch — every tile but the ragged edge ones
-    has this size, so (tile_x * nom_w + lx, tile_y * nom_h + ly) is a
-    cell's scene coordinate."""
-    nom = tiles.agg(F.max("w").alias("w"), F.max("h").alias("h")).first()
-    return int(nom["w"]), int(nom["h"])
 
 
 def _emit_segments(tiles: DataFrame, nom_w: int, nom_h: int, src_col: str,

@@ -20,9 +20,9 @@ extract_regions (whose label fixpoint this reuses):
 2. Pending edges resolve with one LEFT ANTI equi join against the masked
    border cells: a pending side is a true boundary iff no masked cell sits
    across it (a missing neighbor tile = scene edge = boundary, for free).
-3. The min-label fixpoint (regions._cc_min_label) maps each edge's local
-   node to its global region id — edges are O(perimeter) rows, pixels
-   never shuffle.
+3. The shared stitch and grouped min-label pass (regions._stitched)
+   map each edge's local node to its global region id — edges are
+   O(perimeter) rows, pixels never shuffle.
 4. One groupBy(scene, region) + applyInPandas stitches the directed edges
    into rings. Edges are oriented REGION-ON-THE-RIGHT in y-down raster
    coords, so after the engine's lat1-is-row-0 geocoding flip, exterior
@@ -51,6 +51,7 @@ work inside mapInArrow. No pixel plane ever crosses an exchange.
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Iterator, Sequence
 
 import numpy as np
@@ -63,9 +64,8 @@ from pyspark.sql.types import (
     StructField, StructType,
 )
 
-from . import codecs
-from .pipeline import _batch_from_cols, _batch_rows, halo_plane_tiles
-from .regions import _cc_min_label, _pack_node, label_tile
+from .pipeline import _batch_rows, _nominal_grid, halo_plane_tiles
+from .regions import _Rows, _stitched, _tile_pass, label_tile
 
 # one pass emits every row kind so each tile is decoded and labeled once:
 # kind 0 = local region node, 1 = masked border cell, 2 = across-border
@@ -95,120 +95,43 @@ TOVECT_SCHEMA = StructType([
 ])
 
 
+# per pixel side: (dy, dx) step to the neighbour across it, and the side's
+# corners (x0, y0, x1, y1) relative to the pixel, directed region-on-the-
+# right (y-down): top L->R, bottom R->L, left B->T, right T->B
+_PIXEL_SIDES = (
+    (-1, 0, 0, 0, 1, 0), (1, 0, 1, 1, 0, 1),
+    (0, -1, 0, 1, 0, 0), (0, 1, 1, 0, 1, 1),
+)
+
+
 def _tovect_pass(tiles: DataFrame, threshold: float, src_col: str,
                  nom_w: int, nom_h: int) -> DataFrame:
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in _TOVECT_PASS_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
+    def tile(rows: _Rows, plane: np.ndarray) -> None:
+        plane = plane.astype(np.float64)
+        mask = np.isfinite(plane) & (plane > threshold)
+        if not mask.any():
+            return
+        labels, n = label_tile(mask)
+        h, w = mask.shape
+        rows.add(0, node=rows.node(np.arange(n)))
+        rows.border(labels)
+        # boundary edges: a masked pixel's side whose neighbour is not
+        # masked. Inside the tile that resolves locally (kind 3); across a
+        # tile border it depends on the NEIGHBOR tile, so it is emitted
+        # pending on the neighbour cell (kind 4) — except on the top/left
+        # scene edge, where no neighbour can exist
+        pad = np.pad(mask, 1)
+        for dy, dx, x0, y0, x1, y1 in _PIXEL_SIDES:
+            yy, xx = np.nonzero(mask & ~pad[1 + dy:1 + dy + h, 1 + dx:1 + dx + w])
+            ny, nx = yy + dy, xx + dx
+            pend = ((ny >= h) | (nx >= w) | ((ny < 0) & (rows.ty > 0))
+                    | ((nx < 0) & (rows.tx > 0)))
+            gx, gy = rows.ox + xx, rows.oy + yy
+            rows.add(np.where(pend, 4, 3), node=rows.node(labels[yy, xx]),
+                     gx=np.where(pend, gx + dx, 0), gy=np.where(pend, gy + dy, 0),
+                     x0=gx + x0, y0=gy + y0, x1=gx + x1, y1=gy + y1)
 
-            def emit(scene, kind, node, gx=0, gy=0, x0=0, y0=0, x1=0, y1=0):
-                ap["scene_id"](scene); ap["kind"](int(kind))
-                ap["node"](int(node)); ap["gx"](int(gx)); ap["gy"](int(gy))
-                ap["x0"](int(x0)); ap["y0"](int(y0))
-                ap["x1"](int(x1)); ap["y1"](int(y1))
-
-            def emit_edges(scene, nodes, X, Y, side, pend, pgx=None, pgy=None):
-                """Vectorized append of one side's edges for pixels at scene
-                coords (X, Y) with packed labels ``nodes``. Directed
-                region-on-the-right (y-down): top L->R, right T->B,
-                bottom R->L, left B->T."""
-                if side == "top":
-                    xy = (X, Y, X + 1, Y)
-                elif side == "bottom":
-                    xy = (X + 1, Y + 1, X, Y + 1)
-                elif side == "left":
-                    xy = (X, Y + 1, X, Y)
-                else:                           # right
-                    xy = (X + 1, Y, X + 1, Y + 1)
-                kind = 4 if pend else 3
-                gxs = pgx if pend else np.zeros_like(X)
-                gys = pgy if pend else np.zeros_like(Y)
-                for i in range(len(nodes)):
-                    emit(scene, kind, nodes[i], gxs[i], gys[i],
-                         xy[0][i], xy[1][i], xy[2][i], xy[3][i])
-
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                tx, ty = int(row.tile_x), int(row.tile_y)
-                plane = codecs.decode_f32bt(
-                    getattr(row, src_col), w, h).astype(np.float64)
-                mask = np.isfinite(plane) & (plane > threshold)
-                if not mask.any():
-                    continue
-                labels, n = label_tile(mask)
-                ox, oy = tx * nom_w, ty * nom_h   # nominal: ragged-safe
-
-                # region nodes (kind 0)
-                for nd in _pack_node(tx, ty, np.arange(n)):
-                    emit(row.scene_id, 0, nd)
-
-                # masked border cells + probes (kinds 1/2) — the stitch
-                # triple, same shape as regions._extract_pass
-                sides = (
-                    (labels[0, :], np.arange(w), np.zeros(w, np.int64), 0, -1),
-                    (labels[h - 1, :], np.arange(w),
-                     np.full(w, h - 1, np.int64), 0, 1),
-                    (labels[:, 0], np.zeros(h, np.int64), np.arange(h), -1, 0),
-                    (labels[:, w - 1], np.full(h, w - 1, np.int64),
-                     np.arange(h), 1, 0),
-                )
-                for slab, xs, ys, dx, dy in sides:
-                    sm = slab >= 0
-                    if not sm.any():
-                        continue
-                    snode = _pack_node(tx, ty, slab[sm])
-                    for gx, gy, nd in zip(ox + xs[sm], oy + ys[sm], snode):
-                        emit(row.scene_id, 1, nd, gx=gx, gy=gy)
-                        emit(row.scene_id, 2, nd, gx=gx + dx, gy=gy + dy)
-
-                # ---- boundary edges ----
-                # interior sides (both pixels in this tile) resolve locally
-                for b in ("top", "bottom", "left", "right"):
-                    nb = np.zeros_like(mask)
-                    if b == "top":
-                        nb[1:, :] = mask[1:, :] & ~mask[:-1, :]
-                    elif b == "bottom":
-                        nb[:-1, :] = mask[:-1, :] & ~mask[1:, :]
-                    elif b == "left":
-                        nb[:, 1:] = mask[:, 1:] & ~mask[:, :-1]
-                    else:
-                        nb[:, :-1] = mask[:, :-1] & ~mask[:, 1:]
-                    yy, xx = np.nonzero(nb)
-                    if len(yy):
-                        emit_edges(row.scene_id,
-                                   _pack_node(tx, ty, labels[yy, xx]),
-                                   ox + xx, oy + yy, b, pend=False)
-
-                # tile-border sides: scene edge (no neighbor possible) is a
-                # definite boundary; otherwise pending on the neighbor cell
-                edge_specs = (
-                    ("top", mask[0, :], np.arange(w),
-                     np.zeros(w, np.int64), 0, -1, ty == 0),
-                    ("bottom", mask[h - 1, :], np.arange(w),
-                     np.full(w, h - 1, np.int64), 0, 1, False),
-                    ("left", mask[:, 0], np.zeros(h, np.int64),
-                     np.arange(h), -1, 0, tx == 0),
-                    ("right", mask[:, w - 1], np.full(h, w - 1, np.int64),
-                     np.arange(h), 1, 0, False),
-                )
-                for side, sm, xs, ys, dx, dy, definite in edge_specs:
-                    idx = np.nonzero(sm)[0]
-                    if not len(idx):
-                        continue
-                    xs_, ys_ = xs[idx], ys[idx]
-                    nodes = _pack_node(tx, ty, labels[ys_, xs_])
-                    if definite:
-                        emit_edges(row.scene_id, nodes, ox + xs_, oy + ys_,
-                                   side, pend=False)
-                    else:
-                        emit_edges(row.scene_id, nodes, ox + xs_, oy + ys_,
-                                   side, pend=True,
-                                   pgx=ox + xs_ + dx, pgy=oy + ys_ + dy)
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, _TOVECT_PASS_SCHEMA)
-
-    return tiles.mapInArrow(fn, _TOVECT_PASS_SCHEMA)
+    return _tile_pass(tiles, _TOVECT_PASS_SCHEMA, src_col, nom_w, nom_h, tile)
 
 
 # walk directions, clockwise on a y-down screen: E, S, W, N
@@ -307,35 +230,13 @@ def to_vect(tiles: DataFrame, threshold: float,
     engine's primitive is the thresholded mask — category maps vectorize
     as reclass-to-binary per class + to_vect, same as extract_regions.
     """
-    from pyspark import StorageLevel
-
-    nom = tiles.agg(F.max("w").alias("w"), F.max("h").alias("h")).first()
-    nom_w, nom_h = int(nom["w"]), int(nom["h"])
-    ex = _tovect_pass(tiles, threshold, src_col, nom_w, nom_h) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        nodes = ex.filter("kind = 0").select("scene_id",
-                                             F.col("node").alias("v"))
-        cells = ex.filter("kind = 1").select("scene_id", "gx", "gy", "node")
-        probes = (ex.filter("kind = 2")
-                  .select("scene_id", "gx", "gy", F.col("node").alias("pnode")))
-        stitched = (
-            probes.join(cells, on=["scene_id", "gx", "gy"])
-            .filter(F.col("pnode") != F.col("node"))
-            .select("scene_id", F.col("pnode").alias("v"),
-                    F.col("node").alias("u"))
-            .localCheckpoint()
-        )
-        edges_cc = stitched.unionAll(
-            stitched.select("scene_id", F.col("u").alias("v"),
-                            F.col("v").alias("u")))
-        lab = _cc_min_label(nodes, edges_cc)
-
+    with _stitched(tiles, partial(_tovect_pass, tiles, threshold,
+                                  src_col)) as (ex, lab, _nom):
         resolved = ex.filter("kind = 3") \
             .select("scene_id", "node", "x0", "y0", "x1", "y1")
         pending = (
             ex.filter("kind = 4")
-            .join(cells.select("scene_id", "gx", "gy"),
+            .join(ex.filter("kind = 1").select("scene_id", "gx", "gy"),
                   on=["scene_id", "gx", "gy"], how="left_anti")
             .select("scene_id", "node", "x0", "y0", "x1", "y1")
         )
@@ -352,15 +253,12 @@ def to_vect(tiles: DataFrame, threshold: float,
         # walked independently — identical rows out) and the explicit
         # modulus keeps the group count scale-adaptive
         nbkt = max(tiles.sparkSession.sparkContext.defaultParallelism, 1) * 4
-        out = (bedges.groupBy(
-                   "scene_id",
-                   F.pmod(F.col("region_id"), F.lit(nbkt)).alias("rbkt"))
-               .applyInPandas(lambda _k, pdf: _assemble_ring_bucket(pdf),
-                              TOVECT_SCHEMA)
-               .localCheckpoint())   # materialize before unpersisting base
-        return out
-    finally:
-        ex.unpersist()
+        return (bedges.groupBy(
+                    "scene_id",
+                    F.pmod(F.col("region_id"), F.lit(nbkt)).alias("rbkt"))
+                .applyInPandas(lambda _k, pdf: _assemble_ring_bucket(pdf),
+                               TOVECT_SCHEMA)
+                .localCheckpoint())   # materialize before unpersisting base
 
 
 def rings_to_lonlat(rings: DataFrame, scene_geom: DataFrame,
@@ -660,8 +558,7 @@ def contour_lines(tiles: DataFrame, levels: Sequence[float],
     only halo strips and O(contour) segment rows move."""
     if not levels:
         raise ValueError("contour_lines needs at least one level")
-    nom = tiles.agg(F.max("w").alias("w"), F.max("h").alias("h")).first()
-    nom_w, nom_h = int(nom["w"]), int(nom["h"])
+    nom_w, nom_h = _nominal_grid(tiles)
     padded = halo_plane_tiles(tiles, r=1, src_col=src_col)
     segs = _contour_pass(padded, levels, nom_w, nom_h)
     return segs.groupBy("scene_id", "level").applyInPandas(

@@ -266,6 +266,16 @@ def test_cc_min_label_union_find_matches_brute(spark):
                 comp[x] = m
         for v in ids:
             want[(key, v)] = min(comp[v])
+    # a path of diameter 1,199 over shuffled ids above 2^53 (pins the
+    # reduction's round count and the int64 id path), and a key made only
+    # of singleton nodes (no edge rows at all)
+    path = [int(x) for x in (1 << 60) + rng.permutation(1200) * 7919]
+    rows_n += [("P", v) for v in path]
+    for v, u in zip(path, path[1:]):
+        rows_e += [("P", v, u), ("P", u, v)]
+    want.update({("P", v): min(path) for v in path})
+    rows_n += [("S", v) for v in range(5, 0, -1)]
+    want.update({("S", v): v for v in range(1, 6)})
     nodes = spark.createDataFrame(rows_n, ["scene_id", "v"])
     edges_df = spark.createDataFrame(rows_e, ["scene_id", "v", "u"])
     got = {(r["scene_id"], r["v"]): r["label"]

@@ -62,8 +62,12 @@ def test_label_tile_golden():
 
 def test_label_tile_matches_naive_random():
     rng = np.random.default_rng(61)
-    for _ in range(5):
-        mask = rng.random((13, 17)) < 0.45
+    # plus one serpentine spanning the full tile: every other row full,
+    # joined at alternating ends — one region, the longest run chain
+    snake = np.zeros((13, 17), dtype=bool)
+    snake[::2] = True
+    snake[1::4, -1] = snake[3::4, 0] = True
+    for mask in [rng.random((13, 17)) < 0.45 for _ in range(5)] + [snake]:
         labels, n = regions.label_tile(mask)
         plane = np.where(mask, 1.0, np.nan)
         exp = _naive_regions(plane, 0.0)
