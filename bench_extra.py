@@ -10,6 +10,7 @@ Usage:
   python bench_extra.py sun|texture|classify|idw|warp|raster|enrich [--reps 3]
   python bench_extra.py viewshed|viewshed_cva|horizon|tovect|contour [--reps 3]
   python bench_extra.py regions|segment|landscape [--reps 3]
+  python bench_extra.py pytasks [--reps 3]   # per-task Python-UDF hop cost
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf1.0 — the driver's
 escalated scale), SPARK_GRAFT_CPUS (default: this host's os.cpu_count()).
@@ -38,6 +39,11 @@ def _materialize(df) -> None:
 
 def _operator_df(spark, name: str, tmp: str):
     """Rebuild the exact DataFrame bench.py times for an operator block."""
+    if name == "pytasks":
+        # 32 one-row mapInArrow tasks: the per-task Python hop, no data work
+        return spark.range(32, numPartitions=32).mapInArrow(
+            lambda batches: batches, "id long")
+
     import numpy as np
     import pandas as pd
     from pyspark.sql import functions as F

@@ -126,6 +126,16 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
+        # Python workers fork from the engine's daemon (importable through
+        # the PYTHONPATH above). Every task's importlib.invalidate_caches()
+        # re-reads each zipimporter's archive directory under Python 3.11:
+        # with pyspark.zip and the spark-core jar on the path that is
+        # 0.14-0.3 s a task (`bench_extra.py pytasks`, 32 empty mapInArrow
+        # tasks on 4 cores: ~2.3 s, ~0.85 s without them). The daemon drops
+        # the zip and the jars when an installed pyspark of the same version
+        # is importable, and changes nothing otherwise
+        # (worker_daemon.drop_spark_archives).
+        .config("spark.python.daemon.module", "i_landsat8_swlst_spark.worker_daemon")
         # one BLAS/OpenMP thread per Python worker: N workers x M BLAS threads
         # oversubscribes the box and destroys kernel-stage scaling
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
