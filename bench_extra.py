@@ -8,6 +8,7 @@ optimization can be measured in isolation (guide §1.4) without touching it.
 Usage:
   python bench_extra.py q_ann_ivf [--reps 3] [--plan plans/r07/q_ann_ivf_before.txt]
   python bench_extra.py sun|texture|classify|idw|warp|raster|enrich [--reps 3]
+  python bench_extra.py raster_stats|raster_halo|raster_pixels|raster_emis [--reps 3]
   python bench_extra.py viewshed|viewshed_cva|horizon|tovect|contour [--reps 3]
   python bench_extra.py regions|segment|landscape [--reps 3]
   python bench_extra.py pytasks [--reps 3]   # per-task Python-UDF hop cost
@@ -65,6 +66,28 @@ def _operator_df(spark, name: str, tmp: str):
         return pipeline.lst_tiles(
             pipeline.build_enriched(scenes, meta, emis), window=C.DEFAULT_CWV_WINDOW,
             emit_arrays=False)
+    if name == "raster_halo":
+        return pipeline.lst_tiles_halo(
+            pipeline.build_enriched(scenes, meta, emis), window=C.DEFAULT_CWV_WINDOW)
+    if name == "raster_pixels":
+        # one pixel row per valid pixel: the first 8 tile rows of each scene
+        # keep the exploded output a few million rows
+        return pipeline.lst_pixels(
+            pipeline.build_enriched_with_grid(scenes, meta, emis)
+            .filter(F.col("tile_y") < 8), window=C.DEFAULT_CWV_WINDOW)
+    if name == "raster_emis":
+        # per-pixel emissivity planes (f32 LE, two dyadic constants
+        # alternating by tile) written once next to the scenes
+        emis_path = f"{tmp}/emis_tiles"
+        if not os.path.isdir(emis_path):
+            pipeline.parse_scenes(scenes).filter("band = 10").select(
+                "scene_id", "tile_x", "tile_y", F.expr(
+                    "unhex(repeat(CASE WHEN (tile_x + tile_y) % 2 = 0 "
+                    "THEN '0000783F' ELSE '0000773F' END, w * h))")
+                .alias("emis_bytes")).write.mode("overwrite").parquet(emis_path)
+        return pipeline.lst_tiles_pixel_emissivity(
+            pipeline.build_enriched(scenes, meta, emis),
+            spark.read.parquet(emis_path), window=C.DEFAULT_CWV_WINDOW)
 
     tex_path = f"{tmp}/texture_tiles"
     if not os.path.isdir(tex_path):

@@ -134,8 +134,8 @@ def cwv_ratio(t10: np.ndarray, t11: np.ndarray, window: int = C.DEFAULT_CWV_WIND
     (h, w) plane independently (cumsum along axis -2/-1 never mixes
     leading-dim slices), so a stacked (k, h, w) call is bit-identical to k
     separate 2-D calls while amortizing the numpy dispatch overhead — the
-    batched mapInArrow path in pipeline._run_tile_kernel_batch relies on
-    this.
+    stacked dispatch of the LST operators (pipeline._fused_stacked) relies
+    on this.
     """
     if window % 2 != 1 or window < 3:
         raise ValueError(f"window must be odd and >= 3, got {window}")

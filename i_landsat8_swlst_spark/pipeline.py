@@ -305,10 +305,10 @@ def _finite_stats(a: np.ndarray) -> tuple[int, float | None, float | None, float
 _CLOUD_VALUES = np.array(C.DEFAULT_CLOUD_QA_VALUES, dtype=np.float64)
 
 
-# Max tiles stacked per fused-kernel call. Round-3 interleaved A/B
-# (jobs/bench_kernel_sweep.py: ALL arms round-robin in ONE process, 5
-# passes/arm, 32 workers, sf0.1-scale input — the only protocol that puts
-# every arm in the same host-steal weather): per-arm minima
+# Max tiles stacked per fused-kernel call. Round-3 interleaved A/B (ALL
+# arms round-robin in ONE process, 5 passes/arm, 32 workers, sf0.1-scale
+# input — the only protocol that puts every arm in the same host-steal
+# weather): per-arm minima
 # stack1 4.56s / stack4 4.42s / stack8 4.65s / stack16 4.69s / stack64 4.83s
 # (88.3 / 91.1 / 86.5 / 85.9 / 83.4 Mpx/s) — the arms sit within 9%, so the
 # earlier cross-session swings (5.1s -> 8.2s -> 13.6s for ONE config) were
@@ -318,85 +318,117 @@ _CLOUD_VALUES = np.array(C.DEFAULT_CLOUD_QA_VALUES, dtype=np.float64)
 _KERNEL_STACK = 4
 
 
-def _run_array_kernel_batch(items: list, window: int) -> list[dict]:
-    """Stacked fused-kernel dispatch over already-decoded arrays.
+def _bt_input(fmt10: str, fmt11: str) -> bool:
+    """True when a band pair holds Kelvin BT (f32bt) rather than DN counts;
+    a pair mixing the two raises."""
+    bt = fmt10 == codecs.FMT_BT
+    if bt != (fmt11 == codecs.FMT_BT):
+        raise ValueError(f"mixed DN/BT band pair: fmt_b10={fmt10!r} fmt_b11={fmt11!r}")
+    return bt
 
-    items: list of (a10, a11, meta_tuple, e10, e11, qa_or_None, bt_input);
-    rows are grouped by (shape, dtype, MTL constants, emissivity pair, QA
-    presence, bt_input), each group stacked into one (k, h, w) kernel call
-    (bit-identical to per-tile — see _run_tile_kernel_batch). Returns result
-    dicts in input order.
+
+def _fused_stacked(items: list, window: int, key, planes) -> list[dict | None]:
+    """The one stacked fused-kernel dispatch behind the four LST operators.
+
+    ``key(item)`` -> (meta_vals, e10, e11, has_qa, bt_input, *shape): what a
+    stacked call needs to be homogeneous; e10/e11 are the scalar
+    emissivities, or None for per-pixel planes. A None key skips the item
+    (its result stays None). ``planes(item)`` -> (a10, a11, qa, e10, e11)
+    arrays, None where the key says absent (a None e11 beside an e10 plane
+    reuses that plane for both bands): decoded tile bytes, an assembled
+    halo pad or decoded emissivity planes.
+
+    Each group runs _KERNEL_STACK items per K.fused_lst_kernel call,
+    bit-identical to per-tile calls (cwv_ratio is leading-dim generic;
+    every other stage is elementwise or a gather) while the ~86 numpy
+    dispatches per tile collapse to ~86 per stack. Returns the per-item
+    result dicts in input order.
     """
     groups: dict[tuple, list[int]] = {}
-    for i, (a10, _a11, meta_vals, e10, e11, qa, bt_in) in enumerate(items):
-        key = (a10.shape, a10.dtype.str, meta_vals, e10, e11, qa is not None, bt_in)
-        groups.setdefault(key, []).append(i)
+    for i, item in enumerate(items):
+        k = key(item)
+        if k is not None:
+            groups.setdefault(k, []).append(i)
     out: list[dict | None] = [None] * len(items)
-    for (_shape, _dt, meta_vals, e10, e11, has_qa, bt_in), gidxs in groups.items():
+    for (meta_vals, e10, e11, has_qa, bt_in, *_), gidxs in groups.items():
         meta = dict(zip(META_COLS, meta_vals))
         for s in range(0, len(gidxs), _KERNEL_STACK):
-            idxs = gidxs[s : s + _KERNEL_STACK]
-            a10 = np.stack([items[i][0] for i in idxs])
-            a11 = np.stack([items[i][1] for i in idxs])
-            qa = np.stack([items[i][5] for i in idxs]) if has_qa else None
+            idxs = gidxs[s:s + _KERNEL_STACK]
+            a10, a11, qa, p10, p11 = (
+                None if p[0] is None else np.stack(p)
+                for p in zip(*(planes(items[i]) for i in idxs)))
+            p11 = p10 if p11 is None else p11
             r = K.fused_lst_kernel(
-                a10, a11, meta, e10=e10, e11=e11, window=window,
-                qa=qa, cloud_values=_CLOUD_VALUES if has_qa else None,
-                bt_input=bt_in,
-            )
+                a10, a11, meta, e10=e10 if p10 is None else p10,
+                e11=e11 if p11 is None else p11, window=window, qa=qa,
+                cloud_values=_CLOUD_VALUES if has_qa else None, bt_input=bt_in)
             for j, i in enumerate(idxs):
                 out[i] = {k: v[j] for k, v in r.items()}
-    return out  # type: ignore[return-value]
+    return out
 
 
-def _run_tile_kernel_batch(rows: list, window: int,
-                           stack: int | None = None) -> list[dict]:
-    """Run the fused kernel over a whole Arrow batch of tile rows.
+def _row_key(row, e10: float | None = None, e11: float | None = None) -> tuple:
+    """_fused_stacked key of a paired-band tile row."""
+    return (tuple(float(getattr(row, k)) for k in META_COLS), e10, e11,
+            getattr(row, "bytes_qa", None) is not None,
+            _bt_input(row.fmt_b10, row.fmt_b11),
+            int(row.w), int(row.h), row.fmt_b10, row.fmt_b11)
 
-    Rows are grouped by (w, h, fmt pair, MTL constants, emissivity pair,
-    QA presence); each homogeneous group is decoded into ONE (k, h, w)
-    stack and pushed through kernels.fused_lst_kernel in a single call —
-    bit-identical to the per-tile form (cwv_ratio is leading-dim generic;
-    every other stage is elementwise or a gather) while the ~86 numpy
-    dispatches per tile collapse to ~86 per group. Returns per-row result
-    dicts in input order; rows a group can't absorb (heterogeneous shapes
-    within a 1-row remainder etc.) still work — a group of one is just the
-    old path with an extra leading axis of 1.
-    """
-    stack = _KERNEL_STACK if stack is None else stack
-    groups: dict[tuple, list[int]] = {}
-    for i, row in enumerate(rows):
-        qa_bytes = getattr(row, "bytes_qa", None)
-        key = (int(row.w), int(row.h), row.fmt_b10, row.fmt_b11,
-               tuple(float(getattr(row, k)) for k in META_COLS),
-               float(row.emissivity_b10), float(row.emissivity_b11),
-               qa_bytes is not None)
-        groups.setdefault(key, []).append(i)
-    out: list[dict | None] = [None] * len(rows)
-    for (w, h, fmt10, fmt11, meta_vals, e10, e11, has_qa), gidxs in groups.items():
-        meta = dict(zip(META_COLS, meta_vals))
-        bt_in = fmt10 == codecs.FMT_BT
-        if bt_in != (fmt11 == codecs.FMT_BT):
-            raise ValueError(f"mixed DN/BT band pair: fmt_b10={fmt10!r} fmt_b11={fmt11!r}")
-        for s in range(0, len(gidxs), stack):
-            idxs = gidxs[s : s + stack]
-            dn10 = np.stack([codecs.decode_tile_dn(rows[i].bytes_b10, w, h, fmt10) for i in idxs])
-            dn11 = np.stack([codecs.decode_tile_dn(rows[i].bytes_b11, w, h, fmt11) for i in idxs])
-            qa = (np.stack([codecs.decode_u16le(rows[i].bytes_qa, w, h) for i in idxs])
-                  if has_qa else None)
-            r = K.fused_lst_kernel(
-                dn10, dn11, meta, e10=e10, e11=e11, window=window,
-                qa=qa, cloud_values=_CLOUD_VALUES if has_qa else None,
-                bt_input=bt_in,
-            )
-            for j, i in enumerate(idxs):
-                out[i] = {k: v[j] for k, v in r.items()}
-    return out  # type: ignore[return-value]
+
+def _row_planes(row, e10_col: str | None = None, e11_col: str | None = None) -> tuple:
+    """(dn10, dn11, qa, e10, e11) decoded from a paired-band tile row; the
+    emissivity planes come from the f32 columns named."""
+    w, h = int(row.w), int(row.h)
+    qa = getattr(row, "bytes_qa", None)
+    e10 = None if e10_col is None else codecs.decode_f32bt(getattr(row, e10_col), w, h)
+    e11 = None if e11_col is None else codecs.decode_f32bt(getattr(row, e11_col), w, h)
+    return (codecs.decode_tile_dn(row.bytes_b10, w, h, row.fmt_b10),
+            codecs.decode_tile_dn(row.bytes_b11, w, h, row.fmt_b11),
+            None if qa is None else codecs.decode_u16le(qa, w, h), e10, e11)
+
+
+def _class_emis_kernel(rows: list, window: int) -> list[dict]:
+    """_fused_stacked over paired-band rows with landcover-class emissivities."""
+    return _fused_stacked(rows, window, lambda row: _row_key(
+        row, float(row.emissivity_b10), float(row.emissivity_b11)), _row_planes)
+
+
+def _row_ids(row) -> tuple:
+    return (row.image_id_b10, row.scene_id, row.tile_x, row.tile_y,
+            row.w, row.h, row.caption_b10)
+
+
+def _tile_cols(tiles, celsius: bool = False,
+               emit_arrays: bool = True) -> dict[str, list]:
+    """TILE_SCHEMA columns from (ids, result) pairs: ``ids`` fills the
+    seven identity columns (image_id .. caption), ``result`` is a
+    fused-kernel dict whose LST and CWV planes go out as f32 LE bytes
+    (empty when not emit_arrays) next to their finite stats.
+
+    Pass ``tiles`` as a temporary and build the Arrow batch after this
+    returns, so the kernel results behind it are released first: a
+    batch's result planes (~50 MB for 64 tiles of 128^2) held across the
+    Arrow build doubled the worker's page faults in a 64-tile in-process
+    timing."""
+    cols: dict[str, list] = {f.name: [] for f in TILE_SCHEMA}
+    ap = {k: v.append for k, v in cols.items()}
+    for ids, r in tiles:
+        for name, v in zip(TILE_SCHEMA.names, ids):
+            ap[name](v)
+        lst = r["lst_c"] if celsius else r["lst_k"]
+        n_valid, lst_min, lst_max, lst_mean = _finite_stats(lst)
+        ap["n_valid"](n_valid)
+        ap["lst_min"](lst_min); ap["lst_max"](lst_max); ap["lst_mean"](lst_mean)
+        ap["cwv_mean"](_finite_stats(r["cwv"])[3])
+        ap["bt10_mean"](_finite_stats(r["bt10"])[3])
+        ap["bt11_mean"](_finite_stats(r["bt11"])[3])
+        ap["lst_bytes"](lst.astype("<f4").tobytes() if emit_arrays else b"")
+        ap["cwv_bytes"](r["cwv"].astype("<f4").tobytes() if emit_arrays else b"")
+    return cols
 
 
 def lst_tiles(enriched: DataFrame, window: int = C.DEFAULT_CWV_WINDOW,
-              emit_arrays: bool = True, celsius: bool = False,
-              kernel_stack: int | None = None) -> DataFrame:
+              emit_arrays: bool = True, celsius: bool = False) -> DataFrame:
     """Fused raster kernel -> tile-level LST/CWV arrays + stats (C11).
 
     emit_arrays=False keeps the byte columns empty for stats-only consumers:
@@ -410,28 +442,10 @@ def lst_tiles(enriched: DataFrame, window: int = C.DEFAULT_CWV_WINDOW,
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in TILE_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
             rows = list(_batch_rows(batch))
-            for row, r in zip(rows, _run_tile_kernel_batch(rows, window,
-                                                           stack=kernel_stack)):
-                lst = r["lst_c"] if celsius else r["lst_k"]
-                n_valid, lst_min, lst_max, lst_mean = _finite_stats(lst)
-                _, _, _, cwv_mean = _finite_stats(r["cwv"])
-                _, _, _, bt10_mean = _finite_stats(r["bt10"])
-                _, _, _, bt11_mean = _finite_stats(r["bt11"])
-                ap["image_id"](row.image_id_b10)
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
-                ap["w"](row.w); ap["h"](row.h)
-                ap["caption"](row.caption_b10)
-                ap["lst_bytes"](lst.astype("<f4").tobytes() if emit_arrays else b"")
-                ap["cwv_bytes"](r["cwv"].astype("<f4").tobytes() if emit_arrays else b"")
-                ap["n_valid"](n_valid)
-                ap["lst_min"](lst_min); ap["lst_max"](lst_max); ap["lst_mean"](lst_mean)
-                ap["cwv_mean"](cwv_mean)
-                ap["bt10_mean"](bt10_mean); ap["bt11_mean"](bt11_mean)
-            if cols["image_id"]:
+            if rows:
+                cols = _tile_cols(zip(map(_row_ids, rows), _class_emis_kernel(rows, window)),
+                                  celsius, emit_arrays)
                 yield _batch_from_cols(cols, TILE_SCHEMA)
 
     return enriched.mapInArrow(fn, TILE_SCHEMA)
@@ -466,82 +480,26 @@ def lst_tiles_pixel_emissivity(enriched: DataFrame, emis_tiles: DataFrame,
         emis_tiles.select("scene_id", "tile_x", "tile_y", *ecols),
         on=["scene_id", "tile_x", "tile_y"], how="left")
 
+    def key(row):
+        # emissivity is per-row array data, not a key
+        if any(getattr(row, c) is None for c in ecols):
+            return None
+        return _row_key(row)
+
+    def results(rows: list):
+        for row, r in zip(rows, _fused_stacked(
+                rows, window, key, lambda row: _row_planes(row, e10_col, e11_col))):
+            if r is None:             # no emissivity tile: LST refused
+                r = dict.fromkeys(("lst_k", "lst_c", "cwv", "bt10", "bt11"),
+                                  np.full((int(row.h), int(row.w)), np.nan))
+            yield _row_ids(row), r
+
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in TILE_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
             rows = list(_batch_rows(batch))
-            # group by everything the stacked kernel requires to be
-            # homogeneous; emissivity is per-row array data, not a key
-            groups: dict[tuple, list[int]] = {}
-            for i, row in enumerate(rows):
-                qa_bytes = getattr(row, "bytes_qa", None)
-                key = (int(row.w), int(row.h), row.fmt_b10, row.fmt_b11,
-                       tuple(float(getattr(row, k)) for k in META_COLS),
-                       qa_bytes is not None,
-                       getattr(row, e10_col) is None
-                       or (e11_col is not None
-                           and getattr(row, e11_col) is None))
-                groups.setdefault(key, []).append(i)
-            out: list[dict | None] = [None] * len(rows)
-            for (w, h, fmt10, fmt11, meta_vals, has_qa,
-                 no_emis), gidxs in groups.items():
-                if no_emis:
-                    continue          # NaN planes emitted below
-                meta = dict(zip(META_COLS, meta_vals))
-                bt_in = fmt10 == codecs.FMT_BT
-                if bt_in != (fmt11 == codecs.FMT_BT):
-                    raise ValueError(
-                        f"mixed DN/BT band pair: fmt_b10={fmt10!r} "
-                        f"fmt_b11={fmt11!r}")
-                for s in range(0, len(gidxs), _KERNEL_STACK):
-                    idxs = gidxs[s : s + _KERNEL_STACK]
-                    dn10 = np.stack([codecs.decode_tile_dn(
-                        rows[i].bytes_b10, w, h, fmt10) for i in idxs])
-                    dn11 = np.stack([codecs.decode_tile_dn(
-                        rows[i].bytes_b11, w, h, fmt11) for i in idxs])
-                    qa = (np.stack([codecs.decode_u16le(
-                        rows[i].bytes_qa, w, h) for i in idxs])
-                        if has_qa else None)
-                    e10 = np.stack([codecs.decode_f32bt(
-                        getattr(rows[i], e10_col), w, h) for i in idxs])
-                    e11 = (np.stack([codecs.decode_f32bt(
-                        getattr(rows[i], e11_col), w, h) for i in idxs])
-                        if e11_col else e10)
-                    r = K.fused_lst_kernel(
-                        dn10, dn11, meta, e10=e10, e11=e11, window=window,
-                        qa=qa, cloud_values=_CLOUD_VALUES if has_qa else None,
-                        bt_input=bt_in)
-                    for j, i in enumerate(idxs):
-                        out[i] = {k: v[j] for k, v in r.items()}
-            for i, row in enumerate(rows):
-                r = out[i]
-                w, h = int(row.w), int(row.h)
-                if r is None:         # no emissivity tile: LST refused
-                    nanp = np.full((h, w), np.nan)
-                    r = {"lst_k": nanp, "lst_c": nanp, "cwv": nanp,
-                         "bt10": nanp, "bt11": nanp}
-                lst = r["lst_c"] if celsius else r["lst_k"]
-                n_valid, lst_min, lst_max, lst_mean = _finite_stats(lst)
-                _, _, _, cwv_mean = _finite_stats(r["cwv"])
-                _, _, _, bt10_mean = _finite_stats(r["bt10"])
-                _, _, _, bt11_mean = _finite_stats(r["bt11"])
-                ap["image_id"](row.image_id_b10)
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
-                ap["w"](row.w); ap["h"](row.h)
-                ap["caption"](row.caption_b10)
-                ap["lst_bytes"](lst.astype("<f4").tobytes()
-                                if emit_arrays else b"")
-                ap["cwv_bytes"](r["cwv"].astype("<f4").tobytes()
-                                if emit_arrays else b"")
-                ap["n_valid"](n_valid)
-                ap["lst_min"](lst_min); ap["lst_max"](lst_max)
-                ap["lst_mean"](lst_mean)
-                ap["cwv_mean"](cwv_mean)
-                ap["bt10_mean"](bt10_mean); ap["bt11_mean"](bt11_mean)
-            if cols["image_id"]:
-                yield _batch_from_cols(cols, TILE_SCHEMA)
+            if rows:
+                yield _batch_from_cols(_tile_cols(results(rows), celsius, emit_arrays),
+                                       TILE_SCHEMA)
 
     return joined.mapInArrow(fn, TILE_SCHEMA)
 
@@ -566,7 +524,7 @@ def lst_pixels(
         # pandas detour, no per-batch concat
         for batch in batches:
             rows = list(_batch_rows(batch))
-            for row, r in zip(rows, _run_tile_kernel_batch(rows, window)):
+            for row, r in zip(rows, _class_emis_kernel(rows, window)):
                 w, h = int(row.w), int(row.h)
                 lst = r["lst_k"].ravel()
                 keep = np.isfinite(lst) if valid_only else np.ones(lst.size, bool)
@@ -657,6 +615,71 @@ def full_pixel_pipeline(
 HALO_TILE_SCHEMA = TILE_SCHEMA  # same output contract as lst_tiles
 
 
+def _halo_pieces(row, w: int, h: int, r: int) -> list[tuple]:
+    """(rx, ry, dx, dy, (ys, xs)) for every piece tile (tile_x, tile_y)
+    sends in a margin-r halo exchange: the whole tile to itself (dx = dy =
+    0) and the r-wide edge strip or corner each 8-neighbour (rx, ry) needs.
+    A tile narrower than the margin raises: slice(w - r, w) would wrap to
+    the array end and the short strip land left-aligned in the pad."""
+    if w < r or h < r:
+        raise ValueError(
+            f"halo margin r={r} exceeds tile dims {w}x{h} "
+            f"(scene {row.scene_id}, tile "
+            f"({int(row.tile_x)},{int(row.tile_y)})); retile "
+            "with tiles at least r pixels on each side")
+    xs = {-1: slice(0, r), 0: slice(None), 1: slice(w - r, w)}
+    ys = {-1: slice(0, r), 0: slice(None), 1: slice(h - r, h)}
+    return [(row.tile_x + dx, row.tile_y + dy, dx, dy, (ys[dy], xs[dx]))
+            for dx in (-1, 0, 1) for dy in (-1, 0, 1)
+            if row.tile_x + dx >= 0 and row.tile_y + dy >= 0]
+
+
+def _halo_pad(strips: list, col: str, dt: str, w: int, h: int, r: int,
+              pad_dt: str = "<f8") -> np.ndarray:
+    """One tile's (h+2r, w+2r) plane mosaicked from the ``col`` pieces of
+    its received strips; a missing neighbour stays NaN (true scene edge)."""
+    pad = np.full((h + 2 * r, w + 2 * r), np.nan, dtype=pad_dt)
+    for s in strips:
+        # sender = receiver - (dx,dy): a dx=+1 piece came from the left
+        # neighbor, so it lands on the padded-left strip, etc.
+        x0 = 0 if s.dx == 1 else (r + w if s.dx == -1 else r)
+        y0 = 0 if s.dy == 1 else (r + h if s.dy == -1 else r)
+        pad[y0:y0 + s.ph, x0:x0 + s.pw] = \
+            np.frombuffer(getattr(s, col), dtype=dt).reshape(s.ph, s.pw)
+    return pad
+
+
+def _halo_exchange(strips: DataFrame, assemble, schema: StructType) -> DataFrame:
+    """Shuffle halo strips on the receiving tile key and sort within
+    partitions, so each tile's strips are contiguous; ``assemble`` then
+    streams over the per-tile strip lists in mapInArrow — no per-group
+    pandas machinery (FlatMapGroupsInPandas paid ~1 ms/group of 9 rows)."""
+    parts = strips.repartition(F.col("scene_id"), F.col("rx"), F.col("ry")) \
+                  .sortWithinPartitions("scene_id", "rx", "ry")
+
+    def tiles(batches: Iterator[pa.RecordBatch]):
+        cur, acc = None, []
+        for batch in batches:
+            for s in _batch_rows(batch):
+                k = (s.scene_id, s.rx, s.ry)
+                if k != cur and acc:
+                    yield acc
+                    acc = []
+                cur = k
+                acc.append(s)
+        if acc:
+            yield acc
+
+    return parts.mapInArrow(lambda batches: assemble(tiles(batches)), schema)
+
+
+_STRIP_KEY = [StructField("scene_id", StringType()),
+              StructField("rx", IntegerType()),         # receiving tile key
+              StructField("ry", IntegerType()),
+              StructField("dx", IntegerType()),         # where the piece sits
+              StructField("dy", IntegerType())]
+
+
 def lst_tiles_halo(enriched: DataFrame, window: int = C.DEFAULT_CWV_WINDOW) -> DataFrame:
     """Fused kernel with cross-tile halo exchange: scene-mosaic semantics.
 
@@ -668,20 +691,16 @@ def lst_tiles_halo(enriched: DataFrame, window: int = C.DEFAULT_CWV_WINDOW) -> D
       pass 1 (mapInArrow):   decode once, emit the center tile plus the 8
                              r-wide DN edge strips each neighbor needs
                              (shuffle volume ~ (1 + 2r(w+h)/(wh))x, NOT 9x);
-      shuffle:               hash on the receiving tile key;
-      pass 2 (applyInPandas): assemble the (h+2r, w+2r) padded arrays
+      shuffle:               hash on the receiving tile key, sorted within
+                             partitions;
+      pass 2 (mapInArrow):   assemble the (h+2r, w+2r) padded arrays
                              (missing neighbors = NaN = true scene edge),
                              run the same fused kernel, crop the halo.
 
-    Catalyst sees a plain groupBy — AQE/salting applies as usual.
+    Tiles must be at least r pixels on each side.
     """
     r = window // 2
-    strip_schema = StructType([
-        StructField("scene_id", StringType()),
-        StructField("rx", IntegerType()),        # receiving tile key
-        StructField("ry", IntegerType()),
-        StructField("dx", IntegerType()),        # where the piece sits
-        StructField("dy", IntegerType()),
+    strip_schema = StructType(_STRIP_KEY + [
         StructField("piece10", BinaryType()),    # u16le DN pieces (f32le when bt=1)
         StructField("piece11", BinaryType()),
         StructField("pw", IntegerType()),
@@ -704,11 +723,8 @@ def lst_tiles_halo(enriched: DataFrame, window: int = C.DEFAULT_CWV_WINDOW) -> D
             ap = {k: v.append for k, v in cols.items()}
             for row in _batch_rows(batch):
                 w, h = int(row.w), int(row.h)
-                bt_in = row.fmt_b10 == codecs.FMT_BT
-                if bt_in != (row.fmt_b11 == codecs.FMT_BT):
-                    raise ValueError(
-                        f"mixed DN/BT band pair: fmt_b10={row.fmt_b10!r} "
-                        f"fmt_b11={row.fmt_b11!r}")
+                bt_in = _bt_input(row.fmt_b10, row.fmt_b11)
+                pieces = _halo_pieces(row, w, h, r)
                 # BT tiles carry float Kelvin: pieces travel as f32le and the
                 # bt flag tells assembly to skip DN->BT (same contract as the
                 # batch path's bt_input)
@@ -719,136 +735,84 @@ def lst_tiles_halo(enriched: DataFrame, window: int = C.DEFAULT_CWV_WINDOW) -> D
                 dn10 = np.asarray(codecs.decode_tile_dn(row.bytes_b10, w, h, row.fmt_b10), dtype=piece_dt)
                 dn11 = np.asarray(codecs.decode_tile_dn(row.bytes_b11, w, h, row.fmt_b11), dtype=piece_dt)
                 meta = {k: float(getattr(row, k)) for k in META_COLS}
-                for dx in (-1, 0, 1):
-                    for dy in (-1, 0, 1):
-                        rx, ry = row.tile_x + dx, row.tile_y + dy
-                        if rx < 0 or ry < 0:
-                            continue
-                        center = dx == 0 and dy == 0
-                        if center and passthrough:
-                            b10, b11, pw, ph = row.bytes_b10, row.bytes_b11, w, h
-                        else:
-                            # slice of THIS tile that tile (rx, ry) needs
-                            xs = slice(None) if dx == 0 else (slice(w - r, w) if dx == 1 else slice(0, r))
-                            ys = slice(None) if dy == 0 else (slice(h - r, h) if dy == 1 else slice(0, r))
-                            p10 = np.ascontiguousarray(dn10[ys, xs])
-                            b10, b11 = p10.tobytes(), np.ascontiguousarray(dn11[ys, xs]).tobytes()
-                            ph, pw = p10.shape
-                        ap["scene_id"](row.scene_id); ap["rx"](rx); ap["ry"](ry)
-                        ap["dx"](dx); ap["dy"](dy)
-                        ap["piece10"](b10); ap["piece11"](b11)
-                        ap["pw"](pw); ap["ph"](ph)
-                        ap["bt"](1 if bt_in else 0)
-                        ap["image_id"](row.image_id_b10 if center else None)
-                        ap["caption"](row.caption_b10 if center else None)
-                        ap["w"](w); ap["h"](h)
-                        ap["emissivity_b10"](float(row.emissivity_b10) if center else None)
-                        ap["emissivity_b11"](float(row.emissivity_b11) if center else None)
-                        for k in META_COLS:
-                            ap[k](meta[k] if center else None)
+                for rx, ry, dx, dy, sl in pieces:
+                    center = dx == 0 and dy == 0
+                    if center and passthrough:
+                        b10, b11, pw, ph = row.bytes_b10, row.bytes_b11, w, h
+                    else:
+                        p10 = np.ascontiguousarray(dn10[sl])
+                        b10, b11 = p10.tobytes(), np.ascontiguousarray(dn11[sl]).tobytes()
+                        ph, pw = p10.shape
+                    ap["scene_id"](row.scene_id); ap["rx"](rx); ap["ry"](ry)
+                    ap["dx"](dx); ap["dy"](dy)
+                    ap["piece10"](b10); ap["piece11"](b11)
+                    ap["pw"](pw); ap["ph"](ph)
+                    ap["bt"](1 if bt_in else 0)
+                    ap["image_id"](row.image_id_b10 if center else None)
+                    ap["caption"](row.caption_b10 if center else None)
+                    ap["w"](w); ap["h"](h)
+                    ap["emissivity_b10"](float(row.emissivity_b10) if center else None)
+                    ap["emissivity_b11"](float(row.emissivity_b11) if center else None)
+                    for k in META_COLS:
+                        ap[k](meta[k] if center else None)
             if cols["scene_id"]:
                 yield _batch_from_cols(cols, strip_schema)
 
-    strips = enriched.mapInArrow(emit_strips, strip_schema)
+    def padded(acc: list):
+        """(center strip, pad10, pad11) of one tile, or None for halo strips
+        sent to a tile outside the input (scene edge)."""
+        center = next((s for s in acc if s.dx == 0 and s.dy == 0
+                       and s.image_id is not None), None)
+        if center is None:
+            return None
+        for s in acc:
+            # cross-tile analog of the per-tile mixed DN/BT guard in
+            # emit_strips: a neighbor strip whose bt flag differs from
+            # the center would mosaic raw DN counts into a Kelvin plane
+            # (or vice versa), silently corrupting CWV/LST at borders.
+            if bool(s.bt) != bool(center.bt):
+                raise ValueError(
+                    f"mixed DN/BT strips for tile "
+                    f"({center.scene_id}, {center.rx}, {center.ry}): "
+                    f"center bt={bool(center.bt)} but strip from "
+                    f"d=({s.dx},{s.dy}) has bt={bool(s.bt)}")
+        w, h, dt = int(center.w), int(center.h), "<f4" if center.bt else "<u2"
+        return (center, _halo_pad(acc, "piece10", dt, w, h, r),
+                _halo_pad(acc, "piece11", dt, w, h, r))
 
-    # assemble: shuffle on the receiving tile key, sort within partitions so
-    # each tile's strips are contiguous, then stream-assemble in mapInArrow —
-    # no per-group pandas machinery (FlatMapGroupsInPandas paid ~1 ms/group
-    # of 9 rows), output batched 64 tiles at a time like lst_tiles.
-    parts = strips.repartition(F.col("scene_id"), F.col("rx"), F.col("ry")) \
-                  .sortWithinPartitions("scene_id", "rx", "ry")
+    def key(t):
+        c = t[0]
+        return (tuple(float(getattr(c, k)) for k in META_COLS),
+                float(c.emissivity_b10), float(c.emissivity_b11), False,
+                bool(c.bt), t[1].shape)
 
-    def assemble_stream(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        pending: list = []  # (center_row, pad10, pad11, bt_input) awaiting a stacked kernel run
+    def cropped(t, planes: dict):
+        """The center tile's ids and kernel planes without the halo."""
+        c = t[0]
+        w, h = int(c.w), int(c.h)
+        return ((c.image_id, c.scene_id, int(c.rx), int(c.ry), w, h, c.caption),
+                {k: v[r:r + h, r:r + w] for k, v in planes.items()})
 
-        def assemble(acc: list):
-            """Mosaic one tile's 9 strips into NaN-padded planes (no kernel)."""
-            center = next((s for s in acc if s.dx == 0 and s.dy == 0
-                           and s.image_id is not None), None)
-            if center is None:
-                return None  # halo strips for a tile outside the input (scene edge)
-            for s in acc:
-                # cross-tile analog of the per-tile mixed DN/BT guard in
-                # emit_strips: a neighbor strip whose bt flag differs from
-                # the center would mosaic raw DN counts into a Kelvin plane
-                # (or vice versa), silently corrupting CWV/LST at borders.
-                if bool(s.bt) != bool(center.bt):
-                    raise ValueError(
-                        f"mixed DN/BT strips for tile "
-                        f"({center.scene_id}, {center.rx}, {center.ry}): "
-                        f"center bt={bool(center.bt)} but strip from "
-                        f"d=({s.dx},{s.dy}) has bt={bool(s.bt)}")
-            w, h = int(center.w), int(center.h)
-            pad10 = np.full((h + 2 * r, w + 2 * r), np.nan)
-            pad11 = np.full((h + 2 * r, w + 2 * r), np.nan)
-            for s in acc:
-                # sender = receiver - (dx,dy): a dx=+1 piece came from the
-                # left neighbor, so it lands on the padded-left strip, etc.
-                x0 = 0 if s.dx == 1 else (r + w if s.dx == -1 else r)
-                y0 = 0 if s.dy == 1 else (r + h if s.dy == -1 else r)
-                dt = "<f4" if s.bt else "<u2"
-                pad10[y0:y0 + s.ph, x0:x0 + s.pw] = \
-                    np.frombuffer(s.piece10, dtype=dt).reshape(s.ph, s.pw)
-                pad11[y0:y0 + s.ph, x0:x0 + s.pw] = \
-                    np.frombuffer(s.piece11, dtype=dt).reshape(s.ph, s.pw)
-            return (center, pad10, pad11, bool(center.bt))
+    def kernel_batch(pending: list) -> pa.RecordBatch:
+        # pads are float, so BT takes the arithmetic path
+        cols = _tile_cols(map(cropped, pending, _fused_stacked(
+            pending, window, key, lambda t: (t[1], t[2], None, None, None))))
+        pending.clear()
+        return _batch_from_cols(cols, TILE_SCHEMA)
 
-        def emit_pending() -> pa.RecordBatch:
-            # one stacked kernel family per flush (same bit-identity argument
-            # as _run_tile_kernel_batch; pads are float so BT takes the
-            # arithmetic path, stacked elementwise)
-            cols: dict[str, list] = {f.name: [] for f in TILE_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            items = [
-                (p10, p11,
-                 tuple(float(getattr(c, k)) for k in META_COLS),
-                 float(c.emissivity_b10), float(c.emissivity_b11), None, bt_in)
-                for c, p10, p11, bt_in in pending
-            ]
-            for (center, _p10, _p11, _bt), res in zip(
-                    pending, _run_array_kernel_batch(items, window)):
-                w, h = int(center.w), int(center.h)
-                lst = res["lst_k"][r:r + h, r:r + w]
-                cwv = res["cwv"][r:r + h, r:r + w]
-                n_valid, lst_min, lst_max, lst_mean = _finite_stats(lst)
-                _, _, _, cwv_mean = _finite_stats(cwv)
-                _, _, _, bt10_mean = _finite_stats(res["bt10"][r:r + h, r:r + w])
-                _, _, _, bt11_mean = _finite_stats(res["bt11"][r:r + h, r:r + w])
-                ap["image_id"](center.image_id); ap["scene_id"](center.scene_id)
-                ap["tile_x"](int(center.rx)); ap["tile_y"](int(center.ry))
-                ap["w"](w); ap["h"](h); ap["caption"](center.caption)
-                ap["lst_bytes"](lst.astype("<f4").tobytes())
-                ap["cwv_bytes"](cwv.astype("<f4").tobytes())
-                ap["n_valid"](n_valid)
-                ap["lst_min"](lst_min); ap["lst_max"](lst_max); ap["lst_mean"](lst_mean)
-                ap["cwv_mean"](cwv_mean)
-                ap["bt10_mean"](bt10_mean); ap["bt11_mean"](bt11_mean)
-            pending.clear()
-            return _batch_from_cols(cols, TILE_SCHEMA)
-
-        cur_key = None
-        acc: list = []
-        for batch in batches:
-            for s in _batch_rows(batch):
-                k = (s.scene_id, s.rx, s.ry)
-                if k != cur_key:
-                    if acc:
-                        t = assemble(acc)
-                        if t is not None:
-                            pending.append(t)
-                        acc = []
-                    cur_key = k
-                    if len(pending) >= _KERNEL_STACK:
-                        yield emit_pending()
-                acc.append(s)
-        if acc:
-            t = assemble(acc)
+    def assemble(tiles) -> Iterator[pa.RecordBatch]:
+        pending: list = []
+        for acc in tiles:
+            t = padded(acc)
             if t is not None:
                 pending.append(t)
+            if len(pending) >= _KERNEL_STACK:
+                yield kernel_batch(pending)
         if pending:
-            yield emit_pending()
+            yield kernel_batch(pending)
 
-    return parts.mapInArrow(assemble_stream, TILE_SCHEMA)
+    return _halo_exchange(enriched.mapInArrow(emit_strips, strip_schema),
+                          assemble, TILE_SCHEMA)
 
 
 def composite_pixels(pixels: DataFrame,
@@ -1125,7 +1089,8 @@ def halo_plane_tiles(tiles: DataFrame, r: int,
     counts in hydro.flow_accum_tiles that must stay exact past 2**24).
     ``pad_bytes`` comes back in the same dtype.
 
-    Same shape as the band-pair halo in lst_tiles_halo: strips are
+    Same strip geometry and exchange as the band-pair halo in
+    lst_tiles_halo (_halo_pieces, _halo_pad, _halo_exchange): strips are
     r-wide (shuffle ~ (1 + 2r(w+h)/(wh)) x the plane bytes, not 9x), the
     shuffle is a plain repartition on the receiving tile key, assembly
     streams sorted partitions.
@@ -1137,15 +1102,7 @@ def halo_plane_tiles(tiles: DataFrame, r: int,
     # NOTE: no spread_tiles here — the halo's own repartition spreads every
     # downstream consumer, and the strip emit is cheap enough that paying
     # an extra plane shuffle to parallelize it measures net-negative
-
-    def _dec(buf: bytes, w: int, h: int) -> np.ndarray:
-        return np.frombuffer(buf, dtype=dtype).reshape(h, w)
-    strip_schema = StructType([
-        StructField("scene_id", StringType()),
-        StructField("rx", IntegerType()),
-        StructField("ry", IntegerType()),
-        StructField("dx", IntegerType()),
-        StructField("dy", IntegerType()),
+    strip_schema = StructType(_STRIP_KEY + [
         StructField("piece", BinaryType()),
         StructField("pw", IntegerType()),
         StructField("ph", IntegerType()),
@@ -1161,84 +1118,45 @@ def halo_plane_tiles(tiles: DataFrame, r: int,
             ap = {k: v.append for k, v in cols.items()}
             for row in _batch_rows(batch):
                 w, h = int(row.w), int(row.h)
-                if w < r or h < r:
-                    # slice(w - r, w) would wrap to the array end and the
-                    # assemble step would left-align the short strip — fail
-                    # loudly instead of silently corrupting the padded plane
-                    raise ValueError(
-                        f"halo margin r={r} exceeds tile dims {w}x{h} "
-                        f"(scene {row.scene_id}, tile "
-                        f"({int(row.tile_x)},{int(row.tile_y)})); retile "
-                        "with tiles at least r pixels on each side")
-                plane = _dec(getattr(row, src_col), w, h)
-                for dx in (-1, 0, 1):
-                    for dy in (-1, 0, 1):
-                        rx, ry = row.tile_x + dx, row.tile_y + dy
-                        if rx < 0 or ry < 0:
-                            continue
-                        center = dx == 0 and dy == 0
-                        if center:
-                            piece, pw, ph = getattr(row, src_col), w, h
-                        else:
-                            xs = slice(None) if dx == 0 else (slice(w - r, w) if dx == 1 else slice(0, r))
-                            ys = slice(None) if dy == 0 else (slice(h - r, h) if dy == 1 else slice(0, r))
-                            p = np.ascontiguousarray(plane[ys, xs], dtype=dtype)
-                            piece, (ph, pw) = p.tobytes(), p.shape
-                        ap["scene_id"](row.scene_id); ap["rx"](rx); ap["ry"](ry)
-                        ap["dx"](dx); ap["dy"](dy)
-                        ap["piece"](piece); ap["pw"](pw); ap["ph"](ph)
-                        ap["image_id"](getattr(row, "image_id", None) if center else None)
-                        ap["w"](w); ap["h"](h)
+                pieces = _halo_pieces(row, w, h, r)
+                plane = np.frombuffer(getattr(row, src_col), dtype=dtype).reshape(h, w)
+                for rx, ry, dx, dy, sl in pieces:
+                    center = dx == 0 and dy == 0
+                    if center:
+                        piece, pw, ph = getattr(row, src_col), w, h
+                    else:
+                        p = np.ascontiguousarray(plane[sl], dtype=dtype)
+                        piece, (ph, pw) = p.tobytes(), p.shape
+                    ap["scene_id"](row.scene_id); ap["rx"](rx); ap["ry"](ry)
+                    ap["dx"](dx); ap["dy"](dy)
+                    ap["piece"](piece); ap["pw"](pw); ap["ph"](ph)
+                    ap["image_id"](getattr(row, "image_id", None) if center else None)
+                    ap["w"](w); ap["h"](h)
             if cols["scene_id"]:
                 yield _batch_from_cols(cols, strip_schema)
 
-    strips = tiles.mapInArrow(emit, strip_schema)
-    parts = strips.repartition(F.col("scene_id"), F.col("rx"), F.col("ry")) \
-                  .sortWithinPartitions("scene_id", "rx", "ry")
-
-    def assemble(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        def flush(acc: list, cols, ap):
+    def assemble(tiles) -> Iterator[pa.RecordBatch]:
+        cols: dict[str, list] = {f.name: [] for f in HALO_PLANE_SCHEMA}
+        for acc in tiles:
             # a tile key that only received strips (outside the input grid)
             # has no center piece: it is scene margin, not a tile — drop
             center = next((s for s in acc if s.dx == 0 and s.dy == 0), None)
             if center is None:
-                return
+                continue
             w, h = int(center.w), int(center.h)
-            pad = np.full((h + 2 * r, w + 2 * r), np.nan, dtype=dtype)
-            for s in acc:
-                x0 = 0 if s.dx == 1 else (r + w if s.dx == -1 else r)
-                y0 = 0 if s.dy == 1 else (r + h if s.dy == -1 else r)
-                pad[y0:y0 + s.ph, x0:x0 + s.pw] = \
-                    np.frombuffer(s.piece, dtype=dtype).reshape(s.ph, s.pw)
-            ap["image_id"](center.image_id)
-            ap["scene_id"](center.scene_id)
-            ap["tile_x"](int(center.rx)); ap["tile_y"](int(center.ry))
-            ap["w"](w); ap["h"](h)
-            ap["pad_bytes"](pad.astype(dtype).tobytes())
-
-        cur_key, acc = None, []
-        cols: dict[str, list] = {f.name: [] for f in HALO_PLANE_SCHEMA}
-        ap = {k: v.append for k, v in cols.items()}
-        for batch in batches:
-            for s in _batch_rows(batch):
-                k = (s.scene_id, s.rx, s.ry)
-                if k != cur_key:
-                    if acc:
-                        flush(acc, cols, ap)
-                        acc = []
-                    cur_key = k
-                acc.append(s)
-                # emit every 64 assembled tiles
-                if len(cols["scene_id"]) >= 64:
-                    yield _batch_from_cols(cols, HALO_PLANE_SCHEMA)
-                    cols = {f.name: [] for f in HALO_PLANE_SCHEMA}
-                    ap = {k2: v.append for k2, v in cols.items()}
-        if acc:
-            flush(acc, cols, ap)
+            for name, v in zip(HALO_PLANE_SCHEMA.names, (
+                    center.image_id, center.scene_id, int(center.rx),
+                    int(center.ry), w, h,
+                    _halo_pad(acc, "piece", dtype, w, h, r, dtype).tobytes())):
+                cols[name].append(v)
+            if len(cols["scene_id"]) >= 64:   # emit every 64 assembled tiles
+                yield _batch_from_cols(cols, HALO_PLANE_SCHEMA)
+                cols = {f.name: [] for f in HALO_PLANE_SCHEMA}
         if cols["scene_id"]:
             yield _batch_from_cols(cols, HALO_PLANE_SCHEMA)
 
-    return parts.mapInArrow(assemble, HALO_PLANE_SCHEMA)
+    return _halo_exchange(tiles.mapInArrow(emit, strip_schema), assemble,
+                          HALO_PLANE_SCHEMA)
 
 
 CONV_SCHEMA = StructType([

@@ -232,3 +232,31 @@ def test_halo_plane_margin_exceeds_tile_raises(spark):
         "lst_bytes": t.tobytes()}]))
     with pytest.raises(Exception, match="halo margin"):
         halo_plane_tiles(tiles, r=3).collect()
+
+
+def test_halo_lst_margin_exceeds_tile_raises(spark):
+    """The band-pair halo shares halo_plane_tiles' strip geometry and its
+    guard: 2-px tiles under a 7-px window (margin 3) must raise instead of
+    wrapping slice(w - r, w) and left-aligning the short strip in the pad,
+    which silently differs from the whole-scene mosaic."""
+    sid, w, h = "LC08_00000", 2, 2
+    rows = []
+    for ty in range(3):
+        for tx in range(3):
+            t = synth.gen_tile(sid, tx, ty, w, h)
+            for band in (10, 11):
+                rows.append({
+                    "image_id": synth.image_id(sid, band, tx, ty),
+                    "bytes": codecs.encode_tile(t[f"dn{band}"], codecs.FMT_RAW),
+                    "w": np.int32(w), "h": np.int32(h), "fmt": codecs.FMT_RAW,
+                    "caption": synth.caption_for(sid, band, tx, ty, "2024-01-01",
+                                                 t["landcover"]),
+                    "phash": np.int64(0),
+                })
+    scenes = spark.createDataFrame(pd.DataFrame(rows))
+    meta_df = spark.createDataFrame(synth.scene_meta_pdf("tiny"))
+    emis = spark.createDataFrame(pd.DataFrame([e._asdict() for e in C.load_emissivities()]))
+    halo = pipeline.lst_tiles_halo(
+        pipeline.build_enriched(scenes, meta_df, emis), window=7)
+    with pytest.raises(Exception, match="halo margin r=3 exceeds tile dims 2x2"):
+        halo.collect()
