@@ -47,15 +47,7 @@ def _q_lst_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tiny) -> fused Arrow kernel -> per-scene LST stats. Not SQL-expressible
     (tile decode + moving-window CWV); pytest carries its parity vs the
     scalar oracle (tests/test_pipeline.py)."""
-    import pandas as pd
-
-    from i_landsat8_swlst_spark import constants as C, pipeline, synth
-
-    scenes = spark.createDataFrame(synth.scenes_pdf("tiny"))
-    meta = spark.createDataFrame(synth.scene_meta_pdf("tiny"))
-    emis = spark.createDataFrame(pd.DataFrame([e._asdict() for e in C.load_emissivities()]))
-    tiles = pipeline.lst_tiles(pipeline.build_enriched(scenes, meta, emis), window=5,
-                               emit_arrays=False)
+    tiles = _tiny_lst_tiles(spark, emit_arrays=False)
     return (
         tiles.groupBy("scene_id")
         .agg(
@@ -67,15 +59,26 @@ def _q_lst_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _tiny_fixture(spark):
+def _tiny_fixture(spark, with_qa: bool = False):
     import pandas as pd
 
     from i_landsat8_swlst_spark import constants as C, synth
 
-    scenes = spark.createDataFrame(synth.scenes_pdf("tiny"))
+    scenes = spark.createDataFrame(synth.scenes_pdf("tiny", with_qa=with_qa))
     meta = spark.createDataFrame(synth.scene_meta_pdf("tiny"))
     emis = spark.createDataFrame(pd.DataFrame([e._asdict() for e in C.load_emissivities()]))
     return scenes, meta, emis
+
+
+def _tiny_lst_tiles(spark, with_qa: bool = False, **kw):
+    """lst_tiles (window 5) over the tiny synthetic scenes; ``kw`` goes to
+    lst_tiles."""
+    from i_landsat8_swlst_spark import pipeline
+
+    scenes, meta, emis = _tiny_fixture(spark, with_qa)
+    return pipeline.lst_tiles(
+        pipeline.build_enriched(scenes, meta, emis, with_qa=with_qa),
+        window=5, **kw)
 
 
 def _q_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -103,9 +106,7 @@ def _q_gradient(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity in tests/test_pipeline.py."""
     from i_landsat8_swlst_spark import pipeline
 
-    scenes, meta, emis = _tiny_fixture(spark)
-    tiles = pipeline.lst_tiles(pipeline.build_enriched(scenes, meta, emis),
-                               window=5)
+    tiles = _tiny_lst_tiles(spark)
     grad = pipeline.gradient_tiles(tiles, cell=1.0)
     return (
         grad.groupBy("scene_id")
@@ -121,11 +122,9 @@ def _q_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     bilinear, cell-center aligned, NULL-poisoning corners) of the LST
     plane — algebra.resample_tiles, one mapInArrow hop. Naive-numpy
     oracle parity in tests/test_algebra.py."""
-    from i_landsat8_swlst_spark import algebra, pipeline
+    from i_landsat8_swlst_spark import algebra
 
-    scenes, meta, emis = _tiny_fixture(spark)
-    tiles = pipeline.lst_tiles(pipeline.build_enriched(scenes, meta, emis),
-                               window=5)
+    tiles = _tiny_lst_tiles(spark)
     down = algebra.resample_tiles(tiles, scale=0.25, method="bilinear")
     return (
         down.groupBy("scene_id", "w", "h")
@@ -158,11 +157,9 @@ def _q_map_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ast-whitelist compiled, no eval) evaluated vectorized over the LST/CWV
     tile planes in one mapInArrow hop (algebra.map_algebra). numpy parity +
     hostile-expression rejection in tests/test_algebra.py."""
-    from i_landsat8_swlst_spark import algebra, pipeline
+    from i_landsat8_swlst_spark import algebra
 
-    scenes, meta, emis = _tiny_fixture(spark)
-    tiles = pipeline.lst_tiles(pipeline.build_enriched(scenes, meta, emis),
-                               window=5)
+    tiles = _tiny_lst_tiles(spark)
     out = algebra.map_algebra(
         tiles, "if_((lst > 290) and (cwv < 5), lst - 273.15, null())")
     return (
@@ -182,11 +179,9 @@ def _q_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     per scene reach the driver, never pixels), driver-side eigh with a
     deterministic sign convention, then a shuffle-free broadcast projection
     pass. Whole-scene numpy-oracle parity in tests/test_multiband.py."""
-    from i_landsat8_swlst_spark import multiband, pipeline
+    from i_landsat8_swlst_spark import multiband
 
-    scenes, meta, emis = _tiny_fixture(spark)
-    tiles = pipeline.lst_tiles(pipeline.build_enriched(scenes, meta, emis),
-                               window=5)
+    tiles = _tiny_lst_tiles(spark)
     out, model = multiband.pca_tiles(tiles, ["lst_bytes", "cwv_bytes"], k=2)
     expl = spark.createDataFrame(
         [(s, round(float(m["explained"][0]), 4)) for s, m in model.items()],
@@ -207,11 +202,9 @@ def _q_equalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics from a fixed-bin histogram folded in ONE map-side-combining
     agg (never a sort), LUT applied in a shuffle-free second pass.
     Byte-exact whole-scene-oracle parity in tests/test_multiband.py."""
-    from i_landsat8_swlst_spark import multiband, pipeline
+    from i_landsat8_swlst_spark import multiband
 
-    scenes, meta, emis = _tiny_fixture(spark)
-    tiles = pipeline.lst_tiles(pipeline.build_enriched(scenes, meta, emis),
-                               window=5)
+    tiles = _tiny_lst_tiles(spark)
     out, _ = multiband.stretch_tiles(tiles, "lst_bytes", mode="equalize")
     return (
         out.groupBy("scene_id")
@@ -229,11 +222,9 @@ def _q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     positional agg each, centers broadcast-joined (never closure dicts),
     then the i.cluster assignment pass (classify_tiles nearest). Serial
     Lloyd-oracle parity (exact assignments) in tests/test_classify.py."""
-    from i_landsat8_swlst_spark import classify, pipeline
+    from i_landsat8_swlst_spark import classify
 
-    scenes, meta, emis = _tiny_fixture(spark)
-    tiles = pipeline.lst_tiles(pipeline.build_enriched(scenes, meta, emis),
-                               window=5)
+    tiles = _tiny_lst_tiles(spark)
     bands = ["lst_bytes", "cwv_bytes"]
     model = classify.kmeans_model_df(tiles, bands, k=3, iters=4)
     out = classify.classify_tiles(tiles, bands, model, method="nearest")
@@ -253,11 +244,9 @@ def _q_maxlik(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the converged k-means assignment (classify.maxlik_model_df),
     equal-prior discriminant applied in ONE broadcast-join mapInArrow hop.
     numpy discriminant parity in tests/test_classify.py."""
-    from i_landsat8_swlst_spark import classify, pipeline
+    from i_landsat8_swlst_spark import classify
 
-    scenes, meta, emis = _tiny_fixture(spark)
-    tiles = pipeline.lst_tiles(pipeline.build_enriched(scenes, meta, emis),
-                               window=5)
+    tiles = _tiny_lst_tiles(spark)
     bands = ["lst_bytes", "cwv_bytes"]
     km = classify.kmeans_model_df(tiles, bands, k=3, iters=4)
     ml = classify.maxlik_model_df(tiles, bands, km)
@@ -388,11 +377,9 @@ def _q_cost_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     global fixpoint across tile borders (costdist.cost_distance_tiles).
     Bit-exact Dijkstra-oracle + whole-scene parity (incl. an adversarial
     multi-round spiral) in tests/test_costdist.py."""
-    from i_landsat8_swlst_spark import costdist, pipeline
+    from i_landsat8_swlst_spark import costdist
 
-    scenes, meta, emis = _tiny_fixture(spark)
-    tiles = pipeline.lst_tiles(pipeline.build_enriched(scenes, meta, emis),
-                               window=5)
+    tiles = _tiny_lst_tiles(spark)
     d = costdist.cost_distance_tiles(tiles, threshold=305.0, cell=30.0)
     return (
         d.groupBy("scene_id")
@@ -409,11 +396,9 @@ def _q_flow_accum(spark: SparkSession, sf_dir: str) -> DataFrame:
     an iterated f64 halo fixpoint for upstream-cell counts
     (hydro.flow_accum_tiles). Exact brute-oracle parity (incl. an
     adversarial multi-round serpentine channel) in tests/test_hydro.py."""
-    from i_landsat8_swlst_spark import hydro, pipeline
+    from i_landsat8_swlst_spark import hydro
 
-    scenes, meta, emis = _tiny_fixture(spark)
-    tiles = pipeline.lst_tiles(pipeline.build_enriched(scenes, meta, emis),
-                               window=5)
+    tiles = _tiny_lst_tiles(spark)
     a = hydro.flow_accum_tiles(tiles)
     return (
         a.groupBy("scene_id")
@@ -431,11 +416,9 @@ def _q_basins(spark: SparkSession, sf_dir: str) -> DataFrame:
     perimeter-scale border link graph (hydro.basin_tiles). Exact
     whole-scene-oracle parity (incl. ragged tile grids and a
     single-basin long-chain case) in tests/test_hydro.py."""
-    from i_landsat8_swlst_spark import hydro, pipeline
+    from i_landsat8_swlst_spark import hydro
 
-    scenes, meta, emis = _tiny_fixture(spark)
-    tiles = pipeline.lst_tiles(pipeline.build_enriched(scenes, meta, emis),
-                               window=5)
+    tiles = _tiny_lst_tiles(spark)
     b = hydro.basin_tiles(tiles)
     return (
         b.groupBy("scene_id")
@@ -453,9 +436,7 @@ def _q_focal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark hop vs the kernel in tests/test_pipeline.py."""
     from i_landsat8_swlst_spark import pipeline
 
-    scenes, meta, emis = _tiny_fixture(spark)
-    tiles = pipeline.lst_tiles(pipeline.build_enriched(scenes, meta, emis),
-                               window=5)
+    tiles = _tiny_lst_tiles(spark)
     focal = pipeline.focal_stats_tiles(tiles, window=5)
     return (
         focal.groupBy("scene_id")
@@ -473,11 +454,9 @@ def _q_texture(spark: SparkSession, sf_dir: str) -> DataFrame:
     box-filter kernel whose output is bit-identical to the whole-scene
     mosaic. Brute-force per-window-histogram oracle parity in
     tests/test_texture.py."""
-    from i_landsat8_swlst_spark import pipeline, texture
+    from i_landsat8_swlst_spark import texture
 
-    scenes, meta, emis = _tiny_fixture(spark)
-    tiles = pipeline.lst_tiles(pipeline.build_enriched(scenes, meta, emis),
-                               window=5)
+    tiles = _tiny_lst_tiles(spark)
     tex = texture.glcm_texture_tiles(tiles, window=5, levels=16)
     return (
         tex.groupBy("scene_id")
@@ -560,11 +539,9 @@ def _q_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     over |Δ| <= λ adjacency, value-predicate border stitch, bounded-round
     min-label reduction. Whole-scene BFS oracle parity in
     tests/test_segment.py."""
-    from i_landsat8_swlst_spark import pipeline, segment
+    from i_landsat8_swlst_spark import segment
 
-    scenes, meta, emis = _tiny_fixture(spark)
-    tiles = pipeline.lst_tiles(pipeline.build_enriched(scenes, meta, emis),
-                               window=5)
+    tiles = _tiny_lst_tiles(spark)
     seg = segment.segment_tiles(tiles, lam=1.5)
     return (
         seg.groupBy("scene_id")
@@ -584,11 +561,9 @@ def _q_landscape(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a directed cross-tile edge join; plus the scene-level Shannon
     diversity roll-up. Brute flood-fill oracle parity in
     tests/test_landscape.py."""
-    from i_landsat8_swlst_spark import landscape, pipeline
+    from i_landsat8_swlst_spark import landscape
 
-    scenes, meta, emis = _tiny_fixture(spark)
-    tiles = pipeline.lst_tiles(pipeline.build_enriched(scenes, meta, emis),
-                               window=5)
+    tiles = _tiny_lst_tiles(spark)
     m = landscape.class_metrics(tiles, levels=6)
     div = landscape.scene_diversity(m).select(
         "scene_id", "richness", F.round("shannon_h", 4).alias("shannon_h"),
@@ -638,11 +613,9 @@ def _q_crosstab(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantization, per-tile 2-D bincount, ONE map-side-combining sum; the
     exchange carries occupied class cells, not pixels. Whole-scene
     dict-count oracle parity in tests/test_series.py."""
-    from i_landsat8_swlst_spark import pipeline, series
+    from i_landsat8_swlst_spark import series
 
-    scenes, meta, emis = _tiny_fixture(spark)
-    tiles = pipeline.lst_tiles(pipeline.build_enriched(scenes, meta, emis),
-                               window=5)
+    tiles = _tiny_lst_tiles(spark)
     ct = series.crosstab_tiles(tiles, levels_a=6, levels_b=4)
     return ct.orderBy("scene_id", "class_a", "class_b")
 
@@ -1561,11 +1534,9 @@ def _q_cost_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of tiling (costdist.cost_allocation_tiles). Exact lex-min
     Dijkstra-oracle parity (labels AND distances) in
     tests/test_costdist.py."""
-    from i_landsat8_swlst_spark import costdist, pipeline
+    from i_landsat8_swlst_spark import costdist
 
-    scenes, meta, emis = _tiny_fixture(spark)
-    tiles = pipeline.lst_tiles(pipeline.build_enriched(scenes, meta, emis),
-                               window=5)
+    tiles = _tiny_lst_tiles(spark)
     a = costdist.cost_allocation_tiles(tiles, threshold=305.0, cell=30.0)
     return (
         a.groupBy("scene_id")
@@ -1589,14 +1560,12 @@ def _q_pansharpen(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.types import BinaryType, StructField, StructType
 
-    from i_landsat8_swlst_spark import multiband, pipeline
+    from i_landsat8_swlst_spark import multiband
     from i_landsat8_swlst_spark.algebra import resample_plane
     from i_landsat8_swlst_spark.pipeline import (_batch_from_cols,
                                                  _batch_rows)
 
-    scenes, meta, emis = _tiny_fixture(spark)
-    tiles = pipeline.lst_tiles(pipeline.build_enriched(scenes, meta, emis),
-                               window=5)
+    tiles = _tiny_lst_tiles(spark)
     src = tiles.select("image_id", "scene_id", "tile_x", "tile_y", "w", "h",
                        "lst_bytes", "cwv_bytes")
     out_schema = StructType(list(src.schema.fields)
@@ -1637,14 +1606,12 @@ def _q_histo_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     CDF matching; distributed LUT derivation + broadcast-join apply
     (multiband.histo_match_tiles). Byte-exact serial-oracle parity in
     tests/test_multiband.py."""
-    from i_landsat8_swlst_spark import multiband, pipeline
+    from i_landsat8_swlst_spark import multiband
 
-    scenes, meta, emis = _tiny_fixture(spark)
     # the tile fixture feeds three subtrees (ref lookup, LUT derivation,
     # apply join): materialize once per invocation — production input is
     # a stored tile table (see q_enrich_cells)
-    tiles = pipeline.lst_tiles(pipeline.build_enriched(scenes, meta, emis),
-                               window=5).localCheckpoint()
+    tiles = _tiny_lst_tiles(spark).localCheckpoint()
     ref = tiles.select("scene_id").orderBy("scene_id").first()["scene_id"]
     out, _ = multiband.histo_match_tiles(tiles, ref, "lst_bytes", bins=1024)
     return (out.groupBy("scene_id")
@@ -1805,13 +1772,9 @@ def _q_raster_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial sums per tile, ONE map-side-combining aggregate per scene,
     closed-form a/b/R/F. numpy polyfit/corrcoef parity in
     tests/test_series.py."""
-    import pandas as pd
+    from i_landsat8_swlst_spark import series
 
-    from i_landsat8_swlst_spark import constants as C, pipeline, series
-
-    scenes, meta, emis = _tiny_fixture(spark)
-    tiles = pipeline.lst_tiles(pipeline.build_enriched(scenes, meta, emis),
-                               window=5)
+    tiles = _tiny_lst_tiles(spark)
     out = series.regression_tiles(tiles, col_x="cwv_bytes",
                                   col_y="lst_bytes")
     return out.select(
@@ -1852,13 +1815,10 @@ def _q_convolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity in tests/test_pipeline.py; naive-loop kernel oracle in
     tests/test_kernels.py."""
     import numpy as np
-    import pandas as pd
 
-    from i_landsat8_swlst_spark import constants as C, pipeline
+    from i_landsat8_swlst_spark import pipeline
 
-    scenes, meta, emis = _tiny_fixture(spark)
-    tiles = pipeline.lst_tiles(pipeline.build_enriched(scenes, meta, emis),
-                               window=5)
+    tiles = _tiny_lst_tiles(spark)
     sharpen = np.array([[0., -1, 0], [-1, 5, -1], [0, -1, 0]])
     out = pipeline.convolve_tiles(tiles, sharpen, divisor=0.0)
     return (out.groupBy("scene_id")
@@ -1876,11 +1836,9 @@ def _q_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from i_landsat8_swlst_spark import constants as C, pipeline, regions
+    from i_landsat8_swlst_spark import regions
 
-    scenes, meta, emis = _tiny_fixture(spark)
-    tiles = pipeline.lst_tiles(pipeline.build_enriched(scenes, meta, emis),
-                               window=5)
+    tiles = _tiny_lst_tiles(spark)
     # flood the coolest spot of one scene up to its 20th LST percentile;
     # the scene's tiles feed four subtrees (level stats, seed argmin, the
     # fill's pass + regroup) — materialize once per invocation
@@ -1910,11 +1868,9 @@ def _q_reclass_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same first-match rule engine the hash-attested q_reclass twin
     exercises cross-engine, here applied per tile (Kelvin bands to
     categories). Plane-oracle parity in tests/test_algebra.py."""
-    from i_landsat8_swlst_spark import algebra, pipeline
+    from i_landsat8_swlst_spark import algebra
 
-    scenes, meta, emis = _tiny_fixture(spark)
-    tiles = pipeline.lst_tiles(pipeline.build_enriched(scenes, meta, emis),
-                               window=5)
+    tiles = _tiny_lst_tiles(spark)
     out = algebra.reclass_tiles(
         tiles, "0 thru 279 = 1\n280 thru 299 = 2\n* = 3")
     return (out.groupBy("scene_id")
@@ -1929,16 +1885,9 @@ def _q_grow(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the LST plane closed by nearest-valid-value growth (radius 2.5,
     exact cross-tile halo). Naive-loop kernel oracle + whole-scene halo
     parity in tests/test_kernels.py / test_pipeline.py."""
-    import pandas as pd
+    from i_landsat8_swlst_spark import pipeline
 
-    from i_landsat8_swlst_spark import constants as C, pipeline, synth
-
-    scenes = spark.createDataFrame(synth.scenes_pdf("tiny", with_qa=True))
-    meta = spark.createDataFrame(synth.scene_meta_pdf("tiny"))
-    emis = spark.createDataFrame(
-        pd.DataFrame([e._asdict() for e in C.load_emissivities()]))
-    tiles = pipeline.lst_tiles(
-        pipeline.build_enriched(scenes, meta, emis, with_qa=True), window=5)
+    tiles = _tiny_lst_tiles(spark, with_qa=True)
     out = pipeline.grow_tiles(tiles, radius=2.5)
     return (out.groupBy("scene_id")
             .agg(F.count(F.lit(1)).alias("n_tiles"),
@@ -2017,14 +1966,11 @@ def _q_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     — per round every live path walks vectorized inside its current tile,
     only the tiny live-point set crosses the exchange; whole-scene-walk
     oracle parity incl. multi-tile paths in tests/test_hydro.py."""
-    import numpy as np
     import pandas as pd
 
-    from i_landsat8_swlst_spark import hydro, pipeline
+    from i_landsat8_swlst_spark import hydro
 
-    scenes, meta, emis = _tiny_fixture(spark)
-    tiles = pipeline.lst_tiles(pipeline.build_enriched(scenes, meta, emis),
-                               window=5)
+    tiles = _tiny_lst_tiles(spark)
     one = tiles.filter(F.col("scene_id") == "LC08_00000")
     # start a path at the center of each corner tile (LST as "elevation")
     pts = spark.createDataFrame(pd.DataFrame([
@@ -2044,16 +1990,9 @@ def _q_fillnulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells within the radius (vs q_grow's nearest-copy), exact cross-tile
     halo. Naive oracle + whole-scene halo parity in tests/test_kernels.py
     / test_pipeline.py."""
-    import pandas as pd
+    from i_landsat8_swlst_spark import pipeline
 
-    from i_landsat8_swlst_spark import constants as C, pipeline, synth
-
-    scenes = spark.createDataFrame(synth.scenes_pdf("tiny", with_qa=True))
-    meta = spark.createDataFrame(synth.scene_meta_pdf("tiny"))
-    emis = spark.createDataFrame(
-        pd.DataFrame([e._asdict() for e in C.load_emissivities()]))
-    tiles = pipeline.lst_tiles(
-        pipeline.build_enriched(scenes, meta, emis, with_qa=True), window=5)
+    tiles = _tiny_lst_tiles(spark, with_qa=True)
     out = pipeline.fillnulls_tiles(tiles, radius=2.5)
     return (out.groupBy("scene_id")
             .agg(F.count(F.lit(1)).alias("n_tiles"),
@@ -2067,11 +2006,9 @@ def _q_random_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds exchange rows by N x tiles, one window rank per scene; the
     sampled set is a pure function of (scene, seed), independent of
     tiling. Whole-scene ranking oracle in tests/test_spatial.py."""
-    from i_landsat8_swlst_spark import pipeline, spatial
+    from i_landsat8_swlst_spark import spatial
 
-    scenes, meta, emis = _tiny_fixture(spark)
-    tiles = pipeline.lst_tiles(pipeline.build_enriched(scenes, meta, emis),
-                               window=5)
+    tiles = _tiny_lst_tiles(spark)
     pts = spatial.sample_random_cells(tiles, n=200, seed=11)
     return (pts.groupBy("scene_id")
             .agg(F.count(F.lit(1)).alias("n_points"),

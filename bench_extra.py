@@ -11,6 +11,7 @@ Usage:
   python bench_extra.py raster_stats|raster_halo|raster_pixels|raster_emis [--reps 3]
   python bench_extra.py viewshed|viewshed_cva|horizon|tovect|contour [--reps 3]
   python bench_extra.py regions|segment|landscape [--reps 3]
+  python bench_extra.py focal|costdist|flowaccum [--reps 3]
   python bench_extra.py pytasks [--reps 3]   # per-task Python-UDF hop cost
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf1.0 — the driver's
@@ -158,10 +159,11 @@ def _operator_df(spark, name: str, tmp: str):
                           tile_w=160, tile_h=160)
         return Wp.warp_tiles(wtiles, idw_geom, dst, method="bilinear")
     if name in ("viewshed", "viewshed_cva", "horizon", "tovect", "contour",
-                "regions", "segment", "landscape"):
+                "regions", "segment", "landscape", "focal", "costdist",
+                "flowaccum"):
         from i_landsat8_swlst_spark import (
-            landscape as Ls, regions as Rg, segment as Sg, terrain as Tr,
-            vectorize as Vz,
+            costdist as Cd, hydro as Hy, landscape as Ls, regions as Rg,
+            segment as Sg, terrain as Tr, vectorize as Vz,
         )
         terr_path = f"{tmp}/terrain_tiles"
         if not os.path.isdir(terr_path):
@@ -211,6 +213,15 @@ def _operator_df(spark, name: str, tmp: str):
             return Sg.segment_tiles(terr, lam=12.0)
         if name == "landscape":
             return Ls.class_metrics(terr, levels=8)
+        # the neighbourhood operators on the same fixture: one halo pass,
+        # and two halo fixpoints (distance from the ridge tops, flow
+        # accumulation)
+        if name == "focal":
+            return pipeline.focal_stats_tiles(terr, window=5, halo=True)
+        if name == "costdist":
+            return Cd.cost_distance_tiles(terr, threshold=80.0)
+        if name == "flowaccum":
+            return Hy.flow_accum_tiles(terr)
         return Vz.contour_lines(terr, [20.0, 40.0, 60.0])
     if name == "enrich":
         from i_landsat8_swlst_spark import spatial

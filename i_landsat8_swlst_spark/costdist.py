@@ -41,10 +41,7 @@ sweeps are O(1) no-ops per tile, so correctness never depends on it.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
@@ -54,7 +51,8 @@ from pyspark.sql.types import (
 
 from . import codecs
 from .pipeline import (
-    _batch_from_cols, _batch_rows, _nominal_grid, halo_plane_tiles,
+    _TILE_IDS, _TILE_KEY, _halo_fixpoint, _nominal_grid, _tile_map,
+    halo_plane_tiles,
 )
 
 W_ORTH = 3.0   # chamfer 3-4 metric: exact ints for uniform cost
@@ -189,8 +187,47 @@ COST_DISTANCE_SCHEMA = StructType([
 ])
 
 
-def _state_cols():
-    return {f.name: [] for f in _STATE_SCHEMA}
+def _seed(row, w: int, h: int, src_col: str, cost_col: str | None,
+          threshold: float) -> tuple:
+    """(dist, cost, target) of one input tile: dist 0.0 at the target
+    cells (``plane >= threshold``), +inf elsewhere, NaN at barriers; cost
+    is the decoded ``cost_col`` plane or None."""
+    plane = codecs.decode_f32bt(getattr(row, src_col), w, h)
+    cost = (codecs.decode_f32bt(getattr(row, cost_col), w, h)
+            if cost_col else None)
+    with np.errstate(invalid="ignore"):
+        target = plane >= threshold
+    dist = np.where(target, 0.0, np.inf)
+    dist[np.isnan(plane)] = np.nan
+    return dist, cost, target
+
+
+def _cost_pad(tiles: DataFrame, cost_col: str | None) -> DataFrame | None:
+    """The static 1-px cost halo, exchanged once before the loop."""
+    if cost_col is None:
+        return None
+    return (halo_plane_tiles(tiles, r=1, src_col=cost_col)
+            .select(*_TILE_KEY, F.col("pad_bytes").alias("cost_pad"))
+            .localCheckpoint())
+
+
+def _with_pad(haloed: DataFrame, cost_pad: DataFrame | None) -> DataFrame:
+    return haloed if cost_pad is None else haloed.join(cost_pad, _TILE_KEY)
+
+
+def _row_cost(row, w: int, h: int) -> np.ndarray | None:
+    pad = getattr(row, "cost_pad", None)
+    return None if pad is None else codecs.decode_f32bt(pad, w + 2, h + 2)
+
+
+def _scaled(row, w: int, h: int, scale: float) -> tuple:
+    """(dist in cell units with NaN for barrier/unreached, finite mask,
+    dist_max) of a converged state row."""
+    d = codecs.decode_f32bt(row.dist_bytes, w, h)
+    d[~np.isfinite(d)] = np.nan
+    d = d * scale
+    finite = np.isfinite(d)
+    return d, finite, float(d[finite].max()) if finite.any() else None
 
 
 def cost_distance_tiles(tiles: DataFrame, threshold: float,
@@ -208,104 +245,42 @@ def cost_distance_tiles(tiles: DataFrame, threshold: float,
     cells. Iterates halo exchange + re-sweep until no tile changes.
     """
 
-    def init_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols = _state_cols()
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                plane = codecs.decode_f32bt(getattr(row, src_col), w, h)
-                cost = (codecs.decode_f32bt(getattr(row, cost_col), w, h)
-                        if cost_col else None)
-                with np.errstate(invalid="ignore"):
-                    target = plane >= threshold
-                dist = np.where(target, 0.0, np.inf)
-                dist[np.isnan(plane)] = np.nan
-                dist, _ = chamfer_relax(dist, cost)
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
-                ap["w"](w); ap["h"](h)
-                ap["dist_bytes"](dist.astype("<f4").tobytes())
-                ap["changed"](True)
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, _STATE_SCHEMA)
+    def init_fn(row, w, h):
+        dist, cost, _ = _seed(row, w, h, src_col, cost_col, threshold)
+        dist, _ = chamfer_relax(dist, cost)
+        return dist.astype("<f4").tobytes(), True
 
-    state = tiles.mapInArrow(init_fn, _STATE_SCHEMA).localCheckpoint()
+    def resweep_fn(row, w, h):
+        # NaN stays NaN: interior barrier, neighbor barrier, and
+        # absent-neighbor ring cells are all IMPASSABLE — decoding ring
+        # NaN as +inf would let paths shortcut through real barrier cells
+        # of the neighbor tile. Ring +inf (neighbor not yet reached) is
+        # passable-unknown; ring finite values are fixed upper-bound
+        # sources.
+        pad = codecs.decode_f32bt(row.pad_bytes, w + 2, h + 2)
+        old = pad[1:-1, 1:-1].copy()
+        new, _ = chamfer_relax(pad.copy(), _row_cost(row, w, h))
+        interior = new[1:-1, 1:-1]
+        # exact compare in the f32 encoding the next round will see
+        changed = not np.array_equal(
+            interior.astype("<f4"), old.astype("<f4"), equal_nan=True)
+        return interior.astype("<f4").tobytes(), changed
 
-    cost_pad = None
-    if cost_col is not None:
-        cost_pad = (
-            halo_plane_tiles(tiles, r=1, src_col=cost_col)
-            .select("scene_id", "tile_x", "tile_y",
-                    F.col("pad_bytes").alias("cost_pad"))
-            .localCheckpoint()
-        )
+    def exchange(st):
+        return _with_pad(halo_plane_tiles(st, r=1, src_col="dist_bytes"),
+                         cost_pad)
 
-    def resweep_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols = _state_cols()
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                pad = codecs.decode_f32bt(row.pad_bytes, w + 2, h + 2)
-                old = pad[1:-1, 1:-1].copy()
-                # NaN stays NaN: interior barrier, neighbor barrier, and
-                # absent-neighbor ring cells are all IMPASSABLE — decoding
-                # ring NaN as +inf would let paths shortcut through real
-                # barrier cells of the neighbor tile. Ring +inf (neighbor
-                # not yet reached) is passable-unknown; ring finite values
-                # are fixed upper-bound sources.
-                dist = pad.copy()
-                cost = (codecs.decode_f32bt(row.cost_pad, w + 2, h + 2)
-                        if hasattr(row, "cost_pad") else None)
-                new, _ = chamfer_relax(dist, cost)
-                interior = new[1:-1, 1:-1]
-                # exact compare in the f32 encoding the next round will see
-                changed = not np.array_equal(
-                    interior.astype("<f4"), old.astype("<f4"),
-                    equal_nan=True)
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
-                ap["w"](w); ap["h"](h)
-                ap["dist_bytes"](interior.astype("<f4").tobytes())
-                ap["changed"](changed)
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, _STATE_SCHEMA)
+    state = _tile_map(tiles, _STATE_SCHEMA, init_fn, _TILE_IDS).localCheckpoint()
+    cost_pad = _cost_pad(tiles, cost_col)
+    state = _halo_fixpoint(state, exchange, resweep_fn, _STATE_SCHEMA,
+                           max_rounds, "cost_distance")
 
-    for _ in range(max_rounds):
-        haloed = halo_plane_tiles(state, r=1, src_col="dist_bytes")
-        if cost_pad is not None:
-            haloed = haloed.join(cost_pad, ["scene_id", "tile_x", "tile_y"])
-        new = haloed.mapInArrow(resweep_fn, _STATE_SCHEMA).localCheckpoint()
-        n_changed = new.filter("changed").count()
-        state = new
-        if n_changed == 0:
-            break
-    else:
-        raise RuntimeError(f"cost_distance did not converge in {max_rounds} rounds")
+    def final_fn(row, w, h):
+        d, finite, dmax = _scaled(row, w, h, cell / 3.0)
+        return d.astype("<f4").tobytes(), int(finite.sum()), dmax
 
-    scale = cell / 3.0
-
-    def final_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols = {f.name: [] for f in COST_DISTANCE_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                d = codecs.decode_f32bt(row.dist_bytes, w, h)
-                d[~np.isfinite(d)] = np.nan
-                d = d * scale
-                finite = np.isfinite(d)
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
-                ap["w"](w); ap["h"](h)
-                ap["dist_bytes"](d.astype("<f4").tobytes())
-                ap["n_reached"](int(finite.sum()))
-                ap["dist_max"](float(d[finite].max()) if finite.any() else None)
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, COST_DISTANCE_SCHEMA)
-
-    return state.drop("changed").mapInArrow(final_fn, COST_DISTANCE_SCHEMA)
+    return _tile_map(state.drop("changed"), COST_DISTANCE_SCHEMA, final_fn,
+                     _TILE_IDS)
 
 
 BUFFER_SCHEMA = StructType([
@@ -337,31 +312,21 @@ def buffer_tiles(tiles: DataFrame, threshold: float, distances: list[float],
                             **cost_kwargs)
     cuts = np.asarray(distances, dtype=np.float64)
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols = {f.name: [] for f in BUFFER_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                dist = codecs.decode_f32bt(row.dist_bytes, w, h)
-                zone = np.zeros((h, w), dtype=np.float64)
-                fin = np.isfinite(dist)
-                # np.searchsorted on the ascending cuts: ring index of the
-                # smallest cut >= dist; beyond the last cut stays 0
-                ring = np.searchsorted(cuts, dist[fin], side="left")
-                zone[fin] = np.where(ring < len(cuts), ring + 2.0, 0.0)
-                zone[fin & (dist == 0.0)] = 1.0
-                zone[np.isnan(dist)] = np.nan
-                uniq, cnt = np.unique(zone[~np.isnan(zone)], return_counts=True)
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
-                ap["w"](w); ap["h"](h)
-                ap["zone_bytes"](zone.astype("<f4").tobytes())
-                ap["zone_counts"](",".join(f"{int(z)}:{c}" for z, c in zip(uniq, cnt)))
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, BUFFER_SCHEMA)
+    def fn(row, w, h):
+        dist = codecs.decode_f32bt(row.dist_bytes, w, h)
+        zone = np.zeros((h, w), dtype=np.float64)
+        fin = np.isfinite(dist)
+        # np.searchsorted on the ascending cuts: ring index of the
+        # smallest cut >= dist; beyond the last cut stays 0
+        ring = np.searchsorted(cuts, dist[fin], side="left")
+        zone[fin] = np.where(ring < len(cuts), ring + 2.0, 0.0)
+        zone[fin & (dist == 0.0)] = 1.0
+        zone[np.isnan(dist)] = np.nan
+        uniq, cnt = np.unique(zone[~np.isnan(zone)], return_counts=True)
+        return (zone.astype("<f4").tobytes(),
+                ",".join(f"{int(z)}:{c}" for z, c in zip(uniq, cnt)))
 
-    return d.mapInArrow(fn, BUFFER_SCHEMA)
+    return _tile_map(d, BUFFER_SCHEMA, fn, _TILE_IDS)
 
 
 # ---------------------------------------------------------------------------
@@ -552,124 +517,52 @@ def cost_allocation_tiles(tiles: DataFrame, threshold: float,
     """
     nom_w, nom_h = _nominal_grid(tiles)
 
-    def init_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols = {f.name: [] for f in _ALLOC_STATE_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                plane = codecs.decode_f32bt(getattr(row, src_col), w, h)
-                cost = (codecs.decode_f32bt(getattr(row, cost_col), w, h)
-                        if cost_col else None)
-                with np.errstate(invalid="ignore"):
-                    target = plane >= threshold
-                dist = np.where(target, 0.0, np.inf)
-                dist[np.isnan(plane)] = np.nan
-                gx0, gy0 = int(row.tile_x) * nom_w, int(row.tile_y) * nom_h
-                yy, xx = np.meshgrid(np.arange(h), np.arange(w),
-                                     indexing="ij")
-                lab = np.full((h, w), _LBIG, dtype=np.int64)
-                lab[target] = ((gy0 + yy[target]).astype(np.int64)
-                               << _LBL_SHIFT) | (gx0 + xx[target])
-                dist, lab, _ = chamfer_relax_lab(dist, lab, cost)
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
-                ap["w"](w); ap["h"](h)
-                ap["dist_bytes"](dist.astype("<f4").tobytes())
-                ap["alloc_bytes"](lab.astype(np.float64)
-                                  .astype("<f8").tobytes())
-                ap["changed"](True)
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, _ALLOC_STATE_SCHEMA)
+    def init_fn(row, w, h):
+        dist, cost, target = _seed(row, w, h, src_col, cost_col, threshold)
+        gx0, gy0 = int(row.tile_x) * nom_w, int(row.tile_y) * nom_h
+        yy, xx = np.meshgrid(np.arange(h), np.arange(w), indexing="ij")
+        lab = np.full((h, w), _LBIG, dtype=np.int64)
+        lab[target] = ((gy0 + yy[target]).astype(np.int64)
+                       << _LBL_SHIFT) | (gx0 + xx[target])
+        dist, lab, _ = chamfer_relax_lab(dist, lab, cost)
+        return (dist.astype("<f4").tobytes(),
+                lab.astype(np.float64).astype("<f8").tobytes(), True)
 
-    state = tiles.mapInArrow(init_fn, _ALLOC_STATE_SCHEMA).localCheckpoint()
+    def resweep_fn(row, w, h):
+        dist = codecs.decode_f32bt(row.pad_bytes, w + 2, h + 2)
+        lab_pad = np.frombuffer(row.lab_pad, dtype="<f8").reshape(h + 2, w + 2)
+        lab = np.where(np.isnan(lab_pad), _LBIG, lab_pad).astype(np.int64)
+        old_d = dist[1:-1, 1:-1].copy()
+        old_l = lab[1:-1, 1:-1].copy()
+        new_d, new_l, _ = chamfer_relax_lab(dist, lab, _row_cost(row, w, h))
+        in_d, in_l = new_d[1:-1, 1:-1], new_l[1:-1, 1:-1]
+        changed = (not np.array_equal(in_d.astype("<f4"), old_d.astype("<f4"),
+                                      equal_nan=True)
+                   or not np.array_equal(in_l, old_l))
+        return (in_d.astype("<f4").tobytes(),
+                in_l.astype(np.float64).astype("<f8").tobytes(), changed)
 
-    cost_pad = None
-    if cost_col is not None:
-        cost_pad = (
-            halo_plane_tiles(tiles, r=1, src_col=cost_col)
-            .select("scene_id", "tile_x", "tile_y",
-                    F.col("pad_bytes").alias("cost_pad"))
-            .localCheckpoint()
-        )
+    def exchange(st):
+        d_halo = halo_plane_tiles(st, r=1, src_col="dist_bytes")
+        l_halo = (halo_plane_tiles(st, r=1, src_col="alloc_bytes", dtype="<f8")
+                  .select(*_TILE_KEY, F.col("pad_bytes").alias("lab_pad")))
+        return _with_pad(d_halo.join(l_halo, on=_TILE_KEY), cost_pad)
 
-    key = ["scene_id", "tile_x", "tile_y"]
+    state = _tile_map(tiles, _ALLOC_STATE_SCHEMA, init_fn, _TILE_IDS) \
+        .localCheckpoint()
+    cost_pad = _cost_pad(tiles, cost_col)
+    state = _halo_fixpoint(state, exchange, resweep_fn, _ALLOC_STATE_SCHEMA,
+                           max_rounds, "cost_allocation")
 
-    def resweep_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols = {f.name: [] for f in _ALLOC_STATE_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                dist = codecs.decode_f32bt(row.pad_bytes, w + 2, h + 2) \
-                    .astype(np.float64)
-                lab_pad = np.frombuffer(row.lab_pad, dtype="<f8") \
-                    .reshape(h + 2, w + 2)
-                lab = np.where(np.isnan(lab_pad), _LBIG,
-                               lab_pad).astype(np.int64)
-                old_d = dist[1:-1, 1:-1].copy()
-                old_l = lab[1:-1, 1:-1].copy()
-                cost = (codecs.decode_f32bt(row.cost_pad, w + 2, h + 2)
-                        if hasattr(row, "cost_pad") else None)
-                new_d, new_l, _ = chamfer_relax_lab(dist, lab, cost)
-                in_d, in_l = new_d[1:-1, 1:-1], new_l[1:-1, 1:-1]
-                changed = (not np.array_equal(in_d.astype("<f4"),
-                                              old_d.astype("<f4"),
-                                              equal_nan=True)
-                           or not np.array_equal(in_l, old_l))
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
-                ap["w"](w); ap["h"](h)
-                ap["dist_bytes"](in_d.astype("<f4").tobytes())
-                ap["alloc_bytes"](in_l.astype(np.float64)
-                                  .astype("<f8").tobytes())
-                ap["changed"](changed)
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, _ALLOC_STATE_SCHEMA)
+    def final_fn(row, w, h):
+        d, finite, dmax = _scaled(row, w, h, cell / 3.0)
+        lab = np.frombuffer(row.alloc_bytes, dtype="<f8") \
+            .reshape(h, w).astype(np.int64)
+        alloc = np.where(finite, lab, -1)
+        return (d.astype("<f4").tobytes(), alloc.astype("<i8").tobytes(),
+                int(finite.sum()),
+                int(np.unique(alloc[finite]).size) if finite.any() else 0,
+                dmax)
 
-    for _ in range(max_rounds):
-        d_halo = halo_plane_tiles(state, r=1, src_col="dist_bytes")
-        l_halo = (halo_plane_tiles(state, r=1, src_col="alloc_bytes",
-                                   dtype="<f8")
-                  .select(*key, F.col("pad_bytes").alias("lab_pad")))
-        haloed = d_halo.join(l_halo, on=key)
-        if cost_pad is not None:
-            haloed = haloed.join(cost_pad, on=key)
-        new = haloed.mapInArrow(resweep_fn, _ALLOC_STATE_SCHEMA) \
-            .localCheckpoint()
-        n_changed = new.filter("changed").count()
-        state = new
-        if n_changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"cost_allocation did not converge in {max_rounds} rounds")
-
-    scale = cell / 3.0
-
-    def final_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols = {f.name: [] for f in COST_ALLOCATION_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                d = codecs.decode_f32bt(row.dist_bytes, w, h)
-                lab = np.frombuffer(row.alloc_bytes, dtype="<f8") \
-                    .reshape(h, w).astype(np.int64)
-                d[~np.isfinite(d)] = np.nan
-                d = d * scale
-                finite = np.isfinite(d)
-                alloc = np.where(finite, lab, -1)
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
-                ap["w"](w); ap["h"](h)
-                ap["dist_bytes"](d.astype("<f4").tobytes())
-                ap["alloc_bytes"](alloc.astype("<i8").tobytes())
-                ap["n_reached"](int(finite.sum()))
-                ap["n_labels"](int(np.unique(alloc[finite]).size)
-                               if finite.any() else 0)
-                ap["dist_max"](float(d[finite].max()) if finite.any() else None)
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, COST_ALLOCATION_SCHEMA)
-
-    return state.drop("changed").mapInArrow(final_fn, COST_ALLOCATION_SCHEMA)
+    return _tile_map(state.drop("changed"), COST_ALLOCATION_SCHEMA, final_fn,
+                     _TILE_IDS)

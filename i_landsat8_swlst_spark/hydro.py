@@ -54,7 +54,8 @@ from pyspark.sql.types import (
 )
 
 from .pipeline import (
-    _batch_from_cols, _batch_rows, _nominal_grid, halo_plane_tiles,
+    _TILE_IDS, _TILE_KEY, _batch_from_cols, _batch_rows, _halo_fixpoint,
+    _nominal_grid, _plane_map, _tile_map, halo_plane_tiles,
 )
 
 # D8 neighbor order (dy, dx) — fixed, ties broken by FIRST index with the
@@ -187,25 +188,10 @@ def flow_dir_tiles(tiles: DataFrame, src_col: str = "lst_bytes") -> DataFrame:
     result is bit-identical to running flow_dir_pad on the full mosaic
     (the kernel only reads the 3x3 neighborhood, which the halo
     reconstructs exactly; beyond-scene ring = NaN on both paths)."""
+    def kernel(pad, core):
+        return flow_dir_pad(pad).astype("<f4").tobytes(),
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols = {f.name: [] for f in FLOW_DIR_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                pad = np.frombuffer(row.pad_bytes, dtype="<f4") \
-                        .reshape(h + 2, w + 2).astype(np.float64)
-                dirs = flow_dir_pad(pad)
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
-                ap["w"](w); ap["h"](h)
-                ap["dir_bytes"](dirs.astype("<f4").tobytes())
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, FLOW_DIR_SCHEMA)
-
-    return halo_plane_tiles(tiles, r=1, src_col=src_col).mapInArrow(
-        fn, FLOW_DIR_SCHEMA)
+    return _plane_map(tiles, 1, src_col, FLOW_DIR_SCHEMA, kernel, _TILE_IDS)
 
 
 # ---------------------------------------------------------------------------
@@ -269,90 +255,44 @@ def flow_accum_tiles(tiles: DataFrame, src_col: str = "lst_bytes",
     dirs = flow_dir_tiles(tiles, src_col=src_col).localCheckpoint()
     dir_pads = (
         halo_plane_tiles(dirs, r=1, src_col="dir_bytes")
-        .select("scene_id", "tile_x", "tile_y",
-                F.col("pad_bytes").alias("dir_pad"))
+        .select(*_TILE_KEY, F.col("pad_bytes").alias("dir_pad"))
         .localCheckpoint()
     )
 
-    def init_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols = {f.name: [] for f in _ACC_STATE_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                d = np.frombuffer(row.dir_bytes, dtype="<f4") \
-                      .reshape(h, w).astype(np.float64)
-                acc = accum_plane(d)
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
-                ap["w"](w); ap["h"](h)
-                ap["acc_bytes"](acc.astype("<f8").tobytes())
-                ap["changed"](True)
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, _ACC_STATE_SCHEMA)
+    def init_fn(row, w, h):
+        d = np.frombuffer(row.dir_bytes, dtype="<f4").reshape(h, w) \
+            .astype(np.float64)
+        return accum_plane(d).astype("<f8").tobytes(), True
 
-    state = dirs.mapInArrow(init_fn, _ACC_STATE_SCHEMA).localCheckpoint()
+    def resweep_fn(row, w, h):
+        acc_pad = np.frombuffer(row.pad_bytes, dtype="<f8").reshape(h + 2, w + 2)
+        dir_pad = np.frombuffer(row.dir_pad, dtype="<f4") \
+            .reshape(h + 2, w + 2).astype(np.float64)
+        acc = accum_plane(dir_pad[1:-1, 1:-1],
+                          base=_ring_inflow_base(dir_pad, acc_pad))
+        changed = not np.array_equal(acc, acc_pad[1:-1, 1:-1], equal_nan=True)
+        return acc.astype("<f8").tobytes(), changed
 
-    def resweep_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols = {f.name: [] for f in _ACC_STATE_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                acc_pad = np.frombuffer(row.pad_bytes, dtype="<f8") \
-                            .reshape(h + 2, w + 2)
-                dir_pad = np.frombuffer(row.dir_pad, dtype="<f4") \
-                            .reshape(h + 2, w + 2).astype(np.float64)
-                old = acc_pad[1:-1, 1:-1]
-                base = _ring_inflow_base(dir_pad, acc_pad)
-                acc = accum_plane(dir_pad[1:-1, 1:-1], base=base)
-                changed = not np.array_equal(acc, old, equal_nan=True)
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
-                ap["w"](w); ap["h"](h)
-                ap["acc_bytes"](acc.astype("<f8").tobytes())
-                ap["changed"](changed)
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, _ACC_STATE_SCHEMA)
+    def exchange(st):
+        return halo_plane_tiles(st, r=1, src_col="acc_bytes", dtype="<f8") \
+            .join(dir_pads, _TILE_KEY)
 
-    for _ in range(max_rounds):
-        haloed = halo_plane_tiles(state, r=1, src_col="acc_bytes",
-                                  dtype="<f8") \
-            .join(dir_pads, ["scene_id", "tile_x", "tile_y"])
-        new = haloed.mapInArrow(resweep_fn, _ACC_STATE_SCHEMA).localCheckpoint()
-        n_changed = new.filter("changed").count()
-        state = new
-        if n_changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"flow_accum did not converge in {max_rounds} rounds")
-
+    state = _tile_map(dirs, _ACC_STATE_SCHEMA, init_fn, _TILE_IDS) \
+        .localCheckpoint()
+    state = _halo_fixpoint(state, exchange, resweep_fn, _ACC_STATE_SCHEMA,
+                           max_rounds, "flow_accum")
     final = state.drop("changed").join(
-        dirs.select("scene_id", "tile_x", "tile_y", "dir_bytes"),
-        ["scene_id", "tile_x", "tile_y"])
+        dirs.select(*_TILE_KEY, "dir_bytes"), _TILE_KEY)
 
-    def final_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols = {f.name: [] for f in FLOW_ACCUM_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                acc = np.frombuffer(row.acc_bytes, dtype="<f8").reshape(h, w)
-                d = np.frombuffer(row.dir_bytes, dtype="<f4").reshape(h, w)
-                finite = np.isfinite(acc)
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
-                ap["w"](w); ap["h"](h)
-                ap["dir_bytes"](row.dir_bytes)
-                ap["accum_bytes"](row.acc_bytes)
-                ap["n_cells"](int(finite.sum()))
-                ap["accum_max"](float(acc[finite].max()) if finite.any() else None)
-                ap["n_pits"](int((d == np.float32(_PIT)).sum()))
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, FLOW_ACCUM_SCHEMA)
+    def final_fn(row, w, h):
+        acc = np.frombuffer(row.acc_bytes, dtype="<f8").reshape(h, w)
+        d = np.frombuffer(row.dir_bytes, dtype="<f4").reshape(h, w)
+        finite = np.isfinite(acc)
+        return (row.dir_bytes, row.acc_bytes, int(finite.sum()),
+                float(acc[finite].max()) if finite.any() else None,
+                int((d == np.float32(_PIT)).sum()))
 
-    return final.mapInArrow(final_fn, FLOW_ACCUM_SCHEMA)
+    return _tile_map(final, FLOW_ACCUM_SCHEMA, final_fn, _TILE_IDS)
 
 
 # ---------------------------------------------------------------------------
@@ -374,6 +314,13 @@ _LINK_SCHEMA = StructType([
     StructField("gid", LongType()),
     StructField("nxt", LongType()),
     StructField("final", IntegerType()),       # 1 = nxt is a basin label
+])
+
+_FOREIGN_SCHEMA = StructType([               # pending foreign gids per tile
+    StructField("scene_id", StringType()),
+    StructField("tile_x", IntegerType()),
+    StructField("tile_y", IntegerType()),
+    StructField("fgid", LongType()),
 ])
 
 BASIN_SCHEMA = StructType([
@@ -440,6 +387,12 @@ def _tile_resolution(dir_pad: np.ndarray, tx: int, ty: int,
     return label, gids, nxt, fin
 
 
+def _dir_pad(row, w: int, h: int) -> np.ndarray:
+    """A halo_plane_tiles row's (h+2, w+2) direction pad as float64."""
+    return np.frombuffer(row.pad_bytes, dtype="<f4") \
+        .reshape(h + 2, w + 2).astype(np.float64)
+
+
 def _link_round(links: DataFrame) -> DataFrame:
     """One pointer-doubling round over the border link table: pending links
     hop to their target's link (an EQUI hash join on (scene_id, gid) —
@@ -477,22 +430,10 @@ def basin_tiles(tiles: DataFrame, src_col: str = "lst_bytes",
     dirs = flow_dir_tiles(tiles, src_col=src_col)
     dir_pads = halo_plane_tiles(dirs, r=1, src_col="dir_bytes")
 
-    def resolve_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            tcols = {f.name: [] for f in _TILE_STATE_SCHEMA}
-            tap = {k: v.append for k, v in tcols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                dir_pad = np.frombuffer(row.pad_bytes, dtype="<f4") \
-                            .reshape(h + 2, w + 2).astype(np.float64)
-                label, _, _, _ = _tile_resolution(
-                    dir_pad, int(row.tile_x), int(row.tile_y), nom_w, nom_h)
-                tap["scene_id"](row.scene_id)
-                tap["tile_x"](row.tile_x); tap["tile_y"](row.tile_y)
-                tap["w"](w); tap["h"](h)
-                tap["label_bytes"](label.astype("<i8").tobytes())
-            if tcols["scene_id"]:
-                yield _batch_from_cols(tcols, _TILE_STATE_SCHEMA)
+    def resolve_fn(row, w, h):
+        label, _, _, _ = _tile_resolution(
+            _dir_pad(row, w, h), int(row.tile_x), int(row.tile_y), nom_w, nom_h)
+        return label.astype("<i8").tobytes(),
 
     def links_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -500,10 +441,9 @@ def basin_tiles(tiles: DataFrame, src_col: str = "lst_bytes",
             lap = {k: v.append for k, v in lcols.items()}
             for row in _batch_rows(batch):
                 w, h = int(row.w), int(row.h)
-                dir_pad = np.frombuffer(row.pad_bytes, dtype="<f4") \
-                            .reshape(h + 2, w + 2).astype(np.float64)
                 _, gids, nxt, fin = _tile_resolution(
-                    dir_pad, int(row.tile_x), int(row.tile_y), nom_w, nom_h)
+                    _dir_pad(row, w, h), int(row.tile_x), int(row.tile_y),
+                    nom_w, nom_h)
                 for g, nx, fi in zip(gids.tolist(), nxt.tolist(), fin.tolist()):
                     lap["scene_id"](row.scene_id)
                     lap["gid"](g); lap["nxt"](nx); lap["final"](int(fi))
@@ -511,8 +451,8 @@ def basin_tiles(tiles: DataFrame, src_col: str = "lst_bytes",
                 yield _batch_from_cols(lcols, _LINK_SCHEMA)
 
     pads_ck = dir_pads.localCheckpoint()
-    tiles_state = pads_ck.mapInArrow(resolve_fn, _TILE_STATE_SCHEMA) \
-                         .localCheckpoint()
+    tiles_state = _tile_map(pads_ck, _TILE_STATE_SCHEMA, resolve_fn,
+                            _TILE_IDS).localCheckpoint()
     links = pads_ck.mapInArrow(links_fn, _LINK_SCHEMA).localCheckpoint()
 
     # pointer doubling: links where final=0 point at ANOTHER border cell
@@ -527,14 +467,8 @@ def basin_tiles(tiles: DataFrame, src_col: str = "lst_bytes",
 
     # per-tile foreign-gid -> basin map (small: <= perimeter distinct gids)
     def foreign_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        schema = StructType([
-            StructField("scene_id", StringType()),
-            StructField("tile_x", IntegerType()),
-            StructField("tile_y", IntegerType()),
-            StructField("fgid", LongType()),
-        ])
         for batch in batches:
-            cols = {f.name: [] for f in schema}
+            cols = {f.name: [] for f in _FOREIGN_SCHEMA}
             ap = {k: v.append for k, v in cols.items()}
             for row in _batch_rows(batch):
                 w, h = int(row.w), int(row.h)
@@ -545,14 +479,9 @@ def basin_tiles(tiles: DataFrame, src_col: str = "lst_bytes",
                     ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
                     ap["fgid"](f_)
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, schema)
+                yield _batch_from_cols(cols, _FOREIGN_SCHEMA)
 
-    foreign = tiles_state.mapInArrow(foreign_fn, StructType([
-        StructField("scene_id", StringType()),
-        StructField("tile_x", IntegerType()),
-        StructField("tile_y", IntegerType()),
-        StructField("fgid", LongType()),
-    ]))
+    foreign = tiles_state.mapInArrow(foreign_fn, _FOREIGN_SCHEMA)
     fmap = (
         foreign.join(links.withColumnRenamed("gid", "fgid"),
                      ["scene_id", "fgid"])
@@ -561,41 +490,29 @@ def basin_tiles(tiles: DataFrame, src_col: str = "lst_bytes",
              .alias("fmap"))
     )
 
-    subst_in = tiles_state.join(fmap, ["scene_id", "tile_x", "tile_y"], "left")
+    subst_in = tiles_state.join(fmap, _TILE_KEY, "left")
 
-    def subst_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols = {f.name: [] for f in BASIN_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                lab = np.frombuffer(row.label_bytes, dtype="<i8") \
-                        .reshape(h, w).copy()
-                pairs = row.fmap
-                if pairs is not None and len(pairs):
-                    fg = np.array([p["fgid"] for p in pairs], dtype=np.int64)
-                    bs = np.array([p["basin"] for p in pairs], dtype=np.int64)
-                    order = np.argsort(fg)
-                    fg, bs = fg[order], bs[order]
-                    pend = (lab < 0) & (lab != _NODATA_I64)
-                    tgt = ~lab[pend]
-                    pos = np.searchsorted(fg, tgt)
-                    if not np.array_equal(fg[np.clip(pos, 0, len(fg) - 1)], tgt):
-                        raise RuntimeError("unresolved foreign basin gid")
-                    lab[pend] = bs[pos]
-                elif ((lab < 0) & (lab != _NODATA_I64)).any():
-                    raise RuntimeError("pending labels but no foreign map")
-                data = lab != _NODATA_I64
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
-                ap["w"](w); ap["h"](h)
-                ap["basin_bytes"](lab.astype("<i8").tobytes())
-                ap["n_basins_local"](int(np.unique(lab[data]).size)
-                                     if data.any() else 0)
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, BASIN_SCHEMA)
+    def subst_fn(row, w, h):
+        lab = np.frombuffer(row.label_bytes, dtype="<i8").reshape(h, w).copy()
+        pairs = row.fmap
+        if pairs is not None and len(pairs):
+            fg = np.array([p["fgid"] for p in pairs], dtype=np.int64)
+            bs = np.array([p["basin"] for p in pairs], dtype=np.int64)
+            order = np.argsort(fg)
+            fg, bs = fg[order], bs[order]
+            pend = (lab < 0) & (lab != _NODATA_I64)
+            tgt = ~lab[pend]
+            pos = np.searchsorted(fg, tgt)
+            if not np.array_equal(fg[np.clip(pos, 0, len(fg) - 1)], tgt):
+                raise RuntimeError("unresolved foreign basin gid")
+            lab[pend] = bs[pos]
+        elif ((lab < 0) & (lab != _NODATA_I64)).any():
+            raise RuntimeError("pending labels but no foreign map")
+        data = lab != _NODATA_I64
+        return (lab.astype("<i8").tobytes(),
+                int(np.unique(lab[data]).size) if data.any() else 0)
 
-    return subst_in.mapInArrow(subst_fn, BASIN_SCHEMA)
+    return _tile_map(subst_in, BASIN_SCHEMA, subst_fn, _TILE_IDS)
 
 
 # ---------------------------------------------------------------------------

@@ -283,6 +283,33 @@ def _batch_rows(batch: pa.RecordBatch):
                                 for i in range(batch.num_columns))))
 
 
+_TILE_KEY = ["scene_id", "tile_x", "tile_y"]
+_TILE_IDS = (*_TILE_KEY, "w", "h")
+_PLANE_IDS = ("image_id",) + _TILE_IDS
+
+
+def _tile_map(src: DataFrame, schema: StructType, build, ids) -> DataFrame:
+    """The per-tile Arrow map: one ``schema`` row per tile row of ``src``,
+    the ``ids`` columns copied from the row (None where it has no such
+    column) followed by the values of ``build(row, w, h)``. The mapInArrow
+    step carries ``build``'s name, so plans name the operator's step."""
+    names = schema.names
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            cols: dict[str, list] = {n: [] for n in names}
+            for row in _batch_rows(batch):
+                w, h = int(row.w), int(row.h)
+                for n, v in zip(names, (*(getattr(row, k, None) for k in ids),
+                                        *build(row, w, h))):
+                    cols[n].append(v)
+            if batch.num_rows:
+                yield _batch_from_cols(cols, schema)
+
+    fn.__name__ = build.__name__
+    return src.mapInArrow(fn, schema)
+
+
 def _nominal_grid(tiles: DataFrame) -> tuple[int, int]:
     """(nom_w, nom_h): the tile pitch — every tile but the ragged edge ones
     has this size, so (tile_x * nom_w + lx, tile_y * nom_h + ly) is a
@@ -300,6 +327,10 @@ def _finite_stats(a: np.ndarray) -> tuple[int, float | None, float | None, float
     if v.size == 0:
         return 0, None, None, None
     return int(v.size), float(v.min()), float(v.max()), float(v.mean())
+
+
+def _f32(a: np.ndarray) -> bytes:
+    return a.astype("<f4").tobytes()
 
 
 _CLOUD_VALUES = np.array(C.DEFAULT_CLOUD_QA_VALUES, dtype=np.float64)
@@ -610,9 +641,6 @@ def full_pixel_pipeline(
     )
     return spatial.enrich_pixels(pixels, aoi_pdf, stations_pdf,
                                  k=knn_k, s2_level=s2_level, how="left")
-
-
-HALO_TILE_SCHEMA = TILE_SCHEMA  # same output contract as lst_tiles
 
 
 def _halo_pieces(row, w: int, h: int, r: int) -> list[tuple]:
@@ -939,33 +967,13 @@ def focal_stats_tiles(tiles: DataFrame, window: int = 5,
     equal to running the kernel on the assembled whole-scene plane
     (tests pin this tile-for-tile) at ~(1 + 2r(w+h)/(wh))x shuffle cost.
     """
-    m = window // 2 if halo else 0
-    src = halo_plane_tiles(tiles, r=m, src_col=src_col) if halo else tiles
-    col = "pad_bytes" if halo else src_col
+    def kernel(plane, core):
+        r = K.focal_stats(plane, window=window)
+        return (*(_f32(r[k][core]) for k in ("mean", "std", "min", "max")),
+                int((r["count"][core] > 0).sum()))
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in FOCAL_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                plane = codecs.decode_f32bt(getattr(row, col), w + 2 * m, h + 2 * m)
-                r = K.focal_stats(plane, window=window)
-                crop = (slice(m, m + h), slice(m, m + w)) if m else (slice(None), slice(None))
-                r = {k: v[crop] for k, v in r.items()}
-                ap["image_id"](row.image_id)
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
-                ap["w"](w); ap["h"](h)
-                ap["mean_bytes"](np.ascontiguousarray(r["mean"]).astype("<f4").tobytes())
-                ap["std_bytes"](np.ascontiguousarray(r["std"]).astype("<f4").tobytes())
-                ap["min_bytes"](np.ascontiguousarray(r["min"]).astype("<f4").tobytes())
-                ap["max_bytes"](np.ascontiguousarray(r["max"]).astype("<f4").tobytes())
-                ap["n_valid"](int((r["count"] > 0).sum()))
-            if cols["image_id"]:
-                yield _batch_from_cols(cols, FOCAL_SCHEMA)
-
-    return src.mapInArrow(fn, FOCAL_SCHEMA)
+    return _plane_map(tiles, window // 2 if halo else 0, src_col,
+                      FOCAL_SCHEMA, kernel)
 
 
 def trend_pixels(pixels: DataFrame,
@@ -1031,36 +1039,14 @@ def gradient_tiles(tiles: DataFrame, cell: float = 1.0,
     1-pixel halo first, making the output exactly the whole-scene-mosaic
     gradient (tests pin tile-for-tile equality). Kernel golden-direction
     vectors in tests/test_kernels.py."""
-    m = 1 if halo else 0
-    src = halo_plane_tiles(tiles, r=1, src_col=src_col) if halo else tiles
-    col = "pad_bytes" if halo else src_col
+    def kernel(plane, core):
+        r = {k: v[core] for k, v in K.slope_aspect(plane, cell=cell).items()}
+        n_valid, _, smax, _ = _finite_stats(r["slope_deg"])
+        return (_f32(r["slope_deg"]), _f32(r["aspect_deg"]),
+                _f32(r["hillshade"]), n_valid, smax)
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in GRADIENT_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                plane = codecs.decode_f32bt(getattr(row, col),
-                                            w + 2 * m, h + 2 * m).astype(np.float64)
-                r = K.slope_aspect(plane, cell=cell)
-                if m:
-                    crop = (slice(m, m + h), slice(m, m + w))
-                    r = {k: np.ascontiguousarray(v[crop]) for k, v in r.items()}
-                n_valid, _, smax, _ = _finite_stats(r["slope_deg"])
-                ap["image_id"](getattr(row, "image_id", None))
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
-                ap["w"](w); ap["h"](h)
-                ap["slope_bytes"](r["slope_deg"].astype("<f4").tobytes())
-                ap["aspect_bytes"](r["aspect_deg"].astype("<f4").tobytes())
-                ap["hillshade_bytes"](r["hillshade"].astype("<f4").tobytes())
-                ap["n_valid"](n_valid)
-                ap["slope_max"](smax)
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, GRADIENT_SCHEMA)
-
-    return src.mapInArrow(fn, GRADIENT_SCHEMA)
+    return _plane_map(tiles, 1 if halo else 0, src_col, GRADIENT_SCHEMA,
+                      kernel)
 
 
 HALO_PLANE_SCHEMA = StructType([
@@ -1159,6 +1145,42 @@ def halo_plane_tiles(tiles: DataFrame, r: int,
                           HALO_PLANE_SCHEMA)
 
 
+def _plane_map(tiles: DataFrame, m: int, src_col: str, schema: StructType,
+               kernel, ids=_PLANE_IDS) -> DataFrame:
+    """_tile_map of a kernel over one f32 plane column, halo optional.
+
+    With m == 0 the tiles go in as they are; with m > 0 they go through
+    halo_plane_tiles first, so the plane comes with m pixels of each
+    8-neighbour. ``kernel(plane, core)`` gets the decoded (h+2m, w+2m)
+    float64 plane and ``core``, the slices that crop an array of that
+    shape to the tile's own cells, and returns the values after ``ids``."""
+    src = halo_plane_tiles(tiles, r=m, src_col=src_col) if m else tiles
+    col = "pad_bytes" if m else src_col
+
+    def fn(row, w, h):
+        plane = codecs.decode_f32bt(getattr(row, col), w + 2 * m, h + 2 * m)
+        return kernel(plane, (slice(m, m + h), slice(m, m + w)))
+
+    return _tile_map(src, schema, fn, ids)
+
+
+def _halo_fixpoint(state: DataFrame, exchange, step, schema: StructType,
+                   max_rounds: int, name: str) -> DataFrame:
+    """Iterate a tile state table to its fixpoint. Each round
+    ``exchange(state)`` builds the round's input (the operator's state
+    halo joined to its static pads), ``step`` maps it tile by tile to the
+    next ``schema`` state with a per-tile ``changed`` flag, and the result
+    is persisted with localCheckpoint. Returns the state of the first
+    round in which no tile changed; raises after ``max_rounds`` rounds
+    without one."""
+    for _ in range(max_rounds):
+        state = _tile_map(exchange(state), schema, step, _TILE_IDS) \
+            .localCheckpoint()
+        if state.filter("changed").count() == 0:
+            return state
+    raise RuntimeError(f"{name} did not converge in {max_rounds} rounds")
+
+
 CONV_SCHEMA = StructType([
     StructField("image_id", StringType()),
     StructField("scene_id", StringType()),
@@ -1195,32 +1217,12 @@ def convolve_tiles(tiles: DataFrame, weights, divisor: float | None = None,
         raise ValueError(
             "halo=True needs a square weights matrix (the halo margin is "
             "one radius); pass halo=False for rectangular kernels")
-    m = weights.shape[0] // 2 if halo else 0
-    src = halo_plane_tiles(tiles, r=m, src_col=src_col) if halo else tiles
-    col = "pad_bytes" if halo else src_col
+    def kernel(plane, core):
+        p32 = K.convolve_plane(plane, weights, divisor)[core].astype("<f4")
+        return p32.tobytes(), int(np.isfinite(p32).sum())
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in CONV_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                plane = codecs.decode_f32bt(getattr(row, col),
-                                            w + 2 * m, h + 2 * m)
-                out = K.convolve_plane(plane, weights, divisor)
-                if m:
-                    out = out[m:m + h, m:m + w]
-                p32 = np.ascontiguousarray(out).astype("<f4")
-                ap["image_id"](row.image_id)
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
-                ap["w"](w); ap["h"](h)
-                ap["conv_bytes"](p32.tobytes())
-                ap["n_valid"](int(np.isfinite(p32).sum()))
-            if cols["image_id"]:
-                yield _batch_from_cols(cols, CONV_SCHEMA)
-
-    return src.mapInArrow(fn, CONV_SCHEMA)
+    return _plane_map(tiles, weights.shape[0] // 2 if halo else 0, src_col,
+                      CONV_SCHEMA, kernel)
 
 
 GROW_SCHEMA = StructType([
@@ -1233,6 +1235,12 @@ GROW_SCHEMA = StructType([
     StructField("grown_bytes", BinaryType()),
     StructField("n_grown", LongType()),
 ])
+
+
+def _filled(plane: np.ndarray, core: tuple, out: np.ndarray) -> tuple:
+    """(grown_bytes, n_grown) of a grow/fill kernel's output plane."""
+    p32 = out[core].astype("<f4")
+    return p32.tobytes(), int((np.isfinite(p32) & ~np.isfinite(plane[core])).sum())
 
 
 def grow_tiles(tiles: DataFrame, radius: float = 1.01,
@@ -1251,34 +1259,11 @@ def grow_tiles(tiles: DataFrame, radius: float = 1.01,
     """
     if radius <= 0:
         raise ValueError(f"radius must be positive, got {radius}")
-    m = int(np.floor(radius)) if halo else 0
-    src = halo_plane_tiles(tiles, r=m, src_col=src_col) if halo else tiles
-    col = "pad_bytes" if halo else src_col
+    def kernel(plane, core):
+        return _filled(plane, core, K.grow_plane(plane, radius, value))
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in GROW_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                plane = codecs.decode_f32bt(getattr(row, col),
-                                            w + 2 * m, h + 2 * m)
-                before = np.isfinite(plane)
-                out = K.grow_plane(plane, radius, value)
-                if m:
-                    out = out[m:m + h, m:m + w]
-                    before = before[m:m + h, m:m + w]
-                p32 = np.ascontiguousarray(out).astype("<f4")
-                ap["image_id"](row.image_id)
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
-                ap["w"](w); ap["h"](h)
-                ap["grown_bytes"](p32.tobytes())
-                ap["n_grown"](int((np.isfinite(p32) & ~before).sum()))
-            if cols["image_id"]:
-                yield _batch_from_cols(cols, GROW_SCHEMA)
-
-    return src.mapInArrow(fn, GROW_SCHEMA)
+    return _plane_map(tiles, int(np.floor(radius)) if halo else 0, src_col,
+                      GROW_SCHEMA, kernel)
 
 
 def fillnulls_tiles(tiles: DataFrame, radius: float = 3.0,
@@ -1302,33 +1287,10 @@ def fillnulls_tiles(tiles: DataFrame, radius: float = 3.0,
         raise ValueError(f"unknown fillnulls method {method!r}")
     k_sw = (2 * int(np.floor(radius)) if sweeps is None
             else int(sweeps)) if method == "spline" else 0
-    m = (int(np.floor(radius)) + k_sw) if halo else 0
-    src = halo_plane_tiles(tiles, r=m, src_col=src_col) if halo else tiles
-    col = "pad_bytes" if halo else src_col
+    def kernel(plane, core):
+        return _filled(plane, core, K.fillnulls_plane(
+            plane, radius, power, method=method,
+            sweeps=k_sw if method == "spline" else None))
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in GROW_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                plane = codecs.decode_f32bt(getattr(row, col),
-                                            w + 2 * m, h + 2 * m)
-                before = np.isfinite(plane)
-                out = K.fillnulls_plane(
-                    plane, radius, power, method=method,
-                    sweeps=k_sw if method == "spline" else None)
-                if m:
-                    out = out[m:m + h, m:m + w]
-                    before = before[m:m + h, m:m + w]
-                p32 = np.ascontiguousarray(out).astype("<f4")
-                ap["image_id"](row.image_id)
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
-                ap["w"](w); ap["h"](h)
-                ap["grown_bytes"](p32.tobytes())
-                ap["n_grown"](int((np.isfinite(p32) & ~before).sum()))
-            if cols["image_id"]:
-                yield _batch_from_cols(cols, GROW_SCHEMA)
-
-    return src.mapInArrow(fn, GROW_SCHEMA)
+    return _plane_map(tiles, (int(np.floor(radius)) + k_sw) if halo else 0,
+                      src_col, GROW_SCHEMA, kernel)

@@ -86,7 +86,9 @@ from pyspark.sql.types import (
 )
 
 from . import codecs
-from .pipeline import _batch_from_cols, _batch_rows, _nominal_grid
+from .pipeline import (
+    _TILE_KEY, _batch_from_cols, _batch_rows, _nominal_grid, _tile_map,
+)
 
 # sectors per scan group: one applyInPandas group costs ~3.5 ms of
 # arrow/pandas setup, so per-sector groups drown small-radius viewsheds in
@@ -96,7 +98,6 @@ _SECTOR_BKT = 8
 # fewer groups
 _STRIP_BKT = 64
 
-_TILE_KEY = ["scene_id", "tile_x", "tile_y"]
 
 _SEG_SCHEMA = StructType([
     StructField("scene_id", StringType()),
@@ -479,22 +480,8 @@ def _assemble(layout: DataFrame, vals: DataFrame, keys: list[str], build,
     payload = [c for c in vals.columns if c not in keys]
     agg = vals.groupBy(*keys).agg(
         *(F.collect_list(c).alias(c) for c in payload))
-    joined = layout.join(agg, on=keys, how="left")
-    names = [f.name for f in schema]
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {n: [] for n in names}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                out = (*(getattr(row, k) for k in keys), w, h,
-                       *build(row, w, h))
-                for n, v in zip(names, out):
-                    cols[n].append(v)
-            if cols[names[0]]:
-                yield _batch_from_cols(cols, schema)
-
-    return joined.mapInArrow(fn, schema)
+    return _tile_map(layout.join(agg, on=keys, how="left"), schema, build,
+                     (*keys, "w", "h"))
 
 
 # --------------------------------------------------------------------------
@@ -650,7 +637,7 @@ def viewshed_tiles(tiles: DataFrame, observers, obs_height: float = 1.75,
                                         max_dist, n_sectors, src_col,
                                         counts=False)
 
-    def build(row, w, h):
+    def fn(row, w, h):
         plane = np.full((h, w), 255, dtype=np.uint8)
         ev = _bit_sums(row.eval_bytes, nom_w, nom_h, h, w)
         if ev is not None:
@@ -660,7 +647,7 @@ def viewshed_tiles(tiles: DataFrame, observers, obs_height: float = 1.75,
                 int((plane != 255).sum()))
 
     layout = tiles.select("scene_id", "tile_x", "tile_y", "w", "h")
-    return _assemble(layout, masks, _TILE_KEY, build, VIEWSHED_SCHEMA)
+    return _assemble(layout, masks, _TILE_KEY, fn, VIEWSHED_SCHEMA)
 
 
 def viewshed_count_tiles(tiles: DataFrame, observers,
@@ -691,7 +678,7 @@ def viewshed_count_tiles(tiles: DataFrame, observers,
                                         max_dist, n_sectors, src_col,
                                         counts=True)
 
-    def build(row, w, h):
+    def fn(row, w, h):
         plane = codecs.decode_f32bt(getattr(row, src_col), w, h)
         cnt = np.where(np.isfinite(plane), 0.0, np.nan).astype(np.float32)
         seen = _bit_sums(row.vis_bytes, nom_w, nom_h, h, w)
@@ -701,7 +688,7 @@ def viewshed_count_tiles(tiles: DataFrame, observers,
                 int(np.isfinite(cnt).sum()))
 
     layout = tiles.select("scene_id", "tile_x", "tile_y", "w", "h", src_col)
-    return _assemble(layout, masks, _TILE_KEY, build, VIEWSHED_COUNT_SCHEMA)
+    return _assemble(layout, masks, _TILE_KEY, fn, VIEWSHED_COUNT_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -867,7 +854,7 @@ def sun_tiles(tiles: DataFrame, sun: DataFrame | pd.DataFrame,
     pad = halo_plane_tiles(src, r=1, src_col=src_col) \
         .select("scene_id", "tile_x", "tile_y", "w", "h", "pad_bytes")
 
-    def build(row, w, h):
+    def fn(row, w, h):
         pos = sun_b.value.get(row.scene_id)
         if pos is None:
             return np.full((h, w), np.nan, dtype=np.float32).tobytes(), 0, 0
@@ -895,7 +882,7 @@ def sun_tiles(tiles: DataFrame, sun: DataFrame | pd.DataFrame,
         return (glob.tobytes(), int((~lit & valid).sum()),
                 int(valid.sum()))
 
-    return _assemble(pad, shadows, _TILE_KEY, build, SUN_SCHEMA)
+    return _assemble(pad, shadows, _TILE_KEY, fn, SUN_SCHEMA)
 
 
 def _horizon_strip_scan(s: np.ndarray, z: np.ndarray) -> np.ndarray:
@@ -999,7 +986,7 @@ def horizon_tiles(tiles: DataFrame, azimuths, src_col: str = "lst_bytes"
     vals = _sweep(tiles, nom_w, nom_h, src_col, _strip_cut(lambda _s: azs),
                   F.col("key"), scan, _HVAL_SCHEMA)
 
-    def build(row, w, h):
+    def fn(row, w, h):
         plane = np.full((nom_h, nom_w), np.nan, dtype=np.float32)
         for ib, vb in zip(row.idx_bytes or (), row.val_bytes or ()):
             plane.ravel()[np.frombuffer(ib, dtype="<i4")] = \
@@ -1011,4 +998,4 @@ def horizon_tiles(tiles: DataFrame, azimuths, src_col: str = "lst_bytes"
     layout = tiles.select("scene_id", "tile_x", "tile_y", "w", "h") \
         .crossJoin(F.broadcast(az_df))
     return _assemble(layout, vals, ["scene_id", "azimuth", "tile_x",
-                                    "tile_y"], build, HORIZON_SCHEMA)
+                                    "tile_y"], fn, HORIZON_SCHEMA)

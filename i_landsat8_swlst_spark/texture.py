@@ -42,10 +42,7 @@ halo strips (~(1 + 2r(w+h)/(wh))× plane bytes).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
@@ -55,7 +52,7 @@ from pyspark.sql.types import (
 
 from . import codecs
 from .multiband import _bin_plane, scene_ranges_df
-from .pipeline import _batch_from_cols, _batch_rows, halo_plane_tiles
+from .pipeline import _PLANE_IDS, _tile_map, halo_plane_tiles
 
 FEATURES = ("contrast", "dissimilarity", "homogeneity", "energy", "entropy")
 
@@ -219,45 +216,30 @@ def glcm_texture_tiles(tiles: DataFrame, src_col: str = "lst_bytes",
     r = window // 2 + max(max(abs(dx), abs(dy)) for dx, dy in offsets)
     schema = _texture_schema(tuple(features))
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in schema}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                pad = codecs.decode_f32bt(row.pad_bytes, w + 2 * r, h + 2 * r)
-                # a scene with zero finite pixels has no range row (NULL
-                # after the left join); any range quantizes its all-NaN
-                # planes identically (level -1)
-                vmin = 0.0 if row.vmin is None else float(row.vmin)
-                vmax = 1.0 if row.vmin is None else float(row.vmax)
-                per = [glcm_features(pad, h, w, r, window, o,
-                                     levels, vmin, vmax, tuple(features))
-                       for o in offsets]
-                if len(per) == 1:
-                    out = per[0]
-                else:  # nan-aware per-pixel direction average (-a)
-                    import warnings
-                    with warnings.catch_warnings():
-                        warnings.simplefilter("ignore", RuntimeWarning)
-                        out = {f: np.nanmean(np.stack([p[f] for p in per]),
-                                             axis=0)
-                               for f in features}
-                core = pad[r:r + h, r:r + w]
-                ap["image_id"](row.image_id)
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](int(row.tile_x)); ap["tile_y"](int(row.tile_y))
-                ap["w"](w); ap["h"](h)
-                ap["n_valid"](int(np.isfinite(core).sum()))
-                for f in features:
-                    plane = out[f].astype("<f4")
-                    ap[f"{f}_bytes"](plane.tobytes())
-                    any_ok = bool(np.isfinite(plane).any())
-                    ap[f"{f}_mean"](
-                        float(np.nanmean(plane)) if any_ok else None)
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, schema)
+    def fn(row, w, h):
+        pad = codecs.decode_f32bt(row.pad_bytes, w + 2 * r, h + 2 * r)
+        # a scene with zero finite pixels has no range row (NULL after the
+        # left join); any range quantizes its all-NaN planes identically
+        # (level -1)
+        vmin = 0.0 if row.vmin is None else float(row.vmin)
+        vmax = 1.0 if row.vmin is None else float(row.vmax)
+        per = [glcm_features(pad, h, w, r, window, o, levels, vmin, vmax,
+                             tuple(features)) for o in offsets]
+        if len(per) == 1:
+            out = per[0]
+        else:  # nan-aware per-pixel direction average (-a)
+            import warnings
+            with warnings.catch_warnings():
+                warnings.simplefilter("ignore", RuntimeWarning)
+                out = {f: np.nanmean(np.stack([p[f] for p in per]), axis=0)
+                       for f in features}
+        vals = [int(np.isfinite(pad[r:r + h, r:r + w]).sum())]
+        for f in features:
+            plane = out[f].astype("<f4")
+            vals += [plane.tobytes(), float(np.nanmean(plane))
+                     if np.isfinite(plane).any() else None]
+        return vals
 
     src = (halo_plane_tiles(tiles, r=r, src_col=src_col)
            .join(F.broadcast(ranges_df), on="scene_id", how="left"))
-    return src.mapInArrow(fn, schema)
+    return _tile_map(src, schema, fn, _PLANE_IDS)

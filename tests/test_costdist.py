@@ -333,6 +333,15 @@ def test_allocation_spiral_multi_round(spark):
     assert (gl[~reach & ~np.isnan(plane)] == -1).all()
 
 
+@pytest.mark.parametrize("op", [costdist.cost_distance_tiles,
+                                costdist.cost_allocation_tiles])
+def test_spiral_round_cap_raises(spark, op):
+    """The spiral needs many halo rounds: one round is not a fixpoint."""
+    tiles = _tiles_df(spark, _spiral_plane(48), 16)
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        op(tiles, threshold=1.0, max_rounds=1)
+
+
 def test_allocation_cost_plane_exact(spark):
     """Half-integer traversal costs keep every edge weight an exact binary
     fraction, so even the cost-weighted case is bit-exact vs the lex

@@ -245,6 +245,15 @@ def test_tiled_accum_serpentine_multiround(spark):
     assert np.nanmax(got) == int(np.isfinite(elev).sum())
 
 
+def test_tiled_accum_round_cap_raises(spark):
+    """The serpentine needs many halo rounds: one round is not a
+    fixpoint."""
+    tiles = _tiles_df(spark, _serpentine_elev(24, lane=2), tile=8)
+    with pytest.raises(RuntimeError,
+                       match="flow_accum did not converge in 1 rounds"):
+        flow_accum_tiles(tiles, max_rounds=1)
+
+
 def test_tiled_basins_match_brute_ragged(spark):
     """Basin labels on a ragged grid (40 px wide / 16 px tiles -> the last
     column tile is 8 wide) — exercises the nominal-dims wrap for paths

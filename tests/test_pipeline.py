@@ -345,6 +345,25 @@ def _plane_tiles_df(spark, planes: dict, tw: int, th: int):
     return spark.createDataFrame(pd.DataFrame(rows))
 
 
+@pytest.mark.parametrize("op", [
+    lambda t: pipeline.focal_stats_tiles(t, window=3),
+    lambda t: pipeline.gradient_tiles(t),
+    lambda t: pipeline.convolve_tiles(t, np.ones((3, 3)), halo=False),
+    lambda t: pipeline.grow_tiles(t, radius=1.5, halo=False),
+    lambda t: pipeline.fillnulls_tiles(t, radius=1.5, halo=False),
+], ids=["focal", "gradient", "convolve", "grow", "fillnulls"])
+def test_tile_local_ops_emit_null_image_id_without_the_column(spark, op):
+    """Tile tables without an image_id column (cost-distance or flow-accum
+    output, a bare terrain raster) go through every tile-local plane
+    operator; the output image_id is NULL, as with halo=True."""
+    plane = np.arange(48, dtype=np.float64).reshape(6, 8)
+    plane[2, 3] = np.nan
+    tiles = _plane_tiles_df(spark, {"S": plane}, 4, 3).drop("image_id")
+    rows = op(tiles).collect()
+    assert len(rows) == 4
+    assert [r.image_id for r in rows] == [None] * 4
+
+
 def test_halo_focal_and_gradient_equal_whole_scene(spark):
     """halo=True must make the tile-decomposed operators EXACTLY equal to
     running the kernel once on the assembled scene plane — interior tile
