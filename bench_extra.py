@@ -52,6 +52,90 @@ def _operator_df(spark, name: str, tmp: str):
 
     from i_landsat8_swlst_spark import constants as C, pipeline, synth
 
+    if name in ("viewshed", "viewshed_cva", "horizon", "tovect", "contour",
+                "regions", "segment", "landscape", "focal", "costdist",
+                "flowaccum"):
+        from i_landsat8_swlst_spark import (
+            costdist as Cd, hydro as Hy, landscape as Ls, regions as Rg,
+            segment as Sg, terrain as Tr, vectorize as Vz,
+        )
+        terr_path = f"{tmp}/terrain_tiles"
+        if not os.path.isdir(terr_path):
+            # deterministic 1024x1024 terrain (64 tiles of 128x128):
+            # uniform base + two gaussian ridges, same recipe as the
+            # test fixtures but at bench scale
+            rng = np.random.default_rng(23)
+            h = w = 1024
+            base = rng.uniform(0.0, 30.0, (h, w))
+            yy, xx = np.mgrid[0:h, 0:w]
+            base += 60.0 * np.exp(-((xx - w * 0.7) ** 2
+                                    + (yy - h * 0.3) ** 2) / 8000.0)
+            base += 45.0 * np.exp(-((xx - w * 0.25) ** 2
+                                    + (yy - h * 0.75) ** 2) / 12000.0)
+            plane = base.astype(np.float32)
+            trows = []
+            for ty in range(8):
+                for tx in range(8):
+                    t = plane[ty * 128:(ty + 1) * 128, tx * 128:(tx + 1) * 128]
+                    trows.append({"scene_id": "T0", "tile_x": tx,
+                                  "tile_y": ty, "w": 128, "h": 128,
+                                  "lst_bytes": np.ascontiguousarray(t)
+                                  .astype("<f4").tobytes()})
+            spark.createDataFrame(pd.DataFrame(trows)) \
+                .write.mode("overwrite").parquet(terr_path)
+        terr = spark.read.parquet(terr_path)
+        if name == "viewshed":
+            obs = pd.DataFrame([{"scene_id": "T0", "ox": 512, "oy": 512}])
+            return Tr.viewshed_tiles(terr, obs, max_dist=96.0,
+                                     n_sectors=256)
+        if name == "viewshed_cva":
+            obs = pd.DataFrame([
+                {"scene_id": "T0", "obs_id": f"o{i}{j}",
+                 "ox": 256 + 256 * i, "oy": 256 + 256 * j}
+                for i in range(3) for j in range(3)])
+            return Tr.viewshed_count_tiles(terr, obs, max_dist=64.0,
+                                           n_sectors=128)
+        if name == "horizon":
+            small = terr.filter("tile_x < 4 AND tile_y < 4")
+            return Tr.horizon_tiles(small, [90.0, 225.0, 315.0])
+        if name == "tovect":
+            return Vz.to_vect(terr, threshold=45.0)
+        # the other connected-component operators on the same fixture
+        if name == "regions":
+            return Rg.extract_regions(terr, threshold=45.0)
+        if name == "segment":
+            return Sg.segment_tiles(terr, lam=12.0)
+        if name == "landscape":
+            return Ls.class_metrics(terr, levels=8)
+        # the neighbourhood operators on the same fixture: one halo pass,
+        # and two halo fixpoints (distance from the ridge tops, flow
+        # accumulation)
+        if name == "focal":
+            return pipeline.focal_stats_tiles(terr, window=5, halo=True)
+        if name == "costdist":
+            return Cd.cost_distance_tiles(terr, threshold=80.0)
+        if name == "flowaccum":
+            return Hy.flow_accum_tiles(terr)
+        return Vz.contour_lines(terr, [20.0, 40.0, 60.0])
+    if name == "enrich":
+        from i_landsat8_swlst_spark import spatial
+        aoi_pdf = synth.aoi_pdf("small")
+        st_pdf = synth.stations_pdf("small")
+        allv = [p for ring in aoi_pdf["ring"] for p in ring]
+        elons = np.array([p["lon"] for p in allv])
+        elats = np.array([p["lat"] for p in allv])
+        rng = np.random.default_rng(19)
+        pts_path = f"{tmp}/enrich_points"
+        if not os.path.isdir(pts_path):
+            spark.createDataFrame(pd.DataFrame({
+                "pid": np.arange(2000000),
+                "lon": rng.uniform(elons.min() - 0.2, elons.max() + 0.2, 2000000),
+                "lat": rng.uniform(elats.min() - 0.2, elats.max() + 0.2, 2000000),
+                "lst_k": rng.uniform(260.0, 330.0, 2000000),
+            })).repartition(CPUS).write.mode("overwrite").parquet(pts_path)
+        epts = spark.read.parquet(pts_path)
+        return spatial.enrich_pixels(epts, aoi_pdf, st_pdf, k=2, how="left")
+
     scenes_path = f"{tmp}/scenes"
     if not os.path.isdir(scenes_path):
         synth.synth_scenes_spark(spark, "bench", scenes=range(RASTER_SCENES)) \
@@ -158,89 +242,6 @@ def _operator_df(spark, name: str, tmp: str):
                           float(ws.lat1), ntx=wntx, nty=wnty,
                           tile_w=160, tile_h=160)
         return Wp.warp_tiles(wtiles, idw_geom, dst, method="bilinear")
-    if name in ("viewshed", "viewshed_cva", "horizon", "tovect", "contour",
-                "regions", "segment", "landscape", "focal", "costdist",
-                "flowaccum"):
-        from i_landsat8_swlst_spark import (
-            costdist as Cd, hydro as Hy, landscape as Ls, regions as Rg,
-            segment as Sg, terrain as Tr, vectorize as Vz,
-        )
-        terr_path = f"{tmp}/terrain_tiles"
-        if not os.path.isdir(terr_path):
-            # deterministic 1024x1024 terrain (64 tiles of 128x128):
-            # uniform base + two gaussian ridges, same recipe as the
-            # test fixtures but at bench scale
-            rng = np.random.default_rng(23)
-            h = w = 1024
-            base = rng.uniform(0.0, 30.0, (h, w))
-            yy, xx = np.mgrid[0:h, 0:w]
-            base += 60.0 * np.exp(-((xx - w * 0.7) ** 2
-                                    + (yy - h * 0.3) ** 2) / 8000.0)
-            base += 45.0 * np.exp(-((xx - w * 0.25) ** 2
-                                    + (yy - h * 0.75) ** 2) / 12000.0)
-            plane = base.astype(np.float32)
-            trows = []
-            for ty in range(8):
-                for tx in range(8):
-                    t = plane[ty * 128:(ty + 1) * 128, tx * 128:(tx + 1) * 128]
-                    trows.append({"scene_id": "T0", "tile_x": tx,
-                                  "tile_y": ty, "w": 128, "h": 128,
-                                  "lst_bytes": np.ascontiguousarray(t)
-                                  .astype("<f4").tobytes()})
-            spark.createDataFrame(pd.DataFrame(trows)) \
-                .write.mode("overwrite").parquet(terr_path)
-        terr = spark.read.parquet(terr_path)
-        if name == "viewshed":
-            obs = pd.DataFrame([{"scene_id": "T0", "ox": 512, "oy": 512}])
-            return Tr.viewshed_tiles(terr, obs, max_dist=96.0,
-                                     n_sectors=256)
-        if name == "viewshed_cva":
-            obs = pd.DataFrame([
-                {"scene_id": "T0", "obs_id": f"o{i}{j}",
-                 "ox": 256 + 256 * i, "oy": 256 + 256 * j}
-                for i in range(3) for j in range(3)])
-            return Tr.viewshed_count_tiles(terr, obs, max_dist=64.0,
-                                           n_sectors=128)
-        if name == "horizon":
-            small = terr.filter("tile_x < 4 AND tile_y < 4")
-            return Tr.horizon_tiles(small, [90.0, 225.0, 315.0])
-        if name == "tovect":
-            return Vz.to_vect(terr, threshold=45.0)
-        # the other connected-component operators on the same fixture
-        if name == "regions":
-            return Rg.extract_regions(terr, threshold=45.0)
-        if name == "segment":
-            return Sg.segment_tiles(terr, lam=12.0)
-        if name == "landscape":
-            return Ls.class_metrics(terr, levels=8)
-        # the neighbourhood operators on the same fixture: one halo pass,
-        # and two halo fixpoints (distance from the ridge tops, flow
-        # accumulation)
-        if name == "focal":
-            return pipeline.focal_stats_tiles(terr, window=5, halo=True)
-        if name == "costdist":
-            return Cd.cost_distance_tiles(terr, threshold=80.0)
-        if name == "flowaccum":
-            return Hy.flow_accum_tiles(terr)
-        return Vz.contour_lines(terr, [20.0, 40.0, 60.0])
-    if name == "enrich":
-        from i_landsat8_swlst_spark import spatial
-        aoi_pdf = synth.aoi_pdf("small")
-        st_pdf = synth.stations_pdf("small")
-        allv = [p for ring in aoi_pdf["ring"] for p in ring]
-        elons = np.array([p["lon"] for p in allv])
-        elats = np.array([p["lat"] for p in allv])
-        rng = np.random.default_rng(19)
-        pts_path = f"{tmp}/enrich_points"
-        if not os.path.isdir(pts_path):
-            spark.createDataFrame(pd.DataFrame({
-                "pid": np.arange(2000000),
-                "lon": rng.uniform(elons.min() - 0.2, elons.max() + 0.2, 2000000),
-                "lat": rng.uniform(elats.min() - 0.2, elats.max() + 0.2, 2000000),
-                "lst_k": rng.uniform(260.0, 330.0, 2000000),
-            })).repartition(CPUS).write.mode("overwrite").parquet(pts_path)
-        epts = spark.read.parquet(pts_path)
-        return spatial.enrich_pixels(epts, aoi_pdf, st_pdf, k=2, how="left")
     raise SystemExit(f"unknown operator {name}")
 
 

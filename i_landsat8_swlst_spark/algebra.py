@@ -25,10 +25,8 @@ else arm).
 from __future__ import annotations
 
 import ast
-from typing import Iterator
 
 import numpy as np
-import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -36,7 +34,7 @@ from pyspark.sql.types import (
 )
 
 from . import codecs
-from .pipeline import _batch_from_cols, _batch_rows, _finite_stats
+from .pipeline import _PLANE_IDS, _TILE_KEY, _finite_stats, _tile_map
 
 def _if_(c, a, b):
     # GRASS r.mapcalc parity: if(NULL, a, b) is NULL, not the else arm —
@@ -155,6 +153,12 @@ ALGEBRA_SCHEMA = StructType([
 ])
 
 
+def _plane_stats(out: np.ndarray) -> tuple:
+    """ALGEBRA_SCHEMA's values after the ids: f32 plane bytes + stats."""
+    return (np.ascontiguousarray(out).astype("<f4").tobytes(),
+            *_finite_stats(out))
+
+
 def map_algebra(tiles: DataFrame, expr: str,
                 inputs: dict[str, str] | None = None) -> DataFrame:
     """Evaluate a map-algebra expression over raster tile columns.
@@ -172,30 +176,13 @@ def map_algebra(tiles: DataFrame, expr: str,
     names = list(inputs)
     fn_expr = compile_expr(expr, names)  # compile on the driver: fail fast
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in ALGEBRA_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                env = {
-                    n: codecs.decode_f32bt(getattr(row, c), w, h).astype(np.float64)
-                    for n, c in inputs.items()
-                }
-                out = np.broadcast_to(
-                    np.asarray(fn_expr(env), dtype=np.float64), (h, w))
-                n_valid, vmin, vmax, vmean = _finite_stats(out)
-                ap["image_id"](getattr(row, "image_id", None))
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
-                ap["w"](w); ap["h"](h)
-                ap["out_bytes"](np.ascontiguousarray(out).astype("<f4").tobytes())
-                ap["n_valid"](n_valid)
-                ap["out_min"](vmin); ap["out_max"](vmax); ap["out_mean"](vmean)
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, ALGEBRA_SCHEMA)
+    def fn(row, w, h):
+        env = {n: codecs.decode_f32bt(getattr(row, c), w, h).astype(np.float64)
+               for n, c in inputs.items()}
+        return _plane_stats(np.broadcast_to(
+            np.asarray(fn_expr(env), dtype=np.float64), (h, w)))
 
-    return tiles.mapInArrow(fn, ALGEBRA_SCHEMA)
+    return _tile_map(tiles, ALGEBRA_SCHEMA, fn, _PLANE_IDS)
 
 
 # --------------------------------------------------------------------------
@@ -257,29 +244,17 @@ def resample_tiles(tiles: DataFrame, scale: float,
     w/h are the scaled dims. numpy-oracle parity in tests/test_algebra.py."""
     if scale <= 0:
         raise ValueError(f"scale must be positive, got {scale}")
-    compile_ok = method in ("nearest", "bilinear")
-    if not compile_ok:
+    if method not in ("nearest", "bilinear"):
         raise ValueError(f"method must be 'nearest' or 'bilinear', got {method!r}")
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in RESAMPLE_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                ow, oh = max(1, round(w * scale)), max(1, round(h * scale))
-                plane = codecs.decode_f32bt(getattr(row, src_col), w, h).astype(np.float64)
-                out = resample_plane(plane, oh, ow, method)
-                ap["image_id"](getattr(row, "image_id", None))
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
-                ap["w"](ow); ap["h"](oh)
-                ap["out_bytes"](np.ascontiguousarray(out).astype("<f4").tobytes())
-                ap["n_valid"](int(np.isfinite(out).sum()))
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, RESAMPLE_SCHEMA)
+    def fn(row, w, h):
+        ow, oh = max(1, round(w * scale)), max(1, round(h * scale))
+        plane = codecs.decode_f32bt(getattr(row, src_col), w, h).astype(np.float64)
+        out = resample_plane(plane, oh, ow, method)
+        return (ow, oh, np.ascontiguousarray(out).astype("<f4").tobytes(),
+                int(np.isfinite(out).sum()))
 
-    return tiles.mapInArrow(fn, RESAMPLE_SCHEMA)
+    return _tile_map(tiles, RESAMPLE_SCHEMA, fn, ("image_id", *_TILE_KEY))
 
 
 # --------------------------------------------------------------------------
@@ -398,25 +373,8 @@ def reclass_tiles(tiles: DataFrame, rules_text: str,
     (src_col,) = inputs.values()
     rules = parse_reclass_rules(rules_text)  # driver-side: fail fast
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in ALGEBRA_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                x = codecs.decode_f32bt(getattr(row, src_col), w, h) \
-                    .astype(np.float64)
-                out = reclass_plane(x, rules)
-                n_valid, vmin, vmax, vmean = _finite_stats(out)
-                ap["image_id"](getattr(row, "image_id", None))
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
-                ap["w"](w); ap["h"](h)
-                ap["out_bytes"](np.ascontiguousarray(out)
-                                .astype("<f4").tobytes())
-                ap["n_valid"](n_valid)
-                ap["out_min"](vmin); ap["out_max"](vmax); ap["out_mean"](vmean)
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, ALGEBRA_SCHEMA)
+    def fn(row, w, h):
+        x = codecs.decode_f32bt(getattr(row, src_col), w, h).astype(np.float64)
+        return _plane_stats(reclass_plane(x, rules))
 
-    return tiles.mapInArrow(fn, ALGEBRA_SCHEMA)
+    return _tile_map(tiles, ALGEBRA_SCHEMA, fn, _PLANE_IDS)

@@ -64,8 +64,12 @@ from pyspark.sql.types import (
     StructField, StructType,
 )
 
-from .multiband import _decode_stack, band_moments
-from .pipeline import _batch_rows
+from .multiband import (
+    _MOMENT_SCHEMA, _decode_stack, _moment_sums, _positional_sum, band_moments,
+)
+from .pipeline import (
+    _PLANE_IDS, _arrow_schema, _batch_from_cols, _batch_rows, _tile_map, _tile_rows,
+)
 
 _KM_MODEL_SCHEMA = StructType([
     StructField("scene_id", StringType()),
@@ -123,10 +127,7 @@ def class_features(tiles: DataFrame, band_cols: list[str]) -> DataFrame:
     so callers persist MEMORY_AND_DISK and it spills rather than OOMs —
     at 100 TB that is iters x (scan+decode) traded for 1 x decode + spill
     reads of a columnar-compact array column."""
-
-    arrow = pa.schema([pa.field("scene_id", pa.string()),
-                       pa.field("n", pa.int64()),
-                       pa.field("xflat", pa.list_(pa.float64()))])
+    arrow = _arrow_schema(_FEAT_SCHEMA)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -170,43 +171,19 @@ def _moments_from_features(feats: DataFrame, b: int) -> DataFrame:
     """band_moments' (scene_id, n, sums) tiny frame, sourced from a
     class_features frame instead of raw tile bytes — same positional
     map-side-combining reduction, zero additional decodes."""
-    arrow = pa.schema([pa.field("scene_id", pa.string()),
-                       pa.field("n", pa.int64()),
-                       pa.field("sums", pa.list_(pa.float64()))])
-
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        iu = np.triu_indices(b)
         for batch in batches:
-            cols: dict[str, list] = {"scene_id": [], "n": [], "sums": []}
-            ap = {k: v.append for k, v in cols.items()}
             names = batch.schema.names
-            sid = batch.column(names.index("scene_id")).to_pylist()
             flat, offs = _list_views(batch.column(names.index("xflat")))
-            for i in range(batch.num_rows):
-                x = flat[offs[i]:offs[i + 1]].reshape(-1, b)
-                cross = x.T @ x
-                ap["scene_id"](sid[i])
-                ap["n"](int(x.shape[0]))
-                ap["sums"](list(x.sum(axis=0)) + list(cross[iu]))
-            if cols["scene_id"]:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(cols[f.name], type=f.type) for f in arrow],
-                    schema=arrow)
+            xs = [flat[offs[i]:offs[i + 1]].reshape(-1, b)
+                  for i in range(batch.num_rows)]
+            if xs:
+                yield _batch_from_cols({
+                    "scene_id": batch.column(names.index("scene_id")).to_pylist(),
+                    "n": [x.shape[0] for x in xs],
+                    "sums": [_moment_sums(x) for x in xs]}, _MOMENT_SCHEMA)
 
-    parts = feats.mapInArrow(fn, StructType([
-        StructField("scene_id", StringType()),
-        StructField("n", LongType()),
-        StructField("sums", ArrayType(DoubleType()))]))
-    return (
-        parts.select("scene_id", "n", F.posexplode("sums").alias("pos", "v"))
-        .groupBy("scene_id", "pos")
-        .agg(F.sum("v").alias("v"),
-             F.sum(F.when(F.col("pos") == 0, F.col("n"))).alias("n_part"))
-        .groupBy("scene_id")
-        .agg(F.max("n_part").alias("n"),
-             F.array_sort(F.collect_list(F.struct("pos", "v"))).alias("sv"))
-        .select("scene_id", "n", F.expr("transform(sv, s -> s.v)").alias("sums"))
-    )
+    return _positional_sum(feats.mapInArrow(fn, _MOMENT_SCHEMA), ["scene_id"])
 
 
 def _assign(x: np.ndarray, centers: np.ndarray) -> np.ndarray:
@@ -216,6 +193,18 @@ def _assign(x: np.ndarray, centers: np.ndarray) -> np.ndarray:
     argmin lowest-index tie-break."""
     d = ((x[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
     return d.argmin(axis=1)
+
+
+def _class_sums(x: np.ndarray, k: int, centers, with_cross: bool):
+    """(cls, n, sums) per non-empty class of the (n, B) stack ``x`` under
+    nearest-center assignment: ΣX, plus the upper-tri ΣX·Xᵀ when
+    ``with_cross``."""
+    a = _assign(x, np.asarray(centers, dtype=np.float64).reshape(k, x.shape[1]))
+    for cls in range(k):
+        sel = x[a == cls]
+        if sel.shape[0]:
+            yield (cls, sel.shape[0],
+                   _moment_sums(sel) if with_cross else sel.sum(axis=0))
 
 
 def _class_partials(tiles: DataFrame, band_cols: list[str],
@@ -228,75 +217,36 @@ def _class_partials(tiles: DataFrame, band_cols: list[str],
     ``decoded`` the source is a class_features frame (xflat arrays, no
     decode) instead of raw tile bytes."""
     b = len(band_cols)
-    arrow = pa.schema([pa.field("scene_id", pa.string()),
-                       pa.field("cls", pa.int32()),
-                       pa.field("n", pa.int64()),
-                       pa.field("sums", pa.list_(pa.float64()))])
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        iu = np.triu_indices(b)
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in _PART_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-
-            def emit(sid, x, k, centers_flat):
-                centers = np.asarray(
-                    centers_flat, dtype=np.float64).reshape(k, b)
-                a = _assign(x, centers)
-                for cls in range(k):
-                    sel = x[a == cls]
-                    if sel.shape[0] == 0:
-                        continue
-                    s = list(sel.sum(axis=0))
-                    if with_cross:
-                        s += list((sel.T @ sel)[iu])
-                    ap["scene_id"](sid)
-                    ap["cls"](cls)
-                    ap["n"](int(sel.shape[0]))
-                    ap["sums"](s)
-
-            if decoded:
-                # Arrow-native views (no to_pylist of the big value buffer)
-                names = batch.schema.names
-                sid = batch.column(names.index("scene_id")).to_pylist()
-                kk = batch.column(names.index("k")).to_pylist()
-                cen = batch.column(names.index("centers")).to_pylist()
-                flat, offs = _list_views(batch.column(names.index("xflat")))
-                for i in range(batch.num_rows):
-                    if cen[i] is None:       # scene with no model row
-                        continue
-                    x = flat[offs[i]:offs[i + 1]].reshape(-1, b)
-                    if x.shape[0]:
-                        emit(sid[i], x, int(kk[i]), cen[i])
-            else:
-                for row in _batch_rows(batch):
-                    if row.centers is None:  # scene with no model row
-                        continue
-                    x = _decode_stack(row, band_cols)
-                    x = x[np.isfinite(x).all(axis=1)]
-                    if x.shape[0]:
-                        emit(row.scene_id, x, int(row.k), row.centers)
-            if cols["scene_id"]:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(cols[f.name], type=f.type) for f in arrow],
-                    schema=arrow)
-
     proj = (tiles.select("scene_id", "xflat") if decoded
             else tiles.select("scene_id", "w", "h", *band_cols))
     src = proj.join(F.broadcast(centers_df.select("scene_id", "k", "centers")),
                     on="scene_id", how="left")
-    parts = src.mapInArrow(fn, _PART_SCHEMA)
-    return (
-        parts.select("scene_id", "cls", "n", F.posexplode("sums").alias("pos", "v"))
-        .groupBy("scene_id", "cls", "pos")
-        .agg(F.sum("v").alias("v"),
-             F.sum(F.when(F.col("pos") == 0, F.col("n"))).alias("n_part"))
-        .groupBy("scene_id", "cls")
-        .agg(F.max("n_part").alias("n"),
-             F.array_sort(F.collect_list(F.struct("pos", "v"))).alias("sv"))
-        .select("scene_id", "cls", "n",
-                F.expr("transform(sv, s -> s.v)").alias("sums"))
-    )
+    if decoded:
+        def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            for batch in batches:
+                # Arrow-native views (no to_pylist of the big value buffer)
+                names = batch.schema.names
+                sid, kk, cen = (batch.column(names.index(c)).to_pylist()
+                                for c in ("scene_id", "k", "centers"))
+                flat, offs = _list_views(batch.column(names.index("xflat")))
+                rows = [(sid[i], *p) for i in range(batch.num_rows)
+                        if cen[i] is not None    # scene with no model row
+                        for p in _class_sums(flat[offs[i]:offs[i + 1]].reshape(-1, b),
+                                             int(kk[i]), cen[i], with_cross)]
+                if rows:
+                    yield _batch_from_cols(
+                        dict(zip(_PART_SCHEMA.names, zip(*rows))), _PART_SCHEMA)
+
+        parts = src.mapInArrow(fn, _PART_SCHEMA)
+    else:
+        def fn(row, w, h):
+            if row.centers is not None:  # scene with no model row
+                x = _decode_stack(row, band_cols)
+                yield from _class_sums(x[np.isfinite(x).all(axis=1)], int(row.k),
+                                       row.centers, with_cross)
+
+        parts = _tile_rows(src, _PART_SCHEMA, fn, ("scene_id",))
+    return _positional_sum(parts, ["scene_id", "cls"])
 
 
 def _init_from_moments(moments: DataFrame, band_cols: list[str],
@@ -458,66 +408,36 @@ def classify_tiles(tiles: DataFrame, band_cols: list[str],
     else:
         model = model_df.select("scene_id", "k", "means", "invcov", "logdet")
 
-    # _batch_from_cols only maps scalar field types; counts needs an
-    # explicit Arrow schema (the band_moments pattern)
-    arrow = pa.schema([
-        pa.field("image_id", pa.string()), pa.field("scene_id", pa.string()),
-        pa.field("tile_x", pa.int32()), pa.field("tile_y", pa.int32()),
-        pa.field("w", pa.int32()), pa.field("h", pa.int32()),
-        pa.field("class_bytes", pa.binary()), pa.field("score_bytes", pa.binary()),
-        pa.field("n_valid", pa.int64()), pa.field("counts", pa.list_(pa.int64())),
-    ])
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in CLASSIFY_SCHEMA}
-            ap = {k_: v.append for k_, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                x = _decode_stack(row, band_cols)
-                ok = np.isfinite(x).all(axis=1)
-                cls_plane = np.full(w * h, 255, dtype=np.uint8)
-                score = np.full(w * h, np.nan, dtype=np.float32)
-                has_model = getattr(row, "k", None) is not None
-                k = int(row.k) if has_model else 0
-                counts = np.zeros(k, dtype=np.int64)
-                if has_model and ok.any():
-                    xv = x[ok]
-                    if getattr(row, "centers", None) is not None:
-                        centers = np.asarray(row.centers,
-                                             dtype=np.float64).reshape(k, b)
-                        d = ((xv[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
-                        a = d.argmin(axis=1)
-                        sc = -d[np.arange(d.shape[0]), a]
-                    else:
-                        means = np.asarray(row.means,
-                                           dtype=np.float64).reshape(k, b)
-                        invcov = np.asarray(row.invcov,
-                                            dtype=np.float64).reshape(k, b, b)
-                        logdet = np.asarray(row.logdet, dtype=np.float64)
-                        g = np.empty((xv.shape[0], k))
-                        for c in range(k):
-                            dx = xv - means[c]
-                            g[:, c] = (-0.5 * logdet[c]
-                                       - 0.5 * np.einsum(
-                                           "nb,nb->n", dx @ invcov[c], dx))
-                        a = g.argmax(axis=1)
-                        sc = g[np.arange(g.shape[0]), a]
-                    cls_plane[ok] = a.astype(np.uint8)
-                    score[ok] = sc.astype(np.float32)
-                    counts = np.bincount(a, minlength=k)
-                ap["image_id"](getattr(row, "image_id", None))
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](int(row.tile_x)); ap["tile_y"](int(row.tile_y))
-                ap["w"](w); ap["h"](h)
-                ap["class_bytes"](cls_plane.tobytes())
-                ap["score_bytes"](score.tobytes())
-                ap["n_valid"](int(ok.sum()))
-                ap["counts"]([int(c) for c in counts])
-            if cols["scene_id"]:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(cols[f.name], type=f.type) for f in arrow],
-                    schema=arrow)
+    def fn(row, w, h):
+        x = _decode_stack(row, band_cols)
+        ok = np.isfinite(x).all(axis=1)
+        cls_plane = np.full(w * h, 255, dtype=np.uint8)
+        score = np.full(w * h, np.nan, dtype=np.float32)
+        has_model = getattr(row, "k", None) is not None
+        k = int(row.k) if has_model else 0
+        counts = np.zeros(k, dtype=np.int64)
+        if has_model and ok.any():
+            xv = x[ok]
+            if getattr(row, "centers", None) is not None:
+                centers = np.asarray(row.centers, dtype=np.float64).reshape(k, b)
+                d = ((xv[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
+                a = d.argmin(axis=1)
+                sc = -d[np.arange(d.shape[0]), a]
+            else:
+                means = np.asarray(row.means, dtype=np.float64).reshape(k, b)
+                invcov = np.asarray(row.invcov, dtype=np.float64).reshape(k, b, b)
+                logdet = np.asarray(row.logdet, dtype=np.float64)
+                g = np.empty((xv.shape[0], k))
+                for c in range(k):
+                    dx = xv - means[c]
+                    g[:, c] = (-0.5 * logdet[c]
+                               - 0.5 * np.einsum("nb,nb->n", dx @ invcov[c], dx))
+                a = g.argmax(axis=1)
+                sc = g[np.arange(g.shape[0]), a]
+            cls_plane[ok] = a.astype(np.uint8)
+            score[ok] = sc.astype(np.float32)
+            counts = np.bincount(a, minlength=k)
+        return cls_plane.tobytes(), score.tobytes(), int(ok.sum()), counts
 
     from .pipeline import spread_tiles
 
@@ -525,7 +445,7 @@ def classify_tiles(tiles: DataFrame, band_cols: list[str],
     keep = [c for c in keep if c in tiles.columns]
     src = spread_tiles(tiles.select(*keep)) \
         .join(F.broadcast(model), on="scene_id", how="left")
-    return src.mapInArrow(fn, CLASSIFY_SCHEMA)
+    return _tile_map(src, CLASSIFY_SCHEMA, fn, _PLANE_IDS)
 
 
 def kappa_stats(crosstab: DataFrame, col_a: str = "class_a",

@@ -42,20 +42,17 @@ r.watershed's accumulation counts (each cell counts itself).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
-    BinaryType, BooleanType, DoubleType, IntegerType, LongType, StringType,
+    ArrayType, BinaryType, BooleanType, DoubleType, IntegerType, LongType, StringType,
     StructField, StructType,
 )
 
 from .pipeline import (
-    _TILE_IDS, _TILE_KEY, _batch_from_cols, _batch_rows, _halo_fixpoint,
-    _nominal_grid, _plane_map, _tile_map, halo_plane_tiles,
+    _TILE_IDS, _TILE_KEY, _halo_fixpoint, _nominal_grid, _plane_map, _tile_map,
+    _tile_rows, halo_plane_tiles,
 )
 
 # D8 neighbor order (dy, dx) — fixed, ties broken by FIRST index with the
@@ -307,13 +304,9 @@ _TILE_STATE_SCHEMA = StructType([
     StructField("h", IntegerType()),
     StructField("label_bytes", BinaryType()),  # i64: pit gid | ~foreign gid
                                                # | _NODATA_I64
-])
-
-_LINK_SCHEMA = StructType([
-    StructField("scene_id", StringType()),
-    StructField("gid", LongType()),
-    StructField("nxt", LongType()),
-    StructField("final", IntegerType()),       # 1 = nxt is a basin label
+    StructField("gids", ArrayType(LongType())),  # the tile's link rows
+    StructField("nxt", ArrayType(LongType())),
+    StructField("fin", ArrayType(LongType())),
 ])
 
 _FOREIGN_SCHEMA = StructType([               # pending foreign gids per tile
@@ -431,29 +424,20 @@ def basin_tiles(tiles: DataFrame, src_col: str = "lst_bytes",
     dir_pads = halo_plane_tiles(dirs, r=1, src_col="dir_bytes")
 
     def resolve_fn(row, w, h):
-        label, _, _, _ = _tile_resolution(
+        label, gids, nxt, fin = _tile_resolution(
             _dir_pad(row, w, h), int(row.tile_x), int(row.tile_y), nom_w, nom_h)
-        return label.astype("<i8").tobytes(),
+        return label.astype("<i8").tobytes(), gids, nxt, fin
 
-    def links_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            lcols = {f.name: [] for f in _LINK_SCHEMA}
-            lap = {k: v.append for k, v in lcols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                _, gids, nxt, fin = _tile_resolution(
-                    _dir_pad(row, w, h), int(row.tile_x), int(row.tile_y),
-                    nom_w, nom_h)
-                for g, nx, fi in zip(gids.tolist(), nxt.tolist(), fin.tolist()):
-                    lap["scene_id"](row.scene_id)
-                    lap["gid"](g); lap["nxt"](nx); lap["final"](int(fi))
-            if lcols["scene_id"]:
-                yield _batch_from_cols(lcols, _LINK_SCHEMA)
-
-    pads_ck = dir_pads.localCheckpoint()
-    tiles_state = _tile_map(pads_ck, _TILE_STATE_SCHEMA, resolve_fn,
-                            _TILE_IDS).localCheckpoint()
-    links = pads_ck.mapInArrow(links_fn, _LINK_SCHEMA).localCheckpoint()
+    # one resolution per tile: the label plane and the tile's link rows come
+    # out of the same pass; Catalyst unzips the link arrays into
+    # (scene_id, gid, nxt, final) rows, final = 1 when nxt is a basin label
+    resolved = _tile_map(dir_pads, _TILE_STATE_SCHEMA, resolve_fn,
+                         _TILE_IDS).localCheckpoint()
+    tiles_state = resolved.drop("gids", "nxt", "fin")
+    links = resolved.select(
+        "scene_id", F.inline(F.arrays_zip("gids", "nxt", "fin"))).select(
+        "scene_id", F.col("gids").alias("gid"), "nxt",
+        F.col("fin").cast("int").alias("final")).localCheckpoint()
 
     # pointer doubling: links where final=0 point at ANOTHER border cell
     # (the entry cell in a neighbor tile), which always has a link row.
@@ -466,22 +450,11 @@ def basin_tiles(tiles: DataFrame, src_col: str = "lst_bytes",
         raise RuntimeError(f"basin links did not resolve in {max_rounds} rounds")
 
     # per-tile foreign-gid -> basin map (small: <= perimeter distinct gids)
-    def foreign_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols = {f.name: [] for f in _FOREIGN_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                lab = np.frombuffer(row.label_bytes, dtype="<i8").reshape(h, w)
-                pend = lab[(lab < 0) & (lab != _NODATA_I64)]
-                for f_ in np.unique(~pend).tolist():
-                    ap["scene_id"](row.scene_id)
-                    ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
-                    ap["fgid"](f_)
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, _FOREIGN_SCHEMA)
+    def foreign_fn(row, w, h):
+        lab = np.frombuffer(row.label_bytes, dtype="<i8")
+        return ((f_,) for f_ in np.unique(~lab[(lab < 0) & (lab != _NODATA_I64)]).tolist())
 
-    foreign = tiles_state.mapInArrow(foreign_fn, _FOREIGN_SCHEMA)
+    foreign = _tile_rows(tiles_state, _FOREIGN_SCHEMA, foreign_fn, _TILE_KEY)
     fmap = (
         foreign.join(links.withColumnRenamed("gid", "fgid"),
                      ["scene_id", "fgid"])

@@ -33,10 +33,7 @@ partials themselves are exact f64 sums over f32 planes.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
@@ -45,7 +42,7 @@ from pyspark.sql.types import (
 )
 
 from . import codecs
-from .pipeline import _batch_from_cols, _batch_rows
+from .pipeline import _PLANE_IDS, _TILE_IDS, _TILE_KEY, _tile_map, _tile_rows
 
 _MOMENT_SCHEMA = StructType([
     StructField("scene_id", StringType()),
@@ -62,48 +59,42 @@ def _decode_stack(row, band_cols: list[str]) -> np.ndarray:
          for c in band_cols], axis=1)
 
 
+def _moment_sums(x: np.ndarray) -> np.ndarray:
+    """ΣX (B values), then the upper-triangular ΣX·Xᵀ of an (n, B) stack:
+    exact f64 partials within the tile."""
+    return np.concatenate([x.sum(axis=0), (x.T @ x)[np.triu_indices(x.shape[1])]])
+
+
+def _positional_sum(parts: DataFrame, keys: list[str]) -> DataFrame:
+    """The partials fold: (*keys, n, sums) rows summed position by position
+    per ``keys`` in ONE map-side-combining aggregation, then the positions
+    collected back into one ordered ``sums`` array."""
+    return (
+        parts.select(*keys, "n", F.posexplode("sums").alias("pos", "v"))
+        .groupBy(*keys, "pos")
+        .agg(F.sum("v").alias("v"),
+             # n repeats across a part's positions; fold it once
+             F.sum(F.when(F.col("pos") == 0, F.col("n"))).alias("n_part"))
+        .groupBy(*keys)
+        .agg(F.max("n_part").alias("n"),
+             F.array_sort(F.collect_list(F.struct("pos", "v"))).alias("sv"))
+        .select(*keys, "n", F.expr("transform(sv, s -> s.v)").alias("sums"))
+    )
+
+
 def band_moments(tiles: DataFrame, band_cols: list[str]) -> DataFrame:
     """Per-scene cross-moments of the band stack: one tiny row per scene
     holding n (pixels valid in every band), ΣX (B values) and the
     upper-triangular ΣX·Xᵀ (B(B+1)/2 values). Pixels never shuffle: the
     tile pass emits one (scene, partials) row per tile, and the positional
     sum is a single map-side-combining aggregation."""
-    b = len(band_cols)
-    # _batch_from_cols only maps scalar field types; arrays need an
-    # explicit Arrow schema
-    arrow = pa.schema([pa.field("scene_id", pa.string()),
-                       pa.field("n", pa.int64()),
-                       pa.field("sums", pa.list_(pa.float64()))])
+    def fn(row, w, h):
+        x = _decode_stack(row, band_cols)
+        x = x[np.isfinite(x).all(axis=1)]
+        yield x.shape[0], _moment_sums(x)
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in _MOMENT_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            iu = np.triu_indices(b)
-            for row in _batch_rows(batch):
-                x = _decode_stack(row, band_cols)
-                x = x[np.isfinite(x).all(axis=1)]
-                cross = x.T @ x  # exact f64 partials within the tile
-                ap["scene_id"](row.scene_id)
-                ap["n"](int(x.shape[0]))
-                ap["sums"](list(x.sum(axis=0)) + list(cross[iu]))
-            if cols["scene_id"]:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(cols[f.name], type=f.type) for f in arrow],
-                    schema=arrow)
-
-    parts = tiles.mapInArrow(fn, _MOMENT_SCHEMA)
-    return (
-        parts.select("scene_id", "n", F.posexplode("sums").alias("pos", "v"))
-        .groupBy("scene_id", "pos")
-        .agg(F.sum("v").alias("v"),
-             # n repeats across a tile's B(B+3)/2 positions; fold it once
-             F.sum(F.when(F.col("pos") == 0, F.col("n"))).alias("n_part"))
-        .groupBy("scene_id")
-        .agg(F.max("n_part").alias("n"),
-             F.array_sort(F.collect_list(F.struct("pos", "v"))).alias("sv"))
-        .select("scene_id", "n", F.expr("transform(sv, s -> s.v)").alias("sums"))
-    )
+    return _positional_sum(_tile_rows(tiles, _MOMENT_SCHEMA, fn, ("scene_id",)),
+                           ["scene_id"])
 
 
 def _eig_components(n: int, sums: list[float], b: int, k: int):
@@ -228,34 +219,21 @@ def pca_tiles(tiles: DataFrame, band_cols: list[str], k: int | None = None,
             schema="scene_id string, mean array<double>, comps array<double>")
     schema = _pca_schema(k)
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in schema}
-            ap = {kk: v.append for kk, v in cols.items()}
-            for row in _batch_rows(batch):
-                mean = np.asarray(row.mean)
-                vecs = np.asarray(row.comps).reshape(b, k)
-                w, h = int(row.w), int(row.h)
-                x = _decode_stack(row, band_cols)
-                ok = np.isfinite(x).all(axis=1)
-                proj = (np.nan_to_num(x) - mean) @ vecs
-                proj[~ok] = np.nan
-                ap["image_id"](getattr(row, "image_id", None))
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
-                ap["w"](w); ap["h"](h)
-                ap["n_valid"](int(ok.sum()))
-                for i in range(k):
-                    plane = proj[:, i].reshape(h, w)
-                    ap[f"pc{i+1}_bytes"](plane.astype("<f4").tobytes())
-                    ap[f"pc{i+1}_mean"](
-                        float(np.nanmean(plane)) if ok.any() else None)
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, schema)
+    def fn(row, w, h):
+        x = _decode_stack(row, band_cols)
+        ok = np.isfinite(x).all(axis=1)
+        proj = (np.nan_to_num(x) - np.asarray(row.mean)) \
+            @ np.asarray(row.comps).reshape(b, k)
+        proj[~ok] = np.nan
+        planes = [proj[:, i].reshape(h, w) for i in range(k)]
+        return (int(ok.sum()),
+                *[v for p in planes for v in (
+                    p.astype("<f4").tobytes(),
+                    float(np.nanmean(p)) if ok.any() else None)])
 
     # inner join: a scene without a model row (degenerate) cannot project
     src = tiles.join(F.broadcast(model_df), on="scene_id", how="inner")
-    return src.mapInArrow(fn, schema), model
+    return _tile_map(src, schema, fn, _PLANE_IDS), model
 
 
 # --------------------------------------------------------------------------
@@ -291,6 +269,13 @@ def _plane64(row, src_col: str) -> np.ndarray:
         getattr(row, src_col), int(row.w), int(row.h)).astype(np.float64)
 
 
+def _finite_range(buf: bytes, w: int, h: int) -> list[tuple[float, float]]:
+    """[(min, max)] of a plane's finite cells; [] when it has none."""
+    x = codecs.decode_f32bt(buf, w, h)
+    x = x[np.isfinite(x)]
+    return [(float(x.min()), float(x.max()))] if x.size else []
+
+
 def scene_ranges_df(tiles: DataFrame, src_col: str) -> DataFrame:
     """Per-scene finite (min, max) of one plane column as a TINY DataFrame
     (scene_id, vmin, vmax) — one scan, one map-side-combining agg, nothing
@@ -299,25 +284,15 @@ def scene_ranges_df(tiles: DataFrame, src_col: str) -> DataFrame:
     finite pixels has no row, so those joins are LEFT and the kernels fall
     back to the (0.0, 1.0) dummy range (an all-NaN plane quantizes
     identically under any range)."""
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in _RANGE_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                x = _plane64(row, src_col)
-                x = x[np.isfinite(x)]
-                if x.size:
-                    ap["scene_id"](row.scene_id)
-                    ap["vmin"](float(x.min())); ap["vmax"](float(x.max()))
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, _RANGE_SCHEMA)
+    def fn(row, w, h):
+        return _finite_range(getattr(row, src_col), w, h)
 
     from .pipeline import spread_tiles
 
     # mapInArrow cannot column-prune: select only what the scan reads so
     # sibling plane columns never serialize through Arrow for a range agg
-    return (spread_tiles(tiles.select("scene_id", "w", "h", src_col))
-            .mapInArrow(fn, _RANGE_SCHEMA)
+    src = spread_tiles(tiles.select("scene_id", "w", "h", src_col))
+    return (_tile_rows(src, _RANGE_SCHEMA, fn, ("scene_id",))
             .groupBy("scene_id")
             .agg(F.min("vmin").alias("vmin"), F.max("vmax").alias("vmax")))
 
@@ -343,47 +318,17 @@ def scene_histograms_df(tiles: DataFrame, src_col: str,
     per-scene range broadcast-joins onto the tiles, per-tile np.bincount,
     ONE map-side-combining agg. Only non-empty bins emit, so the exchange
     carries <= bins tiny rows per scene."""
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in _HIST_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                if row.vmin is None:
-                    continue  # zero-finite scene: no histogram rows
-                x = _plane64(row, src_col)
-                x = x[np.isfinite(x)]
-                if not x.size:
-                    continue
-                c = np.bincount(_bin_plane(x, row.vmin, row.vmax, bins),
-                                minlength=bins)
-                for b in np.nonzero(c)[0]:
-                    ap["scene_id"](row.scene_id)
-                    ap["bin"](int(b)); ap["cnt"](int(c[b]))
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, _HIST_SCHEMA)
+    def fn(row, w, h):
+        if row.vmin is not None:  # zero-finite scene: no histogram rows
+            x = _plane64(row, src_col)
+            c = np.bincount(_bin_plane(x[np.isfinite(x)], row.vmin, row.vmax, bins),
+                            minlength=bins)
+            yield from ((int(b), int(c[b])) for b in np.flatnonzero(c))
 
     src = (tiles.select("scene_id", "w", "h", src_col)
            .join(F.broadcast(ranges_df), on="scene_id", how="left"))
-    return (src.mapInArrow(fn, _HIST_SCHEMA)
+    return (_tile_rows(src, _HIST_SCHEMA, fn, ("scene_id",))
             .groupBy("scene_id", "bin").agg(F.sum("cnt").alias("cnt")))
-
-
-def scene_histograms(tiles: DataFrame, src_col: str,
-                     ranges: dict[str, tuple], bins: int) -> dict[str, np.ndarray]:
-    """Dict form of scene_histograms_df (collected) — oracle/small-scale
-    convenience; scenes present in ``ranges`` but with zero counted pixels
-    come back as all-zero histograms."""
-    import pandas as pd
-
-    spark = tiles.sparkSession
-    ranges_df = spark.createDataFrame(
-        pd.DataFrame([{"scene_id": s, "vmin": lo, "vmax": hi}
-                      for s, (lo, hi) in ranges.items()]),
-        schema="scene_id string, vmin double, vmax double")
-    out = {s: np.zeros(bins, dtype=np.int64) for s in ranges}
-    for r in scene_histograms_df(tiles, src_col, ranges_df, bins).collect():
-        out[r["scene_id"]][int(r["bin"])] = int(r["cnt"])
-    return out
 
 
 STRETCH_SCHEMA = StructType([
@@ -470,35 +415,22 @@ def stretch_tiles(tiles: DataFrame, src_col: str = "lst_bytes",
     luts_df = stretch_luts_df(tiles, src_col, mode, lo_pct, hi_pct,
                               bins).localCheckpoint()
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in STRETCH_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                x = _plane64(row, src_col)
-                if row.lut_bytes is None:     # zero-finite scene: no model
-                    ok = np.zeros(x.shape, dtype=bool)
-                    out = np.zeros(x.shape, dtype=np.uint8)
-                else:
-                    lut = np.frombuffer(row.lut_bytes, dtype=np.uint8)
-                    ok = np.isfinite(x)
-                    out = np.zeros(x.shape, dtype=np.uint8)
-                    out[ok] = lut[_bin_plane(x[ok], row.vmin, row.vmax, bins)]
-                ap["image_id"](getattr(row, "image_id", None))
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
-                ap["w"](int(row.w)); ap["h"](int(row.h))
-                ap["out_bytes"](out.tobytes())
-                ap["mask_bytes"](ok.astype(np.uint8).tobytes())
-                ap["n_valid"](int(ok.sum()))
-                ap["out_mean"](float(out[ok].mean()) if ok.any() else None)
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, STRETCH_SCHEMA)
+    def fn(row, w, h):
+        x = _plane64(row, src_col)
+        out = np.zeros(x.shape, dtype=np.uint8)
+        if row.lut_bytes is None:     # zero-finite scene: no model
+            ok = np.zeros(x.shape, dtype=bool)
+        else:
+            lut = np.frombuffer(row.lut_bytes, dtype=np.uint8)
+            ok = np.isfinite(x)
+            out[ok] = lut[_bin_plane(x[ok], row.vmin, row.vmax, bins)]
+        return (out.tobytes(), ok.astype(np.uint8).tobytes(), int(ok.sum()),
+                float(out[ok].mean()) if ok.any() else None)
 
     src = tiles.join(F.broadcast(luts_df), on="scene_id", how="left")
     luts = {r["scene_id"]: np.frombuffer(r["lut_bytes"], dtype=np.uint8)
             for r in luts_df.collect()}
-    return src.mapInArrow(fn, STRETCH_SCHEMA), luts
+    return _tile_map(src, STRETCH_SCHEMA, fn, _PLANE_IDS), luts
 
 
 # --------------------------------------------------------------------------
@@ -558,55 +490,36 @@ def pansharpen_tiles(tiles: DataFrame, pan_col: str, band_cols: list[str],
     nb = len(band_cols)
     schema = _pansharp_schema(nb)
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in schema}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                pw, ph = w * ratio, h * ratio
-                pan_bytes = getattr(row, pan_col)
-                if len(pan_bytes) != pw * ph * 4:
-                    raise ValueError(
-                        f"pan payload is {len(pan_bytes)} bytes, expected "
-                        f"{pw}x{ph} f32 = {pw * ph * 4} (ratio={ratio}, "
-                        f"scene {row.scene_id}, tile "
-                        f"({int(row.tile_x)},{int(row.tile_y)}))")
-                pan = codecs.decode_f32bt(pan_bytes, pw, ph) \
-                    .astype(np.float64)
-                bands = [resample_plane(
-                    codecs.decode_f32bt(getattr(row, c), w, h)
-                    .astype(np.float64), ph, pw, "bilinear")
-                    for c in band_cols]
-                stack = np.stack(bands)
-                intensity = stack.mean(axis=0)
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    if method == "brovey":
-                        gain = np.where(intensity == 0, np.nan,
-                                        pan / intensity)
-                        out = stack * gain
-                    else:
-                        out = stack + (pan - intensity)
-                ok = np.isfinite(out).all(axis=0)
-                ap["image_id"](getattr(row, "image_id", None))
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
-                ap["w"](pw); ap["h"](ph)
-                ap["n_valid"](int(ok.sum()))
-                for i in range(nb):
-                    plane = out[i].astype("<f4")
-                    ap[f"ps{i+1}_bytes"](plane.tobytes())
-                    any_ok = bool(np.isfinite(plane).any())
-                    ap[f"ps{i+1}_mean"](
-                        float(np.nanmean(plane)) if any_ok else None)
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, schema)
+    def fn(row, w, h):
+        pw, ph = w * ratio, h * ratio
+        pan_bytes = getattr(row, pan_col)
+        if len(pan_bytes) != pw * ph * 4:
+            raise ValueError(
+                f"pan payload is {len(pan_bytes)} bytes, expected "
+                f"{pw}x{ph} f32 = {pw * ph * 4} (ratio={ratio}, "
+                f"scene {row.scene_id}, tile "
+                f"({int(row.tile_x)},{int(row.tile_y)}))")
+        pan = codecs.decode_f32bt(pan_bytes, pw, ph).astype(np.float64)
+        stack = np.stack([resample_plane(
+            codecs.decode_f32bt(getattr(row, c), w, h).astype(np.float64),
+            ph, pw, "bilinear") for c in band_cols])
+        intensity = stack.mean(axis=0)
+        with np.errstate(invalid="ignore", divide="ignore"):
+            if method == "brovey":
+                out = stack * np.where(intensity == 0, np.nan, pan / intensity)
+            else:
+                out = stack + (pan - intensity)
+        planes = [out[i].astype("<f4") for i in range(nb)]
+        return (pw, ph, int(np.isfinite(out).all(axis=0).sum()),
+                *[v for p in planes for v in (
+                    p.tobytes(),
+                    float(np.nanmean(p)) if np.isfinite(p).any() else None)])
 
     # mapInArrow cannot column-prune: ship only what the kernel reads
     src = tiles.select(
         "scene_id", "tile_x", "tile_y", "w", "h", pan_col, *band_cols,
         *[c for c in ("image_id",) if c in tiles.columns])
-    return src.mapInArrow(fn, schema)
+    return _tile_map(src, schema, fn, ("image_id", *_TILE_KEY))
 
 
 # --------------------------------------------------------------------------
@@ -693,30 +606,19 @@ def histo_match_tiles(tiles: DataFrame, ref_scene: str,
                .groupBy("scene_id").applyInPandas(mk, _MATCH_LUT_SCHEMA)
                .localCheckpoint())
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in HISTO_MATCH_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                x = _plane64(row, src_col)
-                out = np.full(x.shape, np.nan, dtype=np.float64)
-                if row.lut_bytes is not None:
-                    lut = np.frombuffer(row.lut_bytes, dtype="<f4")
-                    ok = np.isfinite(x)
-                    out[ok] = lut[_bin_plane(x[ok], row.vmin, row.vmax, bins)]
-                ok = np.isfinite(out)
-                ap["image_id"](getattr(row, "image_id", None))
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
-                ap["w"](int(row.w)); ap["h"](int(row.h))
-                ap["out_bytes"](out.astype("<f4").tobytes())
-                ap["n_valid"](int(ok.sum()))
-                ap["out_mean"](float(out[ok].mean()) if ok.any() else None)
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, HISTO_MATCH_SCHEMA)
+    def fn(row, w, h):
+        x = _plane64(row, src_col)
+        out = np.full(x.shape, np.nan, dtype=np.float64)
+        if row.lut_bytes is not None:
+            lut = np.frombuffer(row.lut_bytes, dtype="<f4")
+            ok = np.isfinite(x)
+            out[ok] = lut[_bin_plane(x[ok], row.vmin, row.vmax, bins)]
+        ok = np.isfinite(out)
+        return (out.astype("<f4").tobytes(), int(ok.sum()),
+                float(out[ok].mean()) if ok.any() else None)
 
     src = tiles.join(F.broadcast(luts_df), on="scene_id", how="left")
-    return src.mapInArrow(fn, HISTO_MATCH_SCHEMA), luts_df
+    return _tile_map(src, HISTO_MATCH_SCHEMA, fn, _PLANE_IDS), luts_df
 
 
 # --------------------------------------------------------------------------
@@ -790,30 +692,15 @@ def ndvi_emissivity_tiles(tiles: DataFrame, red_col: str, nir_col: str,
     if not (ndvi_veg > ndvi_soil):
         raise ValueError("ndvi_veg must exceed ndvi_soil")
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in NDVI_EMIS_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                red = codecs.decode_f32bt(getattr(row, red_col), w, h)
-                nir = codecs.decode_f32bt(getattr(row, nir_col), w, h)
-                nd = ndvi_plane(red, nir)
-                eps = emissivity_from_ndvi_plane(
-                    nd, ndvi_soil, ndvi_veg, eps_soil, eps_veg, cavity)
-                nd32 = nd.astype("<f4")
-                m = np.isfinite(nd)
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](int(row.tile_x)); ap["tile_y"](int(row.tile_y))
-                ap["w"](w); ap["h"](h)
-                ap["ndvi_bytes"](nd32.tobytes())
-                ap["emis_bytes"](eps.astype("<f4").tobytes())
-                ap["n_valid"](int(m.sum()))
-                ap["ndvi_mean"](float(np.nanmean(nd)) if m.any()
-                                else float("nan"))
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, NDVI_EMIS_SCHEMA)
+    def fn(row, w, h):
+        nd = ndvi_plane(codecs.decode_f32bt(getattr(row, red_col), w, h),
+                        codecs.decode_f32bt(getattr(row, nir_col), w, h))
+        eps = emissivity_from_ndvi_plane(
+            nd, ndvi_soil, ndvi_veg, eps_soil, eps_veg, cavity)
+        m = np.isfinite(nd)
+        return (nd.astype("<f4").tobytes(), eps.astype("<f4").tobytes(),
+                int(m.sum()), float(np.nanmean(nd)) if m.any() else float("nan"))
 
     src = tiles.select("scene_id", "tile_x", "tile_y", "w", "h",
                        red_col, nir_col)
-    return src.mapInArrow(fn, NDVI_EMIS_SCHEMA)
+    return _tile_map(src, NDVI_EMIS_SCHEMA, fn, _TILE_IDS)

@@ -177,6 +177,7 @@ _SUBRANGE_NAMES = np.array(C.SUBRANGE_ORDER + [""], dtype=object)  # idx -1 -> "
 _PA_TYPES = {
     "string": pa.string(), "binary": pa.binary(), "int": pa.int32(),
     "bigint": pa.int64(), "double": pa.float64(), "boolean": pa.bool_(),
+    "array<double>": pa.list_(pa.float64()), "array<bigint>": pa.list_(pa.int64()),
 }
 
 
@@ -288,26 +289,37 @@ _TILE_IDS = (*_TILE_KEY, "w", "h")
 _PLANE_IDS = ("image_id",) + _TILE_IDS
 
 
-def _tile_map(src: DataFrame, schema: StructType, build, ids) -> DataFrame:
-    """The per-tile Arrow map: one ``schema`` row per tile row of ``src``,
-    the ``ids`` columns copied from the row (None where it has no such
-    column) followed by the values of ``build(row, w, h)``. The mapInArrow
-    step carries ``build``'s name, so plans name the operator's step."""
+def _tile_rows(src: DataFrame, schema: StructType, emit, ids) -> DataFrame:
+    """The per-tile Arrow map: ``emit(row, w, h)`` yields 0..n value tuples
+    per tile row of ``src``; each becomes one ``schema`` row, the ``ids``
+    columns copied from the tile row (None where it has no such column)
+    followed by the tuple. The mapInArrow step carries ``emit``'s name, so
+    plans name the operator's step."""
     names = schema.names
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            cols: dict[str, list] = {n: [] for n in names}
+            cols: list[list] = [[] for _ in names]
             for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                for n, v in zip(names, (*(getattr(row, k, None) for k in ids),
-                                        *build(row, w, h))):
-                    cols[n].append(v)
-            if batch.num_rows:
-                yield _batch_from_cols(cols, schema)
+                head = tuple(getattr(row, k, None) for k in ids)
+                for vals in emit(row, int(row.w), int(row.h)):
+                    for c, v in zip(cols, (*head, *vals)):
+                        c.append(v)
+            if cols[0]:
+                yield _batch_from_cols(dict(zip(names, cols)), schema)
 
-    fn.__name__ = build.__name__
+    fn.__name__ = emit.__name__
     return src.mapInArrow(fn, schema)
+
+
+def _tile_map(src: DataFrame, schema: StructType, build, ids) -> DataFrame:
+    """_tile_rows with exactly one row per tile: the ``ids`` columns, then
+    the values of ``build(row, w, h)``."""
+    def one(row, w, h):
+        return (build(row, w, h),)
+
+    one.__name__ = build.__name__
+    return _tile_rows(src, schema, one, ids)
 
 
 def _nominal_grid(tiles: DataFrame) -> tuple[int, int]:
@@ -743,48 +755,32 @@ def lst_tiles_halo(enriched: DataFrame, window: int = C.DEFAULT_CWV_WINDOW) -> D
         StructField("emissivity_b11", DoubleType()),
     ] + [StructField(k, DoubleType()) for k in META_COLS])
 
-    s_names = [f.name for f in strip_schema]
-
-    def emit_strips(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {n: [] for n in s_names}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                bt_in = _bt_input(row.fmt_b10, row.fmt_b11)
-                pieces = _halo_pieces(row, w, h, r)
-                # BT tiles carry float Kelvin: pieces travel as f32le and the
-                # bt flag tells assembly to skip DN->BT (same contract as the
-                # batch path's bt_input)
-                piece_dt = "<f4" if bt_in else "<u2"
-                # u16le and f32bt whole-tile center pieces ARE the stored payload
-                passthrough = (row.fmt_b10 == codecs.FMT_RAW
-                               and row.fmt_b11 == codecs.FMT_RAW) or bt_in
-                dn10 = np.asarray(codecs.decode_tile_dn(row.bytes_b10, w, h, row.fmt_b10), dtype=piece_dt)
-                dn11 = np.asarray(codecs.decode_tile_dn(row.bytes_b11, w, h, row.fmt_b11), dtype=piece_dt)
-                meta = {k: float(getattr(row, k)) for k in META_COLS}
-                for rx, ry, dx, dy, sl in pieces:
-                    center = dx == 0 and dy == 0
-                    if center and passthrough:
-                        b10, b11, pw, ph = row.bytes_b10, row.bytes_b11, w, h
-                    else:
-                        p10 = np.ascontiguousarray(dn10[sl])
-                        b10, b11 = p10.tobytes(), np.ascontiguousarray(dn11[sl]).tobytes()
-                        ph, pw = p10.shape
-                    ap["scene_id"](row.scene_id); ap["rx"](rx); ap["ry"](ry)
-                    ap["dx"](dx); ap["dy"](dy)
-                    ap["piece10"](b10); ap["piece11"](b11)
-                    ap["pw"](pw); ap["ph"](ph)
-                    ap["bt"](1 if bt_in else 0)
-                    ap["image_id"](row.image_id_b10 if center else None)
-                    ap["caption"](row.caption_b10 if center else None)
-                    ap["w"](w); ap["h"](h)
-                    ap["emissivity_b10"](float(row.emissivity_b10) if center else None)
-                    ap["emissivity_b11"](float(row.emissivity_b11) if center else None)
-                    for k in META_COLS:
-                        ap[k](meta[k] if center else None)
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, strip_schema)
+    def emit_strips(row, w, h):
+        bt_in = _bt_input(row.fmt_b10, row.fmt_b11)
+        pieces = _halo_pieces(row, w, h, r)
+        # BT tiles carry float Kelvin: pieces travel as f32le and the bt flag
+        # tells assembly to skip DN->BT (same contract as the batch path's
+        # bt_input)
+        piece_dt = "<f4" if bt_in else "<u2"
+        # u16le and f32bt whole-tile center pieces ARE the stored payload
+        passthrough = (row.fmt_b10 == codecs.FMT_RAW
+                       and row.fmt_b11 == codecs.FMT_RAW) or bt_in
+        dn10 = np.asarray(codecs.decode_tile_dn(row.bytes_b10, w, h, row.fmt_b10), dtype=piece_dt)
+        dn11 = np.asarray(codecs.decode_tile_dn(row.bytes_b11, w, h, row.fmt_b11), dtype=piece_dt)
+        center_tail = (row.image_id_b10, row.caption_b10, w, h,
+                       float(row.emissivity_b10), float(row.emissivity_b11),
+                       *(float(getattr(row, k)) for k in META_COLS))
+        strip_tail = (None, None, w, h) + (None,) * (2 + len(META_COLS))
+        for rx, ry, dx, dy, sl in pieces:
+            center = dx == 0 and dy == 0
+            if center and passthrough:
+                b10, b11, pw, ph = row.bytes_b10, row.bytes_b11, w, h
+            else:
+                p10 = np.ascontiguousarray(dn10[sl])
+                b10, b11 = p10.tobytes(), np.ascontiguousarray(dn11[sl]).tobytes()
+                ph, pw = p10.shape
+            yield (rx, ry, dx, dy, b10, b11, pw, ph, 1 if bt_in else 0,
+                   *(center_tail if center else strip_tail))
 
     def padded(acc: list):
         """(center strip, pad10, pad11) of one tile, or None for halo strips
@@ -839,7 +835,8 @@ def lst_tiles_halo(enriched: DataFrame, window: int = C.DEFAULT_CWV_WINDOW) -> D
         if pending:
             yield kernel_batch(pending)
 
-    return _halo_exchange(enriched.mapInArrow(emit_strips, strip_schema),
+    return _halo_exchange(_tile_rows(enriched, strip_schema, emit_strips,
+                                     ("scene_id",)),
                           assemble, TILE_SCHEMA)
 
 
@@ -1096,30 +1093,18 @@ def halo_plane_tiles(tiles: DataFrame, r: int,
         StructField("w", IntegerType()),
         StructField("h", IntegerType()),
     ])
-    s_names = [f.name for f in strip_schema]
-
-    def emit(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {n: [] for n in s_names}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                pieces = _halo_pieces(row, w, h, r)
-                plane = np.frombuffer(getattr(row, src_col), dtype=dtype).reshape(h, w)
-                for rx, ry, dx, dy, sl in pieces:
-                    center = dx == 0 and dy == 0
-                    if center:
-                        piece, pw, ph = getattr(row, src_col), w, h
-                    else:
-                        p = np.ascontiguousarray(plane[sl], dtype=dtype)
-                        piece, (ph, pw) = p.tobytes(), p.shape
-                    ap["scene_id"](row.scene_id); ap["rx"](rx); ap["ry"](ry)
-                    ap["dx"](dx); ap["dy"](dy)
-                    ap["piece"](piece); ap["pw"](pw); ap["ph"](ph)
-                    ap["image_id"](getattr(row, "image_id", None) if center else None)
-                    ap["w"](w); ap["h"](h)
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, strip_schema)
+    def emit(row, w, h):
+        pieces = _halo_pieces(row, w, h, r)
+        plane = np.frombuffer(getattr(row, src_col), dtype=dtype).reshape(h, w)
+        for rx, ry, dx, dy, sl in pieces:
+            center = dx == 0 and dy == 0
+            if center:
+                piece, pw, ph = getattr(row, src_col), w, h
+            else:
+                p = np.ascontiguousarray(plane[sl], dtype=dtype)
+                piece, (ph, pw) = p.tobytes(), p.shape
+            yield (rx, ry, dx, dy, piece, pw, ph,
+                   getattr(row, "image_id", None) if center else None, w, h)
 
     def assemble(tiles) -> Iterator[pa.RecordBatch]:
         cols: dict[str, list] = {f.name: [] for f in HALO_PLANE_SCHEMA}
@@ -1141,8 +1126,8 @@ def halo_plane_tiles(tiles: DataFrame, r: int,
         if cols["scene_id"]:
             yield _batch_from_cols(cols, HALO_PLANE_SCHEMA)
 
-    return _halo_exchange(tiles.mapInArrow(emit, strip_schema), assemble,
-                          HALO_PLANE_SCHEMA)
+    return _halo_exchange(_tile_rows(tiles, strip_schema, emit, ("scene_id",)),
+                          assemble, HALO_PLANE_SCHEMA)
 
 
 def _plane_map(tiles: DataFrame, m: int, src_col: str, schema: StructType,

@@ -47,8 +47,8 @@ from pyspark.sql.types import (
 )
 
 from . import codecs
-from .multiband import scene_ranges_df
-from .pipeline import _batch_from_cols, _batch_rows
+from .multiband import _finite_range, scene_ranges_df
+from .pipeline import _TILE_IDS, _batch_from_cols, _batch_rows, _tile_map, _tile_rows
 from .texture import _quantize
 
 SERIES_STATS = ("count", "mean", "stddev", "min", "max", "median")
@@ -235,22 +235,10 @@ def series_tiles_deep(tiles: DataFrame, src_col: str = "lst_bytes",
         "footprint", "tile_x", "tile_y", "w", "h", "scene_id", src_col)
     key = ["footprint", "tile_x", "tile_y"]
 
-    def range_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in _DEEP_RANGE_PART}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                x = codecs.decode_f32bt(getattr(row, src_col),
-                                        int(row.w), int(row.h))
-                x = x[np.isfinite(x)]
-                if x.size:
-                    ap["footprint"](row.footprint)
-                    ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
-                    ap["vmin"](float(x.min())); ap["vmax"](float(x.max()))
-            if cols["footprint"]:
-                yield _batch_from_cols(cols, _DEEP_RANGE_PART)
+    def range_fn(row, w, h):
+        return _finite_range(getattr(row, src_col), w, h)
 
-    rngs = (keyed.mapInArrow(range_fn, _DEEP_RANGE_PART)
+    rngs = (_tile_rows(keyed, _DEEP_RANGE_PART, range_fn, key)
             .groupBy(*key)
             .agg(F.min("vmin").alias("vmin"), F.max("vmax").alias("vmax")))
 
@@ -505,38 +493,29 @@ def crosstab_tiles(tiles: DataFrame, col_a: str = "lst_bytes",
     rb = scene_ranges_df(tiles, col_b).select(
         "scene_id", F.col("vmin").alias("vmin_b"), F.col("vmax").alias("vmax_b"))
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in _CROSSTAB_PART}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                a = codecs.decode_f32bt(getattr(row, col_a), w, h)
-                b = codecs.decode_f32bt(getattr(row, col_b), w, h)
-                # all-NaN planes have no range row (NULL after the left
-                # join); any range quantizes them identically (class -1)
-                qa = _quantize(a, *((0.0, 1.0) if row.vmin_a is None
-                                    else (row.vmin_a, row.vmax_a)), levels_a)
-                qb = _quantize(b, *((0.0, 1.0) if row.vmin_b is None
-                                    else (row.vmin_b, row.vmax_b)), levels_b)
-                # -1 (NaN) folds into the 0 slot of a (levels+1)-wide grid
-                idx = ((qa.ravel() + 1).astype(np.int64) * (levels_b + 1)
-                       + (qb.ravel() + 1))
-                cnt = np.bincount(idx, minlength=(levels_a + 1) * (levels_b + 1))
-                for k in np.flatnonzero(cnt):
-                    ap["scene_id"](row.scene_id)
-                    ap["class_a"](int(k // (levels_b + 1)) - 1)
-                    ap["class_b"](int(k % (levels_b + 1)) - 1)
-                    ap["n_px"](int(cnt[k]))
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, _CROSSTAB_PART)
+    def fn(row, w, h):
+        a = codecs.decode_f32bt(getattr(row, col_a), w, h)
+        b = codecs.decode_f32bt(getattr(row, col_b), w, h)
+        # all-NaN planes have no range row (NULL after the left join); any
+        # range quantizes them identically (class -1)
+        qa = _quantize(a, *((0.0, 1.0) if row.vmin_a is None
+                            else (row.vmin_a, row.vmax_a)), levels_a)
+        qb = _quantize(b, *((0.0, 1.0) if row.vmin_b is None
+                            else (row.vmin_b, row.vmax_b)), levels_b)
+        # -1 (NaN) folds into the 0 slot of a (levels+1)-wide grid
+        idx = ((qa.ravel() + 1).astype(np.int64) * (levels_b + 1)
+               + (qb.ravel() + 1))
+        cnt = np.bincount(idx, minlength=(levels_a + 1) * (levels_b + 1))
+        for k in np.flatnonzero(cnt):
+            yield (int(k // (levels_b + 1)) - 1, int(k % (levels_b + 1)) - 1,
+                   int(cnt[k]))
 
     # mapInArrow cannot column-prune: select only what the kernel reads so
     # unrelated plane columns never serialize through Arrow
     src = (tiles.select("scene_id", "w", "h", col_a, col_b)
            .join(F.broadcast(ra), on="scene_id", how="left")
            .join(F.broadcast(rb), on="scene_id", how="left"))
-    return (src.mapInArrow(fn, _CROSSTAB_PART)
+    return (_tile_rows(src, _CROSSTAB_PART, fn, ("scene_id",))
             .groupBy("scene_id", "class_a", "class_b")
             .agg(F.sum("n_px").alias("n_px")))
 
@@ -590,38 +569,21 @@ def anomaly_tiles(history: DataFrame, current: DataFrame, k: float = 3.0,
                    "count_bytes", "median_bytes", "stddev_bytes"),
         on=["footprint", "tile_x", "tile_y"])
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in _ANOM_SCHEMA}
-            ap = {kk: v.append for kk, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                c = codecs.decode_f32bt(row.cur_bytes, w, h)
-                n = codecs.decode_f32bt(row.count_bytes, w, h)
-                med = codecs.decode_f32bt(row.median_bytes, w, h)
-                std = codecs.decode_f32bt(row.stddev_bytes, w, h)
-                ok = np.isfinite(c) & (n >= min_obs)
-                z = np.full((h, w), np.nan)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    zs = np.where(std > 0, (c - med) / std,
-                                  np.where(c == med, 0.0,
-                                           np.sign(c - med) * np.inf))
-                z[ok] = zs[ok]
-                anom = ok & (np.abs(z) > k)
-                ap["footprint"](row.footprint)
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](int(row.tile_x)); ap["tile_y"](int(row.tile_y))
-                ap["w"](w); ap["h"](h)
-                ap["z_bytes"](z.astype("<f4").tobytes())
-                ap["n_scored"](int(ok.sum()))
-                ap["n_anomaly"](int(anom.sum()))
-                fin = np.isfinite(z)
-                ap["max_abs_z"](float(np.abs(z[fin]).max()) if fin.any()
-                                else None)
-            if cols["footprint"]:
-                yield _batch_from_cols(cols, _ANOM_SCHEMA)
+    def fn(row, w, h):
+        c, n, med, std = (codecs.decode_f32bt(b, w, h) for b in (
+            row.cur_bytes, row.count_bytes, row.median_bytes, row.stddev_bytes))
+        ok = np.isfinite(c) & (n >= min_obs)
+        z = np.full((h, w), np.nan)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            zs = np.where(std > 0, (c - med) / std,
+                          np.where(c == med, 0.0, np.sign(c - med) * np.inf))
+        z[ok] = zs[ok]
+        fin = np.isfinite(z)
+        return (z.astype("<f4").tobytes(), int(ok.sum()),
+                int((ok & (np.abs(z) > k)).sum()),
+                float(np.abs(z[fin]).max()) if fin.any() else None)
 
-    return joined.mapInArrow(fn, _ANOM_SCHEMA)
+    return _tile_map(joined, _ANOM_SCHEMA, fn, ("footprint", *_TILE_IDS))
 
 
 _GAPFILL_FIELDS = [
@@ -762,28 +724,17 @@ def regression_tiles(tiles: DataFrame, col_x: str = "cwv_bytes",
     """
     src = tiles.select("scene_id", "w", "h", col_x, col_y)
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in _REGR_PART}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                x = codecs.decode_f32bt(getattr(row, col_x), w, h)
-                y = codecs.decode_f32bt(getattr(row, col_y), w, h)
-                ok = np.isfinite(x) & np.isfinite(y)
-                if not ok.any():
-                    continue
-                xv, yv = x[ok], y[ok]
-                ap["scene_id"](row.scene_id)
-                ap["n"](int(ok.sum()))
-                ap["sx"](float(xv.sum())); ap["sy"](float(yv.sum()))
-                ap["sxx"](float((xv * xv).sum()))
-                ap["syy"](float((yv * yv).sum()))
-                ap["sxy"](float((xv * yv).sum()))
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, _REGR_PART)
+    def fn(row, w, h):
+        x = codecs.decode_f32bt(getattr(row, col_x), w, h)
+        y = codecs.decode_f32bt(getattr(row, col_y), w, h)
+        ok = np.isfinite(x) & np.isfinite(y)
+        if ok.any():
+            xv, yv = x[ok], y[ok]
+            yield (int(ok.sum()), float(xv.sum()), float(yv.sum()),
+                   float((xv * xv).sum()), float((yv * yv).sum()),
+                   float((xv * yv).sum()))
 
-    agg = (src.mapInArrow(fn, _REGR_PART)
+    agg = (_tile_rows(src, _REGR_PART, fn, ("scene_id",))
            .groupBy("scene_id")
            .agg(F.sum("n").alias("n"),
                 F.sum("sx").alias("sx"), F.sum("sy").alias("sy"),

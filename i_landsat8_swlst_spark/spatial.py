@@ -41,7 +41,7 @@ from pyspark.sql.types import (
 
 from . import geo
 from .pipeline import (
-    _batch_from_cols, _batch_rows, _coalesce_batches, _nominal_grid,
+    _arrow_schema, _batch_from_cols, _batch_rows, _coalesce_batches, _nominal_grid,
 )
 
 # --------------------------------------------------------------------------
@@ -898,11 +898,7 @@ def enrich_pixels(points: DataFrame, aoi: pd.DataFrame, stations: pd.DataFrame,
     in_names = [f.name for f in in_fields]
     lon_i, lat_i = in_names.index(lon_col), in_names.index(lat_col)
 
-    import pyarrow as _pa
-
-    _PA = {"string": _pa.string(), "int": _pa.int32(), "bigint": _pa.int64(),
-           "double": _pa.float64(), "binary": _pa.binary()}
-    pa_out = _pa.schema([(f.name, _PA[f.dataType.simpleString()]) for f in out_schema])
+    pa_out = _arrow_schema(out_schema)
 
     def fn(batches):
         pp, cat, (ids, slon, slat, scwv) = bc.value

@@ -312,21 +312,6 @@ def stations_pdf(scale: str = "tiny", per_scene: int = 6) -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-def write_dataset(out_dir: str, scale: str = "tiny") -> None:
-    """Write the full fixture set as parquet under out_dir."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from pathlib import Path
-
-    out = Path(out_dir)
-    out.mkdir(parents=True, exist_ok=True)
-    pq.write_table(pa.Table.from_pandas(scenes_pdf(scale), preserve_index=False), out / "scenes.parquet")
-    pq.write_table(pa.Table.from_pandas(scene_meta_pdf(scale), preserve_index=False), out / "scene_meta.parquet")
-    pq.write_table(pa.Table.from_pandas(aoi_pdf(scale), preserve_index=False), out / "aoi_polygons.parquet")
-    pq.write_table(pa.Table.from_pandas(stations_pdf(scale), preserve_index=False), out / "cwv_stations.parquet")
-
-
 def synth_scenes_spark(spark, scale: str = "bench", scenes: list[int] | None = None,
                        with_qa: bool = False):
     """Distributed generation: (scene, tile-row) keys parallelized, tile

@@ -1030,10 +1030,6 @@ def _dot_spark(x: str, y: str) -> str:
     )
 
 
-def _nrm_spark(t: str) -> str:
-    return f"sqrt({_dot_spark(t, t)})"
-
-
 def _nd_bucket_duck() -> str:
     return " + ".join(
         f"(CASE WHEN emb[t.band * 4 + {i + 1}] > 0 THEN {1 << i} ELSE 0 END)"

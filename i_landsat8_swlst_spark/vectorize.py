@@ -333,17 +333,6 @@ _MS_SEGMENTS: dict[int, tuple[tuple[int, int], ...]] = {
 }
 
 
-def _edge_point(edge: int, t_top: float, t_right: float, t_bottom: float,
-                t_left: float) -> tuple[float, float]:
-    if edge == 0:
-        return (t_top, 0.0)
-    if edge == 1:
-        return (1.0, t_right)
-    if edge == 2:
-        return (t_bottom, 1.0)
-    return (0.0, t_left)
-
-
 def _contour_pass(padded: DataFrame, levels: Sequence[float],
                   nom_w: int, nom_h: int) -> DataFrame:
     lv = [float(x) for x in levels]

@@ -57,20 +57,17 @@ the BASELINE.json tile/scene data model.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
-    BinaryType, DoubleType, IntegerType, LongType, StringType, StructField,
-    StructType,
+    BinaryType, IntegerType, LongType, StringType, StructField, StructType,
 )
 
 from . import codecs
-from .pipeline import _batch_from_cols, _batch_rows
+from .pipeline import _tile_rows
 
 
 @dataclass(frozen=True)
@@ -313,39 +310,24 @@ def warp_tiles(tiles: DataFrame, src_geom: DataFrame, dst: GridSpec,
 
     src = _src_with_geom(spread_tiles(tiles), src_geom, src_col)
 
-    def emit(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in FRAGMENT_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                if not (row.w_min == row.w_max and row.h_min == row.h_max):
-                    raise ValueError(
-                        f"warp_tiles requires a uniform tile grid; scene "
-                        f"{row.scene_id} has tile widths "
-                        f"[{row.w_min}, {row.w_max}] and heights "
-                        f"[{row.h_min}, {row.h_max}] — global pixel offsets "
-                        f"would be ambiguous on a ragged grid")
-                s_w, s_h = int(row.ntx) * w, int(row.nty) * h
-                plane = codecs.decode_f32bt(
-                    getattr(row, src_col), w, h).astype(np.float64)
-                frags = _tile_fragments(
-                    plane, int(row.tile_x) * w, int(row.tile_y) * h,
-                    s_w, s_h, (row.lon0, row.lat0, row.lon1, row.lat1),
-                    dst, method)
-                for dtx, dty, fx0, fy0, wsum, cnt, fin in frags:
-                    ap["scene_id"](row.scene_id)
-                    ap["src_tx"](row.tile_x); ap["src_ty"](row.tile_y)
-                    ap["tile_x"](dtx); ap["tile_y"](dty)
-                    ap["fx0"](fx0); ap["fy0"](fy0)
-                    ap["fw"](wsum.shape[1]); ap["fh"](wsum.shape[0])
-                    ap["wsum_bytes"](np.ascontiguousarray(wsum, dtype="<f8").tobytes())
-                    ap["cnt_bytes"](cnt.tobytes())
-                    ap["fin_bytes"](fin.tobytes())
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, FRAGMENT_SCHEMA)
+    def emit(row, w, h):
+        if not (row.w_min == row.w_max and row.h_min == row.h_max):
+            raise ValueError(
+                f"warp_tiles requires a uniform tile grid; scene "
+                f"{row.scene_id} has tile widths "
+                f"[{row.w_min}, {row.w_max}] and heights "
+                f"[{row.h_min}, {row.h_max}] — global pixel offsets "
+                f"would be ambiguous on a ragged grid")
+        plane = codecs.decode_f32bt(getattr(row, src_col), w, h).astype(np.float64)
+        for dtx, dty, fx0, fy0, wsum, cnt, fin in _tile_fragments(
+                plane, int(row.tile_x) * w, int(row.tile_y) * h,
+                int(row.ntx) * w, int(row.nty) * h,
+                (row.lon0, row.lat0, row.lon1, row.lat1), dst, method):
+            yield (dtx, dty, fx0, fy0, wsum.shape[1], wsum.shape[0],
+                   np.ascontiguousarray(wsum, dtype="<f8").tobytes(),
+                   cnt.tobytes(), fin.tobytes())
 
-    frags = src.mapInArrow(emit, FRAGMENT_SCHEMA)
+    frags = _tile_rows(src, FRAGMENT_SCHEMA, emit, ("scene_id", "tile_x", "tile_y"))
     d_tw, d_th = dst.tile_w, dst.tile_h
 
     def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
