@@ -60,6 +60,85 @@ def test_pair_bands_pairs_every_tile(tiny):
     assert paired.count() == scenes.count() / 2
 
 
+PAIR_COLS = ["scene_id", "tile_x", "tile_y", "image_id_b10", "bytes_b10", "fmt_b10",
+             "w", "h", "caption_b10", "landcover", "image_id_b11", "bytes_b11",
+             "fmt_b11", "caption_b11"]
+
+
+def _pair_input(spark):
+    """Parsed tile rows with every pairing case: duplicate band-11 and QA
+    rows, band-10/11/QA rows without a partner, a tile key repeated across
+    scenes, a band the pair ignores and a NULL stored key."""
+    from pyspark.sql.types import (
+        BinaryType, IntegerType, StringType, StructField, StructType)
+
+    schema = StructType([StructField(n, t) for n, t in (
+        ("image_id", StringType()), ("bytes", BinaryType()), ("w", IntegerType()),
+        ("h", IntegerType()), ("fmt", StringType()), ("caption", StringType()),
+        ("scene_id", StringType()), ("band", IntegerType()), ("tile_x", IntegerType()),
+        ("tile_y", IntegerType()), ("landcover", StringType()))])
+    rows = []
+
+    def add(sid, band, tx, ty, tag):
+        iid = f"{sid}/B{band}/{tx}_{ty}/{tag}"
+        rows.append((iid, iid.encode(), 4, 3, f"f{band}{tag}", f"cap {iid}",
+                     sid, band, tx, ty, f"lc{tag}"))
+
+    for tag in "a":                  # one b10 x two b11, no QA
+        add("S1", 10, 0, 0, tag)
+    for tag in "ab":
+        add("S1", 11, 0, 0, tag)
+    for tag in "ab":                 # two b10 x one b11 x two QA
+        add("S1", 10, 0, 1, tag)
+    add("S1", 11, 0, 1, "a")
+    for tag in "ab":
+        add("S1", 0, 0, 1, tag)
+    add("S1", 10, 1, 0, "a")         # b10 only (and a QA row): dropped
+    add("S1", 0, 1, 0, "a")
+    add("S1", 11, 1, 1, "a")         # b11 only: dropped
+    add("S1", 0, 2, 2, "a")          # QA only: dropped
+    add("S2", 10, 0, 0, "a")         # same tile_x/tile_y, other scene
+    add("S2", 11, 0, 0, "a")
+    add("S2", 0, 0, 0, "a")
+    add("S2", 4, 0, 0, "a")          # a band the pair never reads
+    add("S2", 10, None, 1, "a")      # NULL key never pairs
+    add("S2", 11, None, 1, "a")
+    return spark.createDataFrame(rows, schema), rows
+
+
+def _expected_pairs(rows, with_qa):
+    key = lambda r: (r[6], r[8], r[9])                                  # noqa: E731
+    by = {b: [r for r in rows if r[7] == b and None not in key(r)] for b in (10, 11, 0)}
+    out = []
+    for a in by[10]:
+        for b in (b for b in by[11] if key(b) == key(a)):
+            row = (*key(a), a[0], a[1], a[4], a[2], a[3], a[5], a[10], b[0], b[1], b[4], b[5])
+            if with_qa:
+                qas = [q[1] for q in by[0] if key(q) == key(a)] or [None]
+                out.extend((*row, q) for q in qas)
+            else:
+                out.append(row)
+    return sorted(out, key=repr)
+
+
+@pytest.mark.parametrize("with_qa", [False, True])
+def test_pair_bands_keeps_join_semantics(spark, with_qa):
+    """The band pair is an inner join of band 10 to band 11 on the tile key
+    (duplicates give the cross product, unmatched rows are dropped), then a
+    left join of QA: a tile without a QA row gets a NULL ``bytes_qa`` and
+    every QA row of a tile gives its own output row."""
+    parsed, rows = _pair_input(spark)
+    paired = pipeline.pair_bands(parsed, with_qa=with_qa)
+    assert paired.columns == PAIR_COLS + (["bytes_qa"] if with_qa else [])
+    got = sorted((tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v
+                        for v in r) for r in paired.collect()), key=repr)
+    want = _expected_pairs(rows, with_qa)
+    assert got == want
+    assert len(want) == (7 if with_qa else 5)
+    if with_qa:
+        assert sum(r[-1] is None for r in got) == 2      # tile S1 (0,0) has no QA row
+
+
 def test_pixels_match_scalar_oracle(tiny, spark):
     scenes, meta, emis = tiny
     enriched = pipeline.build_enriched_with_grid(scenes, meta, emis)
