@@ -1245,7 +1245,7 @@ def _q_lst_ndvi_emissivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rows-only: the NDVI->emissivity->LST loop closed end-to-end — derive
     per-pixel emissivity planes from synthetic red/NIR (Sobrino threshold,
     multiband.ndvi_emissivity_tiles), join them onto the enriched band
-    pairs (co-keyed tile equi join, the pair_bands class), and run the
+    pairs (a co-keyed tile equi join), and run the
     fused split-window kernel through lst_from_bt's ARRAY branch
     (pipeline.lst_tiles_pixel_emissivity). Constant-plane bit-identity to
     the scalar path + per-pixel kernel parity in tests/test_pipeline.py."""

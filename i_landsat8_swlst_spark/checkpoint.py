@@ -180,7 +180,7 @@ def run_lst_job(
     executed = []
     unverified = []  # zero-row lazy-fp slices (see _run_slice_groups)
     # One slice = one idempotent Spark write job, so a naive loop would
-    # re-run the scan + pair-join of the WHOLE input once per slice
+    # re-run the scan + band pair of the WHOLE input once per slice
     # (measured 16x wall at 16 slices). Persist the joined-but-undecoded
     # frame once: each slice job then reads the cache and runs the kernel
     # on only its rows — scan/join 1x, kernel 1x total. MEMORY_AND_DISK

@@ -59,6 +59,14 @@ def _decode_stack(row, band_cols: list[str]) -> np.ndarray:
          for c in band_cols], axis=1)
 
 
+def _kernel_src(tiles: DataFrame, *cols: str) -> DataFrame:
+    """mapInArrow cannot column-prune: keep the plane-id columns ``tiles``
+    has and the planes a per-tile kernel reads, so sibling planes never
+    serialize through Arrow."""
+    ids = [c for c in _PLANE_IDS if c in tiles.columns]
+    return tiles.select(*dict.fromkeys([*ids, *cols]))
+
+
 def _moment_sums(x: np.ndarray) -> np.ndarray:
     """ΣX (B values), then the upper-triangular ΣX·Xᵀ of an (n, B) stack:
     exact f64 partials within the tile."""
@@ -232,7 +240,8 @@ def pca_tiles(tiles: DataFrame, band_cols: list[str], k: int | None = None,
                     float(np.nanmean(p)) if ok.any() else None)])
 
     # inner join: a scene without a model row (degenerate) cannot project
-    src = tiles.join(F.broadcast(model_df), on="scene_id", how="inner")
+    src = _kernel_src(tiles, *band_cols).join(F.broadcast(model_df), on="scene_id",
+                                              how="inner")
     return _tile_map(src, schema, fn, _PLANE_IDS), model
 
 
@@ -427,7 +436,7 @@ def stretch_tiles(tiles: DataFrame, src_col: str = "lst_bytes",
         return (out.tobytes(), ok.astype(np.uint8).tobytes(), int(ok.sum()),
                 float(out[ok].mean()) if ok.any() else None)
 
-    src = tiles.join(F.broadcast(luts_df), on="scene_id", how="left")
+    src = _kernel_src(tiles, src_col).join(F.broadcast(luts_df), on="scene_id", how="left")
     luts = {r["scene_id"]: np.frombuffer(r["lut_bytes"], dtype=np.uint8)
             for r in luts_df.collect()}
     return _tile_map(src, STRETCH_SCHEMA, fn, _PLANE_IDS), luts
@@ -515,11 +524,8 @@ def pansharpen_tiles(tiles: DataFrame, pan_col: str, band_cols: list[str],
                     p.tobytes(),
                     float(np.nanmean(p)) if np.isfinite(p).any() else None)])
 
-    # mapInArrow cannot column-prune: ship only what the kernel reads
-    src = tiles.select(
-        "scene_id", "tile_x", "tile_y", "w", "h", pan_col, *band_cols,
-        *[c for c in ("image_id",) if c in tiles.columns])
-    return _tile_map(src, schema, fn, ("image_id", *_TILE_KEY))
+    return _tile_map(_kernel_src(tiles, pan_col, *band_cols), schema, fn,
+                     ("image_id", *_TILE_KEY))
 
 
 # --------------------------------------------------------------------------
@@ -574,9 +580,11 @@ def histo_match_tiles(tiles: DataFrame, ref_scene: str,
     import pandas as pd
 
     ranges_df = scene_ranges_df(tiles, src_col)
-    hist = scene_histograms_df(tiles, src_col, ranges_df, bins)
-    ref_rows = (hist.filter(F.col("scene_id") == ref_scene)
-                .join(ranges_df, on="scene_id").collect())
+    # the range and histogram scans run once: the reference collect and the
+    # LUT derivation both read this checkpoint
+    hist = (scene_histograms_df(tiles, src_col, ranges_df, bins)
+            .join(ranges_df, on="scene_id").localCheckpoint())
+    ref_rows = hist.filter(F.col("scene_id") == ref_scene).collect()
     if not ref_rows:
         raise ValueError(f"reference scene {ref_scene!r} has no histogram "
                          "(unknown scene or zero finite pixels)")
@@ -602,8 +610,7 @@ def histo_match_tiles(tiles: DataFrame, ref_scene: str,
         return pd.DataFrame([{"scene_id": s, "vmin": vmin, "vmax": vmax,
                               "lut_bytes": lut.astype("<f4").tobytes()}])
 
-    luts_df = (hist.join(ranges_df, on="scene_id")
-               .groupBy("scene_id").applyInPandas(mk, _MATCH_LUT_SCHEMA)
+    luts_df = (hist.groupBy("scene_id").applyInPandas(mk, _MATCH_LUT_SCHEMA)
                .localCheckpoint())
 
     def fn(row, w, h):
@@ -617,7 +624,7 @@ def histo_match_tiles(tiles: DataFrame, ref_scene: str,
         return (out.astype("<f4").tobytes(), int(ok.sum()),
                 float(out[ok].mean()) if ok.any() else None)
 
-    src = tiles.join(F.broadcast(luts_df), on="scene_id", how="left")
+    src = _kernel_src(tiles, src_col).join(F.broadcast(luts_df), on="scene_id", how="left")
     return _tile_map(src, HISTO_MATCH_SCHEMA, fn, _PLANE_IDS), luts_df
 
 

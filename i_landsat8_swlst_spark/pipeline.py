@@ -4,7 +4,7 @@ Logical plan (SURVEY.md §3.4):
 
     scan(scenes)                          # parquet/Iceberg; bytes pruned away
       -> parse image_id                   # Catalyst column algebra
-      -> pair band 10 x band 11           # equi-join on (scene, tile_x, tile_y)
+      -> pair band 10 x band 11           # one tile-key exchange, paired per partition
       -> broadcast-join scene_meta (MTL)  # C1
       -> broadcast-join emissivities      # C5 (dict lookup == broadcast join)
       -> ONE fused mapInArrow kernel      # C2+C3+C4+C6+C7+C8+C9+C10+C11
@@ -26,7 +26,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import (
     BinaryType, DoubleType, IntegerType, LongType, StringType, StructField, StructType,
 )
@@ -78,37 +78,82 @@ def parse_scenes(scenes: DataFrame) -> DataFrame:
     return out
 
 
-def pair_bands(parsed: DataFrame, with_qa: bool = False) -> DataFrame:
-    """Join band-10 rows to band-11 rows on the tile key.
+def _hash_placed(df: DataFrame, key: list[str]) -> bool:
+    """True when ``df``'s physical plan already hash-partitions its rows on
+    exactly ``key`` (a table bucketed on it): EnsureRequirements then
+    serves the tile-key clustering from the scan, with no exchange."""
+    part = df._jdf.queryExecution().sparkPlan().outputPartitioning()
+    if part.getClass().getSimpleName() != "HashPartitioning":
+        return False
+    exprs = [part.expressions().apply(i) for i in range(part.expressions().size())]
+    return (all(e.getClass().getSimpleName() == "AttributeReference" for e in exprs)
+            and sorted(e.name() for e in exprs) == sorted(key))
 
-    At 100 TB this is the one unavoidable big shuffle; co-locating both bands
-    by bucketing/sorting the table on (scene_id, tile_x, tile_y) at write
-    time turns it into a zero-shuffle sort-merge join (README scaling notes).
-    AQE handles skewed scenes at runtime; run_lst_job adds explicit salting.
+
+def pair_bands(parsed: DataFrame, with_qa: bool = False) -> DataFrame:
+    """Pair each band-10 tile row with the band-11 rows of its tile key.
+
+    The semantics are an inner join of band 10 to band 11 on (scene_id,
+    tile_x, tile_y), then a left join of the band-0 QA rows when
+    ``with_qa``: duplicates give the cross product, an unmatched band-10 or
+    band-11 row is dropped, a tile without QA gets a NULL ``bytes_qa``.
+
+    The plan is one scan and at most one exchange, with no join: the
+    wanted bands are hash-partitioned on the tile key into
+    ``defaultParallelism`` partitions (pinned, so AQE neither coalesces the
+    kernel stage nor turns a join into a runtime broadcast of band-11
+    bytes), and each partition pairs its own rows: a window over the tile
+    key collects the band-11 (and QA) rows' columns as lists beside every
+    band-10 row, and ``explode`` over their count turns them back into
+    rows. A table bucketed on the tile key already has that placement and
+    takes no exchange at all.
     """
-    key = ["scene_id", "tile_x", "tile_y"]
-    b10 = parsed.filter(F.col("band") == 10).select(
-        *key,
-        F.col("image_id").alias("image_id_b10"),
-        F.col("bytes").alias("bytes_b10"),
-        F.col("fmt").alias("fmt_b10"),
-        "w", "h",
-        F.col("caption").alias("caption_b10"),
-        "landcover",
-    )
-    b11 = parsed.filter(F.col("band") == 11).select(
-        *key,
-        F.col("image_id").alias("image_id_b11"),
-        F.col("bytes").alias("bytes_b11"),
-        F.col("fmt").alias("fmt_b11"),
-        F.col("caption").alias("caption_b11"),
-    )
-    paired = b10.join(b11, on=key, how="inner")
-    if with_qa:
-        qa = parsed.filter(F.col("band") == 0).select(
-            *key, F.col("bytes").alias("bytes_qa"))
-        paired = paired.join(qa, on=key, how="left")  # QA optional per tile
-    return paired
+    bands = [10, 11] + ([0] if with_qa else [])
+    rows = parsed.filter(F.col("band").isin(bands)).dropna(subset=_TILE_KEY)
+    if not _hash_placed(rows, _TILE_KEY):
+        rows = rows.repartition(rows.sparkSession.sparkContext.defaultParallelism,
+                                *_TILE_KEY)
+    tile = Window.partitionBy(*_TILE_KEY)
+    band = F.col("band")
+    # the partner rows' columns as lists over the tile window: the bytes in
+    # one list, the other columns in another, so a consumer that reads no
+    # partner bytes prunes that list away and metadata passes (checkpoint
+    # fingerprints) never read the bytes. Elements are structs, so a NULL
+    # value keeps its slot and a band's lists stay aligned.
+    partner = {11: ["image_id", "bytes", "fmt", "caption"], 0: ["bytes"]}
+    lists, counts = [], []
+    for b in bands[1:]:
+        meta = [c for c in partner[b] if c != "bytes"]
+        lists.append(F.collect_list(F.when(band == b, F.struct("bytes"))).over(tile)
+                     .alias(f"_bytes{b}"))
+        if meta:
+            lists.append(F.collect_list(F.when(band == b, F.struct(*meta))).over(tile)
+                         .alias(f"_meta{b}"))
+        counts.append(F.count(F.when(band == b, 1)).over(tile).alias(f"_n{b}"))
+    # each row carries its bytes into the window sort once: as a band-10
+    # column or inside its band's list
+    b10 = {"image_id_b10": "image_id", "bytes_b10": "bytes", "fmt_b10": "fmt",
+           "caption_b10": "caption"}
+    paired = (rows.select(*_TILE_KEY, "band",
+                          *[F.when(band == 10, F.col(c)).alias(n) for n, c in b10.items()],
+                          "w", "h", "landcover", *lists, *counts)
+              .filter((band == 10) & (F.col("_n11") > 0)))
+    for b in bands[1:]:
+        # at least one row per band-10 row: a tile without QA keeps its row
+        # with a NULL bytes_qa (the left join's outer row)
+        n = F.col(f"_n{b}").cast("int")
+        paired = paired.withColumn(
+            f"_i{b}", F.explode(F.sequence(F.lit(1), F.greatest(n, F.lit(1)))))
+
+    def partner_col(b: int, c: str, name: str) -> F.Column:
+        lst = "_bytes" if c == "bytes" else "_meta"
+        return (F.when(F.col(f"_n{b}") > 0,
+                       F.element_at(f"{lst}{b}", F.col(f"_i{b}")).getField(c)).alias(name))
+
+    return paired.select(
+        *_TILE_KEY, "image_id_b10", "bytes_b10", "fmt_b10", "w", "h", "caption_b10",
+        "landcover", *[partner_col(11, c, f"{c}_b11") for c in partner[11]],
+        *([partner_col(0, "bytes", "bytes_qa")] if with_qa else []))
 
 
 def with_meta(paired: DataFrame, scene_meta: DataFrame) -> DataFrame:
@@ -510,13 +555,13 @@ def lst_tiles_pixel_emissivity(enriched: DataFrame, emis_tiles: DataFrame,
     ``emis_tiles``: (scene_id, tile_x, tile_y, e10_col [, e11_col]) f32
     planes co-registered with the band tiles; ``e11_col=None`` reuses the
     one plane for both bands (the single-plane NDVI-threshold output).
-    The join is the co-keyed tile equi join (the pair_bands class — the
-    bucketed layout makes it shuffle-free). Semantics: a NaN emissivity
-    PIXEL poisons that pixel's LST to NaN while its BT/CWV (emissivity-
-    independent) stay valid; a tile with a MISSING emissivity plane (no
-    join match for e10, or a null e11 when ``e11_col`` is set) is refused
-    wholesale — every output plane of that tile, including BT/CWV, is NaN
-    (the tile never reaches the kernel, so nothing is computed for it).
+    The join is a co-keyed tile equi join (the bucketed layout makes it
+    shuffle-free). Semantics: a NaN emissivity PIXEL poisons that pixel's
+    LST to NaN while its BT/CWV (emissivity-independent) stay valid; a
+    tile with a MISSING emissivity plane (no join match for e10, or a null
+    e11 when ``e11_col`` is set) is refused wholesale — every output plane
+    of that tile, including BT/CWV, is NaN (the tile never reaches the
+    kernel, so nothing is computed for it).
     """
     ecols = [e10_col] + ([e11_col] if e11_col else [])
     joined = enriched.join(

@@ -107,13 +107,17 @@ def get_spark(
                                str(32 * 1024 * 1024)))
         # broadcast up to 64 MB — scene_meta/coefficients/AOI trees are tiny
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # 8g forces the tile pair-join into sort spills + GC churn (measured
-        # 117s vs 13s per pass at 8 bench scenes); 16g is modest for a 125 GB
-        # box and a normal driver size on clusters
+        # 16g: measured when the band pair was a sort-merge join, 8g forced
+        # it into sort spills + GC churn (117s vs 13s per pass at 8 bench
+        # scenes); the pair no longer joins, but binary tile rows still
+        # pass through the window sort of pipeline.pair_bands. Modest for a
+        # 125 GB box and a normal driver size on clusters
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         # binary tile rows sort terribly (130 KB payloads through sort
-        # buffers); a shuffled hash join needs no sort and AQE still splits
-        # skewed partitions before the build
+        # buffers): a tile-bytes equi join (e.g. per-pixel emissivity planes
+        # onto the band pairs) plans as a shuffled hash join, with no sort,
+        # and AQE still splits skewed partitions before the build. The band
+        # pair itself is no join (pipeline.pair_bands)
         .config("spark.sql.join.preferSortMergeJoin", "false")
         # shuffle/spill dir: this sandbox's /tmp sits on a throttled virtual
         # disk (10x pass-to-pass variance measured); prefer the tmpfs when

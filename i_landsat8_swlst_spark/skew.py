@@ -8,9 +8,12 @@ pin the giant scene on one task; salting spreads it:
     salt = pmod(xxhash64(image_id), S)   # deterministic, key-derived
     df.repartition(scene_id, salt)
 
-S is sized from a cheap metadata-only probe (bytes column never read). AQE
-skew-join splitting stays on as belt-and-braces for the pair join
-(session.py), but salting also fixes *kernel-stage* skew, which AQE's join
+S is sized from a cheap metadata-only probe (bytes column never read). The
+band pair (pipeline.pair_bands) is no join: it hash-partitions on the full
+tile key into defaultParallelism partitions, which spreads a giant scene's
+tiles without a salt, and AQE's skew-join splitting (session.py) never sees
+it. Salting is for exchanges keyed on scene_id alone, where a zipf scene
+pins one task; it also fixes *kernel-stage* skew, which AQE's join
 mitigation does not touch.
 """
 

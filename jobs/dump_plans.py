@@ -52,9 +52,13 @@ def main() -> None:
     tiles = pipeline.lst_tiles(pipeline.build_enriched(scenes, meta, emis))
     sections.append((
         "Flagship raster pipeline (lst_tiles)",
-        "Checklist: ONE MapInArrow node (fused kernel, C11); BroadcastHashJoin "
-        "for scene_meta and emissivities; SortMergeJoin/ShuffledHashJoin only "
-        "on the band-pair key; AQE wrapper present.",
+        "Checklist: ONE scan; ONE MapInArrow node (fused kernel, C11); "
+        "BroadcastHashJoin for scene_meta and emissivities only; the band "
+        "pair is ONE Exchange hashpartitioning on (scene_id, tile_x, tile_y) "
+        "with defaultParallelism partitions (REPARTITION_BY_NUM), then a "
+        "Window (collect_list of the band-11 bytes, collect_list of their other "
+        "columns, and their count) and Generate explode — no join on the "
+        "band-pair key; AQE wrapper present.",
         grab(tiles),
     ))
 
@@ -63,7 +67,9 @@ def main() -> None:
         "Halo-exchange mosaic path (lst_tiles_halo)",
         "Checklist: exactly TWO Arrow hops (strip emit, stream assemble) with "
         "ONE exchange between them on the receiving tile key; strips sorted "
-        "within partitions so assembly is a single streaming pass.",
+        "within partitions so assembly is a single streaming pass. Below the "
+        "first hop sits the band pair of the flagship plan (its one tile-key "
+        "exchange, Window and Generate).",
         grab(halo),
     ))
 

@@ -833,3 +833,88 @@ def test_horizon_tiles_plan_shape(spark):
     assert n <= 4, f"expected <=4 hash exchanges, got {n}"
     below = plan[plan.rindex("MapInArrow"):]
     assert "Exchange hashpartitioning" not in below
+
+
+def _nodes(plan):
+    """Every node of a physical plan, through AQE's wrapper and its query
+    stages (both are leaves in the tree they sit in)."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        yield from _nodes(plan.executedPlan())
+        return
+    yield plan
+    if name.endswith("QueryStageExec"):
+        yield from _nodes(plan.plan())
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _nodes(kids.apply(i))
+
+
+def _names(seq) -> list[str]:
+    return [seq.apply(i).name() for i in range(seq.size())]
+
+
+def test_band_pair_is_one_scan_one_pinned_exchange_no_join(spark, tmp_path):
+    """Unbucketed input: the band pair scans the table once and hash-
+    partitions it once on the tile key into defaultParallelism partitions
+    (pinned, so AQE neither coalesces the kernel stage nor rewrites a pair
+    join into a runtime broadcast); no join has tile bytes on both sides,
+    and the final AQE plan broadcasts no band-11 bytes."""
+    import pandas as pd
+
+    from i_landsat8_swlst_spark import constants as C, pipeline, synth
+
+    src = str(tmp_path / "scenes")
+    spark.createDataFrame(synth.scenes_pdf("tiny", scenes=[0, 1])).write.parquet(src)
+    meta = spark.createDataFrame(synth.scene_meta_pdf("tiny"))
+    emis = spark.createDataFrame(
+        pd.DataFrame([e._asdict() for e in C.load_emissivities()]))
+    tiles = pipeline.lst_tiles(
+        pipeline.build_enriched(spark.read.parquet(src), meta, emis), window=5)
+    qe = tiles._jdf.queryExecution()
+    plans = {"initial": list(_nodes(qe.executedPlan()))}
+    assert len(tiles.collect()) == 32
+    plans["final"] = list(_nodes(qe.executedPlan()))
+    assert "isFinalPlan=true" in qe.executedPlan().toString()
+    kind = lambda n: n.getClass().getSimpleName()                    # noqa: E731
+    for when, nodes in plans.items():
+        assert sum(kind(n) == "FileSourceScanExec" for n in nodes) == 1, when
+        shuffles = [n for n in nodes if kind(n) == "ShuffleExchangeExec"]
+        assert len(shuffles) == 1, when
+        part = shuffles[0].outputPartitioning()
+        assert kind(part) == "HashPartitioning", when
+        assert _names(part.expressions()) == ["scene_id", "tile_x", "tile_y"], when
+        assert part.numPartitions() == spark.sparkContext.defaultParallelism, when
+        for j in (n for n in nodes if "Join" in kind(n)):
+            kids = j.children()
+            carry = [any(a.startswith("bytes") for a in _names(kids.apply(i).output()))
+                     for i in range(kids.size())]
+            assert sum(carry) <= 1, f"{when}: {kind(j)} joins tile bytes to tile bytes"
+    assert not [n for n in plans["final"] if kind(n) == "BroadcastExchangeExec"
+                and "bytes_b11" in _names(n.output())]
+
+
+@pytest.mark.parametrize("with_qa", [False, True])
+def test_band_pair_metadata_pass_reads_no_bytes(spark, tmp_path, with_qa):
+    """A pass over the band pairs that reads no plane (the durable job's
+    slice fingerprints) scans no ``bytes`` column: the partner columns
+    nobody reads prune away, as the two sides of a join would."""
+    import pandas as pd
+
+    from i_landsat8_swlst_spark import constants as C, pipeline, synth
+
+    src = str(tmp_path / "scenes")
+    spark.createDataFrame(synth.scenes_pdf("tiny", scenes=[0], with_qa=True)).write.parquet(src)
+    meta = spark.createDataFrame(synth.scene_meta_pdf("tiny"))
+    emis = spark.createDataFrame(
+        pd.DataFrame([e._asdict() for e in C.load_emissivities()]))
+    enriched = pipeline.build_enriched(spark.read.parquet(src), meta, emis, with_qa=with_qa)
+    meta_pass = enriched.groupBy("scene_id").agg(
+        F.expr("bit_xor(xxhash64(image_id_b10))"), F.count(F.lit(1)),
+        F.sum(F.col("w") * F.col("h")))
+    scans = [n for n in _nodes(meta_pass._jdf.queryExecution().executedPlan())
+             if n.getClass().getSimpleName() == "FileSourceScanExec"]
+    assert scans
+    for scan in scans:
+        assert "bytes" not in _names(scan.output())
+    assert meta_pass.collect()[0][2] == 16
