@@ -218,6 +218,12 @@ def test_enrich_pixels_is_single_arrow_hop_no_exchange(spark):
     plan = _plan(df)
     assert plan.count("MapInArrow") == 1
     assert not re.search(r"Exchange\s+\w*[Pp]artitioning", plan), plan
+    # the broadcast PIP and kNN joins: one Python map step each, no exchange
+    for df in (spatial.pip_join(pts, synth.aoi_pdf("tiny"), how="left"),
+               spatial.knn_join(pts, synth.stations_pdf("tiny"), k=2)):
+        plan = _plan(df)
+        assert plan.count("MapInPandas") + plan.count("MapInArrow") == 1, plan
+        assert not re.search(r"Exchange\s+\w*[Pp]artitioning", plan), plan
 
 
 def test_extract_regions_stitch_is_equi(spark):
@@ -567,11 +573,17 @@ def test_idw_broadcast_path_has_zero_hash_exchanges(spark):
     from i_landsat8_swlst_spark import spatial
     from tests.test_spatial import _idw_fixture
 
-    tiles, geom, st, _ = _idw_fixture(spark, n_stations=4)
-    plan = _plan(spatial.idw_rasterize(tiles, st, geom, k=3))
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
-    n = plan.count("Exchange hashpartitioning")
-    assert n == 0, f"expected 0 hash exchanges, plan had {n}"
+    from tests.test_spatial import _random_lines
+
+    tiles, geom, st, box = _idw_fixture(spark, n_stations=4)
+    for df in (spatial.idw_rasterize(tiles, st, geom, k=3),
+               spatial.kde_rasterize(tiles, st, geom, radius_km=6.0),
+               spatial.rasterize_lines(tiles, _random_lines(box, 5, seed=3),
+                                       geom)):
+        plan = _plan(df)
+        assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
+        n = plan.count("Exchange hashpartitioning")
+        assert n == 0, f"expected 0 hash exchanges, plan had {n}"
 
 
 def test_idw_cells_path_is_equi_join(spark):
@@ -581,10 +593,13 @@ def test_idw_cells_path_is_equi_join(spark):
     from tests.test_spatial import _idw_fixture
 
     tiles, geom, st, _ = _idw_fixture(spark, n_stations=4)
-    plan = _plan(spatial.idw_rasterize_cells(
-        tiles, spark.createDataFrame(st), geom, radius_km=6.0, k=3))
-    assert "CartesianProduct" not in plan
-    assert "HashJoin" in plan
+    for df in (spatial.idw_rasterize_cells(
+                   tiles, spark.createDataFrame(st), geom, radius_km=6.0, k=3),
+               spatial.kde_rasterize_cells(
+                   tiles, spark.createDataFrame(st), geom, radius_km=6.0)):
+        plan = _plan(df)
+        assert "CartesianProduct" not in plan
+        assert "HashJoin" in plan
 
 
 def test_to_vect_equi_only_and_no_plane_shuffle(spark):
