@@ -1,4 +1,5 @@
-"""Spatial operators: batched cell-encode, broadcast R-tree PIP join, kNN.
+"""Spatial operators: batched cell-encode, point-in-polygon, kNN and
+vector -> raster.
 
 North rule (BASELINE.json:6): pixels/tiles are "assigned to H3 (res 7-9) and
 S2 cells via batched cell-encode, then joined to vector AOI polygons with a
@@ -7,41 +8,55 @@ observations". No shapely/rtree/h3 libs exist (SURVEY.md §0) — everything
 here is numpy + Arrow-batched UDFs; per-row Python is banned
 (BASELINE.json:15).
 
-Scale shape, two regimes:
+Every operator comes in two forms, broadcast and cell, built on one
+candidate -> verify -> emit skeleton. The candidate source is the only
+piece that differs between the forms:
 
-- broadcast (pip_join / knn_join / enrich_pixels): the vector side (AOIs,
-  stations) fits one executor; the raster side streams through mapInPandas.
-  The R-tree is a 2-level STR packing (leaf groups of ~sqrt(m) polygons):
-  point batches prune against group bboxes first, then member bboxes, then
-  exact vectorized ray-casting — the classic broadcast-spatial-join plan
-  (cf. Raptor, PAPERS.md).
-- distributed (pip_join_cells / knn_join_cells / knn_join_cells_exact): the
-  vector side is a parquet-backed Spark DataFrame that never transits the
-  driver; candidates come from bare cell-key equi joins (ring vertex arrays
-  are never duplicated across a shuffle — BENCH/SPATIAL_SHUFFLE.md measures
-  the r3->r4 delta), verification is exact (salted-cogroup numpy ray-cast
-  or Catalyst HOF ray-cast; Catalyst haversine + window rank for kNN), and
-  kNN exactness escalates automatically until 100% certified.
+- point operators. The broadcast form (pip_join / knn_join /
+  enrich_pixels) is for a vector side that fits one executor. One AOI pack
+  (PackedPolygons, a 2-level STR R-tree, plus the category map) and one
+  station pack ride a broadcast. One mapInArrow over coalesced point
+  batches (_broadcast_points) expands each batch to its PIP pairs
+  (_pip_pairs) and each pair to its id-tie-broken top-k stations (_top_k),
+  and emits by Arrow take. The cell form (pip_join_cells / knn_join_cells /
+  knn_join_cells_exact) takes a parquet-backed vector side that never
+  transits the driver. Its candidates come from bare cell-key equi joins
+  (ring vertex arrays are never duplicated across a shuffle —
+  BENCH/SPATIAL_SHUFFLE.md measures the r3->r4 delta). PIP verification
+  is exact (salted-cogroup numpy ray-cast or Catalyst HOF ray-cast); every
+  kNN candidate source (the 1-ring join, the point-side ring probe, the
+  exact fallback's cross join) feeds one Catalyst rank + certificate
+  select (_knn_rank), and kNN exactness escalates until 100% certified.
+- vector -> raster operators (idw / kde / lines). One grid source
+  (_grid: tile ids joined to the broadcast scene_geom), one pixel geocode
+  (_tile_lonlat), one plane schema (_plane_schema) and one plane function
+  per operator, ``plane(row, w, h, vec)``. The broadcast form passes a
+  broadcast vector pack and runs the plane on pipeline._tile_rows
+  (_broadcast_planes). The cell form gathers each tile's candidates with
+  one tile -> degree-cell explode (_tile_cells) and an equi join, and runs
+  the same plane in _grouped_plane_apply.
 """
 
 from __future__ import annotations
 
 import math
-from typing import Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import (
-    ArrayType, BinaryType, DoubleType, IntegerType, LongType, StringType,
-    StructField, StructType,
+    BinaryType, DoubleType, IntegerType, LongType, StringType, StructField,
+    StructType,
 )
 
 from . import geo
 from .pipeline import (
-    _arrow_schema, _batch_from_cols, _batch_rows, _coalesce_batches, _nominal_grid,
+    _PA_TYPES, _TILE_IDS, _TILE_KEY, _coalesce_batches, _nominal_grid,
+    _tile_rows,
 )
 
 # --------------------------------------------------------------------------
@@ -117,17 +132,20 @@ class PackedPolygons:
     @classmethod
     def from_pdf(cls, aoi: pd.DataFrame) -> "PackedPolygons":
         """From the aoi_polygons fixture schema (ring = list of {lon,lat})."""
-        ids, rings = [], []
-        for _, row in aoi.iterrows():
-            ring = np.array([[p["lon"], p["lat"]] for p in row["ring"]], dtype=np.float64)
-            if not np.allclose(ring[0], ring[-1]):
-                ring = np.vstack([ring, ring[:1]])
-            ids.append(row["aoi_id"])
-            rings.append(ring)
-        return cls(ids, rings)
+        return cls(list(aoi["aoi_id"]), _closed_rings(aoi))
 
     def ring(self, k: int) -> np.ndarray:
         return self.xy[self.starts[k] : self.starts[k + 1]]
+
+
+def _closed_rings(aoi: pd.DataFrame) -> list[np.ndarray]:
+    """Each fixture ``ring`` (list of {lon, lat}) as an (n, 2) array, closed."""
+    rings = []
+    for pts in aoi["ring"]:
+        ring = np.array([[p["lon"], p["lat"]] for p in pts], dtype=np.float64)
+        rings.append(ring if np.allclose(ring[0], ring[-1])
+                     else np.vstack([ring, ring[:1]]))
+    return rings
 
 
 def dist2_to_ring(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
@@ -206,43 +224,155 @@ def query_polygons(pp: PackedPolygons, px: np.ndarray, py: np.ndarray):
     return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64)
 
 
+# --------------------------------------------------------------------------
+# broadcast point operators: one AOI pack, one station pack, one PIP pair
+# expansion, one top-k, one Arrow take emit
+# --------------------------------------------------------------------------
+
+
+def _check_k(k: int) -> None:
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+
+
+def _check_how(how: str) -> None:
+    if how not in ("inner", "left"):
+        raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
+
+
+def _aoi_pack(aoi: pd.DataFrame) -> tuple:
+    """(PackedPolygons, aoi_id -> category); a missing category is None."""
+    cat = aoi.get("category", pd.Series(index=aoi.index, dtype=object))
+    return (PackedPolygons.from_pdf(aoi),
+            {a: None if pd.isna(c) else c for a, c in zip(aoi["aoi_id"], cat)})
+
+
+def _station_pack(stations: pd.DataFrame) -> tuple:
+    """(station_id, lon, lat, cwv_obs or None) as numpy arrays."""
+    return (stations["station_id"].to_numpy(object),
+            stations["lon"].to_numpy(np.float64),
+            stations["lat"].to_numpy(np.float64),
+            stations["cwv_obs"].to_numpy(np.float64) if "cwv_obs" in stations else None)
+
+
+def _pip_pairs(pp: PackedPolygons, cat: dict, px: np.ndarray, py: np.ndarray,
+               how: str) -> tuple:
+    """The PIP pair expansion: (row index, aoi_id, aoi_category) of every
+    (point, containing polygon) pair; ``how='left'`` appends every point
+    inside no polygon once, with NULL aoi fields."""
+    pi, gi = query_polygons(pp, px, py)
+    ids = pp.aoi_ids[gi]
+    if how == "left":
+        unmatched = np.setdiff1d(np.arange(px.size), np.unique(pi))
+        pi = np.concatenate([pi, unmatched])
+        ids = np.concatenate([ids, np.full(unmatched.size, None, dtype=object)])
+    cats = np.array([cat.get(a) if a is not None else None for a in ids],
+                    dtype=object)
+    return pi, ids, cats
+
+
+def _top_k(px: np.ndarray, py: np.ndarray, slon: np.ndarray, slat: np.ndarray,
+           id_rank: np.ndarray, kk: int) -> tuple:
+    """-> ((n, kk) station indices in (distance, station_id) order, the
+    (n, m) distance matrix). ``id_rank`` is each station's rank by id; the
+    1e-12 km nudge breaks exact distance ties by it."""
+    d = haversine_km(px[:, None], py[:, None], slon[None, :], slat[None, :])
+    key = d + id_rank[None, :] * 1e-12
+    top = np.argpartition(key, kk - 1, axis=1)[:, :kk]
+    rowi = np.arange(px.size)[:, None]
+    order = np.argsort(key[rowi, top], axis=1)
+    return top[rowi, order], d
+
+
+def _nan_null(batch: pa.RecordBatch) -> pa.RecordBatch:
+    """NaN -> NULL in every floating column, the conversion a pandas hop
+    makes (``Series.isnull`` is true for NaN)."""
+    return pa.RecordBatch.from_arrays(
+        [pc.if_else(pc.is_nan(c), None, c) if pa.types.is_floating(c.type) else c
+         for c in batch.columns], schema=batch.schema)
+
+
+_CELL_FIELDS = [StructField(c, LongType()) for c in ("hex_7", "hex_8", "hex_9", "s2_cell")]
+_AOI_FIELDS = [StructField("aoi_id", StringType()),
+               StructField("aoi_category", StringType())]
+_STATION_FIELDS = [
+    StructField("station_id", StringType()), StructField("station_rank", IntegerType()),
+    StructField("station_km", DoubleType()), StructField("station_cwv", DoubleType()),
+]
+
+
+def _broadcast_points(points: DataFrame, aoi: pd.DataFrame | None = None,
+                      stations: pd.DataFrame | None = None, k: int = 1,
+                      how: str = "inner", s2_level: int | None = None,
+                      lon_col: str = "lon", lat_col: str = "lat",
+                      nan_null: bool = False) -> DataFrame:
+    """The broadcast point operators' one mapInArrow over coalesced point
+    batches. Per batch: the cell columns (``s2_level`` given), the PIP pair
+    expansion (``aoi`` given; otherwise one row per point), then each row
+    repeated for its k nearest stations (``stations`` given). The output
+    is the input columns taken at the expanded row index, followed by the
+    cell, AOI and station columns. ``nan_null`` applies a pandas hop's
+    NaN -> NULL to every floating column (pip_join and knn_join had one).
+    Station ids are ranked once per task."""
+    if aoi is not None:
+        _check_how(how)
+        aoi = _aoi_pack(aoi)
+    if stations is not None:
+        _check_k(k)
+        stations = _station_pack(stations)
+    bc = points.sparkSession.sparkContext.broadcast((aoi, stations))
+    fields = ((_CELL_FIELDS if s2_level is not None else [])
+              + (_AOI_FIELDS if aoi else []) + (_STATION_FIELDS if stations else []))
+    extra = [pa.field(f.name, _PA_TYPES[f.dataType.simpleString()]) for f in fields]
+    lon_i, lat_i = points.columns.index(lon_col), points.columns.index(lat_col)
+
+    def fn(batches):
+        aoi_pack, st = bc.value
+        if st:
+            ids, slon, slat, scwv = st
+            kk = min(k, len(ids))
+            id_rank = np.argsort(np.argsort(ids, kind="stable"))
+        for batch in _coalesce_batches(batches):
+            px = batch.column(lon_i).to_numpy(zero_copy_only=False).astype(np.float64)
+            py = batch.column(lat_i).to_numpy(zero_copy_only=False).astype(np.float64)
+            idx, rep, vals = np.arange(batch.num_rows), 1, []
+            if aoi_pack:
+                idx, aoi_ids, aoi_cat = _pip_pairs(*aoi_pack, px, py, how)
+            if st:
+                top, d = _top_k(px, py, slon, slat, id_rank, kk)
+                rep = kk
+            take = np.repeat(idx, rep)
+            if s2_level is not None:
+                vals += [c[take] for c in [geo.hexcell(px, py, r) for r in (7, 8, 9)]
+                         + [geo.s2_cell(px, py, s2_level)]]
+            if aoi_pack:
+                vals += [np.repeat(aoi_ids, rep), np.repeat(aoi_cat, rep)]
+            if st:
+                pick = top[idx].ravel()
+                vals += [ids[pick], np.tile(np.arange(1, kk + 1, dtype=np.int32), idx.size),
+                         d[take, pick],
+                         scwv[pick] if scwv is not None else np.full(pick.size, np.nan)]
+            at = pa.array(take)
+            out = pa.RecordBatch.from_arrays(
+                [c.take(at) for c in batch.columns]
+                + [pa.array(v, type=f.type) for v, f in zip(vals, extra)],
+                schema=pa.schema(list(batch.schema) + extra))
+            yield _nan_null(out) if nan_null else out
+
+    return points.mapInArrow(fn, StructType(points.schema.fields + fields))
+
+
 def pip_join(points: DataFrame, aoi: pd.DataFrame, lon_col: str = "lon",
              lat_col: str = "lat", how: str = "inner") -> DataFrame:
     """Broadcast R-tree point-in-polygon join: adds aoi_id (+category).
 
     Emits one row per (point, containing polygon) — true join semantics
     (overlapping AOIs duplicate the point, like the reference join rows).
-    ``how='left'`` keeps non-matching points with NULL aoi_id.
+    ``how='left'`` keeps non-matching points with NULL aoi_id. NaN in a
+    floating point column comes out NULL.
     """
-    spark = points.sparkSession
-    pp = PackedPolygons.from_pdf(aoi)
-    cat = dict(zip(aoi["aoi_id"], aoi.get("category", pd.Series(index=aoi.index, dtype=object))))
-    bc = spark.sparkContext.broadcast((pp, cat))
-    out_schema = StructType(points.schema.fields + [
-        StructField("aoi_id", StringType()),
-        StructField("aoi_category", StringType()),
-    ])
-
-    def fn(batches):
-        pp, cat = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            px = pdf[lon_col].to_numpy(np.float64)
-            py = pdf[lat_col].to_numpy(np.float64)
-            pi, gi = query_polygons(pp, px, py)
-            matched = pdf.iloc[pi].copy() if pi.size else pdf.iloc[:0].copy()
-            matched["aoi_id"] = pp.aoi_ids[gi] if pi.size else []
-            matched["aoi_category"] = [cat.get(a) for a in matched["aoi_id"]]
-            if how == "left":
-                unmatched_idx = np.setdiff1d(np.arange(len(pdf)), np.unique(pi))
-                un = pdf.iloc[unmatched_idx].copy()
-                un["aoi_id"] = None
-                un["aoi_category"] = None
-                matched = pd.concat([matched, un], ignore_index=True)
-            yield matched
-
-    return points.mapInPandas(fn, out_schema)
+    return _broadcast_points(points, aoi=aoi, how=how, lon_col=lon_col,
+                             lat_col=lat_col, nan_null=True)
 
 
 def aoi_rings_df(spark, aoi) -> DataFrame:
@@ -275,18 +405,14 @@ def aoi_rings_df(spark, aoi) -> DataFrame:
             F.when(closed, ry).otherwise(F.concat(ry, F.array(F.element_at(ry, 1))))
              .cast("array<double>").alias("ring_y"),
         )
-    rows = []
-    for _, row in aoi.iterrows():
-        ring = np.array([[p["lon"], p["lat"]] for p in row["ring"]], dtype=np.float64)
-        if not np.allclose(ring[0], ring[-1]):
-            ring = np.vstack([ring, ring[:1]])
-        rows.append({
-            "aoi_id": row["aoi_id"],
-            "aoi_category": row.get("category"),
-            "ring_x": ring[:, 0].tolist(),
-            "ring_y": ring[:, 1].tolist(),
-        })
-    return spark.createDataFrame(pd.DataFrame(rows))
+    rings = _closed_rings(aoi)
+    return spark.createDataFrame(pd.DataFrame({
+        "aoi_id": aoi["aoi_id"].tolist(),
+        "aoi_category": (aoi["category"].tolist() if "category" in aoi
+                         else [None] * len(aoi)),
+        "ring_x": [r[:, 0].tolist() for r in rings],
+        "ring_y": [r[:, 1].tolist() for r in rings],
+    }))
 
 
 def aoi_cells_df(spark, aoi, res: int | str = 8,
@@ -546,49 +672,11 @@ def knn_join(points: DataFrame, stations: pd.DataFrame, k: int = 3,
 
     Stations are broadcast (small side); per batch the distance matrix is
     (n x m) with argpartition top-k — no shuffle at all. Deterministic
-    tie-break: (distance, station_id).
+    tie-break: (distance, station_id). NaN in a floating point column
+    (a missing ``cwv_obs`` included) comes out NULL.
     """
-    spark = points.sparkSession
-    st = (
-        stations["station_id"].to_numpy(object),
-        stations["lon"].to_numpy(np.float64),
-        stations["lat"].to_numpy(np.float64),
-        stations["cwv_obs"].to_numpy(np.float64) if "cwv_obs" in stations else None,
-    )
-    bc = spark.sparkContext.broadcast(st)
-    out_schema = StructType(points.schema.fields + [
-        StructField("station_id", StringType()),
-        StructField("station_rank", IntegerType()),
-        StructField("station_km", DoubleType()),
-        StructField("station_cwv", DoubleType()),
-    ])
-
-    def fn(batches):
-        ids, slon, slat, scwv = bc.value
-        m = len(ids)
-        kk = min(k, m)
-        # stable secondary sort on station_id for exact determinism
-        id_order = np.argsort(ids, kind="stable")
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            plon = pdf[lon_col].to_numpy(np.float64)
-            plat = pdf[lat_col].to_numpy(np.float64)
-            d = haversine_km(plon[:, None], plat[:, None], slon[None, :], slat[None, :])
-            # top-k with deterministic tie-break (distance, station_id)
-            key = d + np.argsort(id_order)[None, :] * 1e-12
-            top = np.argpartition(key, kk - 1, axis=1)[:, :kk]
-            rowi = np.arange(len(pdf))[:, None]
-            order = np.argsort(key[rowi, top], axis=1)
-            top = top[rowi, order]
-            rep = pdf.loc[pdf.index.repeat(kk)].reset_index(drop=True)
-            rep["station_id"] = ids[top].ravel()
-            rep["station_rank"] = np.tile(np.arange(1, kk + 1, dtype=np.int32), len(pdf))
-            rep["station_km"] = d[rowi, top].ravel()
-            rep["station_cwv"] = scwv[top].ravel() if scwv is not None else np.nan
-            yield rep
-
-    return points.mapInPandas(fn, out_schema)
+    return _broadcast_points(points, stations=stations, k=k, lon_col=lon_col,
+                             lat_col=lat_col, nan_null=True)
 
 
 def _stations_df(spark, stations) -> tuple[DataFrame, bool]:
@@ -639,6 +727,48 @@ def _knn_bound_km(lat_col: str, size: float, ring: int) -> F.Column:
         (F.abs(F.col(lat_col)) + 1.5 * (ring + 1) * size) * p)
 
 
+def _knn_rank(points: DataFrame, cands, has_cwv: bool, k: int,
+              key_cols: list[str], lon_col: str, lat_col: str,
+              bound: F.Column | None = None) -> DataFrame:
+    """The distributed kNN's one rank + certificate + select.
+
+    ``cands(tagged)`` is the form's candidate source: it pairs each point
+    row of ``tagged`` (``points`` plus a row id) with its candidate
+    stations, NULL station columns for a point it keeps candidate-less.
+    Haversine + per-point rank by (station_km, station_id) run in Catalyst
+    (one window on the point key); the best k stay. The certificate holds
+    when the point had >= k candidates and its k-th distance is below
+    ``bound``; ``bound=None`` certifies every row (the caller's source is
+    exact). A key held by two point rows would fan out silently, so the
+    rank window raises from the executors when its row ids differ.
+    """
+    _check_k(k)
+    cand = (cands(points.withColumn("_knn_row", F.monotonically_increasing_id()))
+            .withColumn("station_km", _haversine_col(lon_col, lat_col)))
+    w = Window.partitionBy(*key_cols).orderBy(
+        F.col("station_km").asc_nulls_last(), "station_id")
+    dup = F.raise_error(F.concat(
+        F.lit(f"kNN key_cols {key_cols} repeat across point rows: "),
+        F.to_json(F.struct(*key_cols))))
+    out = cand.withColumn("station_rank", F.when(
+        F.min("_knn_row").over(w) != F.max("_knn_row").over(w), dup)
+        .otherwise(F.row_number().over(w)).cast("int"))
+    if bound is None:
+        out = out.filter(F.col("station_rank") <= k)
+        cert = F.lit(True)
+    else:
+        wall = Window.partitionBy(*key_cols)
+        # count(station_id) skips the NULL row of a candidate-less point
+        out = (out.withColumn("n_cand", F.count("station_id").over(wall))
+               .filter(F.col("station_rank") <= k))
+        # a candidate-less point: 0 >= k is false, so false AND null
+        # short-circuits to false (never null)
+        cert = (F.col("n_cand") >= k) & (F.max("station_km").over(wall) < bound)
+    return out.select(*points.columns, "station_id", "station_rank", "station_km",
+                      *([F.col("cwv_obs").alias("station_cwv")] if has_cwv else []),
+                      cert.alias("knn_certified"))
+
+
 def knn_join_cells(points: DataFrame, stations, k: int = 3,
                    res: int = 7, key_cols: list[str] | None = None,
                    lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
@@ -654,7 +784,8 @@ def knn_join_cells(points: DataFrame, stations, k: int = 3,
     whose 1-ring holds NO station is emitted once with NULL station columns
     and ``knn_certified = false`` (ADVICE r3: silently dropping such points
     left the recovery path unable to find them). Haversine + per-point rank
-    run entirely in Catalyst (one window on the point key).
+    run entirely in Catalyst (one window on the point key, _knn_rank);
+    ``key_cols`` repeated across point rows raise from the executors.
 
     Exactness certificate (``knn_certified``): any station OUTSIDE the
     1-ring is farther than ``size`` degrees from the point (_knn_bound_km
@@ -667,9 +798,7 @@ def knn_join_cells(points: DataFrame, stations, k: int = 3,
     """
     if key_cols is None:
         raise ValueError("knn_join_cells needs key_cols identifying a point row")
-    spark = points.sparkSession
-    size = geo.HEX_EDGE_DEG[res]
-    st, has_cwv = _stations_df(spark, stations)
+    st, has_cwv = _stations_df(points.sparkSession, stations)
     st = st.withColumn("own_cell", hexcell_udf(res)(F.col("s_lon"), F.col("s_lat")))
     Q = F.lit(1 << 28)
     one = F.lit(1)
@@ -679,38 +808,12 @@ def knn_join_cells(points: DataFrame, stations, k: int = 3,
         F.explode(F.array(c, c + Q, c - Q, c + one, c - one, c + Q - one, c - Q + one)),
     ).drop("own_cell")
 
-    pts = points.withColumn("cell", hexcell_udf(res)(F.col(lon_col), F.col(lat_col)))
-    cand = pts.join(st_cells, on="cell", how="left").drop("cell")
-    cand = cand.withColumn("station_km", _haversine_col(lon_col, lat_col))
+    def one_ring(pts: DataFrame) -> DataFrame:
+        pts = pts.withColumn("cell", hexcell_udf(res)(F.col(lon_col), F.col(lat_col)))
+        return pts.join(st_cells, on="cell", how="left").drop("cell")
 
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*key_cols).orderBy(
-        F.col("station_km").asc_nulls_last(), "station_id")
-    wall = Window.partitionBy(*key_cols)
-    ranked = (
-        cand.withColumn("station_rank", F.row_number().over(w).cast("int"))
-        # count(station_id) skips the NULL row a zero-candidate point gets
-        # from the left join
-        .withColumn("n_cand", F.count("station_id").over(wall))
-        .filter(F.col("station_rank") <= k)
-    )
-    wk = Window.partitionBy(*key_cols)
-    out = ranked.withColumn(
-        "knn_certified",
-        # for a zero-candidate point: 0 >= k is false, so false AND null
-        # short-circuits to false (never null)
-        (F.col("n_cand") >= k)
-        & (F.max("station_km").over(wk) < _knn_bound_km(lat_col, size, 1)),
-    )
-    cols = ([f.name for f in points.schema.fields]
-            + ["station_id", "station_rank", "station_km"]
-            + (["cwv_obs"] if has_cwv else [])
-            + ["knn_certified"])
-    if has_cwv:
-        out = out.withColumnRenamed("cwv_obs", "station_cwv")
-        cols = [("station_cwv" if x == "cwv_obs" else x) for x in cols]
-    return out.select(*cols)
+    return _knn_rank(points, one_ring, has_cwv, k, key_cols, lon_col, lat_col,
+                     _knn_bound_km(lat_col, geo.HEX_EDGE_DEG[res], 1))
 
 
 def _hex_ring_offsets(ring: int) -> list[int]:
@@ -732,35 +835,16 @@ def _knn_probe_ring(points: DataFrame, st: DataFrame, has_cwv: bool, k: int,
     only re-keyed, never exploded. Inner equi join; points with too-few or
     too-far candidates simply stay uncertified for the next round.
     """
-    size = geo.HEX_EDGE_DEG[res]
     stc = st.withColumn("cell", hexcell_udf(res)(F.col("s_lon"), F.col("s_lat")))
-    own = hexcell_udf(res)(F.col(lon_col), F.col(lat_col))
-    pts = points.withColumn(
-        "cell", F.explode(F.array(*[own + F.lit(d) for d in _hex_ring_offsets(ring)])))
-    cand = (pts.join(stc, on="cell", how="inner").drop("cell")
-            .withColumn("station_km", _haversine_col(lon_col, lat_col)))
 
-    from pyspark.sql import Window
+    def ring_cells(pts: DataFrame) -> DataFrame:
+        own = hexcell_udf(res)(F.col(lon_col), F.col(lat_col))
+        pts = pts.withColumn(
+            "cell", F.explode(F.array(*[own + F.lit(d) for d in _hex_ring_offsets(ring)])))
+        return pts.join(stc, on="cell", how="inner").drop("cell")
 
-    w = Window.partitionBy(*key_cols).orderBy("station_km", "station_id")
-    wall = Window.partitionBy(*key_cols)
-    ranked = (
-        cand.withColumn("station_rank", F.row_number().over(w).cast("int"))
-        .withColumn("n_cand", F.count(F.lit(1)).over(wall))
-        .filter(F.col("station_rank") <= k)
-    )
-    out = ranked.withColumn(
-        "knn_certified",
-        (F.col("n_cand") >= k)
-        & (F.max("station_km").over(wall) < _knn_bound_km(lat_col, size, ring)),
-    )
-    cols = ([f.name for f in points.schema.fields]
-            + ["station_id", "station_rank", "station_km"]
-            + (["cwv_obs"] if has_cwv else []) + ["knn_certified"])
-    if has_cwv:
-        out = out.withColumnRenamed("cwv_obs", "station_cwv")
-        cols = [("station_cwv" if x == "cwv_obs" else x) for x in cols]
-    return out.select(*cols)
+    return _knn_rank(points, ring_cells, has_cwv, k, key_cols, lon_col, lat_col,
+                     _knn_bound_km(lat_col, geo.HEX_EDGE_DEG[res], ring))
 
 
 def knn_join_cells_exact(points: DataFrame, stations, k: int = 3,
@@ -824,22 +908,9 @@ def knn_join_cells_exact(points: DataFrame, stations, k: int = 3,
             # exact fallback: broadcast the (tiny) pending POINT side against
             # the full distributed station table — all stations considered, so
             # the result is exact by construction
-            from pyspark.sql import Window
-
-            cand = (F.broadcast(pending).crossJoin(st)
-                    .withColumn("station_km", _haversine_col(lon_col, lat_col)))
-            w = Window.partitionBy(*key_cols).orderBy("station_km", "station_id")
-            fb = (cand.withColumn("station_rank",
-                                  F.row_number().over(w).cast("int"))
-                  .filter(F.col("station_rank") <= k)
-                  .withColumn("knn_certified", F.lit(True)))
-            cols = ([f.name for f in points.schema.fields]
-                    + ["station_id", "station_rank", "station_km"]
-                    + (["cwv_obs"] if has_cwv else []) + ["knn_certified"])
-            if has_cwv:
-                fb = fb.withColumnRenamed("cwv_obs", "station_cwv")
-                cols = [("station_cwv" if x == "cwv_obs" else x) for x in cols]
-            rounds.append(fb.select(*cols))
+            rounds.append(_knn_rank(
+                pending, lambda pts: F.broadcast(pts).crossJoin(st), has_cwv,
+                k, key_cols, lon_col, lat_col))
         result = rounds[0]
         for r_df in rounds[1:]:
             result = result.unionByName(r_df)
@@ -859,7 +930,7 @@ def enrich_pixels(points: DataFrame, aoi: pd.DataFrame, stations: pd.DataFrame,
                   k: int = 3, s2_level: int = 14, how: str = "left",
                   lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
     """Cell-encode + broadcast R-tree PIP + kNN stations in a single
-    mapInArrow pass.
+    mapInArrow pass (_broadcast_points with every part on).
 
     Broadcast is the right physical strategy while the vector sides fit one
     executor (the fixture regime); when the AOI/station layers outgrow a
@@ -872,92 +943,12 @@ def enrich_pixels(points: DataFrame, aoi: pd.DataFrame, stations: pd.DataFrame,
     north-star flow that is 3 extra round trips of ~20 columns per pixel.
     All three stages only need (lon, lat) plus broadcast small sides, so one
     fused hop computes them together — same results row-for-row as the
-    composition (the pytest oracles cover each stage individually).
+    composition (the pytest oracles cover each stage individually), except
+    that NaN values stay NaN here where the composition's pandas hops made
+    them NULL.
     """
-    import pyarrow as pa
-
-    spark = points.sparkSession
-    pp = PackedPolygons.from_pdf(aoi)
-    cat = dict(zip(aoi["aoi_id"], aoi.get("category", pd.Series(index=aoi.index, dtype=object))))
-    st = (
-        stations["station_id"].to_numpy(object),
-        stations["lon"].to_numpy(np.float64),
-        stations["lat"].to_numpy(np.float64),
-        stations["cwv_obs"].to_numpy(np.float64) if "cwv_obs" in stations else None,
-    )
-    bc = spark.sparkContext.broadcast((pp, cat, st))
-
-    in_fields = list(points.schema.fields)
-    out_schema = StructType(in_fields + [
-        StructField("hex_7", LongType()), StructField("hex_8", LongType()),
-        StructField("hex_9", LongType()), StructField("s2_cell", LongType()),
-        StructField("aoi_id", StringType()), StructField("aoi_category", StringType()),
-        StructField("station_id", StringType()), StructField("station_rank", IntegerType()),
-        StructField("station_km", DoubleType()), StructField("station_cwv", DoubleType()),
-    ])
-    in_names = [f.name for f in in_fields]
-    lon_i, lat_i = in_names.index(lon_col), in_names.index(lat_col)
-
-    pa_out = _arrow_schema(out_schema)
-
-    def fn(batches):
-        pp, cat, (ids, slon, slat, scwv) = bc.value
-        m = len(ids)
-        kk = min(k, m)
-        id_rank = np.argsort(np.argsort(ids, kind="stable"))
-        for batch in _coalesce_batches(batches):
-            n = batch.num_rows
-            if n == 0:
-                continue
-            px = batch.column(lon_i).to_numpy(zero_copy_only=False).astype(np.float64)
-            py = batch.column(lat_i).to_numpy(zero_copy_only=False).astype(np.float64)
-
-            # cells (same kernels the pandas UDFs wrap)
-            from . import geo
-            cells = [geo.hexcell(px, py, r) for r in (7, 8, 9)] + [geo.s2_cell(px, py, s2_level)]
-
-            # PIP -> (point index, aoi arrays), left semantics
-            pi, gi = query_polygons(pp, px, py)
-            if how == "left":
-                unmatched = np.setdiff1d(np.arange(n), np.unique(pi))
-                idxA = np.concatenate([pi, unmatched])
-                aoi_ids = np.concatenate([pp.aoi_ids[gi],
-                                          np.full(unmatched.size, None, dtype=object)])
-            else:
-                idxA = pi
-                aoi_ids = pp.aoi_ids[gi]
-            aoi_cat = np.array([cat.get(a) if a is not None else None for a in aoi_ids],
-                               dtype=object)
-
-            # kNN on the ORIGINAL points, then indexed through idxA
-            d = haversine_km(px[:, None], py[:, None], slon[None, :], slat[None, :])
-            key = d + id_rank[None, :] * 1e-12
-            top = np.argpartition(key, kk - 1, axis=1)[:, :kk]
-            rowi = np.arange(n)[:, None]
-            order = np.argsort(key[rowi, top], axis=1)
-            top = top[rowi, order]                      # (n, kk) station idx
-
-            # final fan-out: each aoi-expanded row repeats kk times
-            F_idx = np.repeat(idxA, kk)                  # input row per output
-            st_pick = top[idxA].ravel()                  # station per output
-            arrays = []
-            for i, f in enumerate(in_fields):
-                col = batch.column(i).take(pa.array(F_idx))
-                arrays.append(col)
-            rep_aoi = np.repeat(aoi_ids, kk)
-            rep_cat = np.repeat(aoi_cat, kk)
-            for c in cells:
-                arrays.append(pa.array(c[F_idx], type=pa.int64()))
-            arrays.append(pa.array(rep_aoi, type=pa.string()))
-            arrays.append(pa.array(rep_cat, type=pa.string()))
-            arrays.append(pa.array(ids[st_pick], type=pa.string()))
-            arrays.append(pa.array(np.tile(np.arange(1, kk + 1, dtype=np.int32), idxA.size)))
-            arrays.append(pa.array(d[F_idx, st_pick]))
-            arrays.append(pa.array(scwv[st_pick] if scwv is not None
-                                   else np.full(st_pick.size, np.nan)))
-            yield pa.RecordBatch.from_arrays(arrays, schema=pa_out)
-
-    return points.mapInArrow(fn, out_schema)
+    return _broadcast_points(points, aoi, stations, k=k, how=how,
+                             s2_level=s2_level, lon_col=lon_col, lat_col=lat_col)
 
 
 def enrich_pixels_cells(points: DataFrame, aoi, stations, k: int = 3,
@@ -978,7 +969,8 @@ def enrich_pixels_cells(points: DataFrame, aoi, stations, k: int = 3,
     station search never multiplies with polygon overlap. ``exact=True``
     routes through ``knn_join_cells_exact`` (complete, 100% certified);
     ``exact=False`` uses the single-round ``knn_join_cells`` and keeps its
-    ``knn_certified`` flag on every row.
+    ``knn_certified`` flag on every row. ``key_cols`` repeated across point
+    rows raise from the executors (the kNN rank window checks them).
 
     Known deltas vs the broadcast path: missing ``cwv_obs`` yields NULL
     ``station_cwv`` here (the fused Arrow kernel emits NaN), and exact ties
@@ -1038,6 +1030,7 @@ def zonal_stats(points: DataFrame, aoi, value_cols=("lst_k",),
     overlapping zones count a pixel once PER zone (join semantics, like
     the underlying PIP).
     """
+    _check_how(how)
     if distributed:
         if how == "left":
             raise ValueError(
@@ -1071,17 +1064,14 @@ def aoi_measures(spark, aoi) -> DataFrame:
     geo.ring_area_km2 / ring_perimeter_km / ring_centroid (golden-vector
     tested incl. a whole-sphere octant).
     """
-    from . import geo
-    from pyspark.sql.types import DoubleType as _D
-
     rings = aoi_rings_df(spark, aoi)
     out_schema = StructType([
         StructField("aoi_id", StringType()),
         StructField("aoi_category", StringType()),
-        StructField("area_km2", _D()),
-        StructField("perimeter_km", _D()),
-        StructField("centroid_lon", _D()),
-        StructField("centroid_lat", _D()),
+        StructField("area_km2", DoubleType()),
+        StructField("perimeter_km", DoubleType()),
+        StructField("centroid_lon", DoubleType()),
+        StructField("centroid_lat", DoubleType()),
     ])
 
     def fn(pdfs):
@@ -1106,9 +1096,6 @@ def aoi_measures(spark, aoi) -> DataFrame:
 def _sample_gather(pts, tls, value_col, id_cols, out_schema):
     """Cogroup kernel for sample_raster: decode the tile plane once,
     gather every point's pixel."""
-    import numpy as np
-    import pandas as pd
-
     if len(tls) == 0 or len(pts) == 0:
         return pd.DataFrame({f.name: pd.Series(dtype=object)
                              for f in out_schema})
@@ -1152,12 +1139,6 @@ def sample_raster(tiles: DataFrame, points: DataFrame, scene_geom: DataFrame,
     from never-observed). Returns id_cols + lon/lat + scene_id + tile/px/
     py + value.
     """
-    from functools import partial
-
-    from pyspark.sql.types import (
-        DoubleType, IntegerType, StructField, StructType,
-    )
-
     g = F.broadcast(scene_geom)
     joined = points.join(
         g,
@@ -1227,9 +1208,108 @@ def transect(tiles: DataFrame, scene_geom: DataFrame,
 
 
 # --------------------------------------------------------------------------
+# vector -> raster: one grid source, one pixel geocode, one plane schema and
+# one plane function per operator; the broadcast form runs it on
+# pipeline._tile_rows, the cell form on _grouped_plane_apply
+# --------------------------------------------------------------------------
+
+def _grid(tiles: DataFrame, scene_geom: DataFrame) -> DataFrame:
+    """The grid source: tile ids (no plane bytes) joined to the broadcast
+    per-scene geometry (lon0, lat0, lon1, lat1, ntx, nty)."""
+    return tiles.select(*_TILE_IDS).join(F.broadcast(scene_geom), on="scene_id")
+
+
+def _tile_lonlat(row, w: int, h: int) -> tuple[np.ndarray, np.ndarray]:
+    """Pixel-centroid geocode of a grid row — the exact forward map
+    lst_pixels uses (pipeline.py: lon0 + (tile_x + (px+0.5)/w) * dlon),
+    flattened."""
+    dlon = (row.lon1 - row.lon0) / row.ntx
+    dlat = (row.lat1 - row.lat0) / row.nty
+    py, px = np.divmod(np.arange(w * h, dtype=np.int64), w)
+    return (row.lon0 + (row.tile_x + (px + 0.5) / w) * dlon,
+            row.lat1 - (row.tile_y + (py + 0.5) / h) * dlat)
+
+
+def _plane_schema(col: str, count: str) -> StructType:
+    return StructType([
+        StructField("scene_id", StringType()),
+        StructField("tile_x", IntegerType()),
+        StructField("tile_y", IntegerType()),
+        StructField("w", IntegerType()),
+        StructField("h", IntegerType()),
+        StructField(col, BinaryType()),   # f32 plane
+        StructField(count, LongType()),   # its finite pixels
+    ])
+
+
+_LINES_SCHEMA = _plane_schema("line_bytes", "n_cells")   # NaN off-line
+
+
+def _plane_cols(plane: np.ndarray, w: int, h: int, skip_empty: bool) -> list:
+    """[(f32 bytes, finite count)] of one plane; [] for an all-NaN plane
+    when ``skip_empty`` (inner semantics: only touched tiles emit)."""
+    p32 = plane.astype("<f4").reshape(h, w)
+    n = int(np.isfinite(p32).sum())
+    return [] if skip_empty and n == 0 else [(p32.tobytes(), n)]
+
+
+def _broadcast_planes(tiles: DataFrame, scene_geom: DataFrame, schema: StructType,
+                      plane, vec, skip_empty: bool = False) -> DataFrame:
+    """The broadcast form: ``vec`` rides a broadcast and ``plane(row, w, h,
+    vec)`` runs once per grid row in one mapInArrow — zero shuffle, output
+    planes are written where the tile rows already live."""
+    bc = tiles.sparkSession.sparkContext.broadcast(vec)
+
+    def emit(row, w, h):
+        return _plane_cols(plane(row, w, h, bc.value), w, h, skip_empty)
+
+    emit.__name__ = plane.__name__
+    return _tile_rows(_grid(tiles, scene_geom), schema, emit, _TILE_IDS)
+
+
+def _grouped_plane_apply(cand: DataFrame, schema: StructType, plane, pack,
+                         skip_empty: bool = False) -> DataFrame:
+    """The cell form: per tile key, ``pack`` turns the tile's candidate
+    rows into the broadcast form's vector pack and the same ``plane`` runs
+    on it."""
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        row = pdf.iloc[0]
+        w, h = int(row.w), int(row.h)
+        head = (row.scene_id, int(row.tile_x), int(row.tile_y), w, h)
+        return pd.DataFrame(
+            [head + v for v in _plane_cols(plane(row, w, h, pack(pdf)), w, h, skip_empty)],
+            columns=schema.names)
+
+    fn.__name__ = plane.__name__
+    return cand.groupBy(*_TILE_KEY).applyInPandas(fn, schema)
+
+
+def _cell_range(df: DataFrame, x0: F.Column, x1: F.Column, y0: F.Column,
+                y1: F.Column, cw: float, ch: float) -> DataFrame:
+    """Each row exploded to every (cw x ch) degree cell (cell_x, cell_y)
+    of its [x0, x1] x [y0, y1] box."""
+    return (df.withColumn("cell_x", F.explode(F.sequence(
+                F.floor(x0 / cw).cast("long"), F.floor(x1 / cw).cast("long"))))
+            .withColumn("cell_y", F.explode(F.sequence(
+                F.floor(y0 / ch).cast("long"), F.floor(y1 / ch).cast("long")))))
+
+
+def _tile_cells(tiles: DataFrame, scene_geom: DataFrame, cw: float, ch: float,
+                mx: float = 0.0, my: float = 0.0) -> DataFrame:
+    """The grid source exploded to every degree cell its tile bbox, grown
+    by (mx, my) degrees, overlaps (tiny Catalyst sequence-explode)."""
+    tdlon = (F.col("lon1") - F.col("lon0")) / F.col("ntx")
+    tdlat = (F.col("lat1") - F.col("lat0")) / F.col("nty")
+    return _cell_range(
+        _grid(tiles, scene_geom),
+        F.col("lon0") + F.col("tile_x") * tdlon - F.lit(mx),
+        F.col("lon0") + (F.col("tile_x") + 1) * tdlon + F.lit(mx),
+        F.col("lat1") - (F.col("tile_y") + 1) * tdlat - F.lit(my),
+        F.col("lat1") - F.col("tile_y") * tdlat + F.lit(my), cw, ch)
+
+
 # IDW interpolation: scattered stations -> raster plane (v.surf.idw /
 # r.surf.idw analog). The points->raster complement of sample_raster.
-# --------------------------------------------------------------------------
 
 def _idw_values(lon: np.ndarray, lat: np.ndarray,
                 slon: np.ndarray, slat: np.ndarray, sval: np.ndarray,
@@ -1278,24 +1358,28 @@ def _idw_values(lon: np.ndarray, lat: np.ndarray,
     return out
 
 
-_IDW_SCHEMA = StructType([
-    StructField("scene_id", StringType()),
-    StructField("tile_x", IntegerType()),
-    StructField("tile_y", IntegerType()),
-    StructField("w", IntegerType()),
-    StructField("h", IntegerType()),
-    StructField("idw_bytes", BinaryType()),
-    StructField("n_interp", LongType()),
-])
+def _station_vec(st: pd.DataFrame, weighted: bool = True) -> tuple:
+    """(lon, lat, value) of an id-sorted station table; value is 1.0 each
+    when not ``weighted``."""
+    return (st["lon"].to_numpy(np.float64), st["lat"].to_numpy(np.float64),
+            st["value"].to_numpy(np.float64) if weighted else np.ones(len(st)))
 
 
-def _pixel_lonlat(row_tx, row_ty, w, h, lon0, lat1, dlon, dlat):
-    """Pixel-centroid geocode — the exact forward map lst_pixels uses
-    (pipeline.py: lon0 + (tile_x + (px+0.5)/w) * dlon), flattened."""
-    py, px = np.divmod(np.arange(w * h, dtype=np.int64), w)
-    lon = lon0 + (row_tx + (px + 0.5) / w) * dlon
-    lat = lat1 - (row_ty + (py + 0.5) / h) * dlat
-    return lon, lat
+def _station_group(pdf: pd.DataFrame, weighted: bool = True) -> tuple:
+    """The cell form's station pack: a station arrives once per (tile-cell
+    x its cell) pairing when the tile spans several cells, so dedup, then
+    id-sort like the broadcast form."""
+    s = pdf[pdf.station_id.notna()].drop_duplicates("station_id")
+    return _station_vec(s.sort_values("station_id", kind="mergesort"), weighted)
+
+
+def _idw_plane(k: int, power: float, radius_km: float | None):
+    def idw(row, w, h, st):
+        return _idw_values(*_tile_lonlat(row, w, h), *st, k, power, radius_km)
+    return idw
+
+
+_IDW_SCHEMA = _plane_schema("idw_bytes", "n_interp")
 
 
 def idw_rasterize(tiles: DataFrame, stations: pd.DataFrame,
@@ -1315,39 +1399,10 @@ def idw_rasterize(tiles: DataFrame, stations: pd.DataFrame,
     over grid metadata — zero shuffle, output planes are written where the
     tile rows already live.
     """
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    spark = tiles.sparkSession
+    _check_k(k)
     st = stations.sort_values("station_id", kind="mergesort")
-    bc = spark.sparkContext.broadcast((
-        st["lon"].to_numpy(np.float64), st["lat"].to_numpy(np.float64),
-        st["value"].to_numpy(np.float64)))
-    src = (tiles.select("scene_id", "tile_x", "tile_y", "w", "h")
-           .join(F.broadcast(scene_geom), on="scene_id"))
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        slon, slat, sval = bc.value
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in _IDW_SCHEMA}
-            ap = {kk: v.append for kk, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                dlon = (row.lon1 - row.lon0) / row.ntx
-                dlat = (row.lat1 - row.lat0) / row.nty
-                lon, lat = _pixel_lonlat(row.tile_x, row.tile_y, w, h,
-                                         row.lon0, row.lat1, dlon, dlat)
-                plane = _idw_values(lon, lat, slon, slat, sval,
-                                    k, power, radius_km)
-                p32 = plane.astype("<f4").reshape(h, w)
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](int(row.tile_x)); ap["tile_y"](int(row.tile_y))
-                ap["w"](w); ap["h"](h)
-                ap["idw_bytes"](p32.tobytes())
-                ap["n_interp"](int(np.isfinite(p32).sum()))
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, _IDW_SCHEMA)
-
-    return src.mapInArrow(fn, _IDW_SCHEMA)
+    return _broadcast_planes(tiles, scene_geom, _IDW_SCHEMA,
+                             _idw_plane(k, power, radius_km), _station_vec(st))
 
 
 # rigorous haversine -> degree covering bounds: hav >= 111.195 km/deg in
@@ -1391,17 +1446,11 @@ def idw_rasterize_cells(tiles: DataFrame, stations: DataFrame,
     rows (no plane bytes exist yet), one grouped kernel. Station rows
     replicate only into tiles whose expanded bbox overlaps their cell.
     """
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
+    _check_k(k)
     cand = _radius_candidates(tiles, stations, scene_geom, radius_km,
                               "idw_rasterize_cells")
-
-    def plane_fn(lon, lat, s):
-        return _idw_values(
-            lon, lat, s.lon.to_numpy(np.float64), s.lat.to_numpy(np.float64),
-            s.value.to_numpy(np.float64), k, power, radius_km)
-
-    return _grouped_plane_apply(cand, plane_fn, "idw_bytes")
+    return _grouped_plane_apply(cand, _IDW_SCHEMA, _idw_plane(k, power, radius_km),
+                                _station_group)
 
 
 def _radius_candidates(tiles: DataFrame, stations: DataFrame,
@@ -1431,57 +1480,8 @@ def _radius_candidates(tiles: DataFrame, stations: DataFrame,
         "station_id", "lon", "lat", "value",
         F.floor(F.col("lon") / cw).cast("long").alias("cell_x"),
         F.floor(F.col("lat") / ch).cast("long").alias("cell_y"))
-
-    g = F.broadcast(scene_geom)
-    t = (tiles.select("scene_id", "tile_x", "tile_y", "w", "h")
-         .join(g, on="scene_id"))
-    tdlon = (F.col("lon1") - F.col("lon0")) / F.col("ntx")
-    tdlat = (F.col("lat1") - F.col("lat0")) / F.col("nty")
-    tlon0 = F.col("lon0") + F.col("tile_x") * tdlon - F.lit(dlon_deg)
-    tlon1 = F.col("lon0") + (F.col("tile_x") + 1) * tdlon + F.lit(dlon_deg)
-    tlat0 = F.col("lat1") - (F.col("tile_y") + 1) * tdlat - F.lit(dlat_deg)
-    tlat1 = F.col("lat1") - F.col("tile_y") * tdlat + F.lit(dlat_deg)
-    t = (t.withColumn("cell_x", F.explode(F.sequence(
-            F.floor(tlon0 / cw).cast("long"),
-            F.floor(tlon1 / cw).cast("long"))))
-         .withColumn("cell_y", F.explode(F.sequence(
-            F.floor(tlat0 / ch).cast("long"),
-            F.floor(tlat1 / ch).cast("long")))))
-
+    t = _tile_cells(tiles, scene_geom, cw, ch, dlon_deg, dlat_deg)
     return t.join(st, on=["cell_x", "cell_y"], how="left")
-
-
-def _grouped_plane_apply(cand: DataFrame, plane_fn,
-                         out_col: str) -> DataFrame:
-    """Grouped kernel shared by the *_cells paths: per tile, geocode pixel
-    centroids, dedup + id-sort candidate stations (a station may arrive
-    once per (tile-cell x its cell) pairing when the tile spans several
-    cells), run ``plane_fn(lon, lat, stations_pdf) -> (h*w,) f64``."""
-    schema = StructType([
-        f if f.name != "idw_bytes" else StructField(out_col, BinaryType())
-        for f in _IDW_SCHEMA])
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        row = pdf.iloc[0]
-        w, h = int(row.w), int(row.h)
-        dlon = (row.lon1 - row.lon0) / row.ntx
-        dlat = (row.lat1 - row.lat0) / row.nty
-        lon, lat = _pixel_lonlat(int(row.tile_x), int(row.tile_y), w, h,
-                                 row.lon0, row.lat1, dlon, dlat)
-        s = pdf[pdf.station_id.notna()]
-        s = (s.drop_duplicates("station_id")
-             .sort_values("station_id", kind="mergesort"))
-        plane = plane_fn(lon, lat, s)
-        p32 = plane.astype("<f4").reshape(h, w)
-        return pd.DataFrame({
-            "scene_id": [row.scene_id],
-            "tile_x": [int(row.tile_x)], "tile_y": [int(row.tile_y)],
-            "w": [w], "h": [h], out_col: [p32.tobytes()],
-            "n_interp": [int(np.isfinite(p32).sum())],
-        })
-
-    return (cand.groupBy("scene_id", "tile_x", "tile_y")
-            .applyInPandas(fn, schema))
 
 
 # --------------------------------------------------------------------------
@@ -1541,6 +1541,19 @@ def _kde_values(lon: np.ndarray, lat: np.ndarray,
     return out
 
 
+def _kde_plane(radius_km: float, kernel: str):
+    # validate the arguments up front, on the driver
+    _kde_values(np.empty(0), np.empty(0), np.empty(0), np.empty(0),
+                np.empty(0), radius_km, kernel)
+
+    def kde(row, w, h, st):
+        return _kde_values(*_tile_lonlat(row, w, h), *st, radius_km, kernel)
+    return kde
+
+
+_KDE_SCHEMA = _plane_schema("kde_bytes", "n_interp")
+
+
 def kde_rasterize(tiles: DataFrame, stations: pd.DataFrame,
                   scene_geom: DataFrame, radius_km: float,
                   kernel: str = "epanechnikov",
@@ -1550,43 +1563,10 @@ def kde_rasterize(tiles: DataFrame, stations: pd.DataFrame,
     each station's kernel by its ``value`` column (1.0 otherwise). Same
     zero-shuffle plan as `idw_rasterize`: one scene_geom broadcast join +
     one mapInArrow pass."""
-    _kde_values(np.empty(0), np.empty(0), np.empty(0), np.empty(0),
-                np.empty(0), radius_km, kernel)  # validate args up front
-    spark = tiles.sparkSession
+    plane = _kde_plane(radius_km, kernel)
     st = stations.sort_values("station_id", kind="mergesort")
-    wgt = (st["value"].to_numpy(np.float64) if weighted
-           else np.ones(len(st)))
-    bc = spark.sparkContext.broadcast((
-        st["lon"].to_numpy(np.float64), st["lat"].to_numpy(np.float64), wgt))
-    src = (tiles.select("scene_id", "tile_x", "tile_y", "w", "h")
-           .join(F.broadcast(scene_geom), on="scene_id"))
-    schema = StructType([
-        f if f.name != "idw_bytes" else StructField("kde_bytes", BinaryType())
-        for f in _IDW_SCHEMA])
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        slon, slat, swgt = bc.value
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in schema}
-            ap = {kk: v.append for kk, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                dlon = (row.lon1 - row.lon0) / row.ntx
-                dlat = (row.lat1 - row.lat0) / row.nty
-                lon, lat = _pixel_lonlat(row.tile_x, row.tile_y, w, h,
-                                         row.lon0, row.lat1, dlon, dlat)
-                plane = _kde_values(lon, lat, slon, slat, swgt,
-                                    radius_km, kernel)
-                p32 = plane.astype("<f4").reshape(h, w)
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](int(row.tile_x)); ap["tile_y"](int(row.tile_y))
-                ap["w"](w); ap["h"](h)
-                ap["kde_bytes"](p32.tobytes())
-                ap["n_interp"](int(np.isfinite(p32).sum()))
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, schema)
-
-    return src.mapInArrow(fn, schema)
+    return _broadcast_planes(tiles, scene_geom, _KDE_SCHEMA, plane,
+                             _station_vec(st, weighted))
 
 
 def kde_rasterize_cells(tiles: DataFrame, stations: DataFrame,
@@ -1598,19 +1578,11 @@ def kde_rasterize_cells(tiles: DataFrame, stations: DataFrame,
     covering bound) with the KDE kernel; bit-identical to the broadcast
     path (truncated kernels make out-of-gather stations exact 0.0
     contributions)."""
-    _kde_values(np.empty(0), np.empty(0), np.empty(0), np.empty(0),
-                np.empty(0), radius_km, kernel)
+    plane = _kde_plane(radius_km, kernel)
     cand = _radius_candidates(tiles, stations, scene_geom, radius_km,
                               "kde_rasterize_cells")
-
-    def plane_fn(lon, lat, s):
-        wgt = (s.value.to_numpy(np.float64) if weighted
-               else np.ones(len(s)))
-        return _kde_values(
-            lon, lat, s.lon.to_numpy(np.float64), s.lat.to_numpy(np.float64),
-            wgt, radius_km, kernel)
-
-    return _grouped_plane_apply(cand, plane_fn, "kde_bytes")
+    return _grouped_plane_apply(cand, _KDE_SCHEMA, plane,
+                                partial(_station_group, weighted=weighted))
 
 
 # --------------------------------------------------------------------------
@@ -1644,24 +1616,12 @@ def supercover_cells(x0: float, y0: float, x1: float, y1: float):
     return cells
 
 
-_LINES_SCHEMA = StructType([
-    StructField("scene_id", StringType()),
-    StructField("tile_x", IntegerType()),
-    StructField("tile_y", IntegerType()),
-    StructField("w", IntegerType()),
-    StructField("h", IntegerType()),
-    StructField("line_bytes", BinaryType()),   # f32 category, NaN off-line
-    StructField("n_cells", LongType()),
-])
-
-
-def _burn_lines_plane(w: int, h: int, tile_x: int, tile_y: int,
-                      ntx: int, nty: int, lon0: float, lat0: float,
-                      lon1: float, lat1: float, sa: np.ndarray) -> np.ndarray:
-    """Burn a 9-col segment array (bx0, by0, bx1, by1, ax, ay, bx, by, cat)
-    into one tile plane. Shared VERBATIM by the broadcast and distributed
-    paths — identical float expressions, and max-per-cell is order-free,
-    so the two paths stay byte-identical."""
+def _lines_plane(row, w: int, h: int, sa: np.ndarray) -> np.ndarray:
+    """rasterize_lines' plane: burn a 9-col segment array (bx0, by0, bx1,
+    by1, ax, ay, bx, by, cat) into one tile plane. Max-per-cell is
+    order-free, so both forms stay byte-identical."""
+    tile_x, tile_y, ntx, nty = int(row.tile_x), int(row.tile_y), int(row.ntx), int(row.nty)
+    lon0, lat0, lon1, lat1 = row.lon0, row.lat0, row.lon1, row.lat1
     gw, gh = ntx * w, nty * h
     dlon = (lon1 - lon0) / ntx
     dlat = (lat1 - lat0) / nty
@@ -1689,6 +1649,26 @@ def _burn_lines_plane(w: int, h: int, tile_x: int, tile_y: int,
     return plane
 
 
+def _seg_array(ax, ay, bx, by, cat) -> np.ndarray:
+    """Segment endpoints -> the 9-col (bbox, endpoints, cat) array."""
+    return np.column_stack([np.minimum(ax, bx), np.minimum(ay, by),
+                            np.maximum(ax, bx), np.maximum(ay, by),
+                            ax, ay, bx, by, cat])
+
+
+def _seg_group(pdf: pd.DataFrame) -> np.ndarray:
+    """The cell form's segment pack: a segment reaches a tile once per
+    shared (tile-cell x its cell) pairing — dedup to one burn per segment."""
+    s = pdf.drop_duplicates(["line_id", "i"])
+    return _seg_array(*(s[c].to_numpy(np.float64) for c in ("ax", "ay", "bx", "by", "cat")))
+
+
+def _check_line_cols(lines) -> None:
+    for c in ("line_id", "cat", "xs", "ys"):
+        if c not in lines.columns:
+            raise ValueError(f"lines needs column {c!r}")
+
+
 def rasterize_lines(tiles: DataFrame, lines: pd.DataFrame,
                     scene_geom: DataFrame) -> DataFrame:
     """v.to.rast type=line analog: burn polyline categories into the tile
@@ -1703,49 +1683,18 @@ def rasterize_lines(tiles: DataFrame, lines: pd.DataFrame,
     pass, zero hash exchanges — each tile walks only the segments whose
     bbox overlaps it (driver-side per-segment bboxes ride the broadcast).
     """
-    for c in ("line_id", "cat", "xs", "ys"):
-        if c not in lines.columns:
-            raise ValueError(f"lines needs column {c!r}")
-    segs = []  # (bx0, by0, bx1, by1, lon_a, lat_a, lon_b, lat_b, cat)
+    _check_line_cols(lines)
+    ends = []  # per line: (ax, ay, bx, by, cat) arrays
     for r in lines.itertuples():
         xs = np.asarray(r.xs, dtype=np.float64)
         ys = np.asarray(r.ys, dtype=np.float64)
         if xs.size != ys.size or xs.size < 2:
             raise ValueError(
                 f"line {r.line_id!r}: xs/ys must be equal-length, >= 2")
-        for i in range(xs.size - 1):
-            segs.append((min(xs[i], xs[i + 1]), min(ys[i], ys[i + 1]),
-                         max(xs[i], xs[i + 1]), max(ys[i], ys[i + 1]),
-                         xs[i], ys[i], xs[i + 1], ys[i + 1], float(r.cat)))
-    seg_arr = np.array(segs, dtype=np.float64) if segs else np.empty((0, 9))
-    spark = tiles.sparkSession
-    bc = spark.sparkContext.broadcast(seg_arr)
-    src = (tiles.select("scene_id", "tile_x", "tile_y", "w", "h")
-           .join(F.broadcast(scene_geom), on="scene_id"))
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        sa = bc.value
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in _LINES_SCHEMA}
-            ap = {kk: v.append for kk, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                plane = _burn_lines_plane(
-                    w, h, int(row.tile_x), int(row.tile_y),
-                    int(row.ntx), int(row.nty),
-                    row.lon0, row.lat0, row.lon1, row.lat1, sa)
-                n = int(np.isfinite(plane).sum())
-                if n == 0:
-                    continue  # inner semantics: only touched tiles emit
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](int(row.tile_x)); ap["tile_y"](int(row.tile_y))
-                ap["w"](w); ap["h"](h)
-                ap["line_bytes"](plane.tobytes())
-                ap["n_cells"](n)
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, _LINES_SCHEMA)
-
-    return src.mapInArrow(fn, _LINES_SCHEMA)
+        ends.append((xs[:-1], ys[:-1], xs[1:], ys[1:], np.full(xs.size - 1, float(r.cat))))
+    sa = _seg_array(*(np.concatenate(c) if ends else np.empty(0) for c in zip(*ends)))
+    return _broadcast_planes(tiles, scene_geom, _LINES_SCHEMA, _lines_plane, sa,
+                             skip_empty=True)
 
 
 def rasterize_lines_cells(tiles: DataFrame, lines: DataFrame,
@@ -1753,8 +1702,8 @@ def rasterize_lines_cells(tiles: DataFrame, lines: DataFrame,
     """v.to.rast type=line analog, DISTRIBUTED no-broadcast path for vector
     tables too big to broadcast (country-scale road networks). Byte-
     identical to `rasterize_lines` on the same inputs: both paths burn via
-    the shared `_burn_lines_plane` (identical float expressions) and
-    max-per-cell is order-free, so only the candidate ROUTING differs.
+    the same plane function (identical float expressions) and max-per-cell
+    is order-free, so only the candidate ROUTING differs.
 
     ``lines`` is a Spark DataFrame (line_id, cat, xs: array<double>,
     ys: array<double>). Plan shape: segments explode EXECUTOR-side
@@ -1773,9 +1722,7 @@ def rasterize_lines_cells(tiles: DataFrame, lines: DataFrame,
     Untouched tiles emit nothing (inner-join + n_cells=0 skip), matching
     the broadcast path's inner semantics.
     """
-    for c in ("line_id", "cat", "xs", "ys"):
-        if c not in lines.columns:
-            raise ValueError(f"lines needs column {c!r}")
+    _check_line_cols(lines)
     ext = scene_geom.agg(
         F.max((F.col("lon1") - F.col("lon0")) / F.col("ntx")).alias("cw"),
         F.max((F.col("lat1") - F.col("lat0")) / F.col("nty")).alias("ch"),
@@ -1798,61 +1745,12 @@ def rasterize_lines_cells(tiles: DataFrame, lines: DataFrame,
                    F.element_at("ys", F.col("i") + 1).alias("ay"),
                    F.element_at("xs", F.col("i") + 2).alias("bx"),
                    F.element_at("ys", F.col("i") + 2).alias("by")))
-    seg = (seg
-           .withColumn("cell_x", F.explode(F.sequence(
-               F.floor(F.least("ax", "bx") / cw).cast("long"),
-               F.floor(F.greatest("ax", "bx") / cw).cast("long"))))
-           .withColumn("cell_y", F.explode(F.sequence(
-               F.floor(F.least("ay", "by") / ch).cast("long"),
-               F.floor(F.greatest("ay", "by") / ch).cast("long")))))
-
-    t = (tiles.select("scene_id", "tile_x", "tile_y", "w", "h")
-         .join(F.broadcast(scene_geom), on="scene_id"))
-    tdlon = (F.col("lon1") - F.col("lon0")) / F.col("ntx")
-    tdlat = (F.col("lat1") - F.col("lat0")) / F.col("nty")
-    t = (t.withColumn("cell_x", F.explode(F.sequence(
-            F.floor((F.col("lon0") + F.col("tile_x") * tdlon) / cw)
-            .cast("long"),
-            F.floor((F.col("lon0") + (F.col("tile_x") + 1) * tdlon) / cw)
-            .cast("long"))))
-         .withColumn("cell_y", F.explode(F.sequence(
-            F.floor((F.col("lat1") - (F.col("tile_y") + 1) * tdlat) / ch)
-            .cast("long"),
-            F.floor((F.col("lat1") - F.col("tile_y") * tdlat) / ch)
-            .cast("long")))))
-
-    cand = t.join(seg, on=["cell_x", "cell_y"], how="inner")
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        row = pdf.iloc[0]
-        # a segment reaches this tile once per shared (tile-cell x its
-        # cell) pairing — dedup to the broadcast path's one-burn-per-seg
-        s = pdf.drop_duplicates(["line_id", "i"])
-        ax = s.ax.to_numpy(np.float64)
-        ay = s.ay.to_numpy(np.float64)
-        bx = s.bx.to_numpy(np.float64)
-        by = s.by.to_numpy(np.float64)
-        cat = s.cat.to_numpy(np.float64)
-        sa = np.column_stack([
-            np.minimum(ax, bx), np.minimum(ay, by),
-            np.maximum(ax, bx), np.maximum(ay, by), ax, ay, bx, by, cat])
-        plane = _burn_lines_plane(
-            int(row.w), int(row.h), int(row.tile_x), int(row.tile_y),
-            int(row.ntx), int(row.nty),
-            float(row.lon0), float(row.lat0),
-            float(row.lon1), float(row.lat1), sa)
-        n = int(np.isfinite(plane).sum())
-        if n == 0:
-            return pd.DataFrame(columns=[f.name for f in _LINES_SCHEMA])
-        return pd.DataFrame({
-            "scene_id": [row.scene_id],
-            "tile_x": [int(row.tile_x)], "tile_y": [int(row.tile_y)],
-            "w": [int(row.w)], "h": [int(row.h)],
-            "line_bytes": [plane.tobytes()], "n_cells": [n],
-        })
-
-    return (cand.groupBy("scene_id", "tile_x", "tile_y")
-            .applyInPandas(fn, _LINES_SCHEMA))
+    seg = _cell_range(seg, F.least("ax", "bx"), F.greatest("ax", "bx"),
+                      F.least("ay", "by"), F.greatest("ay", "by"), cw, ch)
+    cand = _tile_cells(tiles, scene_geom, cw, ch).join(
+        seg, on=["cell_x", "cell_y"], how="inner")
+    return _grouped_plane_apply(cand, _LINES_SCHEMA, _lines_plane, _seg_group,
+                                skip_empty=True)
 
 
 # --------------------------------------------------------------------------
@@ -1898,36 +1796,21 @@ def sample_random_cells(tiles: DataFrame, n: int, seed: int = 0,
     """
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
-    from pyspark.sql import Window
-
     nom_w, nom_h = _nominal_grid(tiles)
-    src = tiles.select("scene_id", "tile_x", "tile_y", "w", "h", src_col)
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in _RANDOM_CELLS_SCHEMA}
-            ap = {kk: v.append for kk, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                plane = np.frombuffer(getattr(row, src_col), "<f4") \
-                    .reshape(h, w).astype(np.float64)
-                fin = np.isfinite(plane)
-                if not fin.any():
-                    continue
-                py, px = np.nonzero(fin)
-                gx = (int(row.tile_x) * nom_w + px).astype(np.int64)
-                gy = (int(row.tile_y) * nom_h + py).astype(np.int64)
-                rk = _cell_rank_hash(gx, gy, seed)
-                keep = np.argsort(rk, kind="stable")[:n]
-                for i in keep:
-                    ap["scene_id"](row.scene_id)
-                    ap["gx"](int(gx[i])); ap["gy"](int(gy[i]))
-                    ap["value"](float(plane[py[i], px[i]]))
-                    ap["rank_h"](int(rk[i]))
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, _RANDOM_CELLS_SCHEMA)
+    def random_cells(row, w, h):
+        plane = np.frombuffer(getattr(row, src_col), "<f4") \
+            .reshape(h, w).astype(np.float64)
+        py, px = np.nonzero(np.isfinite(plane))
+        gx = (int(row.tile_x) * nom_w + px).astype(np.int64)
+        gy = (int(row.tile_y) * nom_h + py).astype(np.int64)
+        rk = _cell_rank_hash(gx, gy, seed)
+        keep = np.argsort(rk, kind="stable")[:n]
+        return zip(gx[keep].tolist(), gy[keep].tolist(),
+                   plane[py[keep], px[keep]].tolist(), rk[keep].tolist())
 
-    cand = src.mapInArrow(fn, _RANDOM_CELLS_SCHEMA)
+    cand = _tile_rows(tiles.select(*_TILE_IDS, src_col), _RANDOM_CELLS_SCHEMA,
+                      random_cells, ("scene_id",))
     w = Window.partitionBy("scene_id").orderBy("rank_h", "gx", "gy")
     return (cand.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") <= n)

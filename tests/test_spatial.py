@@ -1170,3 +1170,78 @@ def test_rasterize_lines_cells_bad_input_raises_executor_side(spark):
     with pytest.raises(Exception, match="equal-length"):
         spatial.rasterize_lines_cells(
             tiles, spark.createDataFrame(bad), geom).collect()
+
+
+# ---- argument checks and duplicate point keys ------------------------------
+
+def _tiny_points(spark, pids=(0, 1, 2), lons=(10.0, 10.01, 10.02)):
+    return spark.createDataFrame(pd.DataFrame({
+        "pid": list(pids), "lon": list(lons), "lat": [40.0] * len(pids)}))
+
+
+_BAD_ARGS = {
+    "knn_join_k0": lambda s, p: spatial.knn_join(p, synth.stations_pdf("tiny"), k=0),
+    "knn_join_k-1": lambda s, p: spatial.knn_join(p, synth.stations_pdf("tiny"), k=-1),
+    "enrich_k0": lambda s, p: spatial.enrich_pixels(
+        p, synth.aoi_pdf("tiny"), synth.stations_pdf("tiny"), k=0),
+    "enrich_how": lambda s, p: spatial.enrich_pixels(
+        p, synth.aoi_pdf("tiny"), synth.stations_pdf("tiny"), how="outer"),
+    "pip_join_how": lambda s, p: spatial.pip_join(p, synth.aoi_pdf("tiny"), how="right"),
+    "zonal_how": lambda s, p: spatial.zonal_stats(p, synth.aoi_pdf("tiny"), how="outer"),
+    "knn_cells_k0": lambda s, p: spatial.knn_join_cells(
+        p, synth.stations_pdf("tiny"), k=0, key_cols=["pid"]),
+    "knn_cells_k-1": lambda s, p: spatial.knn_join_cells(
+        p, synth.stations_pdf("tiny"), k=-1, key_cols=["pid"]),
+    "knn_exact_k0": lambda s, p: spatial.knn_join_cells_exact(
+        p, synth.stations_pdf("tiny"), k=0, key_cols=["pid"]),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_BAD_ARGS))
+def test_bad_k_or_how_raises_on_the_driver(spark, case):
+    """k < 1 and a ``how`` outside {inner, left} raise ValueError when the
+    DataFrame is built, before any action: k=0 used to return zero rows,
+    a negative k failed inside a Python worker, and an unknown ``how`` ran
+    as inner."""
+    pts = _tiny_points(spark)
+    with pytest.raises(ValueError, match="k must be" if "_k" in case else "how must be"):
+        _BAD_ARGS[case](spark, pts)
+
+
+def _dup_stations():
+    rng = np.random.default_rng(61)
+    return pd.DataFrame({
+        "station_id": [f"s{i:02d}" for i in range(20)],
+        "lon": rng.uniform(10.0, 10.02, 20), "lat": rng.uniform(40.0, 40.02, 20),
+        "cwv_obs": rng.uniform(0, 6, 20)})
+
+
+@pytest.mark.parametrize("case", ["cells", "cells_no_candidates", "cells_exact",
+                                  "enrich_cells"])
+def test_duplicate_key_cols_raise_from_executors(spark, case):
+    """A key_cols value held by two point rows used to fan out silently
+    (each station ranked once per copy); the kNN rank window now raises.
+    Covers two copies of one point, two different points under one key and
+    two copies of a point with no candidate station (the LEFT join's NULL
+    rows)."""
+    pids, lons = (0, 1, 1, 2, 2), (10.01, 10.005, 10.005, 10.015, 10.012)
+    if case == "cells_no_candidates":
+        lons = (10.01, 10.005, 10.01, 12.0, 12.0)
+        pids = (0, 1, 2, 3, 3)
+    pts = _tiny_points(spark, pids, lons)
+    st = _dup_stations()
+    ops = {
+        "cells": lambda: spatial.knn_join_cells(pts, st, k=2, key_cols=["pid"]),
+        "cells_no_candidates": lambda: spatial.knn_join_cells(
+            pts, st, k=2, key_cols=["pid"]),
+        "cells_exact": lambda: spatial.knn_join_cells_exact(
+            pts, st, k=2, key_cols=["pid"]),
+        "enrich_cells": lambda: spatial.enrich_pixels_cells(
+            pts, synth.aoi_pdf("tiny"), spark.createDataFrame(st), k=2,
+            key_cols=["pid"], exact=False),
+    }
+    with pytest.raises(Exception, match="repeat across point rows"):
+        ops[case]().collect()
+    # one row per key: no error
+    ok = _tiny_points(spark, (0, 1, 2), (10.01, 10.005, 10.015))
+    assert spatial.knn_join_cells(ok, st, k=2, key_cols=["pid"]).count() == 6
