@@ -273,15 +273,23 @@ def _pip_pairs(pp: PackedPolygons, cat: dict, px: np.ndarray, py: np.ndarray,
 
 def _top_k(px: np.ndarray, py: np.ndarray, slon: np.ndarray, slat: np.ndarray,
            id_rank: np.ndarray, kk: int) -> tuple:
-    """-> ((n, kk) station indices in (distance, station_id) order, the
-    (n, m) distance matrix). ``id_rank`` is each station's rank by id; the
-    1e-12 km nudge breaks exact distance ties by it."""
-    d = haversine_km(px[:, None], py[:, None], slon[None, :], slat[None, :])
-    key = d + id_rank[None, :] * 1e-12
-    top = np.argpartition(key, kk - 1, axis=1)[:, :kk]
-    rowi = np.arange(px.size)[:, None]
-    order = np.argsort(key[rowi, top], axis=1)
-    return top[rowi, order], d
+    """-> ((n, kk) station indices in (distance, station_id) order, their
+    (n, kk) distances). ``id_rank`` is each station's rank by id; the
+    1e-12 km nudge breaks exact distance ties by it. The (points x
+    stations) matrices are blocked to ~32 MB of doubles, so a coalesced
+    batch against a large station table stays bounded."""
+    step = max(1, 4_000_000 // max(1, slon.size))
+    tops, kms = [], []
+    for i0 in range(0, px.size, step):
+        sl = slice(i0, i0 + step)
+        d = haversine_km(px[sl, None], py[sl, None], slon[None, :], slat[None, :])
+        key = d + id_rank[None, :] * 1e-12
+        top = np.argpartition(key, kk - 1, axis=1)[:, :kk]
+        rowi = np.arange(top.shape[0])[:, None]
+        top = top[rowi, np.argsort(key[rowi, top], axis=1)]
+        tops.append(top)
+        kms.append(d[rowi, top])
+    return np.concatenate(tops), np.concatenate(kms)
 
 
 def _nan_null(batch: pa.RecordBatch) -> pa.RecordBatch:
@@ -339,7 +347,7 @@ def _broadcast_points(points: DataFrame, aoi: pd.DataFrame | None = None,
             if aoi_pack:
                 idx, aoi_ids, aoi_cat = _pip_pairs(*aoi_pack, px, py, how)
             if st:
-                top, d = _top_k(px, py, slon, slat, id_rank, kk)
+                top, km = _top_k(px, py, slon, slat, id_rank, kk)
                 rep = kk
             take = np.repeat(idx, rep)
             if s2_level is not None:
@@ -350,7 +358,7 @@ def _broadcast_points(points: DataFrame, aoi: pd.DataFrame | None = None,
             if st:
                 pick = top[idx].ravel()
                 vals += [ids[pick], np.tile(np.arange(1, kk + 1, dtype=np.int32), idx.size),
-                         d[take, pick],
+                         km[idx].ravel(),
                          scwv[pick] if scwv is not None else np.full(pick.size, np.nan)]
             at = pa.array(take)
             out = pa.RecordBatch.from_arrays(
