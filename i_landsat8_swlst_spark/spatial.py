@@ -45,7 +45,6 @@ from functools import partial
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import (
@@ -296,8 +295,9 @@ def _nan_null(batch: pa.RecordBatch) -> pa.RecordBatch:
     """NaN -> NULL in every floating column, the conversion a pandas hop
     makes (``Series.isnull`` is true for NaN)."""
     return pa.RecordBatch.from_arrays(
-        [pc.if_else(pc.is_nan(c), None, c) if pa.types.is_floating(c.type) else c
-         for c in batch.columns], schema=batch.schema)
+        [pa.array(c.to_numpy(zero_copy_only=False), from_pandas=True)
+         if pa.types.is_floating(c.type) else c for c in batch.columns],
+        schema=batch.schema)
 
 
 _CELL_FIELDS = [StructField(c, LongType()) for c in ("hex_7", "hex_8", "hex_9", "s2_cell")]
