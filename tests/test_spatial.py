@@ -4,6 +4,7 @@ R-tree query vs brute force, kNN vs brute force, Spark-level joins."""
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from i_landsat8_swlst_spark import spatial, synth
 
@@ -1272,3 +1273,21 @@ def test_top_k_blocks_the_distance_matrix(monkeypatch):
     want = np.lexsort((np.broadcast_to(ids, d.shape), d), axis=1)[:, :k]
     np.testing.assert_array_equal(top, want)
     np.testing.assert_array_equal(km, np.take_along_axis(d, want, axis=1))
+
+
+def test_enrich_pixels_aoi_without_category(spark):
+    """An AOI table with no ``category`` column gives NULL aoi_category and
+    otherwise the same rows; the fused hop used to raise ArrowTypeError on
+    the pandas NaN placeholder."""
+    aoi, st = synth.aoi_pdf("tiny"), synth.stations_pdf("tiny")
+    pp = spatial.PackedPolygons.from_pdf(aoi)
+    c = pp.ring(0)[:-1].mean(axis=0)
+    pts = _tiny_points(spark, (0, 1), (float(c[0]), float(c[0]) + 5.0)) \
+        .withColumn("lat", F.when(F.col("pid") == 0, float(c[1])).otherwise(F.col("lat")))
+    key = ["pid", "aoi_id", "station_rank"]
+    want = spatial.enrich_pixels(pts, aoi, st, k=2).toPandas().sort_values(key)
+    got = spatial.enrich_pixels(pts, aoi.drop(columns="category"), st, k=2) \
+        .toPandas().sort_values(key)
+    assert want.aoi_id.notna().any() and got.aoi_category.isna().all()
+    pd.testing.assert_frame_equal(got.drop(columns="aoi_category").reset_index(drop=True),
+                                  want.drop(columns="aoi_category").reset_index(drop=True))
