@@ -14,8 +14,8 @@ Usage:
   python bench_extra.py focal|costdist|flowaccum [--reps 3]
   python bench_extra.py pytasks [--reps 3]   # per-task Python-UDF hop cost
 
-Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf1.0 — the driver's
-escalated scale), SPARK_GRAFT_CPUS (default: this host's os.cpu_count()).
+Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1, as in bench.py),
+SPARK_GRAFT_CPUS (default: this host's os.cpu_count()).
 """
 
 from __future__ import annotations
@@ -30,7 +30,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 RASTER_SCENES = int(os.environ.get("SPARK_GRAFT_BENCH_SCENES", "8"))
 

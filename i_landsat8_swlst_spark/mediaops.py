@@ -3,8 +3,8 @@
 
 The reference processes single-band rasters only (SURVEY.md §1.1); these are
 the graft-mandated training-pipeline additions. The Spark-side plumbing —
-StructType schemas, Arrow batch shape, fmt dispatch, vectorized per-batch
-loops — is real and tested on the engine's own deterministic codecs
+StructType schemas, fmt dispatch, per-row emits on ``pipeline._row_map``
+— is real and tested on the engine's own deterministic codecs
 (``u16le``/``u16dct`` tiles, ``u16seq`` frame sequences, ``pcm16`` audio).
 Real-world codecs (jpeg/png/mp3/…) raise a clearly-marked
 ``NotImplementedError`` inside the same dispatch: the container has no image
@@ -19,11 +19,8 @@ downstream repartitioning can key on them without decoding.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType, DoubleType, IntegerType, LongType, StringType, StructField,
@@ -31,7 +28,7 @@ from pyspark.sql.types import (
 )
 
 from . import codecs, synth
-from .pipeline import _to_batch
+from .pipeline import _nan_none, _row_map, _tile_rows
 
 # --------------------------------------------------------------------------
 # synthetic media fixtures (deterministic: seeded by key, FIXTURES.md rules)
@@ -94,27 +91,18 @@ def media_meta(scenes: DataFrame) -> DataFrame:
     this container cannot decode are *catalogued*, not failed (the strict
     ops below raise instead)."""
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            pdf = batch.to_pandas()
-            out = []
-            for row in pdf.itertuples():
-                rec = {"image_id": row.image_id, "fmt": row.fmt,
-                       "n_bytes": len(row.bytes), "decoded": 0,
-                       "px_min": None, "px_max": None, "px_mean": None}
-                try:
-                    img = codecs.decode_tile(row.bytes, int(row.w), int(row.h), row.fmt)
-                    rec.update(decoded=1, px_min=float(img.min()),
-                               px_max=float(img.max()),
-                               px_mean=round(float(img.mean()), 6))
-                except NotImplementedError:
-                    pass  # catalogued as decoded=0
-                out.append(rec)
-            if out:
-                yield _to_batch(pd.DataFrame(out), MEDIA_META_SCHEMA)
+    def fn(row, w, h):
+        try:
+            img = codecs.decode_tile(row.bytes, w, h, row.fmt)
+        except NotImplementedError:  # catalogued as decoded=0
+            yield row.fmt, len(row.bytes), 0, None, None, None
+            return
+        yield (row.fmt, len(row.bytes), 1, _nan_none(float(img.min())),
+               _nan_none(float(img.max())),
+               _nan_none(round(float(img.mean()), 6)))
 
-    return scenes.select("image_id", "bytes", "w", "h", "fmt").mapInArrow(
-        fn, MEDIA_META_SCHEMA)
+    return _tile_rows(scenes.select("image_id", "bytes", "w", "h", "fmt"),
+                      MEDIA_META_SCHEMA, fn, ("image_id",))
 
 
 # --------------------------------------------------------------------------
@@ -140,29 +128,18 @@ def tile_overviews(scenes: DataFrame, levels: tuple[int, ...] = (2, 4)) -> DataF
     kernel."""
     lv = tuple(int(x) for x in levels)
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            pdf = batch.to_pandas()
-            out = []
-            for row in pdf.itertuples():
-                w, h = int(row.w), int(row.h)
-                img = codecs.decode_tile(row.bytes, w, h, row.fmt)
-                for L in lv:
-                    ww, hh = (w // L) * L, (h // L) * L
-                    if ww == 0 or hh == 0:
-                        continue
-                    pooled = img[:hh, :ww].reshape(hh // L, L, ww // L, L).mean(axis=(1, 3))
-                    out.append({
-                        "image_id": row.image_id, "level": L,
-                        "w": ww // L, "h": hh // L,
-                        "bytes": np.round(pooled).astype("<u2").tobytes(),
-                        "px_mean": round(float(pooled.mean()), 6),
-                    })
-            if out:
-                yield _to_batch(pd.DataFrame(out), OVERVIEW_SCHEMA)
+    def fn(row, w, h):
+        img = codecs.decode_tile(row.bytes, w, h, row.fmt)
+        for L in lv:
+            ww, hh = (w // L) * L, (h // L) * L
+            if ww == 0 or hh == 0:
+                continue
+            pooled = img[:hh, :ww].reshape(hh // L, L, ww // L, L).mean(axis=(1, 3))
+            yield (L, ww // L, hh // L, np.round(pooled).astype("<u2").tobytes(),
+                   _nan_none(round(float(pooled.mean()), 6)))
 
-    return scenes.select("image_id", "bytes", "w", "h", "fmt").mapInArrow(
-        fn, OVERVIEW_SCHEMA)
+    return _tile_rows(scenes.select("image_id", "bytes", "w", "h", "fmt"),
+                      OVERVIEW_SCHEMA, fn, ("image_id",))
 
 
 # --------------------------------------------------------------------------
@@ -184,32 +161,20 @@ def frame_sample(videos: DataFrame, every: int = 4) -> DataFrame:
     Only the sampled frames are materialized out of the packed bytes — the
     unsampled ones are never copied (slice of the frame stride)."""
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            pdf = batch.to_pandas()
-            out = []
-            for row in pdf.itertuples():
-                if row.fmt != FMT_SEQ:
-                    raise NotImplementedError(
-                        f"fmt={row.fmt!r}: real video containers (mp4/webm) need "
-                        "decode libs absent from this container; only the packed "
-                        f"{FMT_SEQ!r} layout is implemented")
-                w, h = int(row.w), int(row.h)
-                stride = 2 * w * h
-                n_frames = len(row.bytes) // stride
-                for idx in range(0, n_frames, every):
-                    chunk = row.bytes[idx * stride:(idx + 1) * stride]
-                    frame = np.frombuffer(chunk, dtype="<u2").astype(np.float64)
-                    out.append({
-                        "video_id": row.video_id, "frame_idx": idx,
-                        "w": w, "h": h, "bytes": chunk,
-                        "px_mean": round(float(frame.mean()), 6),
-                    })
-            if out:
-                yield _to_batch(pd.DataFrame(out), FRAME_SCHEMA)
+    def fn(row, w, h):
+        if row.fmt != FMT_SEQ:
+            raise NotImplementedError(
+                f"fmt={row.fmt!r}: real video containers (mp4/webm) need "
+                "decode libs absent from this container; only the packed "
+                f"{FMT_SEQ!r} layout is implemented")
+        stride = 2 * w * h
+        for idx in range(0, len(row.bytes) // stride, every):
+            chunk = row.bytes[idx * stride:(idx + 1) * stride]
+            frame = np.frombuffer(chunk, dtype="<u2").astype(np.float64)
+            yield idx, w, h, chunk, round(float(frame.mean()), 6)
 
-    return videos.select("video_id", "bytes", "w", "h", "fmt").mapInArrow(
-        fn, FRAME_SCHEMA)
+    return _tile_rows(videos.select("video_id", "bytes", "w", "h", "fmt"),
+                      FRAME_SCHEMA, fn, ("video_id",))
 
 
 # --------------------------------------------------------------------------
@@ -225,27 +190,18 @@ AUDIO_SCHEMA = StructType([
 
 
 def audio_features(clips: DataFrame) -> DataFrame:
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            pdf = batch.to_pandas()
-            out = []
-            for row in pdf.itertuples():
-                if row.fmt != FMT_PCM16:
-                    raise NotImplementedError(
-                        f"fmt={row.fmt!r}: compressed audio (mp3/flac/ogg) needs "
-                        f"decode libs absent from this container; only {FMT_PCM16!r} "
-                        "is implemented")
-                sig = np.frombuffer(row.bytes, dtype="<i2").astype(np.float64)
-                out.append({
-                    "clip_id": row.clip_id,
-                    "n_samples": sig.size,
-                    "rms": round(float(np.sqrt(np.mean(sig * sig))), 6),
-                    "zero_crossings": int(np.count_nonzero(np.diff(np.signbit(sig)))),
-                })
-            if out:
-                yield _to_batch(pd.DataFrame(out), AUDIO_SCHEMA)
+    def fn(row):
+        if row.fmt != FMT_PCM16:
+            raise NotImplementedError(
+                f"fmt={row.fmt!r}: compressed audio (mp3/flac/ogg) needs "
+                f"decode libs absent from this container; only {FMT_PCM16!r} "
+                "is implemented")
+        sig = np.frombuffer(row.bytes, dtype="<i2").astype(np.float64)
+        yield (sig.size, _nan_none(round(float(np.sqrt(np.mean(sig * sig))), 6)),
+               int(np.count_nonzero(np.diff(np.signbit(sig)))))
 
-    return clips.select("clip_id", "bytes", "fmt").mapInArrow(fn, AUDIO_SCHEMA)
+    return _row_map(clips.select("clip_id", "bytes", "fmt"), AUDIO_SCHEMA, fn,
+                    ("clip_id",))
 
 
 # --------------------------------------------------------------------------

@@ -27,6 +27,7 @@ import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     BinaryType, DoubleType, IntegerType, LongType, StringType, StructField, StructType,
 )
@@ -219,23 +220,9 @@ PIXEL_SCHEMA = StructType([
 
 _SUBRANGE_NAMES = np.array(C.SUBRANGE_ORDER + [""], dtype=object)  # idx -1 -> ""
 
-_PA_TYPES = {
-    "string": pa.string(), "binary": pa.binary(), "int": pa.int32(),
-    "bigint": pa.int64(), "double": pa.float64(), "boolean": pa.bool_(),
-    "array<double>": pa.list_(pa.float64()), "array<bigint>": pa.list_(pa.int64()),
-}
-
 
 def _arrow_schema(spark_schema: StructType) -> pa.Schema:
-    return pa.schema([pa.field(f.name, _PA_TYPES[f.dataType.simpleString()]) for f in spark_schema])
-
-
-def _to_batch(pdf: pd.DataFrame, spark_schema: StructType) -> pa.RecordBatch:
-    """Build an Arrow batch with exactly the declared schema (explicit casts
-    so pandas dtype drift can never change the UDF contract)."""
-    schema = _arrow_schema(spark_schema)
-    arrays = [pa.array(pdf[f.name], type=f.type) for f in schema]
-    return pa.RecordBatch.from_arrays(arrays, schema=schema)
+    return pa.schema([pa.field(f.name, to_arrow_type(f.dataType)) for f in spark_schema])
 
 
 def _batch_from_cols(cols: dict[str, list], spark_schema: StructType) -> pa.RecordBatch:
@@ -267,13 +254,7 @@ def spread_tiles(tiles: DataFrame) -> DataFrame:
     spark = tiles.sparkSession
     target = spark.sparkContext.defaultParallelism
     try:
-        split = spark.conf.get("spark.sql.files.maxPartitionBytes")
-        split_b = int("".join(c for c in split if c.isdigit()) or 0)
-        if split.lower().endswith(("m", "mb")):
-            split_b *= 1024 * 1024
-        elif split.lower().endswith(("g", "gb")):
-            split_b *= 1024 * 1024 * 1024
-        split_b = split_b or 128 * 1024 * 1024
+        split_b = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
         plan = tiles._jdf.queryExecution().optimizedPlan()
         pstr = plan.toString()
         if "Repartition" in pstr:
@@ -334,27 +315,52 @@ _TILE_IDS = (*_TILE_KEY, "w", "h")
 _PLANE_IDS = ("image_id",) + _TILE_IDS
 
 
-def _tile_rows(src: DataFrame, schema: StructType, emit, ids) -> DataFrame:
-    """The per-tile Arrow map: ``emit(row, w, h)`` yields 0..n value tuples
-    per tile row of ``src``; each becomes one ``schema`` row, the ``ids``
-    columns copied from the tile row (None where it has no such column)
-    followed by the tuple. The mapInArrow step carries ``emit``'s name, so
-    plans name the operator's step."""
+def _row_map(src: DataFrame, schema: StructType, emit, ids) -> DataFrame:
+    """The package's one per-row Arrow map: ``emit(row)`` yields 0..n value
+    tuples per row of ``src``; each becomes one ``schema`` row, the ``ids``
+    columns copied from the input row (None where it has no such column)
+    followed by the tuple. Values are converted with ``schema``'s Arrow
+    types (a float NaN stays NaN). The mapInArrow step carries ``emit``'s
+    name, so plans name the operator's step."""
     names = schema.names
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        arrow = _arrow_schema(schema)
         for batch in batches:
             cols: list[list] = [[] for _ in names]
+            heads, vals = cols[:len(ids)], cols[len(ids):]
             for row in _batch_rows(batch):
-                head = tuple(getattr(row, k, None) for k in ids)
-                for vals in emit(row, int(row.w), int(row.h)):
-                    for c, v in zip(cols, (*head, *vals)):
-                        c.append(v)
+                # one input row's tuples go into the column lists at once:
+                # keeping a whole batch of tuples alive makes the cyclic GC
+                # rescan them (2x on the shingle pass)
+                out = list(emit(row))
+                for c, col in zip(vals, zip(*out)):
+                    c += col
+                for c, k in zip(heads, ids):
+                    c += [getattr(row, k, None)] * len(out)
             if cols[0]:
-                yield _batch_from_cols(dict(zip(names, cols)), schema)
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+                    schema=arrow)
 
     fn.__name__ = emit.__name__
     return src.mapInArrow(fn, schema)
+
+
+def _nan_none(v: float) -> float | None:
+    """NaN -> None, the NULL a pandas hop made of a NaN: for `_row_map`
+    emits that replaced one."""
+    return None if v != v else v
+
+
+def _tile_rows(src: DataFrame, schema: StructType, emit, ids) -> DataFrame:
+    """The per-tile case of `_row_map`: ``emit(row, w, h)`` also gets the
+    tile row's ``w`` and ``h`` as ints."""
+    def sized(row):
+        return emit(row, int(row.w), int(row.h))
+
+    sized.__name__ = emit.__name__
+    return _row_map(src, schema, sized, ids)
 
 
 def _tile_map(src: DataFrame, schema: StructType, build, ids) -> DataFrame:

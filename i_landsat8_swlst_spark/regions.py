@@ -53,9 +53,7 @@ from pyspark.sql.types import (
 )
 
 from . import codecs
-from .pipeline import (
-    _arrow_schema, _batch_from_cols, _batch_rows, _nominal_grid,
-)
+from .pipeline import _arrow_schema, _batch_rows, _nominal_grid, _tile_rows
 
 # ONE extraction pass emits both row kinds (kind 0 = local region with
 # partial stats; kind 1 = masked border cell; kind 2 = across-border probe)
@@ -466,26 +464,18 @@ def lake_tiles(tiles: DataFrame, seeds: DataFrame, level: float,
             (F.col("gy") % nom_h).alias("py"))
         sj = planes.join(F.broadcast(s), on=["scene_id", "tile_x", "tile_y"])
 
-        def seed_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            for batch in batches:
-                cols: dict[str, list] = {"scene_id": [], "v": []}
-                for row in _batch_rows(batch):
-                    labels = np.frombuffer(row.label_bytes, "<i4").reshape(
-                        int(row.h), int(row.w))
-                    lv = int(labels[int(row.py), int(row.px)])
-                    if lv < 0:
-                        raise ValueError(
-                            f"lake_tiles: seed ({row.px}, {row.py}) of tile "
-                            f"({row.tile_x}, {row.tile_y}) scene "
-                            f"{row.scene_id!r} is not below the water level")
-                    cols["scene_id"].append(row.scene_id)
-                    cols["v"].append(int(_pack_node(
-                        int(row.tile_x), int(row.tile_y),
-                        np.array([lv]))[0]))
-                if cols["scene_id"]:
-                    yield _batch_from_cols(cols, _SEED_NODE_SCHEMA)
+        def seed_fn(row, w, h):
+            labels = np.frombuffer(row.label_bytes, "<i4").reshape(h, w)
+            lv = int(labels[int(row.py), int(row.px)])
+            if lv < 0:
+                raise ValueError(
+                    f"lake_tiles: seed ({row.px}, {row.py}) of tile "
+                    f"({row.tile_x}, {row.tile_y}) scene "
+                    f"{row.scene_id!r} is not below the water level")
+            yield (int(_pack_node(int(row.tile_x), int(row.tile_y),
+                                  np.array([lv]))[0]),)
 
-        seed_nodes = sj.mapInArrow(seed_fn, _SEED_NODE_SCHEMA)
+        seed_nodes = _tile_rows(sj, _SEED_NODE_SCHEMA, seed_fn, ("scene_id",))
         n_matched = seed_nodes.count()
         n_seeds = seeds.count()
         if n_matched != n_seeds:

@@ -54,7 +54,7 @@ from pyspark.sql.types import (
 
 from . import geo
 from .pipeline import (
-    _PA_TYPES, _TILE_IDS, _TILE_KEY, _coalesce_batches, _nominal_grid,
+    _TILE_IDS, _TILE_KEY, _arrow_schema, _coalesce_batches, _nominal_grid,
     _tile_rows,
 )
 
@@ -331,7 +331,7 @@ def _broadcast_points(points: DataFrame, aoi: pd.DataFrame | None = None,
     bc = points.sparkSession.sparkContext.broadcast((aoi, stations))
     fields = ((_CELL_FIELDS if s2_level is not None else [])
               + (_AOI_FIELDS if aoi else []) + (_STATION_FIELDS if stations else []))
-    extra = [pa.field(f.name, _PA_TYPES[f.dataType.simpleString()]) for f in fields]
+    extra = list(_arrow_schema(StructType(fields)))
     lon_i, lat_i = points.columns.index(lon_col), points.columns.index(lat_col)
 
     def fn(batches):

@@ -24,9 +24,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     BinaryType, DoubleType, IntegerType, LongType, StringType, StructField,
@@ -34,7 +32,7 @@ from pyspark.sql.types import (
 )
 
 from . import codecs
-from .pipeline import _to_batch, parse_scenes
+from .pipeline import _nan_none, _tile_rows, parse_scenes
 
 SCENES_SCHEMA = StructType([
     StructField("image_id", StringType()),
@@ -74,25 +72,13 @@ def _decode_stats(df: DataFrame) -> DataFrame:
     side), per single band — streaming pairs arrive independently, so the
     per-band stats table is the streaming analog of lst_tiles' input audit."""
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            pdf = batch.to_pandas()
-            out = []
-            for row in pdf.itertuples():
-                img = codecs.decode_tile(row.bytes, int(row.w), int(row.h), row.fmt)
-                out.append({
-                    "image_id": row.image_id, "scene_id": row.scene_id,
-                    "band": int(row.band),
-                    "tile_x": int(row.tile_x), "tile_y": int(row.tile_y),
-                    "acq_date": row.acq_date,
-                    "n_px": int(img.size),
-                    "dn_min": float(img.min()), "dn_max": float(img.max()),
-                    "dn_mean": round(float(img.mean()), 6),
-                })
-            if out:
-                yield _to_batch(pd.DataFrame(out), TILE_STATS_SCHEMA)
+    def fn(row, w, h):
+        img = codecs.decode_tile(row.bytes, w, h, row.fmt)
+        yield (img.size, _nan_none(float(img.min())), _nan_none(float(img.max())),
+               _nan_none(round(float(img.mean()), 6)))
 
-    return df.mapInArrow(fn, TILE_STATS_SCHEMA)
+    return _tile_rows(df, TILE_STATS_SCHEMA, fn, (
+        "image_id", "scene_id", "band", "tile_x", "tile_y", "acq_date"))
 
 
 def stream_tile_stats(

@@ -88,6 +88,7 @@ from pyspark.sql.types import (
 from . import codecs
 from .pipeline import (
     _TILE_KEY, _batch_from_cols, _batch_rows, _nominal_grid, _tile_map,
+    _tile_rows,
 )
 
 # sectors per scan group: one applyInPandas group costs ~3.5 ms of
@@ -507,21 +508,14 @@ def _observer_eyes(tiles: DataFrame, obs_pdf: pd.DataFrame,
                    & (F.col("tile_y")
                       == F.floor(F.col("oy") / nom_h).cast("int"))))
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {"i": [], "z": []}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                lx = int(row.ox) - int(row.tile_x) * nom_w
-                ly = int(row.oy) - int(row.tile_y) * nom_h
-                if 0 <= lx < w and 0 <= ly < h:
-                    plane = codecs.decode_f32bt(getattr(row, src_col), w, h)
-                    cols["i"].append(row.i)
-                    cols["z"].append(float(plane[ly, lx]))
-            if cols["i"]:
-                yield _batch_from_cols(cols, _EYE_SCHEMA)
+    def fn(row, w, h):
+        lx = int(row.ox) - int(row.tile_x) * nom_w
+        ly = int(row.oy) - int(row.tile_y) * nom_h
+        if 0 <= lx < w and 0 <= ly < h:
+            plane = codecs.decode_f32bt(getattr(row, src_col), w, h)
+            yield (float(plane[ly, lx]),)
 
-    zs = dict(hit.mapInArrow(fn, _EYE_SCHEMA).collect())
+    zs = dict(_tile_rows(hit, _EYE_SCHEMA, fn, ("i",)).collect())
     eyes: dict[str, list] = {}
     for r in o.itertuples():
         z = zs.get(r.i, math.nan)

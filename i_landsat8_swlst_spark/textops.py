@@ -14,12 +14,15 @@ on both sides and rounded before ranking.
 
 from __future__ import annotations
 
+import hashlib
 import re
 
+import numpy as np
 import pandas as pd  # module-level: pandas_udf type-hint strings (PEP 563)
 from pyspark.sql import Window, functions as F
-from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
 
+from .pipeline import _row_map
 from .relational import _REGISTRY, load, register
 
 # --------------------------------------------------------------------------
@@ -81,6 +84,22 @@ def _perm_ab(i: int) -> tuple[int, int]:
     return 2 * i + 1, (i * 2654435761) % _P
 
 
+def _kgram_md5(txt: str, k: int, n: int) -> np.ndarray:
+    """int64 hash of each k-CHARACTER gram starting at 0..n-1: the first 4
+    md5 digest bytes big-endian, the value the engines' 8-hex-digit fold
+    (`_hex_to_int_sql`) computes. Python str slices have JVM ``substr``'s
+    character semantics, including the short tail grams; an ASCII text
+    slices its utf-8 bytes instead (one byte per character)."""
+    md5 = hashlib.md5
+    if txt.isascii():
+        data = txt.encode()
+        grams = (data[i:i + k] for i in range(n))
+    else:
+        grams = (txt[i:i + k].encode() for i in range(n))
+    return np.frombuffer(b"".join(md5(g).digest()[:4] for g in grams),
+                         dtype=">u4").astype(np.int64)
+
+
 def _minhash_sql() -> str:
     # all NPERM min-hashes as parallel aggregate columns over ONE scan of the
     # hashed shingles — the earlier perms CROSS JOIN paid a NPERM x row
@@ -137,53 +156,20 @@ def _minh_wide(spark, sf_dir):
     ONE hash exchange: the repartition that spreads the single-row-group
     scan (the signature itself needs no aggregate shuffle any more).
     """
-    import hashlib
-
-    import numpy as np
-    import pyarrow as pa
-
-    from .pipeline import _coalesce_batches
-
     d = _spread(load(spark, sf_dir, "documents").filter(_SUBSET), "doc_id")
     ab = [_perm_ab(i) for i in range(_NPERM)]
     a_np = np.array([a for a, _ in ab], dtype=np.int64)[:, None]
     b_np = np.array([b for _, b in ab], dtype=np.int64)[:, None]
-    out_names = ["doc_id"] + [f"mh{i}" for i in range(_NPERM)]
-    ddl = "doc_id bigint, " + ", ".join(f"mh{i} bigint" for i in range(_NPERM))
+    schema = StructType([d.schema["doc_id"]] + [
+        StructField(f"mh{i}", LongType()) for i in range(_NPERM)])
 
-    def sigs(batches):
-        md5 = hashlib.md5
-        for batch in _coalesce_batches(batches, 1024):
-            doc_ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            out_ids = []
-            out_mh = []
-            for did, s in zip(doc_ids, texts):
-                if s is None:
-                    continue  # explode(sequence(1, null)) dropped the row
-                n = max(len(s) - 4, 1)
-                if s.isascii():
-                    bs = s.encode()
-                    xs = np.frombuffer(
-                        b"".join(md5(bs[i:i + 5]).digest()[:4]
-                                 for i in range(n)),
-                        dtype=">u4").astype(np.int64)
-                else:
-                    xs = np.frombuffer(
-                        b"".join(md5(s[i:i + 5].encode()).digest()[:4]
-                                 for i in range(n)),
-                        dtype=">u4").astype(np.int64)
-                out_ids.append(did)
-                out_mh.append(((a_np * xs[None, :] + b_np) % _P).min(axis=1))
-            if not out_ids:
-                continue
-            mh = np.stack(out_mh)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_ids, type=pa.int64())]
-                + [pa.array(mh[:, i]) for i in range(_NPERM)],
-                names=out_names)
+    def sigs(row):
+        s = row.text
+        if s is not None:  # explode(sequence(1, null)) dropped the row
+            xs = _kgram_md5(s, 5, max(len(s) - 4, 1))
+            yield ((a_np * xs[None, :] + b_np) % _P).min(axis=1).tolist()
 
-    return d.select("doc_id", "text").mapInArrow(sigs, ddl)
+    return _row_map(d.select("doc_id", "text"), schema, sigs, ("doc_id",))
 
 
 @register(
@@ -383,36 +369,15 @@ def _shingle_sets(docs, k: int):
     pass emits nothing — equivalent for every consumer, since they all
     equi-join or group on ``sh`` and SQL NULL never equi-matches
     (pinned by test_shingle_sets_matches_substr_semantics)."""
-    from pyspark.sql.types import StringType, StructField, StructType
+    sh_schema = StructType([docs.schema["doc_id"], StructField("sh", StringType())])
 
-    id_field = docs.schema["doc_id"]
-    id_type = to_arrow_type(id_field.dataType)
-    sh_schema = StructType([id_field, StructField("sh", StringType())])
+    def shingles(row):
+        txt = row.text
+        if txt is not None:
+            for sh in {txt[i:i + k] for i in range(max(len(txt) - (k - 1), 1))}:
+                yield (sh,)
 
-    def shingles(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            ids_out: list = []
-            sh_out: list = []
-            for did, txt in zip(ids, texts):
-                if txt is None:
-                    continue
-                hi = len(txt) - (k - 1)
-                if hi < 1:
-                    hi = 1
-                seen = {txt[i:i + k] for i in range(hi)}
-                ids_out.extend([did] * len(seen))
-                sh_out.extend(seen)
-            if ids_out:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(ids_out, id_type),
-                     pa.array(sh_out, pa.string())],
-                    names=["doc_id", "sh"])
-
-    return docs.select("doc_id", "text").mapInArrow(shingles, sh_schema)
+    return _row_map(docs.select("doc_id", "text"), sh_schema, shingles, ("doc_id",))
 
 
 def ngram_jaccard_pairs(docs, df_cap: int = _DF_CAP, threshold: float = 0.08):
@@ -599,48 +564,25 @@ def q_char_entropy(spark, sf_dir):
     from collections import Counter
     from math import log as _ln
 
-    from pyspark.sql.types import (DoubleType, LongType, StructField,
-                                   StructType)
-
     d = load(spark, sf_dir, "documents").filter(F.length("text") > 0)
-    id_field = d.schema["doc_id"]
-    id_type = to_arrow_type(id_field.dataType)
     out_schema = StructType([
-        id_field,
+        d.schema["doc_id"],
         StructField("n_chars", LongType(), False),
         StructField("alphabet", LongType(), False),
         StructField("s", DoubleType(), False),
     ])
 
-    def fold(batches):
-        import pyarrow as pa
+    def fold(row):
+        txt = row.text
+        if txt:
+            cnt = Counter(txt)
+            s = 0.0
+            for ch in sorted(cnt):
+                c = float(cnt[ch])
+                s += c * _ln(c)
+            yield len(txt), len(cnt), s
 
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            out: dict[str, list] = {n: [] for n in
-                                    ("doc_id", "n_chars", "alphabet", "s")}
-            for did, txt in zip(ids, texts):
-                if not txt:
-                    continue
-                cnt = Counter(txt)
-                s = 0.0
-                for ch in sorted(cnt):
-                    c = float(cnt[ch])
-                    s += c * _ln(c)
-                out["doc_id"].append(did)
-                out["n_chars"].append(len(txt))
-                out["alphabet"].append(len(cnt))
-                out["s"].append(s)
-            if out["doc_id"]:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(out["doc_id"], id_type),
-                     pa.array(out["n_chars"], pa.int64()),
-                     pa.array(out["alphabet"], pa.int64()),
-                     pa.array(out["s"], pa.float64())],
-                    names=[f.name for f in out_schema.fields])
-
-    folded = d.select("doc_id", "text").mapInArrow(fold, out_schema)
+    folded = _row_map(d.select("doc_id", "text"), out_schema, fold, ("doc_id",))
     ent = (F.log(F.col("n_chars").cast("double")) - F.col("s") / F.col("n_chars")) / F.log(F.lit(2.0))
     return folded.select("doc_id", "n_chars", "alphabet",
                          F.round(ent, 6).alias("entropy_bits"))
@@ -925,16 +867,10 @@ def q_winnow_fingerprint(spark, sf_dir):
     # distinct counts and min/max are integer algebra — no fp anywhere.
     # A doc with fewer than w full windows emits no row, exactly as the
     # old i + w - 1 <= n_pos - 1 filter + groupBy produced no group.
-    from hashlib import md5 as _md5
-
-    from pyspark.sql.types import LongType, StructField, StructType
-
     d = load(spark, sf_dir, "documents").filter(_WINNOW_SUBSET).filter(
         F.length("text") >= _WINNOW_K)
-    id_field = d.schema["doc_id"]
-    id_type = to_arrow_type(id_field.dataType)
     out_schema = StructType([
-        id_field,
+        d.schema["doc_id"],
         StructField("n_kgrams", LongType(), False),
         StructField("n_fingerprints", LongType(), False),
         StructField("min_fp", LongType(), False),
@@ -942,53 +878,15 @@ def q_winnow_fingerprint(spark, sf_dir):
     ])
     k, wdw = _WINNOW_K, _WINNOW_W
 
-    def fp(batches):
-        import numpy as np
-        import pyarrow as pa
+    def fp(row):
+        txt = row.text
+        n_pos = -1 if txt is None else len(txt) - k + 1
+        if n_pos >= wdw:
+            mins = np.lib.stride_tricks.sliding_window_view(
+                _kgram_md5(txt, k, n_pos), wdw).min(axis=1)
+            yield n_pos, len(np.unique(mins)), int(mins.min()), int(mins.max())
 
-        win = np.lib.stride_tricks.sliding_window_view
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            out: dict[str, list] = {n: [] for n in
-                                    ("doc_id", "n_kgrams", "n_fingerprints",
-                                     "min_fp", "max_fp")}
-            for did, txt in zip(ids, texts):
-                if txt is None:
-                    continue
-                n_pos = len(txt) - k + 1
-                if n_pos < wdw:
-                    continue
-                data = txt.encode("utf-8")
-                if len(data) == len(txt):      # ASCII: byte slice == char
-                    h = np.fromiter(
-                        (int.from_bytes(
-                            _md5(data[i:i + k]).digest()[:4], "big")
-                         for i in range(n_pos)),
-                        dtype=np.int64, count=n_pos)
-                else:
-                    h = np.fromiter(
-                        (int.from_bytes(
-                            _md5(txt[i:i + k].encode("utf-8")).digest()[:4],
-                            "big")
-                         for i in range(n_pos)),
-                        dtype=np.int64, count=n_pos)
-                mins = win(h, wdw).min(axis=1)
-                out["doc_id"].append(did)
-                out["n_kgrams"].append(n_pos)
-                out["n_fingerprints"].append(len(np.unique(mins)))
-                out["min_fp"].append(int(mins.min()))
-                out["max_fp"].append(int(mins.max()))
-            if out["doc_id"]:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(out["doc_id"], id_type),
-                     pa.array(out["n_kgrams"], pa.int64()),
-                     pa.array(out["n_fingerprints"], pa.int64()),
-                     pa.array(out["min_fp"], pa.int64()),
-                     pa.array(out["max_fp"], pa.int64())],
-                    names=[f.name for f in out_schema.fields])
-
-    return d.select("doc_id", "text").mapInArrow(fp, out_schema)
+    return _row_map(d.select("doc_id", "text"), out_schema, fp, ("doc_id",))
 
 
 # --------------------------------------------------------------------------

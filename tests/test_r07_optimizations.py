@@ -195,6 +195,30 @@ def test_spread_tiles_gating(spark, tmp_path):
     assert "Repartition" not in plan3     # in-memory state untouched
 
 
+def test_spread_tiles_reads_the_parsed_split_size(spark, tmp_path):
+    """A Spark-valid ``512k`` split is 512 KiB, not 512 bytes: a ~20 KB
+    parquet tile table is below the spread threshold and gets spread."""
+    from i_landsat8_swlst_spark.pipeline import spread_tiles
+
+    rng = np.random.default_rng(5)
+    pdf = pd.DataFrame({"scene_id": ["S"] * 64,
+                        "tile_x": list(range(64)), "tile_y": 0, "w": 16,
+                        "h": 8, "lst_bytes": [rng.bytes(256) for _ in range(64)]})
+    path = str(tmp_path / "tiles.parquet")
+    spark.createDataFrame(pdf).coalesce(1).write.parquet(path)
+    scan = spark.read.parquet(path)
+    size_b = int(scan._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    assert 10_000 < size_b < 40_000
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "512k")
+        plan = spread_tiles(scan)._jdf.queryExecution().optimizedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    assert "Repartition" in plan
+
+
 # ---------------------------------------------------------------------------
 # second r07 session: vectorized exact-R3 march == the serial spec walk
 # ---------------------------------------------------------------------------

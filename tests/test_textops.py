@@ -6,6 +6,7 @@ import hashlib
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from i_landsat8_swlst_spark.textops import q_simhash64
@@ -188,19 +189,20 @@ def test_ngram_jaccard_df_cap_kills_hot_shingle(spark):
     assert (uncapped[["doc_a", "doc_b"]].lt(100).all(axis=1)).sum() == 190
 
 
-def test_ngram_jaccard_pairs_keeps_int_doc_id(spark):
-    """A 32-bit ``doc_id`` passes through the shingle Arrow pass: the id
-    array is built with the field's own Arrow type, not inferred as int64
-    against a declared int column."""
+@pytest.mark.parametrize("id_type", ["int", "smallint", "bigint"])
+def test_ngram_jaccard_pairs_keeps_int_doc_id(spark, id_type):
+    """An integer ``doc_id`` of any width passes through the shingle Arrow
+    pass: the id array is built with the field's own Arrow type, not
+    inferred as int64 against a declared narrower column."""
     from i_landsat8_swlst_spark.textops import ngram_jaccard_pairs
 
     body = "the exact same document body here"
     docs = spark.createDataFrame(pd.DataFrame([
         {"doc_id": 1, "text": body}, {"doc_id": 2, "text": body},
         {"doc_id": 3, "text": "nothing alike at all, other words"}])) \
-        .withColumn("doc_id", F.col("doc_id").cast("int"))
+        .withColumn("doc_id", F.col("doc_id").cast(id_type))
     got = ngram_jaccard_pairs(docs)
-    assert dict(got.dtypes)["doc_a"] == "int"
+    assert dict(got.dtypes)["doc_a"] == id_type
     assert [tuple(r) for r in got.collect()] == [(1, 2, 1.0)]
 
 
