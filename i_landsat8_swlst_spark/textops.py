@@ -93,11 +93,10 @@ def _kgram_md5(txt: str, k: int, n: int) -> np.ndarray:
     md5 = hashlib.md5
     if txt.isascii():
         data = txt.encode()
-        grams = (data[i:i + k] for i in range(n))
+        digests = [md5(data[i:i + k]).digest()[:4] for i in range(n)]
     else:
-        grams = (txt[i:i + k].encode() for i in range(n))
-    return np.frombuffer(b"".join(md5(g).digest()[:4] for g in grams),
-                         dtype=">u4").astype(np.int64)
+        digests = [md5(txt[i:i + k].encode()).digest()[:4] for i in range(n)]
+    return np.frombuffer(b"".join(digests), dtype=">u4").astype(np.int64)
 
 
 def _minhash_sql() -> str:
