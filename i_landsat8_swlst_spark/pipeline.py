@@ -322,12 +322,10 @@ def _row_map(src: DataFrame, schema: StructType, emit, ids) -> DataFrame:
     followed by the tuple. Values are converted with ``schema``'s Arrow
     types (a float NaN stays NaN). The mapInArrow step carries ``emit``'s
     name, so plans name the operator's step."""
-    names = schema.names
-
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         arrow = _arrow_schema(schema)
         for batch in batches:
-            cols: list[list] = [[] for _ in names]
+            cols: list[list] = [[] for _ in arrow]
             heads, vals = cols[:len(ids)], cols[len(ids):]
             for row in _batch_rows(batch):
                 # one input row's tuples go into the column lists at once:
