@@ -8,16 +8,21 @@ and ``classify_tiles`` nearest and maxlik), of the partials folds
 (``band_moments``, ``scene_ranges_df``, ``scene_histograms_df``,
 ``series_tiles_deep``, ``crosstab_tiles``, ``regression_tiles``,
 ``maxlik_model_df``), of the models built on them (``kmeans_model_df``,
-``pca_model_df``, ``stretch_luts_df``, the histogram-match LUTs) and of
-``warp_tiles`` (nearest and bilinear) on one two-scene fixture is sorted
-and hashed; the digest must equal the recorded one.
+``pca_model_df``, ``stretch_luts_df``, the histogram-match LUTs), of the
+revisit-stack operators (``series_tiles``, ``temporal_aggregate_tiles``,
+``gapfill_tiles``, ``accumulate_tiles``) and of ``warp_tiles`` (nearest
+and bilinear) on one two-scene fixture is sorted and hashed; the digest
+must equal the recorded one.
 
 Both scenes carry three band planes plus a double-resolution pan plane,
 ragged right and bottom edge tiles and NaN holes. The planes are
 integer-valued (0..255), so every cross-tile float sum is exact and the
 folded models do not depend on Spark's summation order. The revisit
 series (``series_tiles_deep``, ``anomaly_tiles``) restack the three bands
-of each scene as revisits R1..R3 of one footprint. ``warp_tiles`` needs a
+of each scene as revisits R1..R3 of one footprint; their acquisition
+instants (``_META``) are not at midnight, and the two footprints' R1 -> R3
+spans (58 and 106 days) straddle the gap-fill case's ``max_gap_days``.
+``warp_tiles`` needs a
 uniform source grid, so it runs on the scenes cropped to whole tiles.
 
 To re-record after an intended output change:
@@ -92,6 +97,17 @@ def _revisits(spark, current: bool = False):
     return spark.createDataFrame(pd.DataFrame(rows))
 
 
+_META = {"AR1": "2020-01-03 10:17:31.250", "AR2": "2020-02-11 14:02:05",
+         "AR3": "2020-03-01 09:45:12.5", "BR1": "2020-01-05 22:31:07",
+         "BR2": "2020-02-27 03:15:44.75", "BR3": "2020-04-21 16:08:59"}
+
+
+def _meta(spark):
+    """Each revisit's acquisition instant."""
+    return spark.createDataFrame(pd.DataFrame(
+        [{"scene_id": k, "acquired_at": pd.Timestamp(v)} for k, v in _META.items()]))
+
+
 def _uniform(spark):
     """The scenes cropped to whole tiles, with their geometry."""
     rows, geom = [], []
@@ -163,6 +179,18 @@ CASES = {
     "ndvi_emissivity": lambda s: multiband.ndvi_emissivity_tiles(
         _tiles(s), "b1_bytes", "b2_bytes"),
     "series_deep": lambda s: series.series_tiles_deep(_revisits(s), bins=32),
+    "series": lambda s: series.series_tiles(_revisits(s)),
+    "series_subset": lambda s: series.series_tiles(
+        _revisits(s), stats=("median_approx", "max", "count")),
+    "temporal_2months": lambda s: series.temporal_aggregate_tiles(
+        _revisits(s), _meta(s), "2 months"),
+    "gapfill": lambda s: series.gapfill_tiles(_revisits(s), _meta(s)),
+    "gapfill_max_gap": lambda s: series.gapfill_tiles(
+        _revisits(s), _meta(s), max_gap_days=80.0),
+    "accumulate_skip_nulls": lambda s: series.accumulate_tiles(
+        _revisits(s), _meta(s), lower=100.0),
+    "accumulate_poisoned": lambda s: series.accumulate_tiles(
+        _revisits(s), _meta(s), lower=50.0, upper=180.0, skip_nulls=False),
     "crosstab": lambda s: series.crosstab_tiles(
         _tiles(s), "b1_bytes", "b2_bytes", levels_a=5, levels_b=4),
     "regression": lambda s: series.regression_tiles(
@@ -180,6 +208,10 @@ CASES = {
 }
 
 DIGESTS = {  # case: (rows, sha256 of the sorted rows)
+    "accumulate_poisoned": (75,
+        "175e8dec6e65986db52d9f5b0be02c3abce74586d62bef36533fe2ec84e90e74"),
+    "accumulate_skip_nulls": (75,
+        "40478f40b5deff8af04e2d8089c3a0161619a9a256eb8f37b6c913f982075b58"),
     "algebra": (25,
         "16dd4e7e59a1382b6464742d2ba1f53165a524758656f95568d87d2e0cbeea6b"),
     "anomaly": (25,
@@ -192,6 +224,10 @@ DIGESTS = {  # case: (rows, sha256 of the sorted rows)
         "16300354952c5af72c276e5a2f95f7d89a716215f4bcd2982b906e6bdb49a207"),
     "crosstab": (39,
         "d60e1a5e800b0c73307cc02c4d6d23fdc5fc8bd621a77b1acacf0c0dc5d8b730"),
+    "gapfill": (75,
+        "cc487103e6ee5816cd34aaaac59ed149247a13edc3ba8c1dc846ca259d50777e"),
+    "gapfill_max_gap": (75,
+        "50c3dd908b7548cfe4733171e9fdd9304cf8debf8170f065911baed228d4e5da"),
     "histo_match": (25,
         "4ae3093eee0c0549f54b29b27bdd0b6b4c198d0911d7557b18f5f539cf9872f3"),
     "histo_match_luts": (2,
@@ -222,14 +258,20 @@ DIGESTS = {  # case: (rows, sha256 of the sorted rows)
         "8dc8c467320d8c8de37057db67442268f29699753584e6ca1c0ba1d697040b23"),
     "scene_ranges": (2,
         "879d7cb0541e4fa2d78db1ff47be52d3f5b439b5ff5adff5b153e25cb69dfcd0"),
+    "series": (25,
+        "c5937a876cd942e4e59a44408115c1d36f36957191ed7a28aa1b7175be92fd5f"),
     "series_deep": (25,
         "4137bfd579b19cbd25d4b54484214c084f1fa0e6caa4304b04f342666deab6b3"),
+    "series_subset": (25,
+        "f07b96ec93dfdcdc5286411352e4972222f513fd33ae1f944b33edfbbe527734"),
     "stretch_equalize": (25,
         "61f21667993accfa17d666853b367c80336199e058fa49cddaa103405f97e7a2"),
     "stretch_linear": (25,
         "368323b86601637164ba48d6f750edb0de5f7c54da558797041ff95555b8488a"),
     "stretch_luts": (2,
         "eed6ec5f3d92dfe1ba64894fd57715944318dc507c60c05db1a8c646fad275f0"),
+    "temporal_2months": (50,
+        "f24359c0998a38048b6cece273f85ea50d21d9faacd7dbc88ed81abbe952c79f"),
     "warp_bilinear": (10,
         "1a14556acd2512b770c89f726538a54462424e118efa1df10ba26fa40d360756"),
     "warp_nearest": (10,
