@@ -20,6 +20,8 @@ estimate_cwv_big_expression). Metadata-only aggregations never touch the
 
 from __future__ import annotations
 
+import itertools
+from operator import attrgetter
 from typing import Iterator
 
 import numpy as np
@@ -35,6 +37,7 @@ from pyspark.sql.types import (
 from . import codecs
 from . import constants as C
 from . import kernels as K
+from .session import ARROW_BATCH_ROWS
 
 _ID_RE = r"^([^/]+)/B(\d+)/(\d+)_(\d+)$"
 
@@ -225,12 +228,16 @@ def _arrow_schema(spark_schema: StructType) -> pa.Schema:
     return pa.schema([pa.field(f.name, to_arrow_type(f.dataType)) for f in spark_schema])
 
 
-def _batch_from_cols(cols: dict[str, list], spark_schema: StructType) -> pa.RecordBatch:
-    """Arrow batch straight from per-column Python lists — skips the
-    pandas.DataFrame detour in the hot tile loop."""
-    schema = _arrow_schema(spark_schema)
+def _arrow_batch(cols: list[list], arrow: pa.Schema) -> pa.RecordBatch:
+    """Arrow batch straight from per-column Python lists in ``arrow``'s
+    field order — skips the pandas.DataFrame detour in the hot tile loop."""
     return pa.RecordBatch.from_arrays(
-        [pa.array(cols[f.name], type=f.type) for f in schema], schema=schema)
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow)
+
+
+def _batch_from_cols(cols: dict[str, list], spark_schema: StructType) -> pa.RecordBatch:
+    """`_arrow_batch` of per-column lists keyed by field name."""
+    return _arrow_batch([cols[f.name] for f in spark_schema], _arrow_schema(spark_schema))
 
 
 def spread_tiles(tiles: DataFrame) -> DataFrame:
@@ -337,12 +344,51 @@ def _row_map(src: DataFrame, schema: StructType, emit, ids) -> DataFrame:
                 for c, k in zip(heads, ids):
                     c += [getattr(row, k, None)] * len(out)
             if cols[0]:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
-                    schema=arrow)
+                yield _arrow_batch(cols, arrow)
 
     fn.__name__ = emit.__name__
     return src.mapInArrow(fn, schema)
+
+
+def _grouped(src: DataFrame, key: list[str], order, schema: StructType,
+             consume) -> DataFrame:
+    """The package's one per-key stream: hash-partition ``src`` on ``key``,
+    sort each partition by ``key + order`` and hand ``consume`` one lazy
+    iterator of rows per key value (NULL keys form one group), in that
+    order, without pandas machinery (FlatMapGroupsInPandas paid ~1 ms per
+    9-row group). ``consume(groups)`` yields Arrow batches of ``schema``;
+    each group's iterator is spent once the next one is taken. The
+    mapInArrow step carries ``consume``'s name."""
+    parts = src.repartition(*[F.col(c) for c in key]) \
+               .sortWithinPartitions(*key, *order)
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        rows = (row for batch in batches for row in _batch_rows(batch))
+        return consume(g for _, g in itertools.groupby(rows, attrgetter(*key)))
+
+    fn.__name__ = consume.__name__
+    return parts.mapInArrow(fn, schema)
+
+
+def _group_rows(src: DataFrame, key: list[str], order, schema: StructType,
+                emit) -> DataFrame:
+    """The per-key case of `_grouped`, the grouped sibling of `_row_map`:
+    ``emit(rows)`` gets one key's rows in ``order`` and yields 0..n
+    ``schema`` tuples; batches go out every ``ARROW_BATCH_ROWS`` rows."""
+    def fn(groups) -> Iterator[pa.RecordBatch]:
+        arrow = _arrow_schema(schema)
+        cols: list[list] = [[] for _ in arrow]
+        for rows in groups:
+            for c, col in zip(cols, zip(*emit(rows))):
+                c += col
+            if len(cols[0]) >= ARROW_BATCH_ROWS:
+                yield _arrow_batch(cols, arrow)
+                cols = [[] for _ in arrow]
+        if cols[0]:
+            yield _arrow_batch(cols, arrow)
+
+    fn.__name__ = emit.__name__
+    return _grouped(src, key, order, schema, fn)
 
 
 def _nan_none(v: float) -> float | None:
@@ -738,30 +784,7 @@ def _halo_pad(strips: list, col: str, dt: str, w: int, h: int, r: int,
     return pad
 
 
-def _halo_exchange(strips: DataFrame, assemble, schema: StructType) -> DataFrame:
-    """Shuffle halo strips on the receiving tile key and sort within
-    partitions, so each tile's strips are contiguous; ``assemble`` then
-    streams over the per-tile strip lists in mapInArrow — no per-group
-    pandas machinery (FlatMapGroupsInPandas paid ~1 ms/group of 9 rows)."""
-    parts = strips.repartition(F.col("scene_id"), F.col("rx"), F.col("ry")) \
-                  .sortWithinPartitions("scene_id", "rx", "ry")
-
-    def tiles(batches: Iterator[pa.RecordBatch]):
-        cur, acc = None, []
-        for batch in batches:
-            for s in _batch_rows(batch):
-                k = (s.scene_id, s.rx, s.ry)
-                if k != cur and acc:
-                    yield acc
-                    acc = []
-                cur = k
-                acc.append(s)
-        if acc:
-            yield acc
-
-    return parts.mapInArrow(lambda batches: assemble(tiles(batches)), schema)
-
-
+_HALO_KEY = ["scene_id", "rx", "ry"]
 _STRIP_KEY = [StructField("scene_id", StringType()),
               StructField("rx", IntegerType()),         # receiving tile key
               StructField("ry", IntegerType()),
@@ -876,7 +899,7 @@ def lst_tiles_halo(enriched: DataFrame, window: int = C.DEFAULT_CWV_WINDOW) -> D
     def assemble(tiles) -> Iterator[pa.RecordBatch]:
         pending: list = []
         for acc in tiles:
-            t = padded(acc)
+            t = padded(list(acc))
             if t is not None:
                 pending.append(t)
             if len(pending) >= _KERNEL_STACK:
@@ -884,9 +907,8 @@ def lst_tiles_halo(enriched: DataFrame, window: int = C.DEFAULT_CWV_WINDOW) -> D
         if pending:
             yield kernel_batch(pending)
 
-    return _halo_exchange(_tile_rows(enriched, strip_schema, emit_strips,
-                                     ("scene_id",)),
-                          assemble, TILE_SCHEMA)
+    return _grouped(_tile_rows(enriched, strip_schema, emit_strips, ("scene_id",)),
+                    _HALO_KEY, (), TILE_SCHEMA, assemble)
 
 
 def composite_pixels(pixels: DataFrame,
@@ -1122,10 +1144,10 @@ def halo_plane_tiles(tiles: DataFrame, r: int,
     ``pad_bytes`` comes back in the same dtype.
 
     Same strip geometry and exchange as the band-pair halo in
-    lst_tiles_halo (_halo_pieces, _halo_pad, _halo_exchange): strips are
-    r-wide (shuffle ~ (1 + 2r(w+h)/(wh)) x the plane bytes, not 9x), the
-    shuffle is a plain repartition on the receiving tile key, assembly
-    streams sorted partitions.
+    lst_tiles_halo (_halo_pieces, _halo_pad, and `_group_rows` on the
+    receiving tile key): strips are r-wide (shuffle ~ (1 + 2r(w+h)/(wh))
+    x the plane bytes, not 9x), the shuffle is a plain repartition on the
+    receiving tile key, assembly streams sorted partitions.
     """
     if r < 1:
         raise ValueError(f"halo margin must be >= 1, got {r}")
@@ -1155,28 +1177,18 @@ def halo_plane_tiles(tiles: DataFrame, r: int,
             yield (rx, ry, dx, dy, piece, pw, ph,
                    getattr(row, "image_id", None) if center else None, w, h)
 
-    def assemble(tiles) -> Iterator[pa.RecordBatch]:
-        cols: dict[str, list] = {f.name: [] for f in HALO_PLANE_SCHEMA}
-        for acc in tiles:
-            # a tile key that only received strips (outside the input grid)
-            # has no center piece: it is scene margin, not a tile — drop
-            center = next((s for s in acc if s.dx == 0 and s.dy == 0), None)
-            if center is None:
-                continue
+    def assemble(strips):
+        acc = list(strips)
+        # a tile key that only received strips (outside the input grid)
+        # has no center piece: it is scene margin, not a tile — no row
+        center = next((s for s in acc if s.dx == 0 and s.dy == 0), None)
+        if center is not None:
             w, h = int(center.w), int(center.h)
-            for name, v in zip(HALO_PLANE_SCHEMA.names, (
-                    center.image_id, center.scene_id, int(center.rx),
-                    int(center.ry), w, h,
-                    _halo_pad(acc, "piece", dtype, w, h, r, dtype).tobytes())):
-                cols[name].append(v)
-            if len(cols["scene_id"]) >= 64:   # emit every 64 assembled tiles
-                yield _batch_from_cols(cols, HALO_PLANE_SCHEMA)
-                cols = {f.name: [] for f in HALO_PLANE_SCHEMA}
-        if cols["scene_id"]:
-            yield _batch_from_cols(cols, HALO_PLANE_SCHEMA)
+            yield (center.image_id, center.scene_id, int(center.rx), int(center.ry),
+                   w, h, _halo_pad(acc, "piece", dtype, w, h, r, dtype).tobytes())
 
-    return _halo_exchange(_tile_rows(tiles, strip_schema, emit, ("scene_id",)),
-                          assemble, HALO_PLANE_SCHEMA)
+    return _group_rows(_tile_rows(tiles, strip_schema, emit, ("scene_id",)),
+                       _HALO_KEY, (), HALO_PLANE_SCHEMA, assemble)
 
 
 def _plane_map(tiles: DataFrame, m: int, src_col: str, schema: StructType,

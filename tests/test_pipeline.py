@@ -725,3 +725,35 @@ def test_fillnulls_spline_tiles_match_whole_scene(spark):
     assert n_filled == int(np.isnan(plane).sum() - np.isnan(want).sum()
                            + 0) or n_filled == int(
         (np.isfinite(want) & np.isnan(plane)).sum())
+
+
+def test_group_rows_streams_each_key_as_one_ordered_group(spark):
+    """_group_rows hands ``emit`` each key's rows as ONE group in
+    ``order``: a 250-row key spans four 64-row Arrow batches on its way
+    in (and its 250 output rows four on the way out), and every NULL-key
+    row lands in one group."""
+    from pyspark.sql.types import (
+        BooleanType, IntegerType, StringType, StructField, StructType,
+    )
+    from i_landsat8_swlst_spark.session import ARROW_BATCH_ROWS
+
+    keys = ["A"] * 250 + ["B"] * 7 + [None] * 5
+    assert 250 > 3 * ARROW_BATCH_ROWS
+    seq = np.random.default_rng(5).permutation(len(keys)).tolist()
+    src = spark.createDataFrame(list(zip(keys, seq)), "k string, i int")
+    schema = StructType([StructField("k", StringType()), StructField("n", IntegerType()),
+                         StructField("ordered", BooleanType()),
+                         StructField("i", IntegerType())])
+
+    def per_row(rows):
+        rows = list(rows)
+        idx = [r.i for r in rows]
+        for r in rows:
+            yield rows[0].k, len(rows), idx == sorted(idx), r.i
+
+    out = pipeline._group_rows(src, ["k"], ("i",), schema, per_row).collect()
+    groups = {}
+    for r in out:
+        groups.setdefault(r.k, set()).add((r.n, r.ordered))
+    assert groups == {"A": {(250, True)}, "B": {(7, True)}, None: {(5, True)}}
+    assert sorted(r.i for r in out) == sorted(seq)
