@@ -10,10 +10,20 @@ pixel-ROW path; this is the plane path — ONE shuffle of the plane bytes
 on the (footprint, tile) key, then a vectorized nan-stat over the
 k-deep stack per group. Group size is the revisit count k (bounded,
 ~tens), and the exact per-pixel median inherently needs all k values at
-once, so the grouped-map buffering is the honest minimum — mean/min/
+once, so buffering the group is the honest minimum — mean/min/
 max/count alone could stream through partial plane aggregates, but
 Spark has no binary-plane partial agg and k rows per group make the
 buffering moot. Shuffle bytes = the input planes, once.
+
+The five revisit-stack operators (``series_tiles``,
+``series_tiles_deep``, ``temporal_aggregate_tiles``, ``gapfill_tiles``,
+``accumulate_tiles``) share one source (`_revisit_source`: the
+footprint key and, with ``meta``, each scene's broadcast-joined
+instant), one grouped row map (`pipeline._group_rows`: each key's rows
+streamed in order from a sorted partition), one stack check and decode
+(`_stack`) and one stat-plane emit (`_stat_values`);
+``series_tiles_deep`` folds its rows as they stream and never holds
+the stack.
 
 ``crosstab_tiles`` — the r.cross / r.stats analog: the co-occurrence
 area table of two globally-quantized planes (e.g. LST class x CWV
@@ -34,11 +44,8 @@ class ``-1`` row, so the table still partitions the raster exactly).
 from __future__ import annotations
 
 import warnings
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
-import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
@@ -47,8 +54,8 @@ from pyspark.sql.types import (
 )
 
 from . import codecs
-from .multiband import _finite_range, scene_ranges_df
-from .pipeline import _TILE_IDS, _batch_from_cols, _batch_rows, _tile_map, _tile_rows
+from .multiband import _bin_plane, _finite_range, scene_ranges_df
+from .pipeline import _TILE_IDS, _group_rows, _tile_map, _tile_rows
 from .texture import _quantize
 
 SERIES_STATS = ("count", "mean", "stddev", "min", "max", "median")
@@ -66,8 +73,6 @@ def _quantize_to_centers(stack: np.ndarray, bins: int) -> np.ndarray:
     approximate median is then simply the exact median of the snapped
     values — identical to the histogram-CDF median and within one bin
     width of the true median."""
-    from .multiband import _bin_plane
-
     ok = np.isfinite(stack)
     if not ok.any():
         return np.full(stack.shape, np.nan)
@@ -116,9 +121,12 @@ def series_stack_stats(stack: np.ndarray,
     return out
 
 
-def _series_schema(stats: tuple[str, ...]) -> StructType:
+_FOOTPRINT = StructField("footprint", StringType())
+
+
+def _series_schema(stats: tuple[str, ...], key=(_FOOTPRINT,)) -> StructType:
     fields = [
-        StructField("footprint", StringType()),
+        *key,
         StructField("tile_x", IntegerType()),
         StructField("tile_y", IntegerType()),
         StructField("w", IntegerType()),
@@ -130,6 +138,85 @@ def _series_schema(stats: tuple[str, ...]) -> StructType:
         fields.append(StructField(f"{s}_bytes", BinaryType()))
         fields.append(StructField(f"{s}_mean", DoubleType()))
     return StructType(fields)
+
+
+def _footprint(footprint=None):
+    """The Column grouping the revisits of one footprint: ``footprint``,
+    or by default ``scene_id`` without its ``R<k>`` revisit suffix (the
+    convention trend_pixels parses)."""
+    return (footprint if footprint is not None
+            else F.regexp_replace("scene_id", r"R\d+$", ""))
+
+
+_T = "t_us"   # acquisition instant, microseconds since the Unix epoch
+
+
+def _revisit_source(tiles: DataFrame, src_col: str, footprint=None,
+                    meta: DataFrame | None = None,
+                    t_col: str = "acquired_at") -> DataFrame:
+    """The tile table keyed for a revisit-stack operator: (footprint,
+    scene_id, tile_x, tile_y, w, h, src_col) and, when ``meta`` is given,
+    each scene's ``t_col`` instant broadcast-joined on ``scene_id`` as
+    ``t_us`` (NULL for a scene missing from ``meta``)."""
+    keyed = tiles.withColumn("footprint", _footprint(footprint))
+    cols = ["footprint", "scene_id", "tile_x", "tile_y", "w", "h", src_col]
+    if meta is None:
+        return keyed.select(*cols)
+    at = meta.select("scene_id", F.unix_micros(F.to_timestamp(t_col)).alias(_T))
+    return keyed.join(F.broadcast(at), on="scene_id", how="left").select(*cols, _T)
+
+
+def _stack(rows: list, src_col: str, op: str,
+           t_col: str | None = None) -> tuple[int, int, np.ndarray]:
+    """(w, h, (k, h, w) f64 stack) of one revisit group's rows, in order.
+    Raises on a scene without an instant (when ``t_col`` names the meta
+    column) and on a stack whose tiles differ in shape: a mis-registered
+    stack must not silently truncate."""
+    r = rows[0]
+    if t_col is not None:
+        bad = sorted({x.scene_id for x in rows if getattr(x, _T) is None})
+        if bad:
+            raise ValueError(f"{op}: scenes missing from meta (no {t_col}): {bad}")
+    shapes = sorted({(x.w, x.h) for x in rows})
+    if len(shapes) > 1:
+        epoch = f" epoch={r.epoch}" if hasattr(r, "epoch") else ""
+        raise ValueError(
+            f"{op}: mis-registered revisit stack for footprint={r.footprint!r}"
+            f"{epoch} tile=({r.tile_x},{r.tile_y}): shapes {shapes}")
+    w, h = shapes[0]
+    return w, h, np.stack([codecs.decode_f32bt(getattr(x, src_col), w, h)
+                           for x in rows])
+
+
+def _stat_values(out: dict[str, np.ndarray], stats: tuple[str, ...]) -> list:
+    """Each stat's f32 plane bytes and the mean of its finite cells (None
+    when it has none)."""
+    vals: list = []
+    for s in stats:
+        plane = out[s].astype("<f4")
+        vals += [plane.tobytes(),
+                 float(np.nanmean(plane)) if np.isfinite(plane).any() else None]
+    return vals
+
+
+def _series(src: DataFrame, key: list[str], src_col: str, stats, op: str,
+            schema: StructType, t_col: str | None = None) -> DataFrame:
+    """The exact-stats revisit stack: one ``schema`` row per ``key`` group
+    of ``src``, its planes stacked in ``scene_id`` order (a deterministic
+    fp fold order whatever the shuffle's arrival order)."""
+    unknown = set(stats) - set(SERIES_ALL_STATS)
+    if unknown:
+        raise ValueError(f"unknown series stats {sorted(unknown)}")
+    stats = tuple(stats)
+
+    def stack_fn(rows):
+        rows = list(rows)
+        w, h, stack = _stack(rows, src_col, op, t_col)
+        yield (*(getattr(rows[0], k) for k in key), w, h, len(rows),
+               int((np.isfinite(stack).sum(0) > 0).sum()),
+               *_stat_values(series_stack_stats(stack, stats), stats))
+
+    return _group_rows(src, key, ("scene_id",), schema, stack_fn)
 
 
 def series_tiles(tiles: DataFrame, src_col: str = "lst_bytes",
@@ -148,49 +235,9 @@ def series_tiles(tiles: DataFrame, src_col: str = "lst_bytes",
     Plan: ONE hash shuffle of the plane bytes on the group key ->
     grouped-map stat kernel. No pixel-row explosion, no join.
     """
-    unknown = set(stats) - set(SERIES_ALL_STATS)
-    if unknown:
-        raise ValueError(f"unknown series stats {sorted(unknown)}")
-    fp = (footprint if footprint is not None
-          else F.regexp_replace("scene_id", r"R\d+$", ""))
-    schema = _series_schema(tuple(stats))
-    stats_t = tuple(stats)
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        # deterministic fp fold order regardless of shuffle arrival
-        pdf = pdf.sort_values("scene_id", kind="mergesort")
-        w, h = int(pdf.w.iloc[0]), int(pdf.h.iloc[0])
-        if (pdf.w != w).any() or (pdf.h != h).any():
-            fpv, tx, ty = (pdf.footprint.iloc[0], int(pdf.tile_x.iloc[0]),
-                           int(pdf.tile_y.iloc[0]))
-            raise ValueError(
-                f"series_tiles: mis-registered revisit stack for "
-                f"footprint={fpv!r} tile=({tx},{ty}): shapes "
-                f"{sorted(set(zip(pdf.w, pdf.h)))}")
-        stack = np.stack([codecs.decode_f32bt(b, w, h)
-                          for b in pdf[src_col]])
-        out = series_stack_stats(stack, stats_t)
-        row = {
-            "footprint": [pdf.footprint.iloc[0]],
-            "tile_x": [int(pdf.tile_x.iloc[0])],
-            "tile_y": [int(pdf.tile_y.iloc[0])],
-            "w": [w], "h": [h], "n_dates": [len(pdf)],
-            "n_px_any": [int((out["count"] > 0).sum())
-                         if "count" in out
-                         else int((np.isfinite(stack).sum(0) > 0).sum())],
-        }
-        for s in stats_t:
-            plane = out[s].astype("<f4")
-            row[f"{s}_bytes"] = [plane.tobytes()]
-            any_ok = bool(np.isfinite(plane).any())
-            row[f"{s}_mean"] = [float(np.nanmean(plane)) if any_ok else None]
-        return pd.DataFrame(row)
-
-    keyed = tiles.withColumn("footprint", fp)
-    return (keyed.select("footprint", "tile_x", "tile_y", "w", "h",
-                         "scene_id", src_col)
-            .groupBy("footprint", "tile_x", "tile_y")
-            .applyInPandas(fn, schema))
+    return _series(_revisit_source(tiles, src_col, footprint),
+                   ["footprint", "tile_x", "tile_y"], src_col, stats,
+                   "series_tiles", _series_schema(tuple(stats)))
 
 
 _DEEP_STATS = ("count", "mean", "stddev", "min", "max", "median_approx")
@@ -229,10 +276,7 @@ def series_tiles_deep(tiles: DataFrame, src_col: str = "lst_bytes",
     broadcast-joins back on the tile key (one row per OUTPUT tile — at
     extreme output counts feed a pre-aggregated range table instead).
     """
-    fp = (footprint if footprint is not None
-          else F.regexp_replace("scene_id", r"R\d+$", ""))
-    keyed = tiles.withColumn("footprint", fp).select(
-        "footprint", "tile_x", "tile_y", "w", "h", "scene_id", src_col)
+    keyed = _revisit_source(tiles, src_col, footprint)
     key = ["footprint", "tile_x", "tile_y"]
 
     def range_fn(row, w, h):
@@ -242,99 +286,64 @@ def series_tiles_deep(tiles: DataFrame, src_col: str = "lst_bytes",
             .groupBy(*key)
             .agg(F.min("vmin").alias("vmin"), F.max("vmax").alias("vmax")))
 
-    schema = _series_schema(_DEEP_STATS)
-
-    def fold_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        state: dict = {}
-
-        def flush(cols, ap):
-            st = state
-            n = st["n"]
-            nz = n == 0
-            nf = n.astype(np.float64)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                mean = st["s"] / nf
-                var = st["s2"] / nf - mean * mean
-                std = np.sqrt(np.maximum(var, 0.0))
-            mean[nz] = np.nan; std[nz] = np.nan
-            if st["vmin"] is None:
-                med = np.full(n.shape, np.nan)
-            else:
-                width = max(st["vmax"] - st["vmin"], 1e-300) / bins
-                centers = st["vmin"] + (np.arange(bins) + 0.5) * width
-                cum = np.cumsum(st["hist"], axis=0)
-                r1 = (n + 1) // 2
-                r2 = n // 2 + 1
-                i1 = np.minimum((cum < r1).sum(axis=0), bins - 1)
-                i2 = np.minimum((cum < r2).sum(axis=0), bins - 1)
-                med = (centers[i1] + centers[i2]) / 2.0
-                med[nz] = np.nan
-            out = {"count": nf, "mean": mean, "stddev": std,
-                   "min": st["mn"], "max": st["mx"], "median_approx": med}
-            ap["footprint"](st["key"][0])
-            ap["tile_x"](st["key"][1]); ap["tile_y"](st["key"][2])
-            ap["w"](st["w"]); ap["h"](st["h"])
-            ap["n_dates"](st["n_dates"])
-            ap["n_px_any"](int((n > 0).sum()))
-            for s in _DEEP_STATS:
-                plane = out[s].astype("<f4")
-                ap[f"{s}_bytes"](plane.tobytes())
-                any_ok = bool(np.isfinite(plane).any())
-                ap[f"{s}_mean"](float(np.nanmean(plane)) if any_ok else None)
-            state.clear()
-
-        from .multiband import _bin_plane
-
-        cols: dict[str, list] = {f.name: [] for f in schema}
-        ap = {k: v.append for k, v in cols.items()}
-        for batch in batches:
-            for row in _batch_rows(batch):
-                kk = (row.footprint, int(row.tile_x), int(row.tile_y))
-                w, h = int(row.w), int(row.h)
-                if state and state["key"] != kk:
-                    flush(cols, ap)
-                if not state:
-                    state.update(
-                        key=kk, w=w, h=h, n_dates=0,
-                        n=np.zeros((h, w), dtype=np.int64),
-                        s=np.zeros((h, w)), s2=np.zeros((h, w)),
-                        mn=np.full((h, w), np.nan),
-                        mx=np.full((h, w), np.nan),
-                        vmin=row.vmin, vmax=row.vmax,
-                        hist=(None if row.vmin is None
-                              else np.zeros((bins, h, w), dtype=np.int32)))
-                elif (w, h) != (state["w"], state["h"]):
-                    raise ValueError(
-                        f"series_tiles_deep: mis-registered revisit stack "
-                        f"for footprint={kk[0]!r} tile=({kk[1]},{kk[2]}): "
-                        f"shapes {(state['w'], state['h'])} vs {(w, h)}")
-                x = codecs.decode_f32bt(getattr(row, src_col), w, h) \
-                    .astype(np.float64)
-                ok = np.isfinite(x)
-                st = state
-                st["n_dates"] += 1
-                st["n"] += ok
-                xv = np.where(ok, x, 0.0)
-                st["s"] += xv
-                st["s2"] += xv * xv
-                st["mn"] = np.fmin(st["mn"], x)
-                st["mx"] = np.fmax(st["mx"], x)
-                if st["hist"] is not None and ok.any():
-                    yy, xx = np.nonzero(ok)
-                    idx = _bin_plane(x[ok], st["vmin"], st["vmax"], bins)
-                    np.add.at(st["hist"], (idx, yy, xx), 1)
-        if state:
-            flush(cols, ap)
-        if cols["footprint"]:
-            yield _batch_from_cols(cols, schema)
+    def fold_fn(rows):
+        st: dict = {}
+        for row in rows:
+            w, h = int(row.w), int(row.h)
+            if not st:
+                st.update(
+                    row=row, w=w, h=h, n_dates=0,
+                    n=np.zeros((h, w), dtype=np.int64),
+                    s=np.zeros((h, w)), s2=np.zeros((h, w)),
+                    mn=np.full((h, w), np.nan), mx=np.full((h, w), np.nan),
+                    hist=(None if row.vmin is None
+                          else np.zeros((bins, h, w), dtype=np.int32)))
+            elif (w, h) != (st["w"], st["h"]):
+                raise ValueError(
+                    f"series_tiles_deep: mis-registered revisit stack "
+                    f"for footprint={row.footprint!r} tile=({row.tile_x},"
+                    f"{row.tile_y}): shapes {(st['w'], st['h'])} vs {(w, h)}")
+            x = codecs.decode_f32bt(getattr(row, src_col), w, h).astype(np.float64)
+            ok = np.isfinite(x)
+            st["n_dates"] += 1
+            st["n"] += ok
+            xv = np.where(ok, x, 0.0)
+            st["s"] += xv
+            st["s2"] += xv * xv
+            st["mn"] = np.fmin(st["mn"], x)
+            st["mx"] = np.fmax(st["mx"], x)
+            if st["hist"] is not None and ok.any():
+                yy, xx = np.nonzero(ok)
+                idx = _bin_plane(x[ok], row.vmin, row.vmax, bins)
+                np.add.at(st["hist"], (idx, yy, xx), 1)
+        r0, n = st["row"], st["n"]
+        nz = n == 0
+        nf = n.astype(np.float64)
+        with np.errstate(invalid="ignore", divide="ignore"):
+            mean = st["s"] / nf
+            var = st["s2"] / nf - mean * mean
+            std = np.sqrt(np.maximum(var, 0.0))
+        mean[nz] = np.nan; std[nz] = np.nan
+        if r0.vmin is None:
+            med = np.full(n.shape, np.nan)
+        else:
+            width = max(r0.vmax - r0.vmin, 1e-300) / bins
+            centers = r0.vmin + (np.arange(bins) + 0.5) * width
+            cum = np.cumsum(st["hist"], axis=0)
+            i1 = np.minimum((cum < (n + 1) // 2).sum(axis=0), bins - 1)
+            i2 = np.minimum((cum < n // 2 + 1).sum(axis=0), bins - 1)
+            med = (centers[i1] + centers[i2]) / 2.0
+            med[nz] = np.nan
+        out = {"count": nf, "mean": mean, "stddev": std,
+               "min": st["mn"], "max": st["mx"], "median_approx": med}
+        yield (r0.footprint, r0.tile_x, r0.tile_y, st["w"], st["h"],
+               st["n_dates"], int((n > 0).sum()), *_stat_values(out, _DEEP_STATS))
 
     # left join: an all-NaN group has no range row but still reports its
-    # zero counts. Join BEFORE the repartition so the in-partition sort is
-    # the last thing the fold sees.
-    src = (keyed.join(F.broadcast(rngs), on=key, how="left")
-           .repartition(*[F.col(c) for c in key])
-           .sortWithinPartitions(*key, "scene_id"))
-    return src.mapInArrow(fold_fn, schema)
+    # zero counts. The join sits below the grouping's repartition, so the
+    # in-partition sort is the last thing the fold sees.
+    return _group_rows(keyed.join(F.broadcast(rngs), on=key, how="left"),
+                       key, ("scene_id",), _series_schema(_DEEP_STATS), fold_fn)
 
 
 _GRAN_UNIT_ALIASES = {
@@ -406,58 +415,12 @@ def temporal_aggregate_tiles(tiles: DataFrame, meta: DataFrame,
     mis-registered revisit shapes inside a window raise as in
     series_tiles.
     """
-    unknown = set(stats) - set(SERIES_ALL_STATS)
-    if unknown:
-        raise ValueError(f"unknown series stats {sorted(unknown)}")
-    fp = (footprint if footprint is not None
-          else F.regexp_replace("scene_id", r"R\d+$", ""))
-    stats_t = tuple(stats)
-    flds = _series_schema(stats_t).fields
-    schema = StructType([flds[0], StructField("epoch", DateType())]
-                        + flds[1:])
-
-    at = meta.select("scene_id", F.col(t_col).alias("__t"))
-    keyed = (tiles.withColumn("footprint", fp)
-             .join(F.broadcast(at), on="scene_id", how="left")
-             .withColumn("epoch", epoch_start(F.col("__t"), granularity))
-             .select("footprint", "epoch", "tile_x", "tile_y", "w", "h",
-                     "scene_id", src_col))
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf.epoch.isna().any():
-            bad = sorted(pdf.scene_id[pdf.epoch.isna()].unique())
-            raise ValueError(
-                f"temporal_aggregate_tiles: scenes missing from meta "
-                f"(no {t_col}): {bad}")
-        pdf = pdf.sort_values("scene_id", kind="mergesort")
-        w, h = int(pdf.w.iloc[0]), int(pdf.h.iloc[0])
-        if (pdf.w != w).any() or (pdf.h != h).any():
-            fpv, ep = pdf.footprint.iloc[0], pdf.epoch.iloc[0]
-            tx, ty = int(pdf.tile_x.iloc[0]), int(pdf.tile_y.iloc[0])
-            raise ValueError(
-                f"temporal_aggregate_tiles: mis-registered revisit stack "
-                f"for footprint={fpv!r} epoch={ep} tile=({tx},{ty}): "
-                f"shapes {sorted(set(zip(pdf.w, pdf.h)))}")
-        stack = np.stack([codecs.decode_f32bt(b, w, h)
-                          for b in pdf[src_col]])
-        out = series_stack_stats(stack, stats_t)
-        row = {
-            "footprint": [pdf.footprint.iloc[0]],
-            "epoch": [pdf.epoch.iloc[0]],
-            "tile_x": [int(pdf.tile_x.iloc[0])],
-            "tile_y": [int(pdf.tile_y.iloc[0])],
-            "w": [w], "h": [h], "n_dates": [len(pdf)],
-            "n_px_any": [int((np.isfinite(stack).sum(0) > 0).sum())],
-        }
-        for s in stats_t:
-            plane = out[s].astype("<f4")
-            row[f"{s}_bytes"] = [plane.tobytes()]
-            any_ok = bool(np.isfinite(plane).any())
-            row[f"{s}_mean"] = [float(np.nanmean(plane)) if any_ok else None]
-        return pd.DataFrame(row)
-
-    return (keyed.groupBy("footprint", "epoch", "tile_x", "tile_y")
-            .applyInPandas(fn, schema))
+    src = _revisit_source(tiles, src_col, footprint, meta, t_col).withColumn(
+        "epoch", epoch_start(F.timestamp_micros(_T), granularity))
+    return _series(src, ["footprint", "epoch", "tile_x", "tile_y"], src_col,
+                   stats, "temporal_aggregate_tiles", _series_schema(
+                       tuple(stats), (_FOOTPRINT, StructField("epoch", DateType()))),
+                   t_col)
 
 
 _CROSSTAB_PART = StructType([
@@ -559,10 +522,8 @@ def anomaly_tiles(history: DataFrame, current: DataFrame, k: float = 3.0,
         raise ValueError(f"k must be finite and > 0, got {k}")
     ser = series_tiles(history, src_col=src_col, footprint=footprint,
                        stats=("count", "median", "stddev"))
-    fp = (footprint if footprint is not None
-          else F.regexp_replace("scene_id", r"R\d+$", ""))
     cur = current.select(
-        fp.alias("footprint"), "scene_id", "tile_x", "tile_y", "w", "h",
+        _footprint(footprint).alias("footprint"), "scene_id", "tile_x", "tile_y", "w", "h",
         F.col(src_col).alias("cur_bytes"))
     joined = cur.join(
         ser.select("footprint", "tile_x", "tile_y",
@@ -596,6 +557,26 @@ _GAPFILL_FIELDS = [
     StructField("filled_bytes", BinaryType()),
     StructField("n_filled", LongType()),
 ]
+
+
+def _per_revisit(tiles: DataFrame, meta: DataFrame, src_col: str, footprint,
+                 t_col: str, fields: list, op: str, planes) -> DataFrame:
+    """A k-in, k-out revisit-stack operator: each (footprint, tile) stack,
+    in time order (instant, then ``scene_id``), goes through
+    ``planes(rows, stack)`` -> (k output planes, k values); each revisit
+    keeps its ``scene_id`` and gets its f32 plane and value."""
+    def emit(rows):
+        rows = list(rows)
+        w, h, stack = _stack(rows, src_col, op, t_col)
+        out, vals = planes(rows, stack)
+        for x, p, v in zip(rows, out, vals):
+            yield (x.footprint, x.scene_id, x.tile_x, x.tile_y, w, h,
+                   p.astype("<f4").tobytes(), v)
+
+    emit.__name__ = planes.__name__
+    return _group_rows(_revisit_source(tiles, src_col, footprint, meta, t_col),
+                       ["footprint", "tile_x", "tile_y"], (_T, "scene_id"),
+                       StructType(fields), emit)
 
 
 def gapfill_stack(stack: np.ndarray, times: np.ndarray,
@@ -652,49 +633,16 @@ def gapfill_tiles(tiles: DataFrame, meta: DataFrame,
     Loud failures: scenes missing from ``meta`` raise (never mis-fill with
     a fabricated order); mis-registered shapes inside a stack raise.
     """
-    fp = (footprint if footprint is not None
-          else F.regexp_replace("scene_id", r"R\d+$", ""))
-    at = meta.select("scene_id", F.col(t_col).alias("__t"))
-    keyed = (tiles.withColumn("footprint", fp)
-             .join(F.broadcast(at), on="scene_id", how="left")
-             .select("footprint", "scene_id", "tile_x", "tile_y",
-                     "w", "h", "__t", src_col))
-    schema = StructType(_GAPFILL_FIELDS)
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf["__t"].isna().any():
-            bad = sorted(pdf.scene_id[pdf["__t"].isna()].unique())
-            raise ValueError(
-                f"gapfill_tiles: scenes missing from meta (no {t_col}): "
-                f"{bad}")
-        pdf = pdf.sort_values(["__t", "scene_id"],
-                              kind="mergesort").reset_index(drop=True)
-        w, h = int(pdf.w.iloc[0]), int(pdf.h.iloc[0])
-        if (pdf.w != w).any() or (pdf.h != h).any():
-            raise ValueError(
-                f"gapfill_tiles: mis-registered revisit stack for "
-                f"footprint={pdf.footprint.iloc[0]!r} tile="
-                f"({int(pdf.tile_x.iloc[0])},{int(pdf.tile_y.iloc[0])}): "
-                f"shapes {sorted(set(zip(pdf.w, pdf.h)))}")
-        stack = np.stack([codecs.decode_f32bt(b, w, h)
-                          for b in pdf[src_col]])
-        times = (pd.to_datetime(pdf["__t"]).astype("int64").to_numpy()
-                 / 86_400_000_000_000.0)  # ns -> days
+    def gapfill_fn(rows, stack):
+        # us -> ns -> days: the same doubles as a datetime64[ns] series
+        times = np.array([getattr(x, _T) for x in rows], np.int64) * 1000 \
+            / 86_400_000_000_000.0
         filled = gapfill_stack(stack, times, max_gap_days)
-        n_filled = (np.isfinite(filled) & ~np.isfinite(stack)).reshape(
-            len(pdf), -1).sum(axis=1)
-        return pd.DataFrame({
-            "footprint": pdf.footprint,
-            "scene_id": pdf.scene_id,
-            "tile_x": pdf.tile_x.astype(int),
-            "tile_y": pdf.tile_y.astype(int),
-            "w": w, "h": h,
-            "filled_bytes": [p.astype("<f4").tobytes() for p in filled],
-            "n_filled": n_filled.astype(np.int64),
-        })
+        return filled, (np.isfinite(filled) & ~np.isfinite(stack)).reshape(
+            len(rows), -1).sum(axis=1).tolist()
 
-    return (keyed.groupBy("footprint", "tile_x", "tile_y")
-            .applyInPandas(fn, schema))
+    return _per_revisit(tiles, meta, src_col, footprint, t_col,
+                        _GAPFILL_FIELDS, "gapfill_tiles", gapfill_fn)
 
 
 _REGR_PART = StructType([
@@ -809,42 +757,9 @@ def accumulate_tiles(tiles: DataFrame, meta: DataFrame,
     Scenes missing from ``meta`` raise; mis-registered shapes raise.
     """
     accumulate_stack(np.zeros((1, 1, 1)), lower, upper, skip_nulls)  # args
-    fp = (footprint if footprint is not None
-          else F.regexp_replace("scene_id", r"R\d+$", ""))
-    at = meta.select("scene_id", F.col(t_col).alias("__t"))
-    keyed = (tiles.withColumn("footprint", fp)
-             .join(F.broadcast(at), on="scene_id", how="left")
-             .select("footprint", "scene_id", "tile_x", "tile_y",
-                     "w", "h", "__t", src_col))
-    schema = StructType(_ACCUM_FIELDS)
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf["__t"].isna().any():
-            bad = sorted(pdf.scene_id[pdf["__t"].isna()].unique())
-            raise ValueError(
-                f"accumulate_tiles: scenes missing from meta (no {t_col}): "
-                f"{bad}")
-        pdf = pdf.sort_values(["__t", "scene_id"],
-                              kind="mergesort").reset_index(drop=True)
-        w, h = int(pdf.w.iloc[0]), int(pdf.h.iloc[0])
-        if (pdf.w != w).any() or (pdf.h != h).any():
-            raise ValueError(
-                f"accumulate_tiles: mis-registered revisit stack for "
-                f"footprint={pdf.footprint.iloc[0]!r} tile="
-                f"({int(pdf.tile_x.iloc[0])},{int(pdf.tile_y.iloc[0])}): "
-                f"shapes {sorted(set(zip(pdf.w, pdf.h)))}")
-        stack = np.stack([codecs.decode_f32bt(b, w, h)
-                          for b in pdf[src_col]])
-        acc = accumulate_stack(stack, lower, upper, skip_nulls)
-        return pd.DataFrame({
-            "footprint": pdf.footprint,
-            "scene_id": pdf.scene_id,
-            "tile_x": pdf.tile_x.astype(int),
-            "tile_y": pdf.tile_y.astype(int),
-            "w": w, "h": h,
-            "accum_bytes": [p.astype("<f4").tobytes() for p in acc],
-            "step": np.arange(len(pdf), dtype=np.int32),
-        })
+    def accumulate_fn(rows, stack):
+        return accumulate_stack(stack, lower, upper, skip_nulls), range(len(rows))
 
-    return (keyed.groupBy("footprint", "tile_x", "tile_y")
-            .applyInPandas(fn, schema))
+    return _per_revisit(tiles, meta, src_col, footprint, t_col,
+                        _ACCUM_FIELDS, "accumulate_tiles", accumulate_fn)
