@@ -120,23 +120,33 @@ OVERVIEW_SCHEMA = StructType([
 ])
 
 
+def _pool(img: np.ndarray, L: int) -> tuple[np.ndarray, bytes]:
+    """(block means, u16le DN bytes) of ``img``'s LxL blocks, its edges
+    cropped to a multiple of L. A block holding a NaN has a NaN mean and
+    is written as DN 0."""
+    hh, ww = (img.shape[0] // L) * L, (img.shape[1] // L) * L
+    pooled = img[:hh, :ww].reshape(hh // L, L, ww // L, L).mean(axis=(1, 3))
+    dn = np.round(np.where(np.isnan(pooled), 0.0, pooled)).astype("<u2")
+    return pooled, dn.tobytes()
+
+
 def tile_overviews(scenes: DataFrame, levels: tuple[int, ...] = (2, 4)) -> DataFrame:
     """Overview pyramid: one output row per (tile, level); level-L pixels are
-    the mean of LxL input blocks (edges cropped to a multiple of L). Mean
-    pooling commutes with the per-pixel physics only approximately — overviews
-    are for browse/thumbnail + pyramid-pruning use, never fed to the LST
-    kernel."""
+    the mean of LxL input blocks (edges cropped to a multiple of L; no row
+    for a level wider or taller than the tile). A block holding a NaN pixel
+    (an ``f32bt`` cloud hole) is written as DN 0 and makes that level's
+    ``px_mean`` NULL. Mean pooling commutes with the per-pixel physics only
+    approximately — overviews are for browse/thumbnail + pyramid-pruning
+    use, never fed to the LST kernel."""
     lv = tuple(int(x) for x in levels)
 
     def fn(row, w, h):
         img = codecs.decode_tile(row.bytes, w, h, row.fmt)
         for L in lv:
-            ww, hh = (w // L) * L, (h // L) * L
-            if ww == 0 or hh == 0:
-                continue
-            pooled = img[:hh, :ww].reshape(hh // L, L, ww // L, L).mean(axis=(1, 3))
-            yield (L, ww // L, hh // L, np.round(pooled).astype("<u2").tobytes(),
-                   _nan_none(round(float(pooled.mean()), 6)))
+            if w >= L and h >= L:
+                pooled, dn = _pool(img, L)
+                yield (L, w // L, h // L, dn,
+                       _nan_none(round(float(pooled.mean()), 6)))
 
     return _tile_rows(scenes.select("image_id", "bytes", "w", "h", "fmt"),
                       OVERVIEW_SCHEMA, fn, ("image_id",))

@@ -32,6 +32,22 @@ def test_overviews_match_numpy_pooling(spark):
     assert seen_levels == {2, 4}
 
 
+def test_overview_pool_writes_nan_blocks_as_dn0_without_a_cast_warning():
+    """A block holding a NaN pixel becomes DN 0 by an explicit fill, not an
+    undefined float -> u16 cast (which numpy warns about)."""
+    import warnings
+
+    img = np.arange(30, dtype=np.float64).reshape(5, 6) + 300.0
+    img[1, 2] = np.nan
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        pooled, dn = mediaops._pool(img, 2)
+    want = np.round(img[:4, :6].reshape(2, 2, 3, 2).mean(axis=(1, 3)))
+    want[0, 1] = 0.0
+    assert pooled.shape == (2, 3) and np.isnan(pooled[0, 1])
+    assert np.array_equal(np.frombuffer(dn, "<u2").reshape(2, 3), want)
+
+
 def test_frame_sample_exact_slices(spark):
     pdf = mediaops.videos_pdf(n=3, frames=10, w=8, h=8)
     videos = spark.createDataFrame(pdf)
