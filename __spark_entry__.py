@@ -70,6 +70,25 @@ def _tiny_fixture(spark, with_qa: bool = False):
     return scenes, meta, emis
 
 
+def _tile_fixture(spark, scenes: dict, tile: int = 32) -> DataFrame:
+    """Tile table of synthetic planes: ``scenes`` maps each scene_id to its
+    {column: 2-D plane} dict; every plane is cut into tile x tile squares,
+    one row (scene_id, tile_x, tile_y, w, h, *columns as f32 LE bytes) per
+    square, scene by scene in row-major tile order."""
+    import pandas as pd
+
+    rows = []
+    for sid, planes in scenes.items():
+        h, w = next(iter(planes.values())).shape
+        for ty in range(h // tile):
+            for tx in range(w // tile):
+                sl = (slice(ty * tile, (ty + 1) * tile), slice(tx * tile, (tx + 1) * tile))
+                rows.append({"scene_id": sid, "tile_x": tx, "tile_y": ty, "w": tile,
+                             "h": tile, **{c: p[sl].astype("<f4").tobytes()
+                                           for c, p in planes.items()}})
+    return spark.createDataFrame(pd.DataFrame(rows))
+
+
 def _tiny_lst_tiles(spark, with_qa: bool = False, **kw):
     """lst_tiles (window 5) over the tiny synthetic scenes; ``kw`` goes to
     lst_tiles."""
@@ -270,23 +289,15 @@ def _q_to_vect(spark: SparkSession, sf_dir: str) -> DataFrame:
     even-odd mask round-trip, extract_regions area parity, and tiling
     invariance in tests/test_vectorize.py."""
     import numpy as np
-    import pandas as pd
 
     from i_landsat8_swlst_spark import vectorize
 
     rng = np.random.default_rng(71)
-    rows = []
     base = rng.uniform(260.0, 330.0, (12, 12))
     plane = np.kron(base, np.ones((8, 8))) + rng.uniform(-1.0, 1.0, (96, 96))
     plane[32:64, 32:64] = 310.0      # hot frame spanning the center tile...
     plane[40:56, 40:56] = 250.0      # ...with a cold hole across 4 tiles
-    for ty in range(3):
-        for tx in range(3):
-            t = plane[ty * 32:(ty + 1) * 32, tx * 32:(tx + 1) * 32]
-            rows.append({"scene_id": "S0", "tile_x": tx, "tile_y": ty,
-                         "w": 32, "h": 32,
-                         "lst_bytes": t.astype("<f4").tobytes()})
-    tiles = spark.createDataFrame(pd.DataFrame(rows))
+    tiles = _tile_fixture(spark, {"S0": {"lst_bytes": plane}})
     r = vectorize.to_vect(tiles, threshold=300.0)
     return (
         r.groupBy("scene_id")
@@ -308,21 +319,13 @@ def _q_contour(spark: SparkSession, sf_dir: str) -> DataFrame:
     Vertex-on-level, crossing-parity, and tiling-invariance oracles in
     tests/test_vectorize.py."""
     import numpy as np
-    import pandas as pd
 
     from i_landsat8_swlst_spark import vectorize
 
     rng = np.random.default_rng(72)
     base = rng.uniform(270.0, 320.0, (8, 8))
     plane = np.kron(base, np.ones((8, 8))) + rng.uniform(-0.5, 0.5, (64, 64))
-    rows = []
-    for ty in range(2):
-        for tx in range(2):
-            t = plane[ty * 32:(ty + 1) * 32, tx * 32:(tx + 1) * 32]
-            rows.append({"scene_id": "S0", "tile_x": tx, "tile_y": ty,
-                         "w": 32, "h": 32,
-                         "lst_bytes": t.astype("<f4").tobytes()})
-    tiles = spark.createDataFrame(pd.DataFrame(rows))
+    tiles = _tile_fixture(spark, {"S0": {"lst_bytes": plane}})
     c = vectorize.contour_lines(tiles, levels=[285.0, 295.0, 305.0])
     return (
         c.groupBy("level")
@@ -341,23 +344,17 @@ def _q_extract_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
     stitch, min-label CC over the region graph. Whole-scene BFS-oracle
     parity (incl. regions spanning tiles) in tests/test_regions.py."""
     import numpy as np
-    import pandas as pd
 
     from i_landsat8_swlst_spark import regions
 
     rng = np.random.default_rng(62)
-    rows = []
+    planes = {}
     for s in range(2):
         base = rng.uniform(260.0, 330.0, (12, 12))
         plane = np.kron(base, np.ones((8, 8))) + rng.uniform(-1.0, 1.0, (96, 96))
         plane[rng.random(plane.shape) < 0.03] = np.nan
-        for ty in range(3):
-            for tx in range(3):
-                t = plane[ty * 32:(ty + 1) * 32, tx * 32:(tx + 1) * 32]
-                rows.append({"scene_id": f"S{s}", "tile_x": tx, "tile_y": ty,
-                             "w": 32, "h": 32,
-                             "lst_bytes": t.astype("<f4").tobytes()})
-    tiles = spark.createDataFrame(pd.DataFrame(rows))
+        planes[f"S{s}"] = {"lst_bytes": plane}
+    tiles = _tile_fixture(spark, planes)
     r = regions.extract_regions(tiles, threshold=300.0)
     return (
         r.groupBy("scene_id")
@@ -1101,14 +1098,7 @@ def _q_viewshed(spark: SparkSession, sf_dir: str) -> DataFrame:
     yy, xx = np.mgrid[0:96, 0:96]
     plane += 70.0 * np.exp(-((xx - 64.0) ** 2 + (yy - 30.0) ** 2) / 220.0)
     plane = plane.astype("<f4").astype(np.float64)
-    rows = []
-    for ty in range(3):
-        for tx in range(3):
-            t = plane[ty * 32:(ty + 1) * 32, tx * 32:(tx + 1) * 32]
-            rows.append({"scene_id": "S0", "tile_x": tx, "tile_y": ty,
-                         "w": 32, "h": 32,
-                         "lst_bytes": t.astype("<f4").tobytes()})
-    tiles = spark.createDataFrame(pd.DataFrame(rows))
+    tiles = _tile_fixture(spark, {"S0": {"lst_bytes": plane}})
     obs = pd.DataFrame([{"scene_id": "S0", "ox": 20, "oy": 70}])
     v = terrain.viewshed_tiles(tiles, obs, obs_height=2.0, max_dist=55.0,
                                n_sectors=32)
@@ -1141,14 +1131,7 @@ def _q_viewshed_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     yy, xx = np.mgrid[0:96, 0:96]
     plane += 60.0 * np.exp(-((xx - 48.0) ** 2 + (yy - 48.0) ** 2) / 200.0)
     plane = plane.astype("<f4").astype(np.float64)
-    rows = []
-    for ty in range(3):
-        for tx in range(3):
-            t = plane[ty * 32:(ty + 1) * 32, tx * 32:(tx + 1) * 32]
-            rows.append({"scene_id": "S0", "tile_x": tx, "tile_y": ty,
-                         "w": 32, "h": 32,
-                         "lst_bytes": t.astype("<f4").tobytes()})
-    tiles = spark.createDataFrame(pd.DataFrame(rows))
+    tiles = _tile_fixture(spark, {"S0": {"lst_bytes": plane}})
     obs = pd.DataFrame([
         {"scene_id": "S0", "obs_id": "a", "ox": 10, "oy": 10},
         {"scene_id": "S0", "obs_id": "b", "ox": 80, "oy": 20},
@@ -1183,14 +1166,7 @@ def _q_sun(spark: SparkSession, sf_dir: str) -> DataFrame:
     yy, xx = np.mgrid[0:96, 0:96]
     plane += 90.0 * np.exp(-((xx - 30.0) ** 2 + (yy - 60.0) ** 2) / 160.0)
     plane = plane.astype("<f4").astype(np.float64)
-    rows = []
-    for ty in range(3):
-        for tx in range(3):
-            t = plane[ty * 32:(ty + 1) * 32, tx * 32:(tx + 1) * 32]
-            rows.append({"scene_id": "S0", "tile_x": tx, "tile_y": ty,
-                         "w": 32, "h": 32,
-                         "lst_bytes": t.astype("<f4").tobytes()})
-    tiles = spark.createDataFrame(pd.DataFrame(rows))
+    tiles = _tile_fixture(spark, {"S0": {"lst_bytes": plane}})
     sun = pd.DataFrame([{"scene_id": "S0", "azimuth_deg": 240.0,
                          "altitude_deg": 22.0}])
     v = terrain.sun_tiles(tiles, sun)
@@ -1214,7 +1190,6 @@ def _q_ndvi_emissivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (C5). One mapInArrow hop, zero shuffles. numpy oracle + threshold
     goldens in tests/test_multiband.py."""
     import numpy as np
-    import pandas as pd
 
     from i_landsat8_swlst_spark import multiband
 
@@ -1222,15 +1197,7 @@ def _q_ndvi_emissivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     red = rng.uniform(0.02, 0.45, (96, 96)).astype(np.float32)
     nir = rng.uniform(0.05, 0.65, (96, 96)).astype(np.float32)
     red[10:14, 20:24] = np.nan
-    rows = []
-    for ty in range(3):
-        for tx in range(3):
-            sl = np.s_[ty * 32:(ty + 1) * 32, tx * 32:(tx + 1) * 32]
-            rows.append({"scene_id": "S0", "tile_x": tx, "tile_y": ty,
-                         "w": 32, "h": 32,
-                         "red_bytes": red[sl].astype("<f4").tobytes(),
-                         "nir_bytes": nir[sl].astype("<f4").tobytes()})
-    tiles = spark.createDataFrame(pd.DataFrame(rows))
+    tiles = _tile_fixture(spark, {"S0": {"red_bytes": red, "nir_bytes": nir}})
     v = multiband.ndvi_emissivity_tiles(tiles, "red_bytes", "nir_bytes")
     return (
         v.groupBy("scene_id")
@@ -1289,7 +1256,6 @@ def _q_horizon(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell), plane regroup by equi join. Brute per-strip oracle parity +
     shadow-consistency cross-check in tests/test_terrain.py."""
     import numpy as np
-    import pandas as pd
 
     from i_landsat8_swlst_spark import terrain
 
@@ -1297,14 +1263,7 @@ def _q_horizon(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = rng.uniform(0.0, 25.0, (12, 12))
     plane = np.kron(base, np.ones((8, 8))) + rng.uniform(-0.5, 0.5, (96, 96))
     plane = plane.astype("<f4").astype(np.float64)
-    rows = []
-    for ty in range(3):
-        for tx in range(3):
-            t = plane[ty * 32:(ty + 1) * 32, tx * 32:(tx + 1) * 32]
-            rows.append({"scene_id": "S0", "tile_x": tx, "tile_y": ty,
-                         "w": 32, "h": 32,
-                         "lst_bytes": t.astype("<f4").tobytes()})
-    tiles = spark.createDataFrame(pd.DataFrame(rows))
+    tiles = _tile_fixture(spark, {"S0": {"lst_bytes": plane}})
     v = terrain.horizon_tiles(tiles, [90.0, 180.0, 270.0])
     return (
         v.groupBy("azimuth")
