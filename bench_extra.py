@@ -12,6 +12,7 @@ Usage:
   python bench_extra.py viewshed|viewshed_cva|horizon|tovect|contour [--reps 3]
   python bench_extra.py regions|segment|landscape [--reps 3]
   python bench_extra.py focal|costdist|flowaccum [--reps 3]
+  python bench_extra.py series|series_deep|temporal|gapfill|accumulate [--reps 3]
   python bench_extra.py pytasks [--reps 3]   # per-task Python-UDF hop cost
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1, as in bench.py),
@@ -117,6 +118,40 @@ def _operator_df(spark, name: str, tmp: str):
         if name == "flowaccum":
             return Hy.flow_accum_tiles(terr)
         return Vz.contour_lines(terr, [20.0, 40.0, 60.0])
+    if name in ("series", "series_deep", "temporal", "gapfill", "accumulate"):
+        from i_landsat8_swlst_spark import series as Se
+        rev_path = f"{tmp}/revisit_tiles"
+        fps, n_rev = ("FA", "FB"), 16
+        if not os.path.isdir(rev_path):
+            # 2 footprints x 16 revisits x 8x8 tiles of 128x128, 10% NaN,
+            # written one footprint at a time
+            rng = np.random.default_rng(29)
+            for fp in fps:
+                rrows = []
+                for r in range(n_rev):
+                    plane = rng.uniform(260.0, 330.0, (1024, 1024)).astype(np.float32)
+                    plane[rng.random(plane.shape) < 0.1] = np.nan
+                    rrows += [{"scene_id": f"{fp}R{r}", "tile_x": tx, "tile_y": ty,
+                               "w": 128, "h": 128, "lst_bytes": np.ascontiguousarray(
+                                   plane[ty * 128:(ty + 1) * 128,
+                                         tx * 128:(tx + 1) * 128]).tobytes()}
+                              for ty in range(8) for tx in range(8)]
+                spark.createDataFrame(pd.DataFrame(rrows)) \
+                    .write.mode("append").parquet(rev_path)
+        rev = spark.read.parquet(rev_path)
+        # acquisition instants 10 days apart, at 10:30 UTC
+        rmeta = spark.createDataFrame(pd.DataFrame([
+            {"scene_id": f"{fp}R{r}", "acquired_at": pd.Timestamp("2021-01-01 10:30")
+             + pd.Timedelta(days=10 * r)} for fp in fps for r in range(n_rev)]))
+        if name == "series":
+            return Se.series_tiles(rev)
+        if name == "series_deep":
+            return Se.series_tiles_deep(rev)
+        if name == "temporal":
+            return Se.temporal_aggregate_tiles(rev, rmeta, "1 month")
+        if name == "gapfill":
+            return Se.gapfill_tiles(rev, rmeta)
+        return Se.accumulate_tiles(rev, rmeta, lower=280.0)
     if name == "enrich":
         from i_landsat8_swlst_spark import spatial
         aoi_pdf = synth.aoi_pdf("small")
