@@ -352,13 +352,14 @@ def _row_map(src: DataFrame, schema: StructType, emit, ids) -> DataFrame:
 
 def _grouped(src: DataFrame, key: list[str], order, schema: StructType,
              consume) -> DataFrame:
-    """The package's one per-key stream: hash-partition ``src`` on ``key``,
-    sort each partition by ``key + order`` and hand ``consume`` one lazy
-    iterator of rows per key value (NULL keys form one group), in that
-    order, without pandas machinery (FlatMapGroupsInPandas paid ~1 ms per
-    9-row group). ``consume(groups)`` yields Arrow batches of ``schema``;
-    each group's iterator is spent once the next one is taken. The
-    mapInArrow step carries ``consume``'s name."""
+    """The per-key stream of the halo and revisit-stack operators:
+    hash-partition ``src`` on ``key``, sort each partition by ``key +
+    order`` and hand ``consume`` one lazy iterator of rows per key value
+    (NULL keys form one group), in that order, without pandas machinery
+    (FlatMapGroupsInPandas paid ~1 ms per 9-row group). ``consume(groups)``
+    yields Arrow batches of ``schema``; each group's iterator is spent
+    once the next one is taken. The mapInArrow step carries ``consume``'s
+    name."""
     parts = src.repartition(*[F.col(c) for c in key]) \
                .sortWithinPartitions(*key, *order)
 
