@@ -153,7 +153,7 @@ _T = "t_us"   # acquisition instant, microseconds since the Unix epoch
 
 def _revisit_source(tiles: DataFrame, src_col: str, footprint=None,
                     meta: DataFrame | None = None,
-                    t_col: str = "acquired_at") -> DataFrame:
+                    t_col: str | None = None) -> DataFrame:
     """The tile table keyed for a revisit-stack operator: (footprint,
     scene_id, tile_x, tile_y, w, h, src_col) and, when ``meta`` is given,
     each scene's ``t_col`` instant broadcast-joined on ``scene_id`` as
