@@ -70,13 +70,14 @@ def _tiny_fixture(spark, with_qa: bool = False):
     return scenes, meta, emis
 
 
-def _tile_fixture(spark, scenes: dict, tile: int = 32) -> DataFrame:
+def _tile_fixture(spark, scenes: dict) -> DataFrame:
     """Tile table of synthetic planes: ``scenes`` maps each scene_id to its
-    {column: 2-D plane} dict; every plane is cut into tile x tile squares,
+    {column: 2-D plane} dict; every plane is cut into 32 x 32 squares,
     one row (scene_id, tile_x, tile_y, w, h, *columns as f32 LE bytes) per
     square, scene by scene in row-major tile order."""
     import pandas as pd
 
+    tile = 32
     rows = []
     for sid, planes in scenes.items():
         h, w = next(iter(planes.values())).shape

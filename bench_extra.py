@@ -24,6 +24,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import statistics
 import sys
 import time
@@ -124,7 +125,10 @@ def _operator_df(spark, name: str, tmp: str):
         fps, n_rev = ("FA", "FB"), 16
         if not os.path.isdir(rev_path):
             # 2 footprints x 16 revisits x 8x8 tiles of 128x128, 10% NaN,
-            # written one footprint at a time
+            # written one footprint at a time under a ".part" path that is
+            # renamed only once both are in, so an interrupted build is redone
+            part = f"{rev_path}.part"
+            shutil.rmtree(part, ignore_errors=True)
             rng = np.random.default_rng(29)
             for fp in fps:
                 rrows = []
@@ -137,7 +141,8 @@ def _operator_df(spark, name: str, tmp: str):
                                          tx * 128:(tx + 1) * 128]).tobytes()}
                               for ty in range(8) for tx in range(8)]
                 spark.createDataFrame(pd.DataFrame(rrows)) \
-                    .write.mode("append").parquet(rev_path)
+                    .write.mode("append").parquet(part)
+            os.rename(part, rev_path)
         rev = spark.read.parquet(rev_path)
         # acquisition instants 10 days apart, at 10:30 UTC
         rmeta = spark.createDataFrame(pd.DataFrame([

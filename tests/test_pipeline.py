@@ -730,8 +730,7 @@ def test_fillnulls_spline_tiles_match_whole_scene(spark):
 def test_group_rows_streams_each_key_as_one_ordered_group(spark):
     """_group_rows hands ``emit`` each key's rows as ONE group in
     ``order``: a 250-row key spans four 64-row Arrow batches on its way
-    in (and its 250 output rows four on the way out), and every NULL-key
-    row lands in one group."""
+    in, and every NULL-key row lands in one group."""
     from pyspark.sql.types import (
         BooleanType, IntegerType, StringType, StructField, StructType,
     )
