@@ -1,7 +1,8 @@
 """Byte pins for the five connected-component tile operators.
 
 Every output row of ``extract_regions``, ``lake_tiles``, ``segment_tiles``
-(lam 0 and 1.5), ``class_metrics`` (6 levels) and ``to_vect`` on one
+(lam 0 and 1.5), ``class_metrics`` (6 levels), ``to_vect`` and
+``contour_lines`` (the lake level and the threshold) on one
 two-scene fixture is sorted and hashed; the digest must equal the recorded
 one. The fixture has ragged right/bottom edge tiles on both axes, NaN holes
 in both scenes, a region crossing four tiles and a region with a hole
@@ -78,6 +79,7 @@ CASES = {
     "segment_lam1.5": lambda s, t: segment.segment_tiles(t, 1.5),
     "class_metrics": lambda s, t: landscape.class_metrics(t, levels=6),
     "to_vect": lambda s, t: vectorize.to_vect(t, THRESHOLD),
+    "contour_lines": lambda s, t: vectorize.contour_lines(t, [LEVEL, THRESHOLD]),
 }
 
 KERNELS = {
@@ -102,6 +104,8 @@ DIGESTS = {  # case: (rows, sha256 of the sorted rows)
         "4fd65f0c1476eabfb0f6757cad6375e20b698f09a44596e66028b046376dfbca"),
     "to_vect": (30,
         "7ef8be0ecd226bb1e57f9e58a1495f8a4726ef3ddcbce85387803bf903235f3d"),
+    "contour_lines": (91,
+        "b69e75ab2a06b9b01a35a1de050af35a6ec802a355d547d52164e8b8433d9c7e"),
 }
 
 KERNEL_DIGESTS = {  # kernel: sha256 of every (labels, n) on the planes

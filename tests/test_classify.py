@@ -276,3 +276,34 @@ def test_kmeans_decodes_once_per_fit(spark, monkeypatch):
     # localCheckpoint blocks of the centers frame (iters + init) may remain
     leaked = cached_rdds() - before
     assert len(leaked) <= 5, f"k-means fit leaked cached RDDs: {leaked}"
+
+
+def test_model_scene_without_tiles_keeps_centers(spark, monkeypatch):
+    """A model scene with no tile rows meets its class partials in a left
+    join as one NULL-``cls`` row: a k-means step keeps its centers with zero
+    counts, and the signatures give it the centers as means with identity
+    inverse covariances and zero log-dets."""
+    df, _ = _blob_tiles(spark, scenes=("S0",))
+    k, b = 2, len(BANDS)
+    ghost = [float(v) for v in range(1, k * b + 1)]
+    init = classify._init_from_moments
+
+    def with_ghost(moments, band_cols, kk):
+        extra = spark.createDataFrame(
+            [("Z", kk, len(band_cols), ghost, [0] * kk)],
+            classify._KM_MODEL_SCHEMA)
+        return init(moments, band_cols, kk).unionByName(extra)
+
+    monkeypatch.setattr(classify, "_init_from_moments", with_ghost)
+    model = classify.kmeans_model_df(df, BANDS, k=k, iters=1)
+    km = {r["scene_id"]: r for r in model.collect()}
+    assert km["Z"]["centers"] == ghost
+    assert km["Z"]["counts"] == [0] * k
+    assert sum(km["S0"]["counts"]) > 0
+
+    ml = {r["scene_id"]: r for r in classify.maxlik_model_df(df, BANDS, model).collect()}
+    assert ml["Z"]["means"] == ghost
+    assert ml["Z"]["invcov"] == np.tile(np.eye(b), (k, 1, 1)).ravel().tolist()
+    assert ml["Z"]["logdet"] == [0.0] * k
+    assert ml["Z"]["counts"] == [0] * k
+    assert sum(ml["S0"]["counts"]) > 0

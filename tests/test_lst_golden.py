@@ -1,7 +1,8 @@
 """Byte pins for the four fused-LST tile operators.
 
 Every output row of ``lst_tiles`` (Kelvin with arrays, Celsius with a QA
-band, stats-only with a QA band), ``lst_pixels``,
+band, stats-only with a QA band), ``lst_pixels`` (and those pixels
+scattered back to tiles by ``rasterize_pixels``),
 ``lst_tiles_pixel_emissivity`` (constant single plane, varying single
 plane with a missing tile, a plane pair with a null band-11 plane) and
 ``lst_tiles_halo`` (a DN scene and a BT scene) on one two-scene fixture is
@@ -154,6 +155,7 @@ CASES = {
     "lst_tiles_stats_qa": lambda s: pipeline.lst_tiles(
         _enriched(s), emit_arrays=False),
     "lst_pixels": _pixels,
+    "rasterize_pixels": lambda s: pipeline.rasterize_pixels(_pixels(s), TW, TH),
     "emis_const": lambda s: pipeline.lst_tiles_pixel_emissivity(
         _enriched(s), _emis_tiles(s, "const"), window=5),
     "emis_vary": lambda s: pipeline.lst_tiles_pixel_emissivity(
@@ -186,6 +188,8 @@ DIGESTS = {  # case: (rows, sha256 of the sorted rows)
         "c84776d543044c7a9621d13f50822f238ca9f7a6e7d3ba037139e5c167c0a740"),
     "lst_tiles_stats_qa": (28,
         "083cc0749a6026586cd0391501eba9cbf3413d4668e59a01cda1e595d7de39d8"),
+    "rasterize_pixels": (15,
+        "e174c810b55bf1a7512e4402fd6473fd11afff9c7c1be9919f3bf7ab1a9dce88"),
 }
 
 

@@ -463,7 +463,7 @@ def test_segment_stitch_is_equi(spark):
 
 def test_warp_is_one_exchange_plus_broadcast_geom(spark):
     """warp_tiles: the scale shape is broadcast(geom) join -> ONE mapInArrow
-    fragment pass -> ONE hash exchange (the dst-tile assemble). Pixel bytes
+    fragment pass -> ONE hash exchange -> the dst-tile assemble. Pixel bytes
     cross the exchange exactly once as fragments; never per-point rows, no
     nested loop, no second shuffle."""
     import numpy as np
@@ -488,7 +488,9 @@ def test_warp_is_one_exchange_plus_broadcast_geom(spark):
     n_exchanges = plan.count("Exchange hashpartitioning")
     # one for the tiny dims agg (metadata only), one for the assemble
     assert n_exchanges <= 2, f"expected <=2 hash exchanges, plan had {n_exchanges}"
-    assert plan.count("MapInArrow") == 1
+    # the operator's two Python stages (fragment pass + assemble), counted
+    # under either physical operator name the assemble may run as
+    assert plan.count("MapInArrow") + plan.count("FlatMapGroupsInPandas") == 2
 
 
 def test_scene_model_passes_are_broadcast_joins(spark):
