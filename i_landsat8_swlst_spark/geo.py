@@ -72,15 +72,10 @@ def xyz_to_face_uv(x, y, z):
     axis = np.where(ax >= ay, np.where(ax >= az, 0, 2), np.where(ay >= az, 1, 2))
     major = np.choose(axis, [x, y, z])
     face = np.where(major >= 0, axis, axis + 3)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        u = np.select(
-            [face == 0, face == 1, face == 2, face == 3, face == 4, face == 5],
-            [y / x, -x / y, -x / z, z / x, z / y, -y / z],
-        )
-        v = np.select(
-            [face == 0, face == 1, face == 2, face == 3, face == 4, face == 5],
-            [z / x, z / y, -y / z, y / x, -x / y, -x / z],
-        )
+    # each face divides by its own major coordinate: two divisions, none
+    # by a minor coordinate that could overflow
+    u = np.choose(face, [y, -x, -x, z, z, -y]) / major
+    v = np.choose(face, [z, z, -y, y, -x, -x]) / major
     return face.astype(np.int64), u, v
 
 

@@ -20,6 +20,28 @@ def test_face_assignment_at_axis_points():
     assert face.tolist() == [0, 1, 2, 3, 4, 5]
 
 
+def test_face_uv_divides_by_the_major_coordinate_only():
+    """u/v are the face's two minor coordinates over its major one, bit for
+    bit; a subnormal minor coordinate divides nothing, so no overflow
+    warning comes from a face the point is not on."""
+    import warnings
+
+    rng = np.random.default_rng(8)
+    x, y, z = (np.append(rng.normal(size=200), c) for c in (1.0, 5e-324, 0.25))
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        face, u, v = geo.xyz_to_face_uv(x, y, z)
+    assert (face[-1], u[-1], v[-1]) == (0, 5e-324, 0.25)
+    x, y, z, face, u, v = (a[:-1] for a in (x, y, z, face, u, v))
+    per_face = {0: (y / x, z / x), 1: (-x / y, z / y), 2: (-x / z, -y / z),
+                3: (z / x, y / x), 4: (z / y, -x / y), 5: (-y / z, -x / z)}
+    for f, (uf, vf) in per_face.items():
+        sel = face == f
+        assert sel.any()
+        np.testing.assert_array_equal(u[sel], uf[sel])
+        np.testing.assert_array_equal(v[sel], vf[sel])
+
+
 def test_leaf_cell_structure():
     cells = geo.s2_cell(np.array([5.0, -120.0]), np.array([45.0, -33.0]))
     u = cells.view(np.uint64)
