@@ -22,8 +22,9 @@ scene here, like every other multiband op):
   (exact elementwise squared distance, lowest-index tie-break) and emits
   per-(scene, class) partial sums; a positional map-side-combining SUM
   reduces them to k·B doubles per scene, and the new centers derive
-  DISTRIBUTED (applyInPandas per scene). An empty class keeps its previous
-  center — deterministic, matches the serial oracle's rule. The tiny
+  DISTRIBUTED (pipeline._group_rows, one group per scene). An empty class
+  keeps its previous center — deterministic, matches the serial oracle's
+  rule. The tiny
   centers frame localCheckpoints per iteration so lineage stays flat
   (iters × scan otherwise re-derives every previous iteration).
 - **Signatures** (``i.gensig``-shaped output of i.cluster): one more scan
@@ -68,7 +69,8 @@ from .multiband import (
     _MOMENT_SCHEMA, _decode_stack, _moment_sums, _positional_sum, band_moments,
 )
 from .pipeline import (
-    _PLANE_IDS, _arrow_schema, _batch_from_cols, _batch_rows, _tile_map, _tile_rows,
+    _PLANE_IDS, _arrow_schema, _batch_from_cols, _batch_rows, _group_rows, _row_map,
+    _tile_map, _tile_rows,
 )
 
 _KM_MODEL_SCHEMA = StructType([
@@ -254,16 +256,13 @@ def _init_from_moments(moments: DataFrame, band_cols: list[str],
     """kmeans_init_df's spread seeding from an already-computed
     (scene_id, n, sums) moments frame — shared by the raw-tiles and the
     decode-once class_features paths."""
-    import pandas as pd
-
     b = len(band_cols)
 
-    def mk(pdf: pd.DataFrame) -> pd.DataFrame:
-        s = pdf["scene_id"].iloc[0]
-        n = int(pdf["n"].iloc[0])
-        sums = np.asarray(pdf["sums"].iloc[0], dtype=np.float64)
+    def init(row):
+        n = row.n
+        sums = np.asarray(row.sums, dtype=np.float64)
         if n < 2:
-            raise ValueError(f"k-means needs >= 2 valid pixels, scene {s!r} has {n}")
+            raise ValueError(f"k-means needs >= 2 valid pixels, scene {row.scene_id!r} has {n}")
         mean = sums[:b] / n
         iu = np.triu_indices(b)
         # diagonal of ΣX·Xᵀ sits where triu row == col
@@ -273,11 +272,9 @@ def _init_from_moments(moments: DataFrame, band_cols: list[str],
         f = (np.zeros(1) if k == 1
              else 2.0 * np.arange(k) / (k - 1) - 1.0)
         centers = mean[None, :] + f[:, None] * std[None, :]
-        return pd.DataFrame([{"scene_id": s, "k": k, "b": b,
-                              "centers": list(centers.ravel()),
-                              "counts": [0] * k}])
+        yield k, b, centers.ravel().tolist(), [0] * k
 
-    return moments.groupBy("scene_id").applyInPandas(mk, _KM_MODEL_SCHEMA)
+    return _row_map(moments, _KM_MODEL_SCHEMA, init, ("scene_id",))
 
 
 def kmeans_init_df(tiles: DataFrame, band_cols: list[str], k: int) -> DataFrame:
@@ -296,8 +293,6 @@ def kmeans_model_df(tiles: DataFrame, band_cols: list[str], k: int = 5,
     item 10; previously each iteration re-read and re-decoded the tile
     bytes). Returns a localCheckpointed frame (the loop has already
     materialized it; callers join it broadcast)."""
-    import pandas as pd
-
     from pyspark import StorageLevel
 
     if k < 1 or k > 254:
@@ -308,28 +303,23 @@ def kmeans_model_df(tiles: DataFrame, band_cols: list[str], k: int = 5,
     centers = _init_from_moments(
         _moments_from_features(feats, b), band_cols, k).localCheckpoint()
 
-    def step(pdf: pd.DataFrame) -> pd.DataFrame:
-        s = pdf["scene_id"].iloc[0]
-        old = np.asarray(pdf["centers"].iloc[0], dtype=np.float64).reshape(k, b)
-        new = old.copy()
-        counts = np.zeros(k, dtype=np.int64)
-        for _, r in pdf.iterrows():
-            if r["cls"] is None or (isinstance(r["cls"], float) and np.isnan(r["cls"])):
-                continue        # scene had a model but zero valid pixels
-            c, n = int(r["cls"]), int(r["n"])
-            counts[c] = n
-            new[c] = np.asarray(r["sums"], dtype=np.float64)[:b] / n
-        return pd.DataFrame([{"scene_id": s, "k": k, "b": b,
-                              "centers": list(new.ravel()),
-                              "counts": [int(c) for c in counts]}])
+    def step(rows):
+        rows = list(rows)
+        new = np.asarray(rows[0].centers, dtype=np.float64).reshape(k, b)
+        counts = [0] * k
+        for r in rows:
+            if r.cls is not None:   # None: the scene had zero valid pixels
+                counts[r.cls] = r.n
+                new[r.cls] = np.asarray(r.sums[:b], dtype=np.float64) / r.n
+        yield rows[0].scene_id, k, b, new.ravel().tolist(), counts
 
     try:
         for _ in range(iters):
             parts = _class_partials(feats, band_cols, centers,
                                     with_cross=False, decoded=True)
             joined = centers.join(parts, on="scene_id", how="left")
-            centers = joined.groupBy("scene_id").applyInPandas(
-                step, _KM_MODEL_SCHEMA).localCheckpoint()
+            centers = _group_rows(joined, ["scene_id"], [], _KM_MODEL_SCHEMA,
+                                  step).localCheckpoint()
         return centers
     finally:
         # every localCheckpoint above is eager, so the cache has served all
@@ -341,24 +331,22 @@ def maxlik_model_df(tiles: DataFrame, band_cols: list[str],
                     kmeans_df: DataFrame) -> DataFrame:
     """i.gensig-shaped signatures from a converged k-means model: one scan
     accumulates per-class cross-moments, then per-scene covariance inverse
-    + log-det derive distributed (applyInPandas over tiny rows)."""
-    import pandas as pd
-
-    def mk(pdf: pd.DataFrame) -> pd.DataFrame:
-        s = pdf["scene_id"].iloc[0]
-        k, b = int(pdf["k"].iloc[0]), int(pdf["b"].iloc[0])
-        centers = np.asarray(pdf["centers"].iloc[0], dtype=np.float64).reshape(k, b)
+    + log-det derive distributed (one grouped pass over tiny rows)."""
+    def signatures(rows):
+        rows = list(rows)
+        k, b = rows[0].k, rows[0].b
+        centers = np.asarray(rows[0].centers, dtype=np.float64).reshape(k, b)
         iu = np.triu_indices(b)
         means = centers.copy()                    # empty class: center, I
         invcov = np.tile(np.eye(b), (k, 1, 1))
         logdet = np.zeros(k)
-        counts = np.zeros(k, dtype=np.int64)
-        for _, r in pdf.iterrows():
-            if r["cls"] is None or (isinstance(r["cls"], float) and np.isnan(r["cls"])):
+        counts = [0] * k
+        for r in rows:
+            if r.cls is None:       # the scene had zero valid pixels
                 continue
-            c, n = int(r["cls"]), int(r["n"])
+            c, n = r.cls, r.n
             counts[c] = n
-            sums = np.asarray(r["sums"], dtype=np.float64)
+            sums = np.asarray(r.sums, dtype=np.float64)
             mu = sums[:b] / n
             means[c] = mu
             cov = np.zeros((b, b))
@@ -381,15 +369,12 @@ def maxlik_model_df(tiles: DataFrame, band_cols: list[str],
                 eps *= 2.0
             invcov[c] = inv
             logdet[c] = ld
-        return pd.DataFrame([{"scene_id": s, "k": k, "b": b,
-                              "means": list(means.ravel()),
-                              "invcov": list(invcov.ravel()),
-                              "logdet": list(logdet),
-                              "counts": [int(c) for c in counts]}])
+        yield (rows[0].scene_id, k, b, means.ravel().tolist(),
+               invcov.ravel().tolist(), logdet.tolist(), counts)
 
     parts = _class_partials(tiles, band_cols, kmeans_df, with_cross=True)
     joined = kmeans_df.join(parts, on="scene_id", how="left")
-    return joined.groupBy("scene_id").applyInPandas(mk, _ML_MODEL_SCHEMA)
+    return _group_rows(joined, ["scene_id"], [], _ML_MODEL_SCHEMA, signatures)
 
 
 def classify_tiles(tiles: DataFrame, band_cols: list[str],

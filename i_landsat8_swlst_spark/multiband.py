@@ -20,7 +20,7 @@ contrast operations, structured for the 100 TB execution model:
   broadcast, so tiles never shuffle; the projection itself is a second
   mapInArrow hop reading the model columns off each row.
   ``pca_model_df`` computes the eigendecomposition DISTRIBUTED
-  (applyInPandas per scene over the tiny moments rows), so no pixel- or
+  (one row map over the tiny one-row-per-scene moments), so no pixel- or
   scene-proportional state ever lands on the driver unless the caller
   asks for the dict form.
 
@@ -42,7 +42,9 @@ from pyspark.sql.types import (
 )
 
 from . import codecs
-from .pipeline import _PLANE_IDS, _TILE_IDS, _TILE_KEY, _tile_map, _tile_rows
+from .pipeline import (
+    _PLANE_IDS, _TILE_IDS, _TILE_KEY, _group_rows, _row_map, _tile_map, _tile_rows,
+)
 
 _MOMENT_SCHEMA = StructType([
     StructField("scene_id", StringType()),
@@ -139,28 +141,18 @@ _PCA_MODEL_SCHEMA = StructType([
 def pca_model_df(tiles: DataFrame, band_cols: list[str],
                  k: int | None = None) -> DataFrame:
     """Per-scene PCA model as a TINY DataFrame (one row per scene): the
-    eigendecomposition runs DISTRIBUTED via applyInPandas over the moments
+    eigendecomposition runs DISTRIBUTED, one row map over the moments
     rows, so nothing scene-proportional ever reaches the driver. This is
     the scale path; ``pca_components`` is its collect()ed dict form."""
-    import pandas as pd
-
     b = len(band_cols)
     k = b if k is None else min(k, b)
 
-    def eig(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for r in pdf.itertuples():
-            mean, vecs, vals, expl = _eig_components(
-                int(r.n), list(r.sums), b, k)
-            out.append({"scene_id": r.scene_id,
-                        "mean": [float(v) for v in mean],
-                        "comps": [float(v) for v in np.asarray(vecs).ravel()],
-                        "eigvals": [float(v) for v in vals],
-                        "explained": expl})
-        return pd.DataFrame(out, columns=[f.name for f in _PCA_MODEL_SCHEMA])
+    def eig(row):
+        mean, vecs, vals, expl = _eig_components(row.n, row.sums, b, k)
+        yield mean.tolist(), vecs.ravel().tolist(), vals.tolist(), expl
 
-    return (band_moments(tiles, band_cols)
-            .groupBy("scene_id").applyInPandas(eig, _PCA_MODEL_SCHEMA))
+    return _row_map(band_moments(tiles, band_cols), _PCA_MODEL_SCHEMA, eig,
+                    ("scene_id",))
 
 
 def pca_components(tiles: DataFrame, band_cols: list[str],
@@ -340,6 +332,15 @@ def scene_histograms_df(tiles: DataFrame, src_col: str,
             .groupBy("scene_id", "bin").agg(F.sum("cnt").alias("cnt")))
 
 
+def _scene_hist(rows, bins: int):
+    """One scene's (bin, cnt, vmin, vmax) histogram rows folded to its
+    last row (scene_id, vmin, vmax) and the dense int64 bin counts."""
+    h = np.zeros(bins, dtype=np.int64)
+    for r in rows:
+        h[r.bin] = r.cnt
+    return r, h
+
+
 STRETCH_SCHEMA = StructType([
     StructField("image_id", StringType()),
     StructField("scene_id", StringType()),
@@ -367,21 +368,17 @@ def stretch_luts_df(tiles: DataFrame, src_col: str = "lst_bytes",
                     hi_pct: float = 98.0, bins: int = 4096) -> DataFrame:
     """Per-scene stretch model as a TINY DataFrame (scene_id, vmin, vmax,
     lut_bytes): range agg, histogram agg, then the LUT derivation runs
-    DISTRIBUTED (applyInPandas over each scene's <= bins histogram rows).
-    Nothing scene-proportional touches the driver."""
-    import pandas as pd
-
+    DISTRIBUTED (one grouped pass over each scene's <= bins histogram
+    rows). Nothing scene-proportional touches the driver."""
     if mode not in ("equalize", "linear"):
         raise ValueError(f"unknown stretch mode {mode!r}")
     ranges_df = scene_ranges_df(tiles, src_col)
     hist = scene_histograms_df(tiles, src_col, ranges_df, bins)
     joined = hist.join(ranges_df, on="scene_id")  # both tiny, same key
 
-    def mk(pdf: pd.DataFrame) -> pd.DataFrame:
-        s = pdf["scene_id"].iloc[0]
-        vmin, vmax = float(pdf["vmin"].iloc[0]), float(pdf["vmax"].iloc[0])
-        h = np.zeros(bins, dtype=np.int64)
-        h[pdf["bin"].to_numpy()] = pdf["cnt"].to_numpy()
+    def stretch_lut(rows):
+        r, h = _scene_hist(rows, bins)
+        vmin, vmax = r.vmin, r.vmax
         n = int(h.sum())
         if n == 0:
             lut = np.zeros(bins, dtype=np.uint8)
@@ -396,10 +393,9 @@ def stretch_luts_df(tiles: DataFrame, src_col: str = "lst_bytes",
             centers = edges[:-1] + width / 2
             scaled = (centers - cut_lo) / max(cut_hi - cut_lo, 1e-300)
             lut = np.round(np.clip(scaled, 0.0, 1.0) * 255.0).astype(np.uint8)
-        return pd.DataFrame([{"scene_id": s, "vmin": vmin, "vmax": vmax,
-                              "lut_bytes": lut.tobytes()}])
+        yield r.scene_id, vmin, vmax, lut.tobytes()
 
-    return joined.groupBy("scene_id").applyInPandas(mk, _LUT_SCHEMA)
+    return _group_rows(joined, ["scene_id"], [], _LUT_SCHEMA, stretch_lut)
 
 
 def stretch_tiles(tiles: DataFrame, src_col: str = "lst_bytes",
@@ -533,7 +529,7 @@ def pansharpen_tiles(tiles: DataFrame, pan_col: str, band_cols: list[str],
 # distribution match a reference scene's, the standard radiometric
 # normalization before mosaicking heterogeneous acquisitions). Reuses the
 # fixed-bin histogram machinery: per-scene histograms fold distributed,
-# the per-scene matching LUT derives DISTRIBUTED (applyInPandas per scene
+# the per-scene matching LUT derives DISTRIBUTED (one grouped pass per scene
 # against the broadcast reference CDF), and the apply pass broadcast-joins
 # the LUT — the stretch_tiles plan shape exactly.
 # --------------------------------------------------------------------------
@@ -577,8 +573,6 @@ def histo_match_tiles(tiles: DataFrame, ref_scene: str,
     derivation, and ONE shuffle-free apply pass broadcast-joins the LUTs.
     Returns (DataFrame, luts_df) where luts_df is the tiny per-scene LUT
     table (scene_id, vmin, vmax, lut_bytes as f32[bins])."""
-    import pandas as pd
-
     ranges_df = scene_ranges_df(tiles, src_col)
     # the range and histogram scans run once: the reference collect and the
     # LUT derivation both read this checkpoint
@@ -588,30 +582,23 @@ def histo_match_tiles(tiles: DataFrame, ref_scene: str,
     if not ref_rows:
         raise ValueError(f"reference scene {ref_scene!r} has no histogram "
                          "(unknown scene or zero finite pixels)")
-    ref_h = np.zeros(bins, dtype=np.int64)
-    for r in ref_rows:
-        ref_h[int(r["bin"])] = int(r["cnt"])
-    ref_vmin, ref_vmax = float(ref_rows[0]["vmin"]), float(ref_rows[0]["vmax"])
-    ref_width = max(ref_vmax - ref_vmin, 1e-300) / bins
-    ref_centers = ref_vmin + (np.arange(bins) + 0.5) * ref_width
+    ref, ref_h = _scene_hist(ref_rows, bins)
+    ref_width = max(ref.vmax - ref.vmin, 1e-300) / bins
+    ref_centers = ref.vmin + (np.arange(bins) + 0.5) * ref_width
     ref_cdf = np.cumsum(ref_h) / max(int(ref_h.sum()), 1)
 
-    def mk(pdf: pd.DataFrame) -> pd.DataFrame:
-        s = pdf["scene_id"].iloc[0]
-        vmin, vmax = float(pdf["vmin"].iloc[0]), float(pdf["vmax"].iloc[0])
-        h = np.zeros(bins, dtype=np.int64)
-        h[pdf["bin"].to_numpy()] = pdf["cnt"].to_numpy()
+    def match_lut(rows):
+        r, h = _scene_hist(rows, bins)
         n = max(int(h.sum()), 1)
         # CDF at each source bin's center rank (half the bin's own mass):
         # strictly inside (0, 1], monotone, so the interp is well-defined
         cdf = (np.cumsum(h) - h / 2.0) / n
         lut = np.interp(cdf, ref_cdf, ref_centers,
                         left=ref_centers[0], right=ref_centers[-1])
-        return pd.DataFrame([{"scene_id": s, "vmin": vmin, "vmax": vmax,
-                              "lut_bytes": lut.astype("<f4").tobytes()}])
+        yield r.scene_id, r.vmin, r.vmax, lut.astype("<f4").tobytes()
 
-    luts_df = (hist.groupBy("scene_id").applyInPandas(mk, _MATCH_LUT_SCHEMA)
-               .localCheckpoint())
+    luts_df = _group_rows(hist, ["scene_id"], [], _MATCH_LUT_SCHEMA,
+                          match_lut).localCheckpoint()
 
     def fn(row, w, h):
         x = _plane64(row, src_col)

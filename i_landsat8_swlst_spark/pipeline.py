@@ -25,7 +25,6 @@ from operator import attrgetter
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, Window, functions as F
@@ -989,18 +988,17 @@ def rasterize_pixels(
         StructField("n_valid", LongType()),
     ])
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def scatter(rows):
+        rows = list(rows)
         grid = np.full((h, w), np.nan, dtype=np.float32)
-        grid[pdf["py"].to_numpy(), pdf["px"].to_numpy()] = pdf[value_col].to_numpy()
-        return pd.DataFrame([{
-            "image_id": pdf["image_id"].iloc[0],
-            "scene_id": key[0], "tile_x": key[1], "tile_y": key[2],
-            "w": w, "h": h,
-            "raster_bytes": grid.tobytes(),
-            "n_valid": int(np.isfinite(grid).sum()),
-        }])
+        py, px, v = zip(*((r.py, r.px, r.v) for r in rows))
+        grid[py, px] = np.array(v, dtype=np.float64)   # NULL -> NaN
+        r = rows[0]
+        yield (r.image_id, r.scene_id, r.tile_x, r.tile_y, w, h,
+               grid.tobytes(), int(np.isfinite(grid).sum()))
 
-    return pixels.groupBy("scene_id", "tile_x", "tile_y").applyInPandas(fn, out_schema)
+    src = pixels.select("image_id", *_TILE_KEY, "px", "py", F.col(value_col).alias("v"))
+    return _group_rows(src, _TILE_KEY, [], out_schema, scatter)
 
 
 FOCAL_SCHEMA = StructType([

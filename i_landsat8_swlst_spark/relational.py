@@ -1357,9 +1357,10 @@ def q_except_all(spark, sf_dir):
 
 
 # --- grouped-map pandas UDF (applyInPandas) with an exact SQL twin -------------------
-# The raster engine's rasterize/halo operators are applyInPandas; this twin
-# proves that surface's exactness through the driver gate: per-user running
-# cents computed by a grouped-map kernel == the window-function form.
+# The engine's remaining applyInPandas passes (the two-input cogroups, the
+# CC min-label and the terrain sweep) run on this surface; this twin proves
+# its exactness through the driver gate: per-user running cents computed by
+# a grouped-map kernel == the window-function form.
 
 @register(
     "q_grouped_map",
@@ -1520,8 +1521,8 @@ def q_skyline(spark, sf_dir):
 
 # --- grid-density rasterization (point layer -> cell counts, SQL-exact form) -------
 # The vector->raster heatmap: bin points into a fixed lon/lat grid and
-# aggregate per cell. Production rasterize is applyInPandas (q_rasterize_
-# roundtrip); this twin proves the binning+agg algebra through the driver
+# aggregate per cell. Production rasterize is a grouped Arrow scatter
+# (pipeline.rasterize_pixels, q_rasterize_roundtrip); this twin proves the binning+agg algebra through the driver
 # hash gate. floor() on IEEE doubles is identical in both engines; one
 # map-side-combining aggregation is the only shuffle, so the same plan
 # rasterizes a 100-TB point table (cells ~ bounded, partial aggs collapse).

@@ -34,13 +34,18 @@ piece that differs between the forms:
   broadcast vector pack and runs the plane on pipeline._tile_rows
   (_broadcast_planes). The cell form gathers each tile's candidates with
   one tile -> degree-cell explode (_tile_cells) and an equi join, and runs
-  the same plane in _grouped_plane_apply.
+  the same plane per tile key on pipeline._group_rows
+  (_grouped_plane_apply); candidates arrive sorted by id, so one that
+  reached its tile through several cells is dropped as a consecutive
+  repeat.
 """
 
 from __future__ import annotations
 
+import itertools
 import math
 from functools import partial
+from operator import attrgetter
 
 import numpy as np
 import pandas as pd
@@ -54,8 +59,8 @@ from pyspark.sql.types import (
 
 from . import geo
 from .pipeline import (
-    _TILE_IDS, _TILE_KEY, _arrow_schema, _coalesce_batches, _nominal_grid,
-    _tile_rows,
+    _TILE_IDS, _TILE_KEY, _arrow_schema, _coalesce_batches, _group_rows,
+    _nominal_grid, _tile_rows,
 )
 
 # --------------------------------------------------------------------------
@@ -1276,20 +1281,26 @@ def _broadcast_planes(tiles: DataFrame, scene_geom: DataFrame, schema: StructTyp
 
 
 def _grouped_plane_apply(cand: DataFrame, schema: StructType, plane, pack,
-                         skip_empty: bool = False) -> DataFrame:
+                         order: list[str], skip_empty: bool = False) -> DataFrame:
     """The cell form: per tile key, ``pack`` turns the tile's candidate
-    rows into the broadcast form's vector pack and the same ``plane`` runs
-    on it."""
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        row = pdf.iloc[0]
-        w, h = int(row.w), int(row.h)
-        head = (row.scene_id, int(row.tile_x), int(row.tile_y), w, h)
-        return pd.DataFrame(
-            [head + v for v in _plane_cols(plane(row, w, h, pack(pdf)), w, h, skip_empty)],
-            columns=schema.names)
+    rows, sorted by ``order``, into the broadcast form's vector pack and
+    the same ``plane`` runs on it."""
+    def emit(rows):
+        rows = list(rows)
+        row = rows[0]
+        head = (row.scene_id, row.tile_x, row.tile_y, row.w, row.h)
+        return [head + v for v in _plane_cols(
+            plane(row, row.w, row.h, pack(rows)), row.w, row.h, skip_empty)]
 
-    fn.__name__ = plane.__name__
-    return cand.groupBy(*_TILE_KEY).applyInPandas(fn, schema)
+    emit.__name__ = plane.__name__
+    return _group_rows(cand, _TILE_KEY, order, schema, emit)
+
+
+def _distinct(rows, key):
+    """``rows`` sorted by ``key``, each run of equal keys cut to its first
+    row: a candidate that reached its tile through several shared cells
+    counts once."""
+    return (next(g) for _, g in itertools.groupby(rows, key))
 
 
 def _cell_range(df: DataFrame, x0: F.Column, x1: F.Column, y0: F.Column,
@@ -1373,12 +1384,15 @@ def _station_vec(st: pd.DataFrame, weighted: bool = True) -> tuple:
             st["value"].to_numpy(np.float64) if weighted else np.ones(len(st)))
 
 
-def _station_group(pdf: pd.DataFrame, weighted: bool = True) -> tuple:
-    """The cell form's station pack: a station arrives once per (tile-cell
-    x its cell) pairing when the tile spans several cells, so dedup, then
-    id-sort like the broadcast form."""
-    s = pdf[pdf.station_id.notna()].drop_duplicates("station_id")
-    return _station_vec(s.sort_values("station_id", kind="mergesort"), weighted)
+def _station_group(rows, weighted: bool = True) -> tuple:
+    """The cell form's station pack from a tile's rows sorted by
+    station_id: NULL ids (a tile with no station in reach) dropped, one
+    row per station, so the arrays are id-sorted like the broadcast
+    form's."""
+    st = [(r.lon, r.lat, r.value if weighted else 1.0)
+          for r in _distinct(rows, attrgetter("station_id"))
+          if r.station_id is not None]
+    return tuple(np.array(st, dtype=np.float64).reshape(-1, 3).T)
 
 
 def _idw_plane(k: int, power: float, radius_km: float | None):
@@ -1458,7 +1472,7 @@ def idw_rasterize_cells(tiles: DataFrame, stations: DataFrame,
     cand = _radius_candidates(tiles, stations, scene_geom, radius_km,
                               "idw_rasterize_cells")
     return _grouped_plane_apply(cand, _IDW_SCHEMA, _idw_plane(k, power, radius_km),
-                                _station_group)
+                                _station_group, ["station_id"])
 
 
 def _radius_candidates(tiles: DataFrame, stations: DataFrame,
@@ -1590,7 +1604,8 @@ def kde_rasterize_cells(tiles: DataFrame, stations: DataFrame,
     cand = _radius_candidates(tiles, stations, scene_geom, radius_km,
                               "kde_rasterize_cells")
     return _grouped_plane_apply(cand, _KDE_SCHEMA, plane,
-                                partial(_station_group, weighted=weighted))
+                                partial(_station_group, weighted=weighted),
+                                ["station_id"])
 
 
 # --------------------------------------------------------------------------
@@ -1664,11 +1679,12 @@ def _seg_array(ax, ay, bx, by, cat) -> np.ndarray:
                             ax, ay, bx, by, cat])
 
 
-def _seg_group(pdf: pd.DataFrame) -> np.ndarray:
-    """The cell form's segment pack: a segment reaches a tile once per
-    shared (tile-cell x its cell) pairing — dedup to one burn per segment."""
-    s = pdf.drop_duplicates(["line_id", "i"])
-    return _seg_array(*(s[c].to_numpy(np.float64) for c in ("ax", "ay", "bx", "by", "cat")))
+def _seg_group(rows) -> np.ndarray:
+    """The cell form's segment pack from a tile's rows sorted by (line_id,
+    i): one burn per segment."""
+    segs = [(r.ax, r.ay, r.bx, r.by, r.cat)
+            for r in _distinct(rows, attrgetter("line_id", "i"))]
+    return _seg_array(*np.array(segs, dtype=np.float64).reshape(-1, 5).T)
 
 
 def _check_line_cols(lines) -> None:
@@ -1758,7 +1774,7 @@ def rasterize_lines_cells(tiles: DataFrame, lines: DataFrame,
     cand = _tile_cells(tiles, scene_geom, cw, ch).join(
         seg, on=["cell_x", "cell_y"], how="inner")
     return _grouped_plane_apply(cand, _LINES_SCHEMA, _lines_plane, _seg_group,
-                                skip_empty=True)
+                                ["line_id", "i"], skip_empty=True)
 
 
 # --------------------------------------------------------------------------

@@ -23,7 +23,7 @@ extract_regions (whose label fixpoint this reuses):
 3. The shared stitch and grouped min-label pass (regions._stitched)
    map each edge's local node to its global region id — edges are
    O(perimeter) rows, pixels never shuffle.
-4. One groupBy(scene, region) + applyInPandas stitches the directed edges
+4. One grouped row map keyed on (scene, region) stitches the directed edges
    into rings. Edges are oriented REGION-ON-THE-RIGHT in y-down raster
    coords, so after the engine's lat1-is-row-0 geocoding flip, exterior
    rings wind CCW in lon/lat (the GIS convention) and holes CW. At a
@@ -42,7 +42,7 @@ both sides of a tile border (the interpolation reads the same two f32
 values), so chains stitch exactly. Isolines come back as ordered
 polylines (closed where the contour loops, open where it exits the valid
 data region), oriented with the HIGHER side on the left, per (scene,
-level) assembled in one applyInPandas task.
+level) assembled in one grouped-map group.
 
 Scale shape: both operators decode each tile once, shuffle only
 O(perimeter)/O(contour) rows plus the 1-px halo strips, and do all pixel
@@ -55,7 +55,6 @@ from functools import partial
 from typing import Iterator, Sequence
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
@@ -64,7 +63,7 @@ from pyspark.sql.types import (
     StructField, StructType,
 )
 
-from .pipeline import _batch_rows, _nominal_grid, halo_plane_tiles
+from .pipeline import _batch_rows, _group_rows, _nominal_grid, halo_plane_tiles
 from .regions import _Rows, _stitched, _tile_pass, label_tile
 
 # one pass emits every row kind so each tile is decoded and labeled once:
@@ -142,14 +141,14 @@ def _dir_of(x0, y0, x1, y1) -> int:
     return _DIRS.index((int(np.sign(x1 - x0)), int(np.sign(y1 - y0))))
 
 
-def _assemble_rings(pdf: pd.DataFrame) -> pd.DataFrame:
+def _assemble_rings(rows):
     """Stitch one region's directed boundary edges into closed rings.
     Deterministic regardless of row order: edges sort canonically, every
     walk starts from the smallest unused edge, and a checkerboard vertex
     takes the sharpest right turn (region stays on the right)."""
-    scene = pdf["scene_id"].iloc[0]
-    region = int(pdf["region_id"].iloc[0])
-    e = pdf[["x0", "y0", "x1", "y1"]].to_numpy(dtype=np.int64)
+    rows = list(rows)
+    scene, region = rows[0].scene_id, rows[0].region_id
+    e = np.array([(r.x0, r.y0, r.x1, r.y1) for r in rows], dtype=np.int64)
     e = e[np.lexsort((e[:, 3], e[:, 2], e[:, 1], e[:, 0]))]
     # tail-vertex -> direction -> edge index (one edge per (vertex, dir):
     # boundary edges are unique by construction)
@@ -199,24 +198,9 @@ def _assemble_rings(pdf: pd.DataFrame) -> pd.DataFrame:
     # exterior ring(s) first (positive shoelace under region-on-right,
     # y-down), then holes; deterministic order by start vertex
     rings.sort(key=lambda r: (-(r[0] > 0), r[1][0]))
-    rows = []
     for rid, (area2, verts) in enumerate(rings):
-        rows.append({
-            "scene_id": scene, "region_id": region, "ring_id": rid,
-            "is_hole": bool(area2 < 0), "n_vertices": len(verts) - 1,
-            "area_px": abs(area2) / 2.0,
-            "ring_x": [v[0] for v in verts],
-            "ring_y": [v[1] for v in verts],
-        })
-    return pd.DataFrame(rows)
-
-
-def _assemble_ring_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Run `_assemble_rings` for every region in one bucket group."""
-    outs = [_assemble_rings(grp)
-            for _rid, grp in pdf.groupby("region_id", sort=True)]
-    return (pd.concat(outs, ignore_index=True) if outs
-            else pd.DataFrame(columns=[f.name for f in TOVECT_SCHEMA]))
+        yield (scene, region, rid, area2 < 0, len(verts) - 1, abs(area2) / 2.0,
+               [v[0] for v in verts], [v[1] for v in verts])
 
 
 def to_vect(tiles: DataFrame, threshold: float,
@@ -246,18 +230,8 @@ def to_vect(tiles: DataFrame, threshold: float,
             .select("scene_id", F.col("label").alias("region_id"),
                     "x0", "y0", "x1", "y1")
         )
-        # assemble rings per REGION BUCKET, not per region: one
-        # FlatMapGroupsInPandas group costs ~3.5 ms of arrow/pandas setup,
-        # so per-region groups ran a 4.3k-region scene in ~16 s on ONE
-        # AQE-coalesced task; a bucket hosts many regions (each still
-        # walked independently — identical rows out) and the explicit
-        # modulus keeps the group count scale-adaptive
-        nbkt = max(tiles.sparkSession.sparkContext.defaultParallelism, 1) * 4
-        return (bedges.groupBy(
-                    "scene_id",
-                    F.pmod(F.col("region_id"), F.lit(nbkt)).alias("rbkt"))
-                .applyInPandas(lambda _k, pdf: _assemble_ring_bucket(pdf),
-                               TOVECT_SCHEMA)
+        return (_group_rows(bedges, ["scene_id", "region_id"], [], TOVECT_SCHEMA,
+                            _assemble_rings)
                 .localCheckpoint())   # materialize before unpersisting base
 
 
@@ -448,18 +422,18 @@ def _contour_pass(padded: DataFrame, levels: Sequence[float],
     return padded.mapInArrow(fn, _SEG_SCHEMA)
 
 
-def _assemble_lines(pdf: pd.DataFrame) -> pd.DataFrame:
+def _assemble_lines(rows):
     """Chain one (scene, level)'s segments into polylines. Endpoints on a
     shared cell edge are BIT-identical across tiles (computed from the
     same two f32 corner values), so exact-key matching stitches borders.
     Open chains start at degree-1 points (data/scene edge); deterministic
     start ordering; degenerate zero-length segments are dropped."""
-    scene = pdf["scene_id"].iloc[0]
-    level = float(pdf["level"].iloc[0])
-    segs = pdf[["x0", "y0", "x1", "y1"]].to_numpy(dtype=np.float64)
+    rows = list(rows)
+    scene, level = rows[0].scene_id, rows[0].level
+    segs = np.array([(r.x0, r.y0, r.x1, r.y1) for r in rows], dtype=np.float64)
     segs = segs[~((segs[:, 0] == segs[:, 2]) & (segs[:, 1] == segs[:, 3]))]
     if not len(segs):
-        return pd.DataFrame(columns=[f.name for f in CONTOUR_SCHEMA])
+        return
     order = np.lexsort((segs[:, 3], segs[:, 2], segs[:, 1], segs[:, 0]))
     segs = segs[order]
     n = len(segs)
@@ -523,17 +497,8 @@ def _assemble_lines(pdf: pd.DataFrame) -> pd.DataFrame:
         closed = xs[0] == xs[-1] and ys[0] == ys[-1]
         lines.append((xs, ys, closed, length))
     lines.sort(key=lambda t: (t[0][0], t[1][0], t[0][-1], t[1][-1]))
-    m = len(lines)
-    return pd.DataFrame({
-        "scene_id": np.full(m, scene, dtype=object),
-        "level": np.full(m, level),
-        "line_id": np.arange(m, dtype=np.int32),
-        "closed": [t[2] for t in lines],
-        "n_vertices": np.array([len(t[0]) for t in lines], dtype=np.int32),
-        "length_px": np.array([t[3] for t in lines]),
-        "xs": [t[0] for t in lines],
-        "ys": [t[1] for t in lines],
-    })
+    for i, (xs, ys, closed, length) in enumerate(lines):
+        yield scene, level, i, bool(closed), len(xs), length, xs, ys
 
 
 def contour_lines(tiles: DataFrame, levels: Sequence[float],
@@ -550,5 +515,5 @@ def contour_lines(tiles: DataFrame, levels: Sequence[float],
     nom_w, nom_h = _nominal_grid(tiles)
     padded = halo_plane_tiles(tiles, r=1, src_col=src_col)
     segs = _contour_pass(padded, levels, nom_w, nom_h)
-    return segs.groupBy("scene_id", "level").applyInPandas(
-        _assemble_lines, CONTOUR_SCHEMA)
+    return _group_rows(segs, ["scene_id", "level"], [], CONTOUR_SCHEMA,
+                       _assemble_lines)

@@ -59,7 +59,6 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
@@ -67,7 +66,7 @@ from pyspark.sql.types import (
 )
 
 from . import codecs
-from .pipeline import _tile_rows
+from .pipeline import _TILE_KEY, _group_rows, _tile_rows
 
 
 @dataclass(frozen=True)
@@ -330,26 +329,20 @@ def warp_tiles(tiles: DataFrame, src_geom: DataFrame, dst: GridSpec,
     frags = _tile_rows(src, FRAGMENT_SCHEMA, emit, ("scene_id", "tile_x", "tile_y"))
     d_tw, d_th = dst.tile_w, dst.tile_h
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(rows):
         wsum = np.zeros((d_th, d_tw))
         cnt = np.zeros((d_th, d_tw), dtype=np.int64)
         fin = np.zeros((d_th, d_tw), dtype=np.int64)
-        # deterministic merge order regardless of partitioning
-        pdf = pdf.sort_values(["src_tx", "src_ty"], kind="mergesort")
-        for r in pdf.itertuples(index=False):
-            fh, fw = int(r.fh), int(r.fw)
-            ys = slice(int(r.fy0), int(r.fy0) + fh)
-            xs = slice(int(r.fx0), int(r.fx0) + fw)
-            wsum[ys, xs] += np.frombuffer(r.wsum_bytes, dtype="<f8").reshape(fh, fw)
-            cnt[ys, xs] += np.frombuffer(r.cnt_bytes, dtype=np.uint8).reshape(fh, fw)
-            fin[ys, xs] += np.frombuffer(r.fin_bytes, dtype=np.uint8).reshape(fh, fw)
+        # fragments arrive in source-tile order: a deterministic merge
+        # order regardless of partitioning
+        for r in rows:
+            ys = slice(r.fy0, r.fy0 + r.fh)
+            xs = slice(r.fx0, r.fx0 + r.fw)
+            wsum[ys, xs] += np.frombuffer(r.wsum_bytes, dtype="<f8").reshape(r.fh, r.fw)
+            cnt[ys, xs] += np.frombuffer(r.cnt_bytes, dtype=np.uint8).reshape(r.fh, r.fw)
+            fin[ys, xs] += np.frombuffer(r.fin_bytes, dtype=np.uint8).reshape(r.fh, r.fw)
         out = np.where((cnt == need) & (fin == need), wsum, np.nan)
-        return pd.DataFrame([{
-            "scene_id": key[0], "tile_x": int(key[1]), "tile_y": int(key[2]),
-            "w": d_tw, "h": d_th,
-            "out_bytes": out.astype("<f4").tobytes(),
-            "n_valid": int(np.isfinite(out).sum()),
-        }])
+        yield (r.scene_id, r.tile_x, r.tile_y, d_tw, d_th,
+               out.astype("<f4").tobytes(), int(np.isfinite(out).sum()))
 
-    return (frags.groupBy("scene_id", "tile_x", "tile_y")
-            .applyInPandas(assemble, WARP_SCHEMA))
+    return _group_rows(frags, _TILE_KEY, ["src_tx", "src_ty"], WARP_SCHEMA, assemble)
