@@ -7,7 +7,7 @@ optimization can be measured in isolation (guide §1.4) without touching it.
 
 Usage:
   python bench_extra.py q_ann_ivf [--reps 3] [--plan plans/r07/q_ann_ivf_before.txt]
-  python bench_extra.py sun|texture|classify|idw|warp|raster|enrich [--reps 3]
+  python bench_extra.py sun|texture|classify|kmeans|idw|warp|raster|enrich [--reps 3]
   python bench_extra.py raster_stats|raster_halo|raster_pixels|raster_emis [--reps 3]
   python bench_extra.py viewshed|viewshed_cva|horizon|tovect|contour [--reps 3]
   python bench_extra.py regions|segment|landscape [--reps 3]
@@ -237,6 +237,11 @@ def _operator_df(spark, name: str, tmp: str):
             model.count()
             _operator_df._cls_model = model
         return Cl.classify_tiles(ttiles, ["lst_bytes", "cwv_bytes"], model)
+    if name == "kmeans":
+        # one uncached fit: the init and two Lloyd steps with their
+        # grouped center updates
+        from i_landsat8_swlst_spark import classify as Cl
+        return Cl.kmeans_model_df(ttiles, ["lst_bytes", "cwv_bytes"], k=5, iters=2)
     if name == "sun":
         from i_landsat8_swlst_spark import terrain as Tr
         sun_in = ttiles.select("scene_id", "tile_x", "tile_y", "w", "h",
