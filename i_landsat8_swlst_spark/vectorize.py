@@ -52,18 +52,17 @@ work inside mapInArrow. No pixel plane ever crosses an exchange.
 from __future__ import annotations
 
 from functools import partial
-from typing import Iterator, Sequence
+from typing import Sequence
 
 import numpy as np
-import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
-    ArrayType, BooleanType, DoubleType, IntegerType, LongType, StringType,
-    StructField, StructType,
+    ArrayType, BinaryType, BooleanType, DoubleType, IntegerType, LongType,
+    StringType, StructField, StructType,
 )
 
-from .pipeline import _batch_rows, _group_rows, _nominal_grid, halo_plane_tiles
+from .pipeline import _group_rows, _nominal_grid, _tile_rows, halo_plane_tiles
 from .regions import _Rows, _stitched, _tile_pass, label_tile
 
 # one pass emits every row kind so each tile is decoded and labeled once:
@@ -274,13 +273,13 @@ def rings_to_lonlat(rings: DataFrame, scene_geom: DataFrame,
 # r.contour: marching-squares isolines on the pixel-center grid
 # --------------------------------------------------------------------------
 
+# one row per (tile, level) with crossings: its segments packed as f64 LE
+# (n, 4) = x0, y0, x1, y1 in scene pixel-CENTER coords, so the assemble
+# decodes a level's segments per tile, not per segment
 _SEG_SCHEMA = StructType([
     StructField("scene_id", StringType()),
     StructField("level", DoubleType()),
-    StructField("x0", DoubleType()),     # scene pixel-CENTER coords
-    StructField("y0", DoubleType()),
-    StructField("x1", DoubleType()),
-    StructField("y1", DoubleType()),
+    StructField("segs", BinaryType()),
 ])
 
 CONTOUR_SCHEMA = StructType([
@@ -317,109 +316,90 @@ def _contour_pass(padded: DataFrame, levels: Sequence[float],
     for _c, _segs in _MS_SEGMENTS.items():
         _ein[_c], _eout[_c] = _segs[0]
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            acc: dict[str, list] = {f.name: [] for f in _SEG_SCHEMA}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                tx, ty = int(row.tile_x), int(row.tile_y)
-                pad = np.frombuffer(row.pad_bytes, dtype="<f4") \
-                    .reshape(h + 2, w + 2).astype(np.float64)
-                # cells owned here: top-left pixel center in this tile.
-                # corner planes, each (h, w): TL = the tile itself
-                v00 = pad[1:-1, 1:-1]
-                v10 = pad[1:-1, 2:]
-                v01 = pad[2:, 1:-1]
-                v11 = pad[2:, 2:]
-                finite = (np.isfinite(v00) & np.isfinite(v10)
-                          & np.isfinite(v01) & np.isfinite(v11))
-                if not finite.any():
-                    continue
-                ox, oy = tx * nom_w + 0.5, ty * nom_h + 0.5
-                for L in lv:
-                    with np.errstate(invalid="ignore"):
-                        case = ((v00 >= L).astype(np.int8)
-                                + (v10 >= L).astype(np.int8) * 2
-                                + (v11 >= L).astype(np.int8) * 4
-                                + (v01 >= L).astype(np.int8) * 8)
-                    yy, xx = np.nonzero(finite & (case > 0) & (case < 15))
-                    if not len(yy):
-                        continue
-                    c = case[yy, xx].astype(np.int64)
-                    a = v00[yy, xx]
-                    b_ = v10[yy, xx]
-                    cc = v11[yy, xx]
-                    d = v01[yy, xx]
-                    # interpolation along each edge — the same four
-                    # expressions the scalar walk evaluated per cell,
-                    # now elementwise (only edges with a sign change are
-                    # ever SELECTED below, exactly as before)
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        t_top = (L - a) / (b_ - a)
-                        t_right = (L - b_) / (cc - b_)
-                        t_bottom = (L - d) / (cc - d)
-                        t_left = (L - a) / (d - a)
-                    ones = np.ones(len(c))
-                    zeros = np.zeros(len(c))
-                    px_of = (t_top, ones, t_bottom, zeros)
-                    py_of = (zeros, t_right, ones, t_left)
-                    sad = (c == 5) | (c == 10)
-                    # first/second segment edge pairs: non-saddles from
-                    # the case table (second unused); saddles from the
-                    # center-average decider (same truth table as the
-                    # scalar branch)
-                    with np.errstate(invalid="ignore"):
-                        chigh = (a + b_ + cc + d) / 4.0 >= L
-                    is5 = c == 5
-                    e1i = np.where(sad, np.where(is5,
-                                                 np.where(chigh, 1, 3),
-                                                 np.where(chigh, 0, 0)),
-                                   _ein[c])
-                    e1o = np.where(sad, np.where(is5,
-                                                 np.where(chigh, 0, 0),
-                                                 np.where(chigh, 3, 1)),
-                                   _eout[c])
-                    e2i = np.where(is5, np.where(chigh, 3, 1),
-                                   np.where(chigh, 2, 2))
-                    e2o = np.where(is5, np.where(chigh, 2, 2),
-                                   np.where(chigh, 1, 3))
-                    # segment 1 for every crossing cell, segment 2 for
-                    # saddles only; endpoint coords evaluated with the
-                    # scalar walk's exact (ox + x) + t order
-                    gx = ox + xx
-                    gy = oy + yy
-                    sel2 = np.flatnonzero(sad)
-                    segs_x0 = np.concatenate([
-                        gx + np.choose(e1i, px_of),
-                        (gx + np.choose(e2i, px_of))[sel2]])
-                    segs_y0 = np.concatenate([
-                        gy + np.choose(e1i, py_of),
-                        (gy + np.choose(e2i, py_of))[sel2]])
-                    segs_x1 = np.concatenate([
-                        gx + np.choose(e1o, px_of),
-                        (gx + np.choose(e2o, px_of))[sel2]])
-                    segs_y1 = np.concatenate([
-                        gy + np.choose(e1o, py_of),
-                        (gy + np.choose(e2o, py_of))[sel2]])
-                    n = len(segs_x0)
-                    acc["scene_id"].append(
-                        np.full(n, row.scene_id, dtype=object))
-                    acc["level"].append(np.full(n, L))
-                    acc["x0"].append(segs_x0)
-                    acc["y0"].append(segs_y0)
-                    acc["x1"].append(segs_x1)
-                    acc["y1"].append(segs_y1)
-            if acc["scene_id"]:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.concatenate(acc["scene_id"]), pa.string()),
-                     pa.array(np.concatenate(acc["level"])),
-                     pa.array(np.concatenate(acc["x0"])),
-                     pa.array(np.concatenate(acc["y0"])),
-                     pa.array(np.concatenate(acc["x1"])),
-                     pa.array(np.concatenate(acc["y1"]))],
-                    names=[f.name for f in _SEG_SCHEMA])
+    def segments(row, w, h):
+        tx, ty = row.tile_x, row.tile_y
+        pad = np.frombuffer(row.pad_bytes, dtype="<f4") \
+            .reshape(h + 2, w + 2).astype(np.float64)
+        # cells owned here: top-left pixel center in this tile.
+        # corner planes, each (h, w): TL = the tile itself
+        v00 = pad[1:-1, 1:-1]
+        v10 = pad[1:-1, 2:]
+        v01 = pad[2:, 1:-1]
+        v11 = pad[2:, 2:]
+        finite = (np.isfinite(v00) & np.isfinite(v10)
+                  & np.isfinite(v01) & np.isfinite(v11))
+        if not finite.any():
+            return
+        ox, oy = tx * nom_w + 0.5, ty * nom_h + 0.5
+        for L in lv:
+            with np.errstate(invalid="ignore"):
+                case = ((v00 >= L).astype(np.int8)
+                        + (v10 >= L).astype(np.int8) * 2
+                        + (v11 >= L).astype(np.int8) * 4
+                        + (v01 >= L).astype(np.int8) * 8)
+            yy, xx = np.nonzero(finite & (case > 0) & (case < 15))
+            if not len(yy):
+                continue
+            c = case[yy, xx].astype(np.int64)
+            a = v00[yy, xx]
+            b_ = v10[yy, xx]
+            cc = v11[yy, xx]
+            d = v01[yy, xx]
+            # interpolation along each edge — the same four
+            # expressions the scalar walk evaluated per cell,
+            # now elementwise (only edges with a sign change are
+            # ever SELECTED below, exactly as before)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                t_top = (L - a) / (b_ - a)
+                t_right = (L - b_) / (cc - b_)
+                t_bottom = (L - d) / (cc - d)
+                t_left = (L - a) / (d - a)
+            ones = np.ones(len(c))
+            zeros = np.zeros(len(c))
+            px_of = (t_top, ones, t_bottom, zeros)
+            py_of = (zeros, t_right, ones, t_left)
+            sad = (c == 5) | (c == 10)
+            # first/second segment edge pairs: non-saddles from
+            # the case table (second unused); saddles from the
+            # center-average decider (same truth table as the
+            # scalar branch)
+            with np.errstate(invalid="ignore"):
+                chigh = (a + b_ + cc + d) / 4.0 >= L
+            is5 = c == 5
+            e1i = np.where(sad, np.where(is5,
+                                         np.where(chigh, 1, 3),
+                                         np.where(chigh, 0, 0)),
+                           _ein[c])
+            e1o = np.where(sad, np.where(is5,
+                                         np.where(chigh, 0, 0),
+                                         np.where(chigh, 3, 1)),
+                           _eout[c])
+            e2i = np.where(is5, np.where(chigh, 3, 1),
+                           np.where(chigh, 2, 2))
+            e2o = np.where(is5, np.where(chigh, 2, 2),
+                           np.where(chigh, 1, 3))
+            # segment 1 for every crossing cell, segment 2 for
+            # saddles only; endpoint coords evaluated with the
+            # scalar walk's exact (ox + x) + t order
+            gx = ox + xx
+            gy = oy + yy
+            sel2 = np.flatnonzero(sad)
+            segs_x0 = np.concatenate([
+                gx + np.choose(e1i, px_of),
+                (gx + np.choose(e2i, px_of))[sel2]])
+            segs_y0 = np.concatenate([
+                gy + np.choose(e1i, py_of),
+                (gy + np.choose(e2i, py_of))[sel2]])
+            segs_x1 = np.concatenate([
+                gx + np.choose(e1o, px_of),
+                (gx + np.choose(e2o, px_of))[sel2]])
+            segs_y1 = np.concatenate([
+                gy + np.choose(e1o, py_of),
+                (gy + np.choose(e2o, py_of))[sel2]])
+            yield L, np.column_stack(
+                [segs_x0, segs_y0, segs_x1, segs_y1]).astype("<f8").tobytes()
 
-    return padded.mapInArrow(fn, _SEG_SCHEMA)
+    return _tile_rows(padded, _SEG_SCHEMA, segments, ("scene_id",))
 
 
 def _assemble_lines(rows):
@@ -430,7 +410,8 @@ def _assemble_lines(rows):
     start ordering; degenerate zero-length segments are dropped."""
     rows = list(rows)
     scene, level = rows[0].scene_id, rows[0].level
-    segs = np.array([(r.x0, r.y0, r.x1, r.y1) for r in rows], dtype=np.float64)
+    segs = np.concatenate([np.frombuffer(r.segs, dtype="<f8").reshape(-1, 4)
+                           for r in rows])
     segs = segs[~((segs[:, 0] == segs[:, 2]) & (segs[:, 1] == segs[:, 3]))]
     if not len(segs):
         return
@@ -508,8 +489,9 @@ def contour_lines(tiles: DataFrame, levels: Sequence[float],
     rings_to_lonlat(..., xtype='center')). Inside = value >= level; cells
     touching NaN are skipped, so lines end at the valid-data boundary.
     Plan: 1-px halo exchange (one repartition) -> one mapInArrow marching
-    pass -> one groupBy(scene, level) assemble. Pixels never hash-shuffle;
-    only halo strips and O(contour) segment rows move."""
+    pass -> one grouped assemble per (scene, level). Pixels never
+    hash-shuffle; only halo strips and each tile's packed O(contour)
+    segments move."""
     if not levels:
         raise ValueError("contour_lines needs at least one level")
     nom_w, nom_h = _nominal_grid(tiles)
