@@ -35,9 +35,9 @@ piece that differs between the forms:
   (_broadcast_planes). The cell form gathers each tile's candidates with
   one tile -> degree-cell explode (_tile_cells) and an equi join, and runs
   the same plane per tile key on pipeline._group_rows
-  (_grouped_plane_apply); candidates arrive sorted by id, so one that
-  reached its tile through several cells is dropped as a consecutive
-  repeat.
+  (_grouped_plane_apply), which sorts the candidates by their id and
+  drops one that reached its tile through several cells as a
+  consecutive repeat.
 """
 
 from __future__ import annotations
@@ -1281,26 +1281,23 @@ def _broadcast_planes(tiles: DataFrame, scene_geom: DataFrame, schema: StructTyp
 
 
 def _grouped_plane_apply(cand: DataFrame, schema: StructType, plane, pack,
-                         order: list[str], skip_empty: bool = False) -> DataFrame:
-    """The cell form: per tile key, ``pack`` turns the tile's candidate
-    rows, sorted by ``order``, into the broadcast form's vector pack and
+                         dedup: list[str], skip_empty: bool = False) -> DataFrame:
+    """The cell form: per tile key, the tile's candidate rows sorted by
+    ``dedup``, each run of equal ``dedup`` values cut to its first row (a
+    candidate that reached the tile through several shared cells counts
+    once), go to ``pack``, which builds the broadcast form's vector pack;
     the same ``plane`` runs on it."""
+    same = attrgetter(*dedup)
+
     def emit(rows):
-        rows = list(rows)
+        rows = [next(g) for _, g in itertools.groupby(rows, same)]
         row = rows[0]
         head = (row.scene_id, row.tile_x, row.tile_y, row.w, row.h)
         return [head + v for v in _plane_cols(
             plane(row, row.w, row.h, pack(rows)), row.w, row.h, skip_empty)]
 
     emit.__name__ = plane.__name__
-    return _group_rows(cand, _TILE_KEY, order, schema, emit)
-
-
-def _distinct(rows, key):
-    """``rows`` sorted by ``key``, each run of equal keys cut to its first
-    row: a candidate that reached its tile through several shared cells
-    counts once."""
-    return (next(g) for _, g in itertools.groupby(rows, key))
+    return _group_rows(cand, _TILE_KEY, dedup, schema, emit)
 
 
 def _cell_range(df: DataFrame, x0: F.Column, x1: F.Column, y0: F.Column,
@@ -1385,13 +1382,11 @@ def _station_vec(st: pd.DataFrame, weighted: bool = True) -> tuple:
 
 
 def _station_group(rows, weighted: bool = True) -> tuple:
-    """The cell form's station pack from a tile's rows sorted by
-    station_id: NULL ids (a tile with no station in reach) dropped, one
-    row per station, so the arrays are id-sorted like the broadcast
-    form's."""
+    """The cell form's station pack from a tile's distinct rows sorted by
+    station_id, NULL ids (a tile with no station in reach) dropped, so
+    the arrays are id-sorted like the broadcast form's."""
     st = [(r.lon, r.lat, r.value if weighted else 1.0)
-          for r in _distinct(rows, attrgetter("station_id"))
-          if r.station_id is not None]
+          for r in rows if r.station_id is not None]
     return tuple(np.array(st, dtype=np.float64).reshape(-1, 3).T)
 
 
@@ -1680,10 +1675,9 @@ def _seg_array(ax, ay, bx, by, cat) -> np.ndarray:
 
 
 def _seg_group(rows) -> np.ndarray:
-    """The cell form's segment pack from a tile's rows sorted by (line_id,
-    i): one burn per segment."""
-    segs = [(r.ax, r.ay, r.bx, r.by, r.cat)
-            for r in _distinct(rows, attrgetter("line_id", "i"))]
+    """The cell form's segment pack from a tile's distinct (line_id, i)
+    rows: one burn per segment."""
+    segs = [(r.ax, r.ay, r.bx, r.by, r.cat) for r in rows]
     return _seg_array(*np.array(segs, dtype=np.float64).reshape(-1, 5).T)
 
 
