@@ -207,6 +207,21 @@ def test_rasterize_roundtrip(tiny):
         np.testing.assert_allclose(ra[both], rb[both], rtol=1e-6)
 
 
+def test_rasterize_pixels_null_value_is_nan(spark):
+    """A NULL value scatters as a NaN cell at its own (px, py): the cells
+    after it keep their places."""
+    pixels = spark.createDataFrame(
+        [("I", "S", 0, 0, 0, 1, 300.0), ("I", "S", 0, 0, 1, 0, None),
+         ("I", "S", 0, 0, 2, 1, 301.5)],
+        "image_id string, scene_id string, tile_x int, tile_y int, "
+        "px int, py int, lst_k double")
+    (row,) = pipeline.rasterize_pixels(pixels, w=3, h=2).collect()
+    grid = np.frombuffer(row.raster_bytes, dtype="<f4").reshape(2, 3)
+    np.testing.assert_array_equal(
+        grid, [[np.nan, np.nan, np.nan], [300.0, np.nan, 301.5]])
+    assert (row.image_id, row.n_valid) == ("I", 2)
+
+
 def test_composite_pixels_matches_pandas_median(spark):
     """Temporal composite: per-pixel median/count/min/max across 3 revisits
     == a pandas groupby over the SAME lst_pixels rows (tests the compositing
