@@ -7,8 +7,9 @@ optimization can be measured in isolation (guide §1.4) without touching it.
 
 Usage:
   python bench_extra.py q_ann_ivf [--reps 3] [--plan plans/r07/q_ann_ivf_before.txt]
-  python bench_extra.py sun|texture|classify|kmeans|idw|warp|raster|enrich [--reps 3]
-  python bench_extra.py raster_stats|raster_halo|raster_pixels|raster_emis [--reps 3]
+  python bench_extra.py sun|texture|classify|kmeans|maxlik|pca|stretch|histo [--reps 3]
+  python bench_extra.py idw|idw_cells|lines_cells|warp|raster|enrich [--reps 3]
+  python bench_extra.py raster_stats|raster_halo|raster_pixels|raster_emis|rasterize [--reps 3]
   python bench_extra.py viewshed|viewshed_cva|horizon|tovect|contour [--reps 3]
   python bench_extra.py regions|segment|landscape [--reps 3]
   python bench_extra.py focal|costdist|flowaccum [--reps 3]
@@ -194,12 +195,20 @@ def _operator_df(spark, name: str, tmp: str):
     if name == "raster_halo":
         return pipeline.lst_tiles_halo(
             pipeline.build_enriched(scenes, meta, emis), window=C.DEFAULT_CWV_WINDOW)
-    if name == "raster_pixels":
+    if name in ("raster_pixels", "rasterize"):
         # one pixel row per valid pixel: the first 8 tile rows of each scene
         # keep the exploded output a few million rows
-        return pipeline.lst_pixels(
+        pixels = pipeline.lst_pixels(
             pipeline.build_enriched_with_grid(scenes, meta, emis)
             .filter(F.col("tile_y") < 8), window=C.DEFAULT_CWV_WINDOW)
+        if name == "raster_pixels":
+            return pixels
+        # the scatter back to tiles, from those pixel rows written once
+        px_path = f"{tmp}/pixel_rows"
+        if not os.path.isdir(px_path):
+            pixels.select("image_id", "scene_id", "tile_x", "tile_y", "px",
+                          "py", "lst_k").write.mode("overwrite").parquet(px_path)
+        return pipeline.rasterize_pixels(spark.read.parquet(px_path), 128, 128)
     if name == "raster_emis":
         # per-pixel emissivity planes (f32 LE, two dyadic constants
         # alternating by tile) written once next to the scenes
@@ -242,6 +251,23 @@ def _operator_df(spark, name: str, tmp: str):
         # grouped center updates
         from i_landsat8_swlst_spark import classify as Cl
         return Cl.kmeans_model_df(ttiles, ["lst_bytes", "cwv_bytes"], k=5, iters=2)
+    if name == "maxlik":
+        # the signature pass over a k-means model fitted once
+        from i_landsat8_swlst_spark import classify as Cl
+        model = getattr(_operator_df, "_cls_model", None)
+        if model is None:
+            model = Cl.kmeans_model_df(ttiles, ["lst_bytes", "cwv_bytes"],
+                                       k=5, iters=2).localCheckpoint()
+            _operator_df._cls_model = model
+        return Cl.maxlik_model_df(ttiles, ["lst_bytes", "cwv_bytes"], model)
+    if name in ("pca", "stretch", "histo"):
+        from i_landsat8_swlst_spark import multiband as Mb
+        if name == "pca":
+            return Mb.pca_model_df(ttiles, ["lst_bytes", "cwv_bytes"])
+        if name == "stretch":
+            return Mb.stretch_luts_df(ttiles)
+        ref = ttiles.select("scene_id").first().scene_id
+        return Mb.histo_match_tiles(ttiles, ref)[0]
     if name == "sun":
         from i_landsat8_swlst_spark import terrain as Tr
         sun_in = ttiles.select("scene_id", "tile_x", "tile_y", "w", "h",
@@ -252,7 +278,9 @@ def _operator_df(spark, name: str, tmp: str):
             {"scene_id": s, "azimuth_deg": 225.0, "altitude_deg": 30.0}
             for s in sun_scenes])
         return Tr.sun_tiles(sun_in, sun_pos)
-    if name == "idw":
+    if name in ("idw", "idw_cells", "lines_cells"):
+        # 512 grid tiles; 16 seeded stations and 400 seeded 8-vertex lines
+        # per live scene
         from i_landsat8_swlst_spark import spatial
         grid = ttiles.select("scene_id", "tile_x", "tile_y", "w", "h") \
             .limit(512).repartition(CPUS)
@@ -264,7 +292,7 @@ def _operator_df(spark, name: str, tmp: str):
         boxes = meta.select("scene_id", "lon0", "lat0", "lon1", "lat1").toPandas()
         boxes = boxes[boxes.scene_id.isin(live)]
         rs = np.random.default_rng(7)
-        st_rows = []
+        st_rows, line_rows = [], []
         for b in boxes.itertuples():
             for j in range(16):
                 st_rows.append({
@@ -272,7 +300,22 @@ def _operator_df(spark, name: str, tmp: str):
                     "lon": float(rs.uniform(b.lon0, b.lon1)),
                     "lat": float(rs.uniform(b.lat0, b.lat1)),
                     "value": float(rs.uniform(0.5, 6.5))})
-        return spatial.idw_rasterize(grid, pd.DataFrame(st_rows), idw_geom, k=12)
+            if name == "lines_cells":
+                for j in range(400):
+                    line_rows.append({
+                        "line_id": f"L{b.scene_id}_{j:03d}", "cat": j % 8 + 1,
+                        "xs": np.cumsum(np.r_[rs.uniform(b.lon0, b.lon1),
+                                              rs.uniform(-0.04, 0.04, 7)]).tolist(),
+                        "ys": np.cumsum(np.r_[rs.uniform(b.lat0, b.lat1),
+                                              rs.uniform(-0.04, 0.04, 7)]).tolist()})
+        if name == "idw":
+            return spatial.idw_rasterize(grid, pd.DataFrame(st_rows), idw_geom, k=12)
+        if name == "idw_cells":
+            return spatial.idw_rasterize_cells(
+                grid, spark.createDataFrame(pd.DataFrame(st_rows)), idw_geom,
+                radius_km=60.0, k=12)
+        return spatial.rasterize_lines_cells(
+            grid, spark.createDataFrame(pd.DataFrame(line_rows)), idw_geom)
     if name == "warp":
         from i_landsat8_swlst_spark import warp as Wp
         idw_geom = (pipeline.scene_grids(pipeline.parse_scenes(scenes))
