@@ -12,7 +12,7 @@ Usage:
   python bench_extra.py raster_stats|raster_halo|raster_pixels|raster_emis|rasterize [--reps 3]
   python bench_extra.py viewshed|viewshed_cva|horizon|tovect|contour [--reps 3]
   python bench_extra.py regions|segment|landscape [--reps 3]
-  python bench_extra.py focal|costdist|flowaccum [--reps 3]
+  python bench_extra.py focal|costdist|flowaccum|drain|lake|sample|aoi [--reps 3]
   python bench_extra.py series|series_deep|temporal|gapfill|accumulate [--reps 3]
   python bench_extra.py pytasks [--reps 3]   # per-task Python-UDF hop cost
 
@@ -57,7 +57,7 @@ def _operator_df(spark, name: str, tmp: str):
 
     if name in ("viewshed", "viewshed_cva", "horizon", "tovect", "contour",
                 "regions", "segment", "landscape", "focal", "costdist",
-                "flowaccum"):
+                "flowaccum", "drain", "lake"):
         from i_landsat8_swlst_spark import (
             costdist as Cd, hydro as Hy, landscape as Ls, regions as Rg,
             segment as Sg, terrain as Tr, vectorize as Vz,
@@ -119,6 +119,14 @@ def _operator_df(spark, name: str, tmp: str):
             return Cd.cost_distance_tiles(terr, threshold=80.0)
         if name == "flowaccum":
             return Hy.flow_accum_tiles(terr)
+        if name == "drain":  # 300 seeded starts (the fixture has no NULL cell)
+            rs = np.random.default_rng(37)
+            return Hy.drain_paths(terr, spark.createDataFrame(pd.DataFrame({
+                "scene_id": "T0", "pid": np.arange(300),
+                "gx": rs.integers(0, 1024, 300), "gy": rs.integers(0, 1024, 300)})))
+        if name == "lake":  # level 35 tops the 0-30 base: one seed 200 px off each ridge
+            return Rg.lake_tiles(terr, spark.createDataFrame(pd.DataFrame(
+                {"scene_id": "T0", "gx": [916, 56], "gy": [307, 768]})), 35.0)
         return Vz.contour_lines(terr, [20.0, 40.0, 60.0])
     if name in ("series", "series_deep", "temporal", "gapfill", "accumulate"):
         from i_landsat8_swlst_spark import series as Se
@@ -158,9 +166,11 @@ def _operator_df(spark, name: str, tmp: str):
         if name == "gapfill":
             return Se.gapfill_tiles(rev, rmeta)
         return Se.accumulate_tiles(rev, rmeta, lower=280.0)
-    if name == "enrich":
+    if name in ("enrich", "aoi"):
         from i_landsat8_swlst_spark import spatial
         aoi_pdf = synth.aoi_pdf("small")
+        if name == "aoi":
+            return spatial.aoi_measures(spark, aoi_pdf)
         st_pdf = synth.stations_pdf("small")
         allv = [p for ring in aoi_pdf["ring"] for p in ring]
         elons = np.array([p["lon"] for p in allv])
@@ -231,6 +241,21 @@ def _operator_df(spark, name: str, tmp: str):
             .write.mode("overwrite").parquet(tex_path)
     ttiles = spark.read.parquet(tex_path)
 
+    if name == "sample":  # 200k seeded points over the texture tiles' scene boxes
+        from i_landsat8_swlst_spark import spatial
+        geom = (pipeline.scene_grids(pipeline.parse_scenes(scenes))
+                .join(meta.select("scene_id", "lon0", "lat0", "lon1", "lat1"), "scene_id"))
+        spts_path = f"{tmp}/sample_points"
+        if not os.path.isdir(spts_path):
+            b = geom.join(ttiles.select("scene_id").distinct(), "scene_id").toPandas()
+            rs = np.random.default_rng(41)
+            k = rs.integers(0, len(b), 200000)
+            lon, lat = rs.uniform(b[["lon0", "lat0"]].to_numpy()[k],
+                                  b[["lon1", "lat1"]].to_numpy()[k]).T
+            spark.createDataFrame(pd.DataFrame(
+                {"pid": np.arange(200000), "lon": lon, "lat": lat})) \
+                .write.mode("overwrite").parquet(spts_path)
+        return spatial.sample_raster(ttiles, spark.read.parquet(spts_path), geom)
     if name == "texture":
         from i_landsat8_swlst_spark import texture
         return texture.glcm_texture_tiles(ttiles, window=5, levels=8)
@@ -338,7 +363,9 @@ def main() -> None:
     ap.add_argument("target")
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--plan", default=None)
-    ap.add_argument("--tmp", default="/dev/shm/swlst_bx")
+    # fixtures stay on disk in the checkout's git-ignored BENCH/.tmp, not in
+    # tmpfs memory
+    ap.add_argument("--tmp", default=str(Path(__file__).resolve().parent / "BENCH/.tmp/bx"))
     args = ap.parse_args()
 
     from i_landsat8_swlst_spark.session import get_spark

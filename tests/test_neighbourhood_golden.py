@@ -5,7 +5,8 @@ Every output row of the plane operators (``focal_stats_tiles`` and
 halo kernel and a 3x5 tile-local one, ``grow_tiles`` by radius and with a
 constant value, ``fillnulls_tiles`` idw and spline), of
 ``glcm_texture_tiles`` (one offset, two offsets), of the hydrology
-operators (``flow_dir_tiles``, ``flow_accum_tiles``, ``basin_tiles``) and
+operators (``flow_dir_tiles``, ``flow_accum_tiles``, ``basin_tiles``,
+``drain_paths``) and
 of the cost operators (``cost_distance_tiles`` with uniform cost and with
 a cost plane, ``cost_allocation_tiles``, ``buffer_tiles``) on one
 two-scene fixture is sorted and hashed; the digest must equal the
@@ -85,6 +86,13 @@ def _tiles(spark):
     return spark.createDataFrame(pd.DataFrame(rows))
 
 
+# drain_paths starts (scene, pid, gx, gy): pid 1 crosses 3 tile borders on A
+# and pid 4 walks the spiral's inner corridor across 2; pids 10 and 11
+# cross 3 and 2 on B; pid 99 is off every tile of A and yields no rows
+_DRAIN_STARTS = [("A", 1, 0, 0), ("A", 3, 2, 20), ("A", 4, 16, 14),
+                 ("B", 10, 19, 0), ("B", 11, 18, 16), ("B", 12, 10, 10),
+                 ("A", 99, 40, 5)]
+
 _SHARPEN = [[0, -1, 0], [-1, 5, -1], [0, -1, 0]]
 _EMBOSS_3x5 = [[-2, -1, 0, 1, 2], [-1, 0, 1, 1, 0], [0, 1, 2, 0, -1]]
 
@@ -111,6 +119,8 @@ CASES = {
     "flow_dir": lambda s: hydro.flow_dir_tiles(_tiles(s)),
     "flow_accum": lambda s: hydro.flow_accum_tiles(_tiles(s)),
     "basins": lambda s: hydro.basin_tiles(_tiles(s)),
+    "drain_paths": lambda s: hydro.drain_paths(_tiles(s), s.createDataFrame(
+        pd.DataFrame(_DRAIN_STARTS, columns=["scene_id", "pid", "gx", "gy"]))),
     "cost_uniform": lambda s: costdist.cost_distance_tiles(_tiles(s), HOT),
     "cost_plane": lambda s: costdist.cost_distance_tiles(
         _tiles(s), HOT, cost_col="cost_bytes", cell=30.0),
@@ -134,6 +144,8 @@ DIGESTS = {  # case: (rows, sha256 of the sorted rows)
         "6be406958aa9a9595441201b660292c92683fce844a66457aa6c677bb67ab15e"),
     "cost_uniform": (25,
         "8ec86ffc8df116d60c342d8ba920ec5ae744fba0d4ddae4db78df2032af1a819"),
+    "drain_paths": (72,
+        "d9e01098ede01072e5eead9f900f80bc56028e7454eb025ccb69af19ea776a7d"),
     "fillnulls_idw": (25,
         "6cc2def314b91925ecfd36483a18cfad95528059f618550811b449dcf2486211"),
     "fillnulls_spline": (25,
