@@ -519,53 +519,37 @@ def drain_paths(tiles: DataFrame, points: DataFrame,
     rows (the sample_raster inner-join convention).
 
     Plan: one flow_dir_tiles pass (1-px halo, whole-scene-exact dirs,
-    persisted), then a driver loop of per-tile cogrouped walks — each
-    round every live path walks VECTOR-FREE inside its current tile until
-    it leaves it, so rounds = max tile-border crossings of any path
-    (bounded, typically << max_rounds); per round the only exchange is
-    the tiny live-point set joining its tile's dir plane. The D8 graph is
-    acyclic by construction (strictly-lower descent), so termination is
-    structural, with max_rounds as a loud backstop.
+    persisted), then a driver loop of per-tile walks — each round every
+    live path walks VECTOR-FREE inside its current tile until it leaves
+    it, so rounds = max tile-border crossings of any path (bounded,
+    typically << max_rounds). Per round a `collect_list` aggregate packs
+    the tiny live-point set into one row per tile and one equi join
+    attaches it to that tile's dir plane, which decodes once; a
+    continuation that walked off the scene edge finds no tile and drops
+    out. The D8 graph is acyclic by construction (strictly-lower descent),
+    so termination is structural, with max_rounds as a loud backstop.
     """
     from pyspark import StorageLevel
-    import pandas as pd
 
     nom_w, nom_h = _nominal_grid(tiles)
     dirs = flow_dir_tiles(tiles, src_col=src_col) \
         .persist(StorageLevel.MEMORY_AND_DISK)
-    spark = tiles.sparkSession
 
-    def walk_fn(left: "pd.DataFrame", right: "pd.DataFrame") -> "pd.DataFrame":
-        out = {f.name: [] for f in DRAIN_SCHEMA}
-        if right.empty:
-            if left.empty:
-                return pd.DataFrame(out)
-            bad = sorted(left.pid.astype(int))
-            raise ValueError(
-                f"drain_paths: start/continuation points {bad} landed on a "
-                f"tile with no flow-direction plane")
-        t = right.iloc[0]
-        w, h = int(t.w), int(t.h)
-        tx, ty = int(t.tile_x), int(t.tile_y)
-        dirs_p = np.frombuffer(t.dir_bytes, "<f4").reshape(h, w)
-        ox, oy = tx * nom_w, ty * nom_h
-        for p in left.itertuples():
-            px, py = int(p.gx) - ox, int(p.gy) - oy
-            step, dist = int(p.step), float(p.dist)
+    def drain_walk(row, w, h):
+        dirs_p = np.frombuffer(row.dir_bytes, "<f4").reshape(h, w)
+        ox, oy = row.tile_x * nom_w, row.tile_y * nom_h
+        for p in row.pts:
+            px, py = p["gx"] - ox, p["gy"] - oy
+            step, dist = p["step"], p["dist"]
             first = step == 0
             while 0 <= px < w and 0 <= py < h:
                 k = dirs_p[py, px]
                 if first and np.isnan(k):
                     raise ValueError(
-                        f"drain_paths: start point pid={int(p.pid)} at "
-                        f"({int(p.gx)}, {int(p.gy)}) is on a NULL cell")
+                        f"drain_paths: start point pid={p['pid']} at "
+                        f"({p['gx']}, {p['gy']}) is on a NULL cell")
                 first = False
-                out["scene_id"].append(t.scene_id)
-                out["pid"].append(int(p.pid))
-                out["step"].append(step)
-                out["gx"].append(ox + px); out["gy"].append(oy + py)
-                out["dist"].append(dist)
-                out["done"].append(True)
+                yield p["pid"], step, ox + px, oy + py, dist, True
                 if np.isnan(k) or k < 0:   # pit or NULL downstream: stop
                     break
                 ki = int(k)
@@ -573,37 +557,23 @@ def drain_paths(tiles: DataFrame, points: DataFrame,
                 step += 1
                 dist += float(_D8_DIST[ki])
             else:
-                gx2, gy2 = ox + px, oy + py
-                # off the SCENE edge (not just the tile) ends the path;
-                # detect by whether the target tile exists next round
-                out["scene_id"].append(t.scene_id)
-                out["pid"].append(int(p.pid))
-                out["step"].append(step)
-                out["gx"].append(gx2); out["gy"].append(gy2)
-                out["dist"].append(dist)
-                out["done"].append(False)
-        return pd.DataFrame(out)
+                # carry-over into the next tile (or off the scene edge)
+                yield p["pid"], step, ox + px, oy + py, dist, False
 
     live = points.select(
         "scene_id", F.col("pid").cast("long").alias("pid"),
         F.lit(0).alias("step"), F.col("gx").cast("int"),
-        F.col("gy").cast("int"), F.lit(0.0).alias("dist"),
-        F.lit(False).alias("done"))
+        F.col("gy").cast("int"), F.lit(0.0).alias("dist"))
     pieces = []
     try:
         for _ in range(max_rounds):
-            keyed = live.withColumn(
-                "tile_x", (F.col("gx") / nom_w).cast("int")).withColumn(
-                "tile_y", (F.col("gy") / nom_h).cast("int"))
-            key = ["scene_id", "tile_x", "tile_y"]
-            # inner-filter continuations that walked off the scene edge:
-            # their target tile has no dir row -> semi-join drops them
-            keyed = keyed.join(
-                dirs.select(*key).distinct(), on=key, how="semi")
-            walked = (keyed.groupBy(*key)
-                      .cogroup(dirs.groupBy(*key))
-                      .applyInPandas(walk_fn, DRAIN_SCHEMA)
-                      .localCheckpoint())
+            packed = live.groupBy(
+                "scene_id", (F.col("gx") / nom_w).cast("int").alias("tile_x"),
+                (F.col("gy") / nom_h).cast("int").alias("tile_y")).agg(
+                F.collect_list(F.struct("pid", "step", "gx", "gy", "dist"))
+                .alias("pts"))
+            walked = _tile_rows(dirs.join(packed, _TILE_KEY), DRAIN_SCHEMA,
+                                drain_walk, ("scene_id",)).localCheckpoint()
             pieces.append(walked.filter("done"))
             live = walked.filter("NOT done")
             if live.isEmpty():

@@ -53,7 +53,9 @@ from pyspark.sql.types import (
 )
 
 from . import codecs
-from .pipeline import _arrow_schema, _batch_rows, _nominal_grid, _tile_rows
+from .pipeline import (
+    _TILE_IDS, _TILE_KEY, _arrow_schema, _batch_rows, _nominal_grid, _tile_rows,
+)
 
 # ONE extraction pass emits both row kinds (kind 0 = local region with
 # partial stats; kind 1 = masked border cell; kind 2 = across-border probe)
@@ -445,16 +447,16 @@ def lake_tiles(tiles: DataFrame, seeds: DataFrame, level: float,
 
     Plan: ONE decode+label pass (planes + O(perimeter) stitch rows), the
     shared stitch and ONE grouped min-label pass on the border graph
-    (`_stitched`), a broadcast seed lookup, then ONE cogroup of the kept
-    node labels with the label planes on the tile key. Pixel bytes cross
-    the wire once as label+depth planes; everything else is O(regions +
-    perimeter).
+    (`_stitched`), a broadcast seed lookup, then ONE equi join of each
+    tile's kept node labels, packed into one row by a `collect_list`
+    aggregate, with its label and depth planes. Only tiles that hold a
+    kept node send their planes through Python, once; everything else is
+    O(regions + perimeter).
     """
     with _stitched(tiles, partial(_lake_pass, tiles, level, src_col)) \
             as (ex, lab, (nom_w, nom_h)):
         planes = ex.filter("kind = 3").select(
-            "scene_id", "tile_x", "tile_y", "w", "h",
-            "label_bytes", "depth_bytes")
+            *_TILE_IDS, "label_bytes", "depth_bytes")
 
         s = seeds.select(
             "scene_id",
@@ -462,7 +464,7 @@ def lake_tiles(tiles: DataFrame, seeds: DataFrame, level: float,
             (F.col("gy") / nom_h).cast("int").alias("tile_y"),
             (F.col("gx") % nom_w).alias("px"),
             (F.col("gy") % nom_h).alias("py"))
-        sj = planes.join(F.broadcast(s), on=["scene_id", "tile_x", "tile_y"])
+        sj = planes.join(F.broadcast(s), on=_TILE_KEY)
 
         def seed_fn(row, w, h):
             labels = np.frombuffer(row.label_bytes, "<i4").reshape(h, w)
@@ -490,33 +492,19 @@ def lake_tiles(tiles: DataFrame, seeds: DataFrame, level: float,
                         (F.shiftright("v", 21) % (1 << 21)).cast("int")
                         .alias("tile_y")))
 
-        def fill_fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            if left.empty or right.empty:
-                return pd.DataFrame({f.name: pd.Series(dtype=object)
-                                     for f in LAKE_SCHEMA})
-            row = left.iloc[0]
-            w, h = int(row.w), int(row.h)
+        packed = keep.groupBy(*_TILE_KEY).agg(
+            F.collect_list("v").alias("vs"),
+            F.size(F.collect_set("label")).cast("int").alias("n_regions"))
+
+        def lake_fill(row, w, h):
             labels = np.frombuffer(row.label_bytes, "<i4").reshape(h, w)
             depth = np.frombuffer(row.depth_bytes, "<f4").reshape(h, w)
-            local = (right.v.to_numpy(np.int64) & ((1 << 21) - 1))
-            m = np.isin(labels, local)
-            if not m.any():
-                return pd.DataFrame({f.name: pd.Series(dtype=object)
-                                     for f in LAKE_SCHEMA})
-            lake = np.where(m, depth, np.float32(np.nan)).astype("<f4")
-            return pd.DataFrame({
-                "scene_id": [row.scene_id],
-                "tile_x": [int(row.tile_x)], "tile_y": [int(row.tile_y)],
-                "w": [w], "h": [h],
-                "lake_bytes": [lake.tobytes()],
-                "area_px": [int(m.sum())],
-                "volume": [float(depth[m].astype(np.float64).sum())],
-                "n_regions": [int(right.label.nunique())],
-            })
+            m = np.isin(labels, np.array(row.vs, np.int64) & ((1 << 21) - 1))
+            if m.any():
+                yield (np.where(m, depth, np.float32(np.nan)).astype("<f4").tobytes(),
+                       int(m.sum()), float(depth[m].astype(np.float64).sum()),
+                       row.n_regions)
 
-        key = ["scene_id", "tile_x", "tile_y"]
-        out = (planes.groupBy(*key)
-               .cogroup(keep.groupBy(*key))
-               .applyInPandas(fill_fn, LAKE_SCHEMA)
-               .localCheckpoint())  # materialize before unpersisting base
-        return out
+        # materialize before unpersisting base
+        return _tile_rows(planes.join(packed, _TILE_KEY), LAKE_SCHEMA,
+                          lake_fill, _TILE_IDS).localCheckpoint()

@@ -53,14 +53,14 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import (
-    BinaryType, DoubleType, IntegerType, LongType, StringType, StructField,
-    StructType,
+    BinaryType, DoubleType, FloatType, IntegerType, LongType, StringType,
+    StructField, StructType,
 )
 
 from . import geo
 from .pipeline import (
     _TILE_IDS, _TILE_KEY, _arrow_schema, _coalesce_batches, _group_rows,
-    _nominal_grid, _tile_rows,
+    _nan_none, _nominal_grid, _row_map, _tile_rows,
 )
 
 # --------------------------------------------------------------------------
@@ -1073,7 +1073,8 @@ def aoi_measures(spark, aoi) -> DataFrame:
 
     Accepts the same AOI forms as aoi_rings_df (Spark DataFrame — the
     polygon layer never touches the driver — or pandas compat). One
-    mapInPandas hop, embarrassingly parallel per polygon; numpy kernels in
+    `_row_map` pass, embarrassingly parallel per polygon (a NaN measure
+    comes out NULL); numpy kernels in
     geo.ring_area_km2 / ring_perimeter_km / ring_centroid (golden-vector
     tested incl. a whole-sphere octant).
     """
@@ -1087,42 +1088,14 @@ def aoi_measures(spark, aoi) -> DataFrame:
         StructField("centroid_lat", DoubleType()),
     ])
 
-    def fn(pdfs):
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            rows = []
-            for r in pdf.itertuples():
-                ring = np.stack([np.asarray(r.ring_x), np.asarray(r.ring_y)], axis=1)
-                cx, cy = geo.ring_centroid(ring)
-                rows.append({
-                    "aoi_id": r.aoi_id, "aoi_category": r.aoi_category,
-                    "area_km2": geo.ring_area_km2(ring),
-                    "perimeter_km": geo.ring_perimeter_km(ring),
-                    "centroid_lon": cx, "centroid_lat": cy,
-                })
-            yield pd.DataFrame(rows)
+    def aoi_measure(row):
+        ring = np.stack([np.asarray(row.ring_x, np.float64),
+                         np.asarray(row.ring_y, np.float64)], axis=1)
+        cx, cy = geo.ring_centroid(ring)
+        yield tuple(_nan_none(float(v)) for v in (
+            geo.ring_area_km2(ring), geo.ring_perimeter_km(ring), cx, cy))
 
-    return rings.mapInPandas(fn, out_schema)
-
-
-def _sample_gather(pts, tls, value_col, id_cols, out_schema):
-    """Cogroup kernel for sample_raster: decode the tile plane once,
-    gather every point's pixel."""
-    if len(tls) == 0 or len(pts) == 0:
-        return pd.DataFrame({f.name: pd.Series(dtype=object)
-                             for f in out_schema})
-    t0 = tls.iloc[0]
-    w, h = int(t0["w"]), int(t0["h"])
-    plane = np.frombuffer(t0[value_col], dtype="<f4").reshape(h, w)
-    px = np.clip((pts["_fx"].to_numpy() * w).astype(np.int64), 0, w - 1)
-    py = np.clip((pts["_fy"].to_numpy() * h).astype(np.int64), 0, h - 1)
-    vals = plane[py, px].astype(np.float64)
-    out = pts[id_cols + ["_lon", "_lat", "scene_id", "tile_x", "tile_y"]].copy()
-    out["px"] = px.astype(np.int32)
-    out["py"] = py.astype(np.int32)
-    out["value"] = [None if not np.isfinite(x) else float(x) for x in vals]
-    return out
+    return _row_map(rings, out_schema, aoi_measure, ("aoi_id", "aoi_category"))
 
 
 def sample_raster(tiles: DataFrame, points: DataFrame, scene_geom: DataFrame,
@@ -1143,9 +1116,10 @@ def sample_raster(tiles: DataFrame, points: DataFrame, scene_geom: DataFrame,
        point maps to exactly one pixel; the forward map puts the centroid
        (px+0.5)/w strictly inside its cell, so lst_pixels centroids
        round-trip to their own pixel bit-exactly);
-    3. ONE cogrouped hop on the tile key: each tile plane decodes ONCE and
-       gathers all its points — plane bytes and point rows each cross the
-       exchange exactly once, never plane-bytes-per-point.
+    3. a `collect_list` aggregate packs each tile's points into one row and
+       ONE equi join on the tile key attaches it to the tile: each tile
+       plane decodes ONCE and gathers all its points, only tiles with
+       points reach Python, and plane bytes never travel per point.
 
     Points outside every scene bbox are dropped (inner semantics); points
     whose pixel is NaN return value = NULL (observed-but-invalid differs
@@ -1169,8 +1143,6 @@ def sample_raster(tiles: DataFrame, points: DataFrame, scene_geom: DataFrame,
         F.floor(v).cast("int").alias("tile_y"),
         (u - F.floor(u)).alias("_fx"), (v - F.floor(v)).alias("_fy"),
     )
-    key = ["scene_id", "tile_x", "tile_y"]
-    t = tiles.select(*key, "w", "h", value_col)
     out_schema = StructType(
         [points.schema[c] for c in id_cols]
         + [StructField("_lon", DoubleType()),
@@ -1181,10 +1153,26 @@ def sample_raster(tiles: DataFrame, points: DataFrame, scene_geom: DataFrame,
            StructField("px", IntegerType()),
            StructField("py", IntegerType()),
            StructField("value", DoubleType())])
-    gather = partial(_sample_gather, value_col=value_col,
-                     id_cols=list(id_cols), out_schema=out_schema)
-    res = (p.groupBy(*key).cogroup(t.groupBy(*key))
-           .applyInPandas(lambda pts, tls: gather(pts, tls), out_schema))
+    # a pandas hop made a NaN in a floating id column NULL
+    nan_ids = [isinstance(points.schema[c].dataType, (FloatType, DoubleType))
+               for c in id_cols]
+
+    def sample_gather(row, w, h):
+        plane = np.frombuffer(row.plane, "<f4").reshape(h, w)
+        pts = [tuple(d.values()) for d in row.pts]
+        fx, fy = np.array([q[-2:] for q in pts]).T
+        px = np.clip((fx * w).astype(np.int64), 0, w - 1)
+        py = np.clip((fy * h).astype(np.int64), 0, h - 1)
+        for q, x, y, v in zip(pts, px.tolist(), py.tolist(),
+                              plane[py, px].astype(np.float64).tolist()):
+            ids = (_nan_none(i) if f else i for i, f in zip(q, nan_ids))
+            yield (*ids, *q[-4:-2], row.scene_id, row.tile_x, row.tile_y,
+                   x, y, v if math.isfinite(v) else None)
+
+    packed = p.groupBy(*_TILE_KEY).agg(F.collect_list(
+        F.struct(*id_cols, "_lon", "_lat", "_fx", "_fy")).alias("pts"))
+    res = _tile_rows(tiles.select(*_TILE_IDS, F.col(value_col).alias("plane"))
+                     .join(packed, _TILE_KEY), out_schema, sample_gather, ())
     return (res.withColumnRenamed("_lon", lon_col)
             .withColumnRenamed("_lat", lat_col))
 
@@ -1199,7 +1187,7 @@ def transect(tiles: DataFrame, scene_geom: DataFrame,
     The sample points are generated as a tiny Catalyst ``sequence``
     (planar interpolation in lon/lat, matching the grids' plate-carree
     geocode) and routed through `sample_raster`, so the plan inherits its
-    shape: broadcast bbox join + inverse geocode + decode-once cogroup.
+    shape: broadcast bbox join + inverse geocode + decode-once packed join.
     Off-raster samples drop (inner semantics) — the returned step index
     makes gaps visible.
     """
