@@ -1359,8 +1359,8 @@ def q_except_all(spark, sf_dir):
 # --- grouped-map pandas UDF (applyInPandas) with an exact SQL twin -------------------
 # The engine's remaining applyInPandas passes (the pip_join_cells cogroup
 # verify, the CC min-label and the terrain sweep) run on this surface; this
-# twin proves its exactness through the driver gate: per-user running cents
-# computed by a grouped-map kernel == the window-function form.
+# twin proves its exactness through the DuckDB twin gate: per-user running
+# cents computed by a grouped-map kernel == the window-function form.
 
 @register(
     "q_grouped_map",
